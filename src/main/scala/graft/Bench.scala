@@ -267,20 +267,6 @@ object Bench {
       case c => c.toString
     }
 
-  /** Reported per-query number (r20, VERDICT r19 #6/#7 rep policy):
-    * the `strm_*` family reports its WARM median — every streaming
-    * fixture pays a fixed per-drain trigger/state-store startup tax
-    * on its cold rep (measured 20–40% above the tight warm reps),
-    * which made the family the round's largest phantom-regression
-    * surface; the cold runs remain in `first`/`runs`, so nothing is
-    * hidden. Everything else reports the plain median.
-    * METHODOLOGY: artifacts from r20 on carry this policy — a
-    * consumer comparing `value` across the boundary should expect the
-    * strm rows ~0.2–1.5s lower each, from reporting, not code.
-    */
-  def reportedMedian(name: String, t: Timing): Double =
-    if (name.startsWith("strm_")) t.warmMedian else t.median
-
   /** Assemble the two artifact lines. Queries with zero successful
     * reps appear only in `err`, never in `queries` — an absent median
     * is honest; a fabricated near-zero one deflates the total.
@@ -297,7 +283,7 @@ object Bench {
     def num(v: Double): String = v.toString
     def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val total = ok.map { case (n, t) => reportedMedian(n, t) }.sum
+    val total = ok.map(_._2.median).sum
     val firstTotal = ok.map(_._2.runs.head).sum
     val cpuTotal = ok.map(_._2.cpuMedian).sum
     val errs = timed.collect { case (n, t) if t.err.isDefined =>
@@ -310,7 +296,7 @@ object Bench {
       s""","err":${jmap(errs)},"reruns":${jmap(reruns)}""" +
       s""","metric":"total","unit":"sec","value":${fmt(total)}}"""
     val stdoutLine =
-      s"""{"queries":${jmap(ok.map { case (n, t) => n -> ms(reportedMedian(n, t)) })}""" + suffix(ms)
+      s"""{"queries":${jmap(ok.map { case (n, t) => n -> ms(t.median) })}""" + suffix(ms)
     // `warm` = per-query median excluding the cold first rep (r17):
     // cross-round diffs of JIT-heavy engines read this instead of
     // re-litigating cold-codegen wobble every round. `bad_runs`/
@@ -319,7 +305,7 @@ object Bench {
     // discard is part of the record, never silent.
     val bad = timed.filter(_._2.badRuns.nonEmpty)
     val fullLine =
-      s"""{"queries":${jmap(ok.map { case (n, t) => n -> num(reportedMedian(n, t)) })}""" +
+      s"""{"queries":${jmap(ok.map { case (n, t) => n -> num(t.median) })}""" +
       s""","warm":${jmap(ok.map { case (n, t) => n -> num(t.warmMedian) })}""" +
       s""","first":${jmap(ok.map { case (n, t) => n -> num(t.runs.head) })}""" +
       s""","cpu":${jmap(ok.map { case (n, t) => n -> f2(t.cpuMedian) })}""" +
@@ -357,13 +343,13 @@ object Bench {
     val ok = timed.filter(_._2.runs.nonEmpty)
     def ms(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     def f2(v: Double): String = "%.2f".formatLocal(java.util.Locale.ROOT, v)
-    val byCost = ok.sortBy { case (n, t) => -reportedMedian(n, t) }
-    val total = ok.map { case (n, t) => reportedMedian(n, t) }.sum
+    val byCost = ok.sortBy(-_._2.median)
+    val total = ok.map(_._2.median).sum
     val nErr = timed.count(_._2.err.isDefined)
     def build(topN: Int): String = {
       val top = byCost.take(topN).sortBy(_._1)
       s"""{"queries":${top.map { case (n, t) =>
-            "\"" + jsonEscape(n) + "\":" + ms(reportedMedian(n, t)) }.mkString("{", ",", "}")}""" +
+            "\"" + jsonEscape(n) + "\":" + ms(t.median) }.mkString("{", ",", "}")}""" +
         s""","top_n":${top.size},"n_queries":${ok.size},"n_err":$nErr""" +
         s""","first_total":${ms(ok.map(_._2.runs.head).sum)}""" +
         s""","reps":$reps,"cpus":$cpus,"sf":"$sfDir"""" +

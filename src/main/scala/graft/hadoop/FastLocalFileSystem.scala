@@ -2,7 +2,7 @@ package graft.hadoop
 
 import java.io.FileNotFoundException
 import java.nio.file.{Files, LinkOption, NoSuchFileException}
-import java.nio.file.attribute.{PosixFileAttributes, PosixFilePermission}
+import java.nio.file.attribute.FileTime
 
 import org.apache.hadoop.fs.{FileStatus, LocalFileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -26,8 +26,8 @@ import org.apache.hadoop.fs.permission.FsPermission
   * per state partition.
   *
   * [[NoForkRawLocalFileSystem]] replaces exactly those call sites
-  * with `java.nio.file` equivalents (readAttributes / nio
-  * setPosixFilePermissions), which are plain syscalls. Genuine
+  * with `java.nio.file` equivalents (one `unix:` readAttributes stat /
+  * one `unix:mode` chmod), which are plain syscalls. Genuine
   * symlinks (absent from every graft layout) still defer to the
   * stock implementation, so semantics are unchanged — only the
   * transport for the same metadata. Installed per session via
@@ -41,33 +41,42 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
 
   private def nioPath(p: Path): java.nio.file.Path = pathToFile(p).toPath
 
-  private def attrsOf(p: Path, follow: Boolean): PosixFileAttributes =
-    try {
-      if (follow)
-        Files.readAttributes(nioPath(p), classOf[PosixFileAttributes])
-      else
-        Files.readAttributes(nioPath(p), classOf[PosixFileAttributes],
-          LinkOption.NOFOLLOW_LINKS)
-    } catch {
+  /** One stat through the `unix` attribute view — the `posix` view's
+    * permission set holds only the nine rwx bits, while `mode` also
+    * carries setuid/setgid/sticky (`/tmp` is 01777, as the stock
+    * `ls -ld` parse reports it). None where the view is unsupported:
+    * the caller takes the stock path.
+    */
+  private def attrsOf(p: Path, follow: Boolean)
+      : Option[java.util.Map[String, AnyRef]] =
+    try Some(
+      if (follow) Files.readAttributes(nioPath(p), StatAttrs)
+      else Files.readAttributes(nioPath(p), StatAttrs, LinkOption.NOFOLLOW_LINKS))
+    catch {
       case _: NoSuchFileException =>
         throw new FileNotFoundException(s"File $p does not exist")
+      case _: UnsupportedOperationException => None
     }
 
-  private def toStatus(p: Path, a: PosixFileAttributes): FileStatus =
-    new FileStatus(a.size(), a.isDirectory, 1, getDefaultBlockSize(p),
-      a.lastModifiedTime().toMillis, a.lastAccessTime().toMillis,
-      new FsPermission(modeOf(a.permissions())),
-      a.owner().getName, a.group().getName, null,
+  private def toStatus(p: Path, a: java.util.Map[String, AnyRef]): FileStatus = {
+    def millis(k: String) = a.get(k).asInstanceOf[FileTime].toMillis
+    def name(k: String) = a.get(k).asInstanceOf[java.security.Principal].getName
+    new FileStatus(a.get("size").asInstanceOf[Long],
+      a.get("isDirectory").asInstanceOf[Boolean], 1, getDefaultBlockSize(p),
+      millis("lastModifiedTime"), millis("lastAccessTime"),
+      new FsPermission((a.get("mode").asInstanceOf[Int] & ModeBits).toShort),
+      name("owner"), name("group"), null,
       p.makeQualified(getUri, getWorkingDirectory))
+  }
 
   override def getFileStatus(f: Path): FileStatus =
-    toStatus(f, attrsOf(f, follow = true))
+    attrsOf(f, follow = true).fold(super.getFileStatus(f))(toStatus(f, _))
 
-  override def getFileLinkStatus(f: Path): FileStatus = {
-    val a = attrsOf(f, follow = false)
-    if (a.isSymbolicLink) super.getFileLinkStatus(f) // rare: honest fallback
-    else toStatus(f, a)
-  }
+  override def getFileLinkStatus(f: Path): FileStatus =
+    attrsOf(f, follow = false) match {
+      case Some(a) if !a.get("isSymbolicLink").asInstanceOf[Boolean] => toStatus(f, a)
+      case _ => super.getFileLinkStatus(f) // rare: honest fallback
+    }
 
   override def listStatus(f: Path): Array[FileStatus] = {
     val localf = pathToFile(f)
@@ -83,33 +92,25 @@ class NoForkRawLocalFileSystem extends RawLocalFileSystem {
     }
   }
 
+  /** One chmod of all twelve mode bits (the sticky bit included), like
+    * the stock `chmod %04o` fork.
+    */
   override def setPermission(p: Path, permission: FsPermission): Unit =
-    try Files.setPosixFilePermissions(nioPath(p), posixOf(permission.toShort))
+    try Files.setAttribute(nioPath(p), "unix:mode",
+      Integer.valueOf(permission.toShort & ModeBits))
     catch {
       case _: NoSuchFileException =>
         throw new FileNotFoundException(s"File $p does not exist")
       case _: UnsupportedOperationException =>
-        super.setPermission(p, permission) // non-POSIX store: stock path
+        super.setPermission(p, permission) // no unix view: stock path
     }
 }
 
 object NoForkRawLocalFileSystem {
-  import PosixFilePermission._
-  private val bitPerm: Seq[(Int, PosixFilePermission)] = Seq(
-    0x100 -> OWNER_READ, 0x80 -> OWNER_WRITE, 0x40 -> OWNER_EXECUTE,
-    0x20 -> GROUP_READ, 0x10 -> GROUP_WRITE, 0x8 -> GROUP_EXECUTE,
-    0x4 -> OTHERS_READ, 0x2 -> OTHERS_WRITE, 0x1 -> OTHERS_EXECUTE)
-
-  def posixOf(mode: Short): java.util.Set[PosixFilePermission] = {
-    val s = java.util.EnumSet.noneOf(classOf[PosixFilePermission])
-    bitPerm.foreach { case (bit, p) => if ((mode & bit) != 0) s.add(p) }
-    s
-  }
-
-  def modeOf(perms: java.util.Set[PosixFilePermission]): Short =
-    bitPerm.foldLeft(0) { case (m, (bit, p)) =>
-      if (perms.contains(p)) m | bit else m
-    }.toShort
+  private val StatAttrs =
+    "unix:mode,size,isDirectory,isSymbolicLink,lastModifiedTime,lastAccessTime,owner,group"
+  /** Permission bits of a `st_mode` (type bits stripped). */
+  private val ModeBits = 0xfff
 }
 
 /** The `file:` scheme FileSystem the graft sessions install

@@ -148,7 +148,7 @@ object Pipeline extends QueryModule {
     // base version of a snapshot table from two real threads. The
     // winner's pointer swap advances CURRENT; the loser's fenced
     // commit detects the advance (SnapshotConcurrentWriteException —
-    // never a silent lost update) and upsertUpdateRetry REBASES it:
+    // never a silent lost update) and SnapshotMerge.retrying REBASES it:
     // re-resolve the new base, re-prune, re-merge, commit. The two
     // batches touch DISJOINT key sets (%4==0 vs %4==2), so sequential
     // application commutes and the final table is deterministic no
@@ -180,8 +180,9 @@ object Pipeline extends QueryModule {
           new Thread(() =>
             try {
               gate.await()
-              graft.sinks.SnapshotMerge.upsertUpdateRetry(
-                s, base, inc, Seq("o_orderkey"), Seq("pk"))
+              graft.sinks.SnapshotMerge.retrying(inc)(i =>
+                graft.sinks.SnapshotMerge.upsertUpdate(
+                  s, base, i, Seq("o_orderkey"), Seq("pk")))
             } catch { case t: Throwable => errs.add(t) })
         }
         threads.foreach(_.start()); gate.countDown(); threads.foreach(_.join())
@@ -321,14 +322,15 @@ object Pipeline extends QueryModule {
     // #4) — the long-lived cron deployment's real-world composition:
     // wave 1 drains through the checkpointed sparse-MoR stream
     // (patching o_totalprice, inserting new keys), then a MID-STREAM
-    // upsertMorEvolveRetry adds a `score` column (schemaBase-fenced,
-    // zero rewrites — old files ride NULL resolution), then wave 2
-    // drains through a NEW feed whose schema is the patch-only narrow
-    // frame (keys + partition + score) and sparse-patches the
-    // JUST-ADDED column — over evolve-written rows, wave-1-patched
-    // rows, and wave-1-INSERTED rows alike. The oracle folds all
-    // three stages; a NULL score everywhere else pins that neither
-    // the evolve nor the narrow patches disturbed untouched rows.
+    // upsertMorEvolve under SnapshotMerge.retrying adds a `score`
+    // column (schemaBase-fenced, zero rewrites — old files ride NULL
+    // resolution), then wave 2 drains through a NEW feed whose schema
+    // is the patch-only narrow frame (keys + partition + score) and
+    // sparse-patches the JUST-ADDED column — over evolve-written rows,
+    // wave-1-patched rows, and wave-1-INSERTED rows alike. The oracle
+    // folds all three stages; a NULL score everywhere else pins that
+    // neither the evolve nor the narrow patches disturbed untouched
+    // rows.
     "strm_mor_sparse_evolve" -> ((s, dir) => {
       val o = Tables.load(s, dir, "orders")
       val pk = pmod(col("o_orderkey"), lit(5L)).as("pk")
@@ -383,8 +385,9 @@ object Pipeline extends QueryModule {
         drain(drop1, "ckpt1", target.schema, Seq("o_totalprice"))
         // mid-stream schema evolution, fenced + retried like the
         // production writer would run it
-        graft.sinks.SnapshotMerge.upsertMorEvolveRetry(
-          s, tableDir, evolveWave, Seq("o_orderkey"), Seq("pk"))
+        graft.sinks.SnapshotMerge.retrying(evolveWave)(i =>
+          graft.sinks.SnapshotMerge.upsertMorEvolve(
+            s, tableDir, i, Seq("o_orderkey"), Seq("pk")))
         val drop2 = root.resolve("feed_v2")
         dropTo(drop2, wave2, "w2.parquet")
         drain(drop2, "ckpt2", wave2.schema, Seq("score"))
@@ -483,9 +486,9 @@ object Pipeline extends QueryModule {
     // protocol a store without atomic exclusive create runs. Two
     // threads race MERGE-ON-READ upserts on the same base through one
     // shared CAS endpoint; the loser is fenced by the CAS result and
-    // upsertMorRetry rebases. Disjoint key sets commute, so the racy
-    // execution is hash-checkable; CasBackendSpec pins the forced
-    // single-window race and the LOCK-free claim.
+    // SnapshotMerge.retrying rebases. Disjoint key sets commute, so
+    // the racy execution is hash-checkable; CasBackendSpec pins the
+    // forced single-window race and the LOCK-free claim.
     "k2_cas_commit" -> ((s, dir) => {
       val o = Tables.load(s, dir, "orders")
       val pk = pmod(col("o_orderkey"), lit(5L)).as("pk")
@@ -515,8 +518,10 @@ object Pipeline extends QueryModule {
           new Thread(() =>
             try {
               gate.await()
-              graft.sinks.SnapshotMerge.upsertMorRetry(casStore(), inc,
-                Seq("o_orderkey"), Seq("pk"), retain = 6, maxAttempts = 8)
+              val st = casStore()
+              graft.sinks.SnapshotMerge.retrying(inc, maxAttempts = 8)(i =>
+                graft.sinks.SnapshotMerge.upsertMor(st, i,
+                  Seq("o_orderkey"), Seq("pk"), retain = 6))
             } catch { case t: Throwable => errs.add(t) })
         }
         threads.foreach(_.start()); gate.countDown(); threads.foreach(_.join())
@@ -587,14 +592,15 @@ object Pipeline extends QueryModule {
     // the upserter invalidated the file set it was rewriting, or the
     // upserter because its base manifests were superseded — and the
     // retry wrapper REBASES it against the winner's committed state
-    // (compactClusteredRetry re-reads current() whole; upsert-
-    // UpdateRetry re-prunes and re-merges). Compaction only
-    // rearranges rows, so the final CONTENT equals a sequential
-    // upsert no matter which order the race resolves — which is what
-    // makes a genuinely racy execution hash-checkable. The
-    // deterministic FORCED version of both conflict directions is
-    // pinned in SnapshotLockSpec. maxRecordsPerFile=500 makes the
-    // compaction a real multi-file clustered rewrite, not a rename.
+    // (SnapshotMerge.retryLoop over compactClustered re-reads
+    // current() whole; SnapshotMerge.retrying over upsertUpdate
+    // re-prunes and re-merges). Compaction only rearranges rows, so
+    // the final CONTENT equals a sequential upsert no matter which
+    // order the race resolves — which is what makes a genuinely racy
+    // execution hash-checkable. The deterministic FORCED version of
+    // both conflict directions is pinned in SnapshotLockSpec.
+    // maxRecordsPerFile=500 makes the compaction a real multi-file
+    // clustered rewrite, not a rename.
     "k2_compact_conflict" -> ((s, dir) => {
       val o = Tables.load(s, dir, "orders")
       // pk = %7, NOT the family's usual %5: keys ≡ 1 (mod 10) all share
@@ -624,15 +630,18 @@ object Pipeline extends QueryModule {
         val writer = new Thread(() =>
           try {
             gate.await()
-            graft.sinks.SnapshotMerge.upsertUpdateRetry(
-              s, base, inc, Seq("o_orderkey"), Seq("pk"))
+            graft.sinks.SnapshotMerge.retrying(inc)(i =>
+              graft.sinks.SnapshotMerge.upsertUpdate(
+                s, base, i, Seq("o_orderkey"), Seq("pk")))
           } catch { case t: Throwable => errs.add(t) })
         val compactor = new Thread(() =>
           try {
             gate.await()
-            graft.sinks.SnapshotMerge.compactClusteredRetry(
-              s, base, target.schema, Seq("pk"), "o_totalprice",
-              maxRecordsPerFile = 500L)
+            val st = new graft.sinks.SnapshotStore(s,
+              new org.apache.hadoop.fs.Path(base))
+            graft.sinks.SnapshotMerge.retryLoop()(st.compactClustered(
+              target.schema, Seq("pk"), "o_totalprice",
+              maxRecordsPerFile = 500L))
           } catch { case t: Throwable => errs.add(t) })
         writer.start(); compactor.start(); gate.countDown()
         writer.join(); compactor.join()

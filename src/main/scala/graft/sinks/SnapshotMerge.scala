@@ -44,16 +44,9 @@ object SnapshotMerge {
   def upsertIgnore(spark: SparkSession, rootDir: String, incoming: DataFrame,
       keys: Seq[String], partCols: Seq[String], retain: Int = 2,
       statsCols: Seq[String] = Nil,
-      checkKeyPartition: Boolean = false): Unit = {
-    val store = new SnapshotStore(spark, new Path(rootDir))
-    if (checkKeyPartition)
-      requireKeyContract(spark, rootDir, incoming, keys, partCols)
-    val cbase = requireConstraints(store, incoming)
-    val (inc, ks, sc) = toPhysIncoming(store, incoming, keys, statsCols)
-    mergePhys(spark, store, inc, partCols, retain, sc,
-      validated = Some(cbase))(
-      (target, i) => Merge.upsertIgnore(target, i, ks))
-  }
+      checkKeyPartition: Boolean = false): Unit =
+    upsertKeyed(spark, rootDir, incoming, keys, partCols, retain, statsCols,
+      checkKeyPartition)(Merge.upsertIgnore)
 
   /** K2 on a snapshot table: incoming wins on key collision.
     * Accepts logical names on renamed (column-mapped) tables.
@@ -63,15 +56,24 @@ object SnapshotMerge {
   def upsertUpdate(spark: SparkSession, rootDir: String, incoming: DataFrame,
       keys: Seq[String], partCols: Seq[String], retain: Int = 2,
       statsCols: Seq[String] = Nil,
-      checkKeyPartition: Boolean = false): Unit = {
+      checkKeyPartition: Boolean = false): Unit =
+    upsertKeyed(spark, rootDir, incoming, keys, partCols, retain, statsCols,
+      checkKeyPartition)(Merge.upsertUpdate)
+
+  /** The copy-on-write keyed fronts' one body; [[upsertIgnore]] and
+    * [[upsertUpdate]] differ only in the [[Merge]] function `fn`.
+    */
+  private def upsertKeyed(spark: SparkSession, rootDir: String,
+      incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
+      retain: Int, statsCols: Seq[String], checkKeyPartition: Boolean)(
+      fn: (DataFrame, DataFrame, Seq[String]) => DataFrame): Unit = {
     val store = new SnapshotStore(spark, new Path(rootDir))
     if (checkKeyPartition)
       requireKeyContract(spark, rootDir, incoming, keys, partCols)
     val cbase = requireConstraints(store, incoming)
     val (inc, ks, sc) = toPhysIncoming(store, incoming, keys, statsCols)
     mergePhys(spark, store, inc, partCols, retain, sc,
-      validated = Some(cbase))(
-      (target, i) => Merge.upsertUpdate(target, i, ks))
+      validated = Some(cbase))((target, i) => fn(target, i, ks))
   }
 
   /** K2 via MERGE-ON-READ — [[upsertUpdate]] semantics (incoming wins
@@ -95,17 +97,17 @@ object SnapshotMerge {
     * `read` after upsertMor == `read` after [[upsertUpdate]] of the
     * same incoming, bit for bit. Same partition-column and
     * key-determines-partition contracts as [[merge]]. Fenced on the
-    * exact base it read, like every commit; see [[upsertMorRetry]]
-    * for the optimistic rebase loop. Returns the committed version
-    * (None when `incoming` is empty).
-    */
-  /** `autoCompactMaxSlices` > 0 opts into a post-commit
+    * exact base it read, like every commit; see [[retrying]] for the
+    * optimistic rebase loop. Returns the committed version (None when
+    * `incoming` is empty).
+    *
+    * `autoCompactMaxSlices` > 0 opts into a post-commit
     * [[SnapshotStore.compactSlices]] at that depth — the maintenance
     * autopilot for cron-shaped writers that would otherwise need a
     * separate compaction schedule. Best-effort: a racing writer
     * fences the fold, never the committed upsert.
-    */
-  /** Key-determines-partition contract and the opt-in
+    *
+    * Key-determines-partition contract and the opt-in
     * `checkKeyPartition` audit: see [[upsertIgnore]] — the MoR path
     * shares the exact silent-duplicate shape (its tombstone scan is
     * pruned to the touched partitions too, so a moved key's old copy
@@ -165,12 +167,8 @@ object SnapshotMerge {
 
     val cur = store.resolveCurrent()
     requireSchemaBase(store, schemaBase, cur.map(_.version))
-    val curVersion = cur.map(_.version).getOrElse(0L)
-    val curEntries = cur.map(_.entries)
-      .getOrElse(Map.empty[String, SnapshotStore.SnapshotEntry])
-    val curDvs = cur.map(_.dvs).getOrElse(Nil)
-    val curMors = cur.map(_.mors).getOrElse(Nil)
-    val curSmors = cur.map(_.smors).getOrElse(Nil)
+    val SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
+      curSmors, _, _) = baseOf(cur)
     store.beforeMorCommitHook()
 
     // Positions of the CURRENT copies of incoming keys — across the
@@ -192,11 +190,7 @@ object SnapshotMerge {
     // Stage the append slice (unreferenced until the commit): the
     // incoming rows themselves, partition-laid-out like any batch.
     val newVersion = curVersion + 1
-    val batch = f"b-$newVersion%012d-${java.util.UUID.randomUUID()}"
-    val batchPath = store.dataPath(batch)
-    incoming.repartition(partCols.map(col): _*).write.mode("overwrite")
-      .partitionBy(partCols: _*).parquet(batchPath.toString)
-    val written = SnapshotStore.partitionSizes(store.fs, batchPath)
+    val (batch, written) = store.stageBatch(incoming, partCols, newVersion)
     require(written.keySet.subsetOf(touched),
       s"upsertMor produced unexpected partitions: ${(written.keySet -- touched).mkString(", ")}")
 
@@ -234,15 +228,29 @@ object SnapshotMerge {
     Some(newVersion)
   }
 
-  /** The optimistic-rebase loop shared by every *Retry front: run
-    * `body` until it commits, retrying on the fenced
-    * [[SnapshotConcurrentWriteException]] up to `maxAttempts` total
-    * attempts (at that contention level the caller needs a queue, not
-    * more retries). Returns (result, conflicts retried). `body` must
-    * re-resolve the table afresh per attempt — the retry IS the
-    * rebase.
+  /** OPTIMISTIC-CONCURRENCY RETRY — the multi-writer contract a real
+    * warehouse deployment exercises first (Delta/Iceberg
+    * commit-conflict semantics): two writers race on the same base
+    * version; the loser's fenced commit throws
+    * [[SnapshotConcurrentWriteException]] instead of silently dropping
+    * the winner's write, and this loop turns that abort into a REBASE.
+    * Every write path here resolves the current commit afresh per
+    * call, so re-running `body` re-prunes, recomputes tombstone
+    * positions (only meaningful against the exact base they were read
+    * from) and re-merges against the winner's committed state; the
+    * final table equals sequential application in commit order. The
+    * same holds for a maintenance rewrite racing a writer
+    * (`store.compactClustered` re-reads the winner's rows and
+    * re-clusters) and for `store.deleteWhere` (whose fenced loser
+    * removes its own staged DV).
+    *
+    * Runs `body` until it commits, up to `maxAttempts` total attempts;
+    * after that many fenced aborts the last exception propagates — at
+    * that contention level the caller needs a queue, not more retries.
+    * Returns (result, conflicts retried). This frame-less form suits
+    * writes without an incoming frame; writes of one use [[retrying]].
     */
-  private def retryLoop[T](maxAttempts: Int)(body: => T): (T, Int) = {
+  def retryLoop[T](maxAttempts: Int = 5)(body: => T): (T, Int) = {
     require(maxAttempts >= 1, s"maxAttempts must be >= 1, got $maxAttempts")
     var conflicts = 0
     while (true) {
@@ -256,25 +264,24 @@ object SnapshotMerge {
     throw new IllegalStateException("unreachable")
   }
 
-  /** [[upsertMor]] with the optimistic rebase loop of [[mergeRetry]]:
-    * a fenced loser retries, and the retry IS the rebase — each
-    * attempt re-resolves the current commit, recomputes tombstone
-    * positions against the winner's committed state (positions are
-    * only meaningful against the exact base they were read from), and
-    * re-stages. The incoming frame is pinned once before the loop.
-    * Returns (committed version, conflicts retried).
+  /** [[retryLoop]] over a write of `incoming` — any front here or its
+    * store-instance variant, e.g.
+    * `retrying(inc)(i => upsertMor(spark, dir, i, keys, partCols))`.
+    * `incoming` is eagerly checkpointed ONCE, on the first attempt,
+    * and `write` receives that pinned frame on every attempt: a retry
+    * re-runs only the write against the cached blocks — never the
+    * expensive upstream plan — and a non-deterministic upstream
+    * cannot yield different rows across attempts (ADVICE r16). A
+    * write's own internal ckpt of the pinned frame only copies cached
+    * blocks. The evolve fronts re-run their WHOLE schema resolution
+    * per attempt, so a retry unions against the winner's committed
+    * schema. Returns (result, conflicts retried).
     */
-  def upsertMorRetry(spark: SparkSession, rootDir: String,
-      incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
-      retain: Int = 2, maxAttempts: Int = 5): (Option[Long], Int) =
-    upsertMorRetry(new SnapshotStore(spark, new Path(rootDir)), incoming,
-      keys, partCols, retain, maxAttempts)
-
-  private[graft] def upsertMorRetry(store: SnapshotStore, incoming: DataFrame,
-      keys: Seq[String], partCols: Seq[String], retain: Int,
-      maxAttempts: Int): (Option[Long], Int) = {
-    val inc = incoming.ckpt(true)
-    retryLoop(maxAttempts)(upsertMor(store, inc, keys, partCols, retain))
+  def retrying[T](incoming: DataFrame, maxAttempts: Int = 5)(
+      write: DataFrame => T): (T, Int) = {
+    // lazy: a refused bound pins nothing
+    lazy val inc = incoming.ckpt(true)
+    retryLoop(maxAttempts)(write(inc))
   }
 
   /** K2 via COLUMN-SPARSE merge-on-read — [[upsertMor]] semantics
@@ -305,8 +312,8 @@ object SnapshotMerge {
     * opts into a post-commit [[SnapshotStore.compactSlices]] at that
     * depth (best-effort: a racing writer aborts the maintenance fold,
     * never the committed upsert). Returns the committed version.
-    */
-  /** Key-determines-partition contract and the opt-in
+    *
+    * Key-determines-partition contract and the opt-in
     * `checkKeyPartition` audit: see [[upsertIgnore]] — the sparse
     * path's update/insert split joins live keys of the TOUCHED
     * partitions only, so a moved key both duplicates AND
@@ -375,12 +382,8 @@ object SnapshotMerge {
     val touched: Set[String] = parts.map(partitionSuffix(partCols, _)).toSet
 
     val cur = store.resolveCurrent()
-    val curVersion = cur.map(_.version).getOrElse(0L)
-    val curEntries = cur.map(_.entries)
-      .getOrElse(Map.empty[String, SnapshotStore.SnapshotEntry])
-    val curDvs = cur.map(_.dvs).getOrElse(Nil)
-    val curMors = cur.map(_.mors).getOrElse(Nil)
-    val curSmors = cur.map(_.smors).getOrElse(Nil)
+    val SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
+      curSmors, _, _) = baseOf(cur)
     store.beforeMorCommitHook()
 
     // Split on LIVE key membership within the touched partitions
@@ -407,11 +410,8 @@ object SnapshotMerge {
     var newSmors = Seq.empty[SnapshotStore.SparseSlice]
     if (!updates.isEmpty) {
       val sparseCols = (keysPhys ++ partCols).distinct ++ updPhys
-      val sBatch = f"b-$newVersion%012d-${java.util.UUID.randomUUID()}"
-      updates.select(sparseCols.map(col): _*)
-        .repartition(partCols.map(col): _*).write.mode("overwrite")
-        .partitionBy(partCols: _*).parquet(store.dataPath(sBatch).toString)
-      val written = SnapshotStore.partitionSizes(store.fs, store.dataPath(sBatch))
+      val (sBatch, written) = store.stageBatch(
+        updates.select(sparseCols.map(col): _*), partCols, newVersion)
       require(written.keySet.subsetOf(touched),
         s"sparse upsert produced unexpected partitions: " +
           s"${(written.keySet -- touched).mkString(", ")}")
@@ -428,10 +428,7 @@ object SnapshotMerge {
     var novel = Map.empty[String, SnapshotStore.SnapshotEntry]
     var newMors = Seq.empty[(String, SnapshotStore.SnapshotEntry)]
     if (!inserts.isEmpty) {
-      val iBatch = f"b-$newVersion%012d-${java.util.UUID.randomUUID()}"
-      inserts.repartition(partCols.map(col): _*).write.mode("overwrite")
-        .partitionBy(partCols: _*).parquet(store.dataPath(iBatch).toString)
-      val written = SnapshotStore.partitionSizes(store.fs, store.dataPath(iBatch))
+      val (iBatch, written) = store.stageBatch(inserts, partCols, newVersion)
       require(written.keySet.subsetOf(touched),
         s"sparse upsert produced unexpected partitions: " +
           s"${(written.keySet -- touched).mkString(", ")}")
@@ -446,27 +443,6 @@ object SnapshotMerge {
       cur.flatMap(_.schemaJson), validatedConstraints = validated)
     store.vacuum(retain)
     Some(newVersion)
-  }
-
-  /** [[upsertMorSparse]] with the optimistic rebase loop of
-    * [[upsertMorRetry]]: the incoming frame pins once; each retry
-    * re-resolves the winner's commit and re-splits update/insert
-    * against it. Returns (committed version, conflicts retried).
-    */
-  def upsertMorSparseRetry(spark: SparkSession, rootDir: String,
-      incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
-      updateCols: Seq[String], retain: Int = 2,
-      maxAttempts: Int = 5): (Option[Long], Int) =
-    upsertMorSparseRetry(new SnapshotStore(spark, new Path(rootDir)),
-      incoming, keys, partCols, updateCols, retain, maxAttempts)
-
-  private[graft] def upsertMorSparseRetry(store: SnapshotStore,
-      incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
-      updateCols: Seq[String], retain: Int,
-      maxAttempts: Int): (Option[Long], Int) = {
-    val inc = incoming.ckpt(true)
-    retryLoop(maxAttempts)(
-      upsertMorSparse(store, inc, keys, partCols, updateCols, retain))
   }
 
   /** Post-commit slice-depth check for the MoR write fronts' opt-in
@@ -496,74 +472,6 @@ object SnapshotMerge {
         try store.compactSlices(schema, partCols, maxSlices)
         catch { case _: SnapshotConcurrentWriteException => () }
     }
-  }
-
-  /** [[upsertUpdate]] with OPTIMISTIC-CONCURRENCY RETRY — the
-    * multi-writer contract a real warehouse deployment exercises
-    * first (Delta/Iceberg commit-conflict semantics): two writers
-    * race on the same base version; the loser's fenced commit throws
-    * [[SnapshotConcurrentWriteException]] instead of silently
-    * dropping the winner's merge, and THIS wrapper turns that abort
-    * into a REBASE — each retry of [[merge]] re-resolves
-    * `currentSized()` (the new base), re-prunes, and re-runs the
-    * merge function against the winner's committed state, so the
-    * final table equals sequential application in commit order.
-    * The incoming frame is eagerly checkpointed ONCE, before the
-    * first attempt, so every retry re-runs only the merge join
-    * against the cached blocks — never the expensive upstream plan —
-    * and a non-deterministic upstream cannot yield different
-    * incoming data across attempts (ADVICE r16).
-    * Returns (committed version, conflicts retried). Livelock is
-    * bounded: after `maxAttempts` fenced aborts the last exception
-    * propagates — at that contention level the caller needs a queue,
-    * not more retries.
-    */
-  def upsertUpdateRetry(spark: SparkSession, rootDir: String,
-      incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
-      retain: Int = 2, statsCols: Seq[String] = Nil,
-      maxAttempts: Int = 5): (Option[Long], Int) =
-    mergeRetry(spark, rootDir, incoming, partCols, retain, statsCols,
-      maxAttempts)((target, inc) => Merge.upsertUpdate(target, inc, keys))
-
-  /** Generic retry wrapper over [[merge]] (see [[upsertUpdateRetry]]).
-    * `mergeFn` is re-invoked per attempt against the freshly-resolved
-    * base — it must be a pure function of (target, incoming).
-    */
-  def mergeRetry(spark: SparkSession, rootDir: String, incoming: DataFrame,
-      partCols: Seq[String], retain: Int = 2, statsCols: Seq[String] = Nil,
-      maxAttempts: Int = 5)(
-      mergeFn: (DataFrame, DataFrame) => DataFrame): (Option[Long], Int) = {
-    // Pin incoming ONCE before the loop: merge() re-checkpoints per
-    // attempt, and without this pin each conflict retry would re-run
-    // the full upstream plan (and a non-deterministic upstream could
-    // change the incoming rows between attempts). merge's internal
-    // ckpt of an already-checkpointed frame only copies cached
-    // blocks, never re-executes upstream.
-    val inc = incoming.ckpt(true)
-    retryLoop(maxAttempts)(
-      merge(spark, rootDir, inc, partCols, retain, statsCols)(mergeFn))
-  }
-
-
-  /** OPTIMIZE-vs-writer concurrency: [[SnapshotStore.compactClustered]]
-    * with the same optimistic rebase loop as [[mergeRetry]] — the
-    * OTHER classic warehouse conflict class (a maintenance rewrite
-    * racing a row-level upsert on the same base; Delta/Iceberg's
-    * compaction-conflict semantics). compactClustered re-resolves
-    * `current()` afresh on every call and its fenced commit aborts
-    * with [[SnapshotConcurrentWriteException]] when a writer advanced
-    * CURRENT in between, so a retry IS the rebase: re-read the
-    * winner's committed rows, re-cluster, re-commit. Content is
-    * writer-win-order-independent (compaction only rearranges rows),
-    * which is what lets a genuinely racy execution be a hash-checked
-    * oracle row (`k2_compact_conflict`). Returns conflicts retried.
-    */
-  def compactClusteredRetry(spark: SparkSession, rootDir: String,
-      schema: StructType, partCols: Seq[String], clusterCol: String,
-      maxRecordsPerFile: Long, maxAttempts: Int = 5): Int = {
-    val store = new SnapshotStore(spark, new Path(rootDir))
-    retryLoop(maxAttempts)(
-      store.compactClustered(schema, partCols, clusterCol, maxRecordsPerFile))._2
   }
 
   /** CDC apply on a snapshot table ([[Merge.applyCdc]] semantics:
@@ -607,29 +515,6 @@ object SnapshotMerge {
   def deleteWhere(spark: SparkSession, rootDir: String, schema: StructType,
       pred: org.apache.spark.sql.Column): Long =
     new SnapshotStore(spark, new Path(rootDir)).deleteWhere(schema, pred)
-
-  /** [[deleteWhere]] with the optimistic rebase loop of [[mergeRetry]]
-    * / [[compactClusteredRetry]]: a fenced loser retries, and the
-    * retry IS the rebase — deleteWhere resolves the current commit
-    * afresh on every call, so positions are recomputed against the
-    * winner's committed state (tombstone positions are only
-    * meaningful against the exact base they were read from; the
-    * fenced loser's staged DV file was removed by deleteWhere
-    * itself). Returns (rows tombstoned, conflicts retried).
-    */
-  def deleteWhereRetry(spark: SparkSession, rootDir: String,
-      schema: StructType, pred: org.apache.spark.sql.Column,
-      maxAttempts: Int = 5): (Long, Int) =
-    deleteWhereRetry(new SnapshotStore(spark, new Path(rootDir)),
-      schema, pred, maxAttempts)
-
-  /** Store-instance variant — the seam the forced-race spec drives
-    * (the conflict hooks are per-store-instance).
-    */
-  private[graft] def deleteWhereRetry(store: SnapshotStore,
-      schema: StructType, pred: org.apache.spark.sql.Column,
-      maxAttempts: Int): (Long, Int) =
-    retryLoop(maxAttempts)(store.deleteWhere(schema, pred))
 
   // --- COLUMN MAPPING (r18) -------------------------------------------
   //
@@ -859,22 +744,6 @@ object SnapshotMerge {
       .foreach(v => store.writeSchemaFile(v, union))
   }
 
-  /** [[upsertEvolve]] with the optimistic rebase loop of
-    * [[mergeRetry]]: a fenced loser re-runs the WHOLE evolve — schema
-    * resolution included, so the retry unions against the winner's
-    * committed schema (the sidecar race fix makes the stale-schema
-    * direction abort rather than lose columns). Returns conflicts
-    * retried.
-    */
-  def upsertEvolveRetry(spark: SparkSession, rootDir: String,
-      incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
-      retain: Int = 2, statsCols: Seq[String] = Nil,
-      maxAttempts: Int = 5): Int = {
-    val inc = incoming.ckpt(true)
-    retryLoop(maxAttempts)(
-      upsertEvolve(spark, rootDir, inc, keys, partCols, retain, statsCols))._2
-  }
-
   /** [[upsertEvolve]] through the MERGE-ON-READ write path: the same
     * schema-union/widening/column-mapping resolution, but the commit
     * is an [[upsertMor]] — old row versions tombstone through a DV
@@ -910,23 +779,12 @@ object SnapshotMerge {
     v
   }
 
-  /** [[upsertMorEvolve]] with the optimistic rebase loop — see
-    * [[upsertEvolveRetry]]. Returns (committed version, conflicts).
-    */
-  def upsertMorEvolveRetry(spark: SparkSession, rootDir: String,
-      incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
-      retain: Int = 2, maxAttempts: Int = 5): (Option[Long], Int) = {
-    val inc = incoming.ckpt(true)
-    retryLoop(maxAttempts)(
-      upsertMorEvolve(spark, rootDir, inc, keys, partCols, retain))
-  }
-
   /** The schema-evolution resolution shared by the CoW and MoR evolve
     * fronts: (union schema with column-mapping metadata, the incoming
     * frame widened + renamed to PHYSICAL columns, physical key and
     * stats column names).
-    */
-  /** Also returns the table VERSION the schema resolution was derived
+    *
+    * Also returns the table VERSION the schema resolution was derived
     * from (None = never committed): the evolve fronts pass it down as
     * the commit paths' `schemaBase`, closing the schema-sidecar
     * lost-update race (ADVICE r18) — without it, a concurrent evolve
@@ -1125,11 +983,7 @@ object SnapshotMerge {
     requirePartitionValues(parts)
     val cur = store.resolveCurrent()
     val newVersion = cur.map(_.version).getOrElse(0L) + 1
-    val batch = f"b-$newVersion%012d-${java.util.UUID.randomUUID()}"
-    val batchPath = store.dataPath(batch)
-    incoming.repartition(partCols.map(col): _*).write.mode("overwrite")
-      .partitionBy(partCols: _*).parquet(batchPath.toString)
-    val written = SnapshotStore.partitionSizes(store.fs, batchPath)
+    val (batch, written) = store.stageBatch(incoming, partCols, newVersion)
     store.writeBatchStats(batch, incoming.schema, partCols, statsCols)
     val entries = written.map { case (s, sz) =>
       s -> SnapshotStore.SnapshotEntry(batch, sz)
@@ -1260,6 +1114,14 @@ object SnapshotMerge {
     }
     cs
   }
+
+  /** The base a commit path builds on: the resolved current commit,
+    * or an empty version-0 table when nothing has committed yet (the
+    * fence still takes `cur.map(_.version)`, which tells the two
+    * apart).
+    */
+  private def baseOf(cur: Option[SnapshotStore.Resolved]): SnapshotStore.Resolved =
+    cur.getOrElse(SnapshotStore.Resolved(0L, Map.empty, Nil, Nil, Nil, None, None))
 
   /** The schema-resolution fence shared by the evolve commit paths —
     * see `schemaBase` on [[mergePhys]].
@@ -1446,8 +1308,8 @@ object SnapshotMerge {
     * frames can legitimately carry a renamed field's physical name
     * even when that name doubles as another field's logical name
     * (the rename + re-add cross-talk case; see [[upsertMorPhys]]).
-    */
-  /** `schemaBase` (the evolve fronts): the table version their schema
+    *
+    * `schemaBase` (the evolve fronts): the table version their schema
     * resolution was derived from — when the resolution below observes
     * a DIFFERENT version, a concurrent commit landed in between and
     * the caller's pending schema sidecar would be stale; abort with
@@ -1478,12 +1340,8 @@ object SnapshotMerge {
 
     val cur = store.resolveCurrent()
     requireSchemaBase(store, schemaBase, cur.map(_.version))
-    val curVersion = cur.map(_.version).getOrElse(0L)
-    val curEntries = cur.map(_.entries)
-      .getOrElse(Map.empty[String, SnapshotStore.SnapshotEntry])
-    val curDvs = cur.map(_.dvs).getOrElse(Nil)
-    val curMors = cur.map(_.mors).getOrElse(Nil)
-    val curSmors = cur.map(_.smors).getOrElse(Nil)
+    val SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
+      curSmors, _, _) = baseOf(cur)
 
     // Manifest-level prune from the SAME snapshot resolution that the
     // commit below fences on: only the touched partitions' data dirs
@@ -1500,19 +1358,13 @@ object SnapshotMerge {
 
     // Stage the replacement partitions into a fresh immutable batch
     // dir. Unreferenced until the commit below — a crash here leaves
-    // only an orphan for vacuum.
+    // only an orphan for vacuum. `written` holds the partitions the
+    // merge actually produced (a touched partition the merge emptied
+    // simply has no dir => dropped from the manifest => atomically
+    // deleted) with each one's bytes, recorded into the manifest so
+    // compaction never re-stats what this merge already measured.
     val newVersion = curVersion + 1
-    val batch = f"b-$newVersion%012d-${java.util.UUID.randomUUID()}"
-    val batchPath = store.dataPath(batch)
-    merged.repartition(partCols.map(col): _*).write.mode("overwrite")
-      .partitionBy(partCols: _*).parquet(batchPath.toString)
-
-    // The partitions the merge actually produced (a touched partition
-    // the merge emptied simply has no dir => dropped from the
-    // manifest => atomically deleted). The same walk yields each
-    // partition's bytes, recorded into the manifest so compaction
-    // never re-stats what this merge already measured.
-    val written = SnapshotStore.partitionSizes(store.fs, batchPath)
+    val (batch, written) = store.stageBatch(merged, partCols, newVersion)
     require(written.keySet.subsetOf(touched),
       s"merge produced unexpected partitions: ${(written.keySet -- touched).mkString(", ")}")
 

@@ -335,6 +335,29 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   private def batchVersion(name: String): Option[Long] =
     scala.util.Try(leafName(name).stripPrefix("b-").split('-').head.toLong).toOption
 
+  /** A fresh batch dir name for the commit of `version` — the one
+    * place the `b-<version>-<uuid>` shape [[batchVersion]] parses is
+    * minted (vacuum's window and the sparse-patch version gate both
+    * order batches by that prefix).
+    */
+  private[sinks] def newBatch(version: Long): String =
+    f"b-$version%012d-${java.util.UUID.randomUUID()}"
+
+  /** Stage `df` into a fresh batch for `version`, one dir per
+    * `partCols` tuple (shuffled so each partition writes one file
+    * set), and return (batch, data bytes per written partition). The
+    * batch is unreferenced until a commit names it — a crash leaves
+    * only an orphan for [[vacuum]].
+    */
+  private[sinks] def stageBatch(df: DataFrame, partCols: Seq[String],
+      version: Long): (String, Map[String, Long]) = {
+    val batch = newBatch(version)
+    val p = dataPath(batch)
+    df.repartition(partCols.map(col): _*).write.mode("overwrite")
+      .partitionBy(partCols: _*).parquet(p.toString)
+    (batch, SnapshotStore.partitionSizes(fs, p))
+  }
+
   /** Version prefix of a `dv-<version>-<uuid>` deletion-vector dir
     * name (the version whose commit introduced it); None when the
     * name doesn't carry one.
@@ -2080,7 +2103,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       resolveCurrent().getOrElse(return)
     val entries = sized.view.mapValues(_.batch).toMap
     if (entries.isEmpty) return
-    val batch = f"b-${version + 1}%012d-${java.util.UUID.randomUUID()}"
+    val batch = newBatch(version + 1)
     read(schema)
       .repartition(partCols.map(col): _*)
       .sortWithinPartitions((partCols :+ clusterCol).map(col): _*)
@@ -2127,7 +2150,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       resolveCurrent().getOrElse(return)
     val entries = sized.view.mapValues(_.batch).toMap
     if (entries.isEmpty) return
-    val batch = f"b-${version + 1}%012d-${java.util.UUID.randomUUID()}"
+    val batch = newBatch(version + 1)
     val df = read(schema)
     val nb = (1 << bits) - 1
     val qs = (1 to nb).map(i => i.toDouble / (nb + 1))
@@ -2527,12 +2550,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       smors.map(m => (m.suffix, m.batch))).collect {
       case (suffix, b) if !keep.contains(b) => suffix
     }.toSet
-    val batch = f"b-${version + 1}%012d-${java.util.UUID.randomUUID()}"
-    readPartitions(schema, foldParts)
-      .repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(dataPath(batch).toString)
-    val written = SnapshotStore.partitionSizes(fs, dataPath(batch))
+    val (batch, written) =
+      stageBatch(readPartitions(schema, foldParts), partCols, version + 1)
     requirePartitionsPreserved(written.keySet, foldParts,
       sized, mors, dvs, schema, "incremental compaction")
     writeBatchStats(batch, schema, partCols, statsCols)
@@ -2586,12 +2605,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
         } => suffix
       }.toSet
     if (hot.isEmpty) return
-    val batch = f"b-${version + 1}%012d-${java.util.UUID.randomUUID()}"
-    readPartitions(schema, hot)
-      .repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(dataPath(batch).toString)
-    val written = SnapshotStore.partitionSizes(fs, dataPath(batch))
+    val (batch, written) =
+      stageBatch(readPartitions(schema, hot), partCols, version + 1)
     requirePartitionsPreserved(written.keySet, hot,
       sized, mors, dvs, schema, "slice compaction")
     // hot partitions' slices (full and sparse) materialized; everyone
@@ -2625,11 +2640,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // how they materialize
     if (entries.values.toSet.size <= 1 && dvs.isEmpty && mors.isEmpty &&
       smors.isEmpty) return
-    val batch = f"b-${version + 1}%012d-${java.util.UUID.randomUUID()}"
-    read(schema).repartition(partCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(dataPath(batch).toString)
-    val written = SnapshotStore.partitionSizes(fs, dataPath(batch))
+    val (batch, written) = stageBatch(read(schema), partCols, version + 1)
     requirePartitionsPreserved(written.keySet, entries.keySet,
       sized, mors, dvs, schema, "compaction")
     writeBatchStats(batch, schema, partCols, statsCols)

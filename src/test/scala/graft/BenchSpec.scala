@@ -83,6 +83,24 @@ class BenchSpec extends SparkFunSuite {
     assert(fullLine.contains(""""warm":{"ok":0.6499"""))
   }
 
+  test("strm_* rows report the plain median like every other row") {
+    // cold rep 5.0 lifts the median (2.0) above the warm median (1.5);
+    // the warm figure belongs in `warm` only
+    val timed = Seq(
+      "strm_x" -> Timing(Vector(5.0, 1.0, 2.0), Vector(1.0, 1.0, 1.0),
+        Vector(0L, 0L, 0L), Vector(100.0, 100.0, 100.0), Vector(1.0, 1.0, 1.0),
+        0, None))
+    val (stdoutLine, fullLine) = Bench.artifactLines(
+      timed, reps = 3, cpus = 4, sfDir = "/tmp/sf", loadStart = 1.0, loadEnd = 1.0)
+    assert(stdoutLine.startsWith("""{"queries":{"strm_x":2.000}"""))
+    assert(stdoutLine.contains(""""value":2.000}"""))
+    assert(fullLine.startsWith("""{"queries":{"strm_x":2.0}"""))
+    assert(fullLine.contains(""""warm":{"strm_x":1.5}"""))
+    val compact = Bench.compactLine(timed, reps = 3, cpus = 4, sfDir = "/tmp/sf",
+      loadStart = 1.0, loadEnd = 1.0, stealStart = -1L, stealEnd = -1L, cal0 = -1.0)
+    assert(compact.startsWith("""{"queries":{"strm_x":2.000}"""))
+  }
+
   test("artifact records cal-gate discarded reps beside the replacements") {
     val timed = Seq(
       "hot" -> Timing(Vector(0.2, 0.21, 0.22), Vector(0.8, 0.8, 0.8),

@@ -99,9 +99,10 @@ class CasBackendSpec extends SparkFunSuite {
           Seq("id"), Seq("pk"), retain = 6)
       }
     }
-    val (v, conflicts) = SnapshotMerge.upsertMorRetry(a,
+    val (v, conflicts) = SnapshotMerge.retrying(
       Seq((0L, "A0", 0L), (6L, "A6", 1L)).toDF("id", "v", "pk"),
-      Seq("id"), Seq("pk"), retain = 6, maxAttempts = 5)
+      maxAttempts = 5)(inc =>
+      SnapshotMerge.upsertMor(a, inc, Seq("id"), Seq("pk"), retain = 6))
     assert(conflicts == 1 && v.isDefined)
     assert(backend.casLost.get() >= 1, "the loss must be adjudicated by cas()")
     assert(!new java.io.File(s"$dir/LOCK").exists())
@@ -180,11 +181,14 @@ class CasBackendSpec extends SparkFunSuite {
     try {
       val futures = (0 until 4).map { i =>
         pool.submit(new java.util.concurrent.Callable[Int] {
-          def call(): Int = SnapshotMerge.upsertMorRetry(
-            casStore(dir, backend),
-            Seq((i.toLong, s"W$i", i.toLong % 5), (100L + i, s"N$i", i.toLong % 5))
-              .toDF("id", "v", "pk"),
-            Seq("id"), Seq("pk"), retain = 12, maxAttempts = 10)._2
+          def call(): Int = {
+            val st = casStore(dir, backend)
+            SnapshotMerge.retrying(
+              Seq((i.toLong, s"W$i", i.toLong % 5), (100L + i, s"N$i", i.toLong % 5))
+                .toDF("id", "v", "pk"),
+              maxAttempts = 10)(inc =>
+              SnapshotMerge.upsertMor(st, inc, Seq("id"), Seq("pk"), retain = 12))._2
+          }
         })
       }
       futures.foreach(_.get(120, java.util.concurrent.TimeUnit.SECONDS))
@@ -206,8 +210,8 @@ class CasBackendSpec extends SparkFunSuite {
     val v1 = st.currentVersion().get
     SnapshotMerge.upsertMor(st, Seq((0L, "U0", 0L)).toDF("id", "v", "pk"),
       Seq("id"), Seq("pk"), retain = 6)
-    SnapshotMerge.deleteWhereRetry(st, targetRows.schema,
-      org.apache.spark.sql.functions.col("id") === 9L, maxAttempts = 3)
+    SnapshotMerge.retryLoop(maxAttempts = 3)(st.deleteWhere(targetRows.schema,
+      org.apache.spark.sql.functions.col("id") === 9L))
     assert(st.versions().size >= 3)
     val pre = st.readAt(v1, targetRows.schema).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap

@@ -193,7 +193,7 @@ class ConstraintSpec extends SparkFunSuite {
     intercept[graft.sinks.SnapshotConcurrentWriteException] {
       SnapshotMerge.upsertEvolve(store, bad, Seq("id"), Seq("pk"), 8, Nil)
     }
-    // the retry (what upsertEvolveRetry does) re-validates against the
+    // the retry (what SnapshotMerge.retrying does) re-validates against the
     // NEW set and now refuses the rows loudly
     assert(intercept[IllegalArgumentException] {
       SnapshotMerge.upsertEvolve(store, bad, Seq("id"), Seq("pk"), 8, Nil)

@@ -168,9 +168,8 @@ class DeletionVectorSpec extends SparkFunSuite {
       }
     }
     try {
-      val (n, conflicts) = SnapshotMerge.deleteWhereRetry(
-        store, rows.schema, col("id") === 3L || col("id") === 11L,
-        maxAttempts = 5)
+      val (n, conflicts) = SnapshotMerge.retryLoop(maxAttempts = 5)(
+        store.deleteWhere(rows.schema, col("id") === 3L || col("id") === 11L))
       // the retry sees B's new row 11 too: both tombstone
       assert(conflicts == 1, s"expected exactly one fenced conflict, got $conflicts")
       assert(n == 2L, s"rebase must see the winner's rows: tombstoned $n")

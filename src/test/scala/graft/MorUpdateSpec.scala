@@ -200,8 +200,8 @@ class MorUpdateSpec extends SparkFunSuite {
         assert(n == 2L)
       }
     }
-    val (v, conflicts) = SnapshotMerge.upsertMorRetry(store, incomingRows,
-      Seq("id"), Seq("pk"), retain = 4, maxAttempts = 5)
+    val (v, conflicts) = SnapshotMerge.retrying(incomingRows, maxAttempts = 5)(
+      inc => SnapshotMerge.upsertMor(store, inc, Seq("id"), Seq("pk"), retain = 4))
     assert(conflicts == 1, "exactly one fenced conflict must be retried")
     assert(v.isDefined)
     // sequential semantics: delete(5,2) then upsertMor — id=5 comes
@@ -230,9 +230,10 @@ class MorUpdateSpec extends SparkFunSuite {
         racer.compact(targetRows.schema, Seq("pk"))
       }
     }
-    val (_, conflicts) = SnapshotMerge.upsertMorRetry(store,
+    val (_, conflicts) = SnapshotMerge.retrying(
       Seq((0L, "U0b", 0L), (7L, "U7", 2L)).toDF("id", "v", "pk"),
-      Seq("id"), Seq("pk"), retain = 4, maxAttempts = 5)
+      maxAttempts = 5)(
+      inc => SnapshotMerge.upsertMor(store, inc, Seq("id"), Seq("pk"), retain = 4))
     assert(conflicts == 1)
     val vals = readVals(dir)
     assert(vals(0L) == "U0b" && vals(7L) == "U7" && vals.size == 10)
@@ -288,13 +289,13 @@ class MorUpdateSpec extends SparkFunSuite {
     try {
       val fa = pool.submit(new java.util.concurrent.Callable[Int] {
         def call(): Int =
-          SnapshotMerge.upsertMorRetry(a, incA, Seq("id"), Seq("pk"),
-            retain = 6, maxAttempts = 6)._2
+          SnapshotMerge.retrying(incA, maxAttempts = 6)(inc =>
+            SnapshotMerge.upsertMor(a, inc, Seq("id"), Seq("pk"), retain = 6))._2
       })
       val fb = pool.submit(new java.util.concurrent.Callable[Int] {
         def call(): Int =
-          SnapshotMerge.upsertMorRetry(b, incB, Seq("id"), Seq("pk"),
-            retain = 6, maxAttempts = 6)._2
+          SnapshotMerge.retrying(incB, maxAttempts = 6)(inc =>
+            SnapshotMerge.upsertMor(b, inc, Seq("id"), Seq("pk"), retain = 6))._2
       })
       fa.get(120, java.util.concurrent.TimeUnit.SECONDS)
       fb.get(120, java.util.concurrent.TimeUnit.SECONDS)

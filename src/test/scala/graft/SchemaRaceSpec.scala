@@ -122,14 +122,15 @@ class SchemaRaceSpec extends SparkFunSuite {
       .where(col("id") === 1L).head().getAs[Int]("z") == 42)
   }
 
-  test("upsertEvolveRetry / upsertMorEvolveRetry spell the recovery loop") {
+  test("retrying spells the evolve fronts' recovery loop") {
     val dir = seed()
-    // no race here — the wrappers must be plain pass-throughs
-    assert(SnapshotMerge.upsertEvolveRetry(spark, dir,
-      Seq((2L, "v2", 0L, 1)).toDF("id", "v", "pk", "z"),
-      Seq("id"), Seq("pk")) == 0)
-    val (v, conflicts) = SnapshotMerge.upsertMorEvolveRetry(spark, dir,
-      Seq((3L, "v3", 1L, "w3")).toDF("id", "v", "pk", "w"), Seq("id"), Seq("pk"))
+    // no race here — the combinator must be a plain pass-through
+    assert(SnapshotMerge.retrying(
+      Seq((2L, "v2", 0L, 1)).toDF("id", "v", "pk", "z"))(inc =>
+      SnapshotMerge.upsertEvolve(spark, dir, inc, Seq("id"), Seq("pk")))._2 == 0)
+    val (v, conflicts) = SnapshotMerge.retrying(
+      Seq((3L, "v3", 1L, "w3")).toDF("id", "v", "pk", "w"))(inc =>
+      SnapshotMerge.upsertMorEvolve(spark, dir, inc, Seq("id"), Seq("pk")))
     assert(v.isDefined && conflicts == 0)
     assert(SnapshotMerge.readEvolved(spark, dir).columns.toSet ==
       Set("id", "v", "pk", "z", "w"))

@@ -102,14 +102,14 @@ class SnapshotLockSpec extends SparkFunSuite {
     @volatile var bErr: Throwable = null
     val b = new Thread(() =>
       try {
-        bResult = SnapshotMerge.mergeRetry(spark, dir, incB, Seq("pk")) {
-          (t, i) =>
+        bResult = SnapshotMerge.retrying(incB)(inc =>
+          SnapshotMerge.merge(spark, dir, inc, Seq("pk")) { (t, i) =>
             if (bAttempts.incrementAndGet() == 1) {
               bEntered.countDown()
               assert(aCommitted.await(60, TimeUnit.SECONDS), "A never committed")
             }
             Merge.upsertUpdate(t, i, Seq("k"))
-        }
+          })
       } catch { case t: Throwable => bErr = t })
     b.start()
     assert(bEntered.await(60, TimeUnit.SECONDS), "B never reached its mergeFn")
@@ -210,20 +210,20 @@ class SnapshotLockSpec extends SparkFunSuite {
     @volatile var wErr: Throwable = null
     val writer = new Thread(() =>
       try {
-        res = SnapshotMerge.mergeRetry(spark, dir,
-          pk(Seq((3L, 333L), (10L, 100L)).toDF("k", "v")), Seq("pk")) {
-          (t, i) =>
+        res = SnapshotMerge.retrying(
+          pk(Seq((3L, 333L), (10L, 100L)).toDF("k", "v")))(inc =>
+          SnapshotMerge.merge(spark, dir, inc, Seq("pk")) { (t, i) =>
             if (attempts.incrementAndGet() == 1) {
               entered.countDown()
               assert(compacted.await(60, TimeUnit.SECONDS), "OPTIMIZE never committed")
             }
             Merge.upsertUpdate(t, i, Seq("k"))
-        }
+          })
       } catch { case t: Throwable => wErr = t })
     writer.start()
     assert(entered.await(60, TimeUnit.SECONDS), "writer never reached its mergeFn")
-    val n = SnapshotMerge.compactClusteredRetry(
-      spark, dir, seed.schema, Seq("pk"), "v", maxRecordsPerFile = 2L)
+    val n = SnapshotMerge.retryLoop()(new SnapshotStore(spark, new Path(dir))
+      .compactClustered(seed.schema, Seq("pk"), "v", maxRecordsPerFile = 2L))._2
     assert(n == 0, "unopposed OPTIMIZE must commit first try")
     compacted.countDown()
     writer.join(TimeUnit.MINUTES.toMillis(3))

@@ -231,10 +231,11 @@ class SparseMorSpec extends SparkFunSuite {
           Seq("id"), Seq("pk"), retain = 4)
       }
     }
-    val (v, conflicts) = SnapshotMerge.upsertMorSparseRetry(store,
+    val (v, conflicts) = SnapshotMerge.retrying(
       Seq((0L, 0L, "X", "Bmine", "X", "X", "X", "X", "X", "X"))
         .toDF("id", "pk", "a", "b", "c", "d", "e", "f", "g", "h"),
-      Seq("id"), Seq("pk"), Seq("b"), retain = 4, maxAttempts = 5)
+      maxAttempts = 5)(inc => SnapshotMerge.upsertMorSparse(store, inc,
+      Seq("id"), Seq("pk"), Seq("b"), retain = 4))
     assert(conflicts == 1 && v.isDefined)
     // sequential semantics: full overwrite first, THEN the patch of b
     assert(readAll(dir)(0L) == Seq("Ar", "Bmine", "Cr", "Dr", "Er", "Fr", "Gr", "Hr"))
