@@ -2,13 +2,18 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the driver-generated parquet testdata (TESTDATA.md).
   *
   * Parquet carries its own schema; we rely on the footer rather than
   * re-declaring StructTypes here (explicit schemas are used for JSON
-  * sources, see [[graft.sources.TranscriptJson]]). Filters/projections
-  * applied downstream push into the scan (PushedFilters / ReadSchema).
+  * sources, see [[graft.sources.TranscriptJson]]). The footer is read
+  * ONCE PER FILE VERSION: [[load]] infers a table's schema the first
+  * time it sees the file (and again when the file or the session's
+  * parquet confs change), then hands the stored StructType to every
+  * later read. Filters/projections applied downstream push into the
+  * scan (PushedFilters / ReadSchema).
   *
   * events.ts contract — SCHEMA-ADAPTIVE, the file footer decides:
   *  - parquet TIMESTAMP(NANOS): Spark 4 refuses to read nanos as a
@@ -95,11 +100,41 @@ object Tables {
     else df.repartition(p)
   }
 
+  /** A catalog table as a fresh relation (new file listing, new
+    * exprIds — self-joins analyse as two scans). Schema inference is a
+    * footer-reading Spark job, so it runs only on the first load of a
+    * file version; later loads pass the stored schema and run no job.
+    */
   def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    if (name == "events") {
-      normalizeEventTs(spark.read.parquet(s"$dir/$name.parquet"))
-    } else {
-      spark.read.parquet(s"$dir/$name.parquet")
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(footerSchema(spark, path)).parquet(path)
+    if (name == "events") normalizeEventTs(df) else df
+  }
+
+  /** path → (file version, parquet confs, inferred schema). Only the
+    * StructType is kept, never a plan; one entry per distinct path.
+    */
+  private val footerSchemas = new java.util.concurrent.ConcurrentHashMap[
+    String, ((Long, Long), Map[String, String], StructType)]()
+
+  /** The schema `spark.read.parquet(path)` infers, re-inferred when the
+    * file's [[sourceFingerprint]] or any `spark.sql.parquet.*` /
+    * `spark.sql.legacy.parquet.*` conf (nanosAsLong, binaryAsString,
+    * inferTimestampNTZ, …) differs from the stored entry's. The
+    * fingerprint is taken BEFORE inference, so a rewrite racing it
+    * leaves an entry the next load re-infers.
+    */
+  private def footerSchema(spark: SparkSession, path: String): StructType = {
+    val version = sourceFingerprint(spark, path)
+    val confs = spark.conf.getAll.filter { case (k, _) =>
+      k.startsWith("spark.sql.parquet.") || k.startsWith("spark.sql.legacy.parquet.")
+    }
+    footerSchemas.get(path) match {
+      case (v, c, schema) if v == version && c == confs => schema
+      case _ =>
+        val schema = spark.read.parquet(path).schema
+        footerSchemas.put(path, (version, confs, schema))
+        schema
     }
   }
 }

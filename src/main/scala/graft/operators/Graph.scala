@@ -1133,15 +1133,17 @@ object Graph extends QueryModule {
     (nTri * 8L, nEdges)
   }
 
-  /** The lazy triangle dataflow over an (ok, pk) incidence relation:
+  /** The triangle dataflow over an (ok, pk) incidence relation:
     * returns (edge set, oriented edges, closing semi join). The edge
-    * set and oriented-edge table are LAZY localCheckpoints — they feed
+    * set and oriented-edge table are localCheckpoints — they feed
     * multiple consumers (degrees, orientation, the closing check, the
     * edge count), and without a checkpoint Spark replays the
     * lineitem self-join once per consumer (8× in the measured plan).
-    * The CALLER must materialize via an action and then
-    * [[Dedup.releaseCheckpoints]] both returned frames (the
-    * connectedComponents pattern).
+    * Both are already MATERIALIZED on return (the pipeline runs
+    * `od.count()` itself, for the Bloom prefilter's edge count); the
+    * closing frame stays lazy. The CALLER must
+    * [[Dedup.releaseCheckpoints]] both checkpointed frames once done
+    * with them (the connectedComponents pattern).
     */
   private[graft] def trianglePipeline(li: DataFrame,
       edgeKeep: Option[org.apache.spark.sql.Column] = None)
@@ -1156,7 +1158,8 @@ object Graph extends QueryModule {
     * set (u < v) — the entry the catalog queries use now that the
     * co-occurrence graph is materialized once ([[cooccurrenceEdges]]);
     * the (ok, pk)-incidence overload above derives the pairs in-query
-    * (specs, ad-hoc graphs). Same checkpoint contract.
+    * (specs, ad-hoc graphs). Same contract: edge set and oriented
+    * edges come back materialized, and the caller releases both.
     */
   private[graft] def trianglePipelineFromPairs(allPairs: DataFrame,
       edgeKeep: Option[org.apache.spark.sql.Column] = None)

@@ -129,7 +129,8 @@ object Similarity extends QueryModule {
   }
 
   /** Collect a K-BOUNDED frame (codebooks: ≤ m·k rows by
-    * construction) into a LocalRelation-backed frame with identical
+    * construction — PqM·PqK fixed, ivfTrain's k checked against
+    * [[IvfMaxK]] at entry) into a LocalRelation-backed frame with identical
     * rows: consumers broadcast it without a build job and iterative
     * lineage resets to a leaf without a checkpoint barrier. The
     * collect is the same single job the eager checkpoint cost.
@@ -490,6 +491,9 @@ object Similarity extends QueryModule {
         round(col("cos"), 6).as("cos_r"))
   }
 
+  /** Largest codebook [[ivfTrain]] collects to the driver. */
+  val IvfMaxK = 4096
+
   /** Spherical k-means via `iters` Lloyd iterations, all distributed:
     * assignment is [[assignToCentroid]]; the update sums member
     * vectors with the native [[graft.functions.VectorSum]] partial
@@ -498,8 +502,15 @@ object Similarity extends QueryModule {
     * exploded rows) and divides by the member count. A centroid that
     * loses all members keeps its previous position (left join +
     * coalesce) so the codebook never shrinks.
+    *
+    * The codebook is collected to the driver once per iteration, so
+    * `k` is refused outside 1..[[IvfMaxK]] (4096 centroids: 2 MB of
+    * doubles per iteration at 64 dims, ~25 MB at 768) before any job
+    * runs.
     */
   def ivfTrain(e: DataFrame, k: Int, iters: Int): DataFrame = {
+    require(k >= 1 && k <= IvfMaxK,
+      s"ivfTrain: k = $k centroids is outside 1..$IvfMaxK (the codebook is collected to the driver)")
     val base = e.select(col("vec_id").as("__aid"), col("vd"), col("nrm"))
     // localized (see [[pqCodebook]]): the k-row codebook collects to a
     // LocalRelation each iteration — same single job the eager

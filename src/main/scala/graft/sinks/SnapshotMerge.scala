@@ -155,7 +155,6 @@ object SnapshotMerge {
       validated: Option[Map[String, String]] = None): Option[Long] = {
     require(partCols.nonEmpty, "use Merge + AtomicDir for unpartitioned targets")
     requirePartitionable(incMapped.schema, partCols)
-    val spark = store.spark
     // dropDuplicates BEFORE the pin: Merge.upsertUpdate's
     // arbitrary-winner collapse, evaluated once
     val incoming = incMapped.dropDuplicates(keysPhys).ckpt(true)
@@ -195,11 +194,7 @@ object SnapshotMerge {
       s"upsertMor produced unexpected partitions: ${(written.keySet -- touched).mkString(", ")}")
 
     // Stage the tombstones (one sidecar file, deleteWhere's contract).
-    val dvName = f"dv-$newVersion%012d-${java.util.UUID.randomUUID()}"
-    val dvOut = store.dvPath(dvName)
-    hits.coalesce(1).write.mode("overwrite").parquet(dvOut.toString)
-    val nTombstoned = spark.read.parquet(dvOut.toString).count()
-    if (nTombstoned == 0L) store.fs.delete(dvOut, true)
+    val (dvName, nTombstoned) = store.stageDv(hits, newVersion)
 
     // New partitions become base entries; existing partitions gain a
     // slice line on top of their (byte-identical) base entry.
@@ -222,7 +217,7 @@ object SnapshotMerge {
       // pure hygiene (the staged batch is versioned above the window
       // and vacuums later, like every fenced merge's)
       case t: Throwable =>
-        if (nTombstoned > 0L) store.fs.delete(dvOut, true); throw t
+        if (nTombstoned > 0L) store.fs.delete(store.dvPath(dvName), true); throw t
     }
     store.vacuum(retain)
     Some(newVersion)

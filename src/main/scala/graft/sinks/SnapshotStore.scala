@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 /** A [[SnapshotStore.commit]] found the table advanced past the
   * version the merge was derived from: another writer committed in
@@ -120,6 +120,13 @@ object SnapshotStore {
     }
     out.toMap
   }
+
+  /** Every deletion-vector file's schema: the tombstoned row's data
+    * file (`_metadata.file_path`) and row index (`_metadata.row_index`).
+    * DV reads declare it, so none of them pays a footer-inference job.
+    */
+  private[graft] val dvSchema: StructType =
+    StructType(Seq(StructField("path", StringType), StructField("pos", LongType)))
 }
 
 /** Versioned-snapshot table layout with an atomic pointer commit —
@@ -367,6 +374,24 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
 
   private[graft] def dvPath(name: String): Path =
     if (isExternalRef(name)) new Path(name) else new Path(deletesDir, name)
+
+  /** Stage `tombstones` (path, pos) as the deletion vector of commit
+    * `version`: returns (dv name, tombstone count). An empty vector is
+    * removed at once and must not be committed; a fenced committer
+    * removes its staged DV (never referenced, so pure hygiene). ONE
+    * sidecar file per commit: tombstones are metadata-scale (the
+    * sparse-delete contract), and a single file keeps the reader's
+    * anti-join build and `inputFiles` fan-out proportional to delete
+    * COMMITS, not to the writer's parallelism.
+    */
+  private[graft] def stageDv(tombstones: DataFrame, version: Long): (String, Long) = {
+    val name = f"dv-$version%012d-${java.util.UUID.randomUUID()}"
+    val out = dvPath(name)
+    tombstones.coalesce(1).write.mode("overwrite").parquet(out.toString)
+    val n = spark.read.schema(SnapshotStore.dvSchema).parquet(out.toString).count()
+    if (n == 0L) fs.delete(out, true)
+    (name, n)
+  }
 
   def dataPath(batch: String): Path =
     if (isExternalRef(batch)) new Path(batch) else new Path(dataDir, batch)
@@ -1783,10 +1808,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     col("_metadata.file_path").as("__dv_path"),
     col("_metadata.row_index").as("__dv_pos"))
 
-  /** Deletion vectors as one (path, pos) frame. */
+  /** Deletion vectors as one (path, pos) frame: a single scan of
+    * every DV file under the fixed [[SnapshotStore.dvSchema]].
+    */
   private def dvFrame(dvs: Seq[String]): DataFrame =
-    dvs.map(n => spark.read.parquet(dvPath(n).toString))
-      .reduce(_.unionByName(_))
+    spark.read.schema(SnapshotStore.dvSchema).parquet(dvs.map(dvPath(_).toString): _*)
 
   // Tombstone application is a LEFT ANTI on (file, row position),
   // inlined at each read site: the DV side is parquet with size
@@ -2355,25 +2381,14 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     val live = liveWithMeta(sized.toSeq.map(kv => kv._1 -> kv._2.batch) ++
       mors.map(m => m._1 -> m._2.batch), schema, null, dvs, smors)
     beforeDeleteCommitHook()
-    val name = f"dv-${version + 1}%012d-${java.util.UUID.randomUUID()}"
-    val out = dvPath(name)
-    // one sidecar file per delete commit: tombstones are
-    // metadata-scale (the sparse-delete contract), and a single file
-    // keeps the reader's anti-join build and `inputFiles` fan-out
-    // proportional to delete COMMITS, not to the writer's parallelism
-    live.where(pred)
-      .select(col("__dv_path").as("path"), col("__dv_pos").as("pos"))
-      .coalesce(1)
-      .write.mode("overwrite").parquet(out.toString)
-    val n = spark.read.parquet(out.toString).count()
-    if (n == 0L) { fs.delete(out, true); return 0L }
-    // fenced like every commit; a fenced loser removes its staged DV
-    // (it was never referenced, so removal is pure hygiene). Slices
-    // (full AND sparse) carry forward untouched — a delete rewrites
-    // nothing.
+    val (name, n) = stageDv(live.where(pred)
+      .select(col("__dv_path").as("path"), col("__dv_pos").as("pos")), version + 1)
+    if (n == 0L) return 0L
+    // fenced like every commit. Slices (full AND sparse) carry forward
+    // untouched — a delete rewrites nothing.
     try commitSized(version + 1, sized, Some(version), dvs :+ name, mors,
       smors, schemaJson)
-    catch { case t: Throwable => fs.delete(out, true); throw t }
+    catch { case t: Throwable => fs.delete(dvPath(name), true); throw t }
     n
   }
 

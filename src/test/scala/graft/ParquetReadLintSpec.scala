@@ -1,0 +1,104 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+/** Hot-path read lint: a `read…parquet(` without `.schema(` in the
+  * sinks or in `Tables.scala` pays a footer-inference Spark job on every
+  * call. Every such read must be on the allow-list below, with its
+  * reason; an entry that no longer matches a read fails too, so the
+  * list stays exact. The scan blanks comments (a `//` inside a string
+  * literal is not one), then matches `read` followed by any chain of
+  * `.option/.options/.format/.schema(…)` calls and `.parquet(…)`.
+  */
+class ParquetReadLintSpec extends org.scalatest.funsuite.AnyFunSuite {
+
+  /** (file under src/main/scala/graft, read with whitespace removed) → reason. */
+  private val allowed: Map[(String, String), String] = Map(
+    ("Tables.scala", "read.parquet(path)") ->
+      "the one footer inference per file version, stored and reused by every later load",
+    ("sinks/SnapshotMerge.scala", "read.option(\"basePath\",p).parquet(p)") ->
+      "evolve fronts' stored-schema fallback: a table without a persisted schema has only its footer",
+    ("sinks/AtomicDir.scala", "read.parquet(dir)") ->
+      "readOrEmpty returns the target as written; the caller's schema describes only the empty first batch")
+
+  private val readChain =
+    ("""\bread((?:\s*\.\s*(?:option|options|format|schema)\s*\((?:[^()]|\([^()]*\))*\))*)""" +
+      """\s*\.\s*parquet\s*\((?:[^()]|\([^()]*\))*\)""").r
+
+  /** `src` with every comment blanked (newlines kept) and string
+    * literals left intact.
+    */
+  private def stripComments(src: String): String = {
+    val out = new StringBuilder
+    var i = 0
+    def at(s: String) = src.startsWith(s, i)
+    while (i < src.length) {
+      if (at("//")) {
+        while (i < src.length && src(i) != '\n') { out += ' '; i += 1 }
+      } else if (at("/*")) {
+        val end = src.indexOf("*/", i + 2) match { case -1 => src.length; case e => e + 2 }
+        src.substring(i, end).foreach(c => out += (if (c == '\n') '\n' else ' '))
+        i = end
+      } else if (at("\"\"\"")) {
+        val end = src.indexOf("\"\"\"", i + 3) match { case -1 => src.length; case e => e + 3 }
+        out ++= src.substring(i, end); i = end
+      } else if (at("\"")) {
+        var j = i + 1
+        while (j < src.length && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
+        val end = math.min(j + 1, src.length)
+        out ++= src.substring(i, end); i = end
+      } else { out += src(i); i += 1 }
+    }
+    out.toString
+  }
+
+  /** Schema-less parquet reads in `src`: (line, read without whitespace). */
+  private def schemaLessReads(src: String): Seq[(Int, String)] = {
+    val code = stripComments(src)
+    readChain.findAllMatchIn(code).toSeq
+      .filterNot(_.group(1).replaceAll("\\s", "").contains(".schema("))
+      .map(m => (code.substring(0, m.start).count(_ == '\n') + 1,
+        m.matched.replaceAll("\\s", "")))
+  }
+
+  private lazy val graftRoot: Path = {
+    val p = Paths.get(sys.props("user.dir"), "src", "main", "scala", "graft")
+    assert(Files.isDirectory(p), s"source root not found: $p")
+    p
+  }
+
+  private def hotPathFiles: Seq[Path] =
+    graftRoot.resolve("Tables.scala") +:
+      Files.list(graftRoot.resolve("sinks")).iterator().asScala
+        .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+
+  test("the scan sees a multi-line schema-less read and skips comments and declared reads") {
+    val src =
+      """val a = spark.read.option("basePath", b.toString)
+        |  .parquet(paths: _*) // spark.read.parquet(x) in a comment
+        |/* spark.read.parquet(y) */
+        |val c = spark.read.option("k", f(v)).schema(s)
+        |  .parquet(p)
+        |val d = df.write.mode("overwrite").parquet(out)
+        |val e = spark.read.parquet("s3a://b/k")
+        |""".stripMargin
+    assert(schemaLessReads(src) ==
+      Seq(1 -> "read.option(\"basePath\",b.toString).parquet(paths:_*)",
+        7 -> "read.parquet(\"s3a://b/k\")"))
+  }
+
+  test("sinks and Tables read parquet with a declared schema, outside the allow-list") {
+    val found = hotPathFiles.flatMap { f =>
+      val rel = graftRoot.relativize(f).toString
+      schemaLessReads(Files.readString(f)).map { case (line, read) => (rel, line, read) }
+    }
+    val unlisted = found.filterNot { case (rel, _, read) => allowed.contains(rel -> read) }
+    assert(unlisted.isEmpty, unlisted.map { case (rel, line, read) =>
+      s"$rel:$line: $read infers its schema on every call; pass .schema(...) or allow-list it"
+    }.mkString("\n", "\n", ""))
+    val stale = allowed.keySet -- found.map { case (rel, _, read) => rel -> read }
+    assert(stale.isEmpty, s"allow-list entries that match no read: $stale")
+  }
+}

@@ -78,6 +78,17 @@ class SimilaritySpec extends SparkFunSuite {
     assert(out.count() > 0)
   }
 
+  test("ivfTrain refuses a k outside 1..IvfMaxK before any job runs") {
+    import graft.operators.Similarity
+    val e = Similarity.preparedEmbeddings(spark, sfDir)
+    Seq(0, -1, Similarity.IvfMaxK + 1).foreach { k =>
+      val (err, jobs) = org.apache.spark.JobCounter.jobsDuring(spark.sparkContext)(
+        intercept[IllegalArgumentException](Similarity.ivfTrain(e, k, iters = 1)))
+      assert(err.getMessage.contains(s"k = $k"))
+      assert(jobs == 0, s"k = $k ran $jobs job(s) before the refusal")
+    }
+  }
+
   test("seeding and training survive sparse, non-contiguous vec_ids") {
     import graft.operators.Similarity
     // same corpus, ids remapped so NO id falls below k: a `vec_id < k`
