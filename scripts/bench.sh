@@ -13,8 +13,5 @@ for p in java.lang java.lang.invoke java.lang.reflect java.io java.net \
   OPENS="$OPENS --add-opens java.base/$p=ALL-UNNAMED"
 done
 exec java $OPENS \
-  -Dspark.ui.enabled=false \
-  -Dspark.sql.session.timeZone=UTC \
-  -Dspark.sql.legacy.parquet.nanosAsLong=true \
   -Xmx${SPARK_DRIVER_MEM:-8g} \
   -cp "target/scala-2.13/classes:/opt/spark/jars/*" "$MAIN" "${@:2}"

@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Benchmark main — times every catalog query at the SF in
   * SPARK_GRAFT_SF_DIR and prints ONE JSON line (driver contract).
@@ -369,31 +369,9 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    // default to the box's cores, not a fixed 4: a local probe run
-    // without SPARK_GRAFT_CPUS must measure under the same
-    // parallelism as the driver's run, or the parallel-bound tail
-    // reads ~2× slow and round-over-round totals mislead (bit us
-    // this round; the artifact's "cpus" field self-describes either
-    // way)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
+    val cpus = Sessions.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // 64k coalesce floor: keep compute-dense small shuffles parallel
-      // (see OPTIMIZATION_r20.md; scale-inert — parallelism-first AQE
-      // sizing dominates once shuffles exceed a few MB)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // fork-free local fs (graft.hadoop.FastLocalFileSystem scaladoc)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.FastLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(cpus)
     val loadStart = loadAvg()
     val stealStart = stealJiffies()
     // Warm, quiet-as-we'll-get baseline for the per-rep calibration
@@ -434,12 +412,12 @@ object Bench {
         "_warmup" -> Timing(Vector.empty, Vector.empty, Vector.empty,
           Vector.empty, Vector.empty, 0, Some(e)))
     val (stdoutLine, fullLine) =
-      artifactLines(timed, reps, cpus.toInt, sfDir, loadStart, loadAvg(),
+      artifactLines(timed, reps, cpus, sfDir, loadStart, loadAvg(),
         stealStart, stealJiffies(), cal0)
     println(stdoutLine)
     // LAST line = the complete compact object the driver's 2000-byte
     // tail always captures whole (see compactLine's scaladoc)
-    println(compactLine(timed, reps, cpus.toInt, sfDir, loadStart, loadAvg(),
+    println(compactLine(timed, reps, cpus, sfDir, loadStart, loadAvg(),
       stealStart, stealJiffies(), cal0))
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("bench_last.json"), fullLine + "\n")

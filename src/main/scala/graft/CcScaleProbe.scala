@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 /** 100×-corpus probe for the CONNECTED-COMPONENTS dedup path (VERDICT
@@ -35,27 +35,12 @@ object CcScaleProbe {
 
   def main(args: Array[String]): Unit = {
     val Array(base, scaled) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val spark = Sessions.local(Sessions.cpus)
     // probe corpora need shuffle partitions scaled with the data (the
     // fixed-per-partition-size regime a real cluster holds) — see
     // CrossoverBench's note on hash-agg state per task.
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // 64k coalesce floor: keep compute-dense small shuffles parallel
-      // (see OPTIMIZATION_r20.md; scale-inert — parallelism-first AQE
-      // sizing dominates once shuffles exceed a few MB)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // fork-free local fs (graft.hadoop.FastLocalFileSystem scaladoc)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.FastLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Scale-crossover measurement harness (NOTES_r4): times a chosen
   * subset of catalog queries against an arbitrary table dir (e.g. a
@@ -15,28 +15,14 @@ object CrossoverBench {
 
   def main(args: Array[String]): Unit = {
     val Array(dir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val spark = Sessions.local(Sessions.cpus)
     // SPARK_GRAFT_SHUFFLE: shuffle partition count, default = cpus.
     // K-times probe corpora need partitions scaled with the data —
     // the fixed-per-partition-size regime a real cluster holds (a
     // 100x corpus on 32 local partitions packs ~7M rows of hash-agg
     // state per task and OOMs where 100x executors never would).
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      // 64k coalesce floor: keep compute-dense small shuffles parallel
-      // (see OPTIMIZATION_r20.md; scale-inert — parallelism-first AQE
-      // sizing dominates once shuffles exceed a few MB)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // fork-free local fs (graft.hadoop.FastLocalFileSystem scaladoc)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.FastLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    sys.env.get("SPARK_GRAFT_SHUFFLE")
+      .foreach(spark.conf.set("spark.sql.shuffle.partitions", _))
     try Tables.names.foreach(n => consume(Tables.load(spark, dir, n)))
     catch { case _: Throwable => }
     val results = names.split(",").toSeq.map { name =>

@@ -1,16 +1,15 @@
 package graft
 
-import org.apache.spark.sql.{SparkSession, SparkSessionExtensions}
+import org.apache.spark.sql.SparkSessionExtensions
 import graft.functions.{DotProduct, IndelRatio, KmvSketch, L2Quant, MinHashSig, SimHashSig, WordShingles}
 
 /** Registers the engine's custom Catalyst expressions as SQL
   * functions, so `spark.sql("SELECT indel_ratio(a, b) …")` works the
   * same as the Column API.
   *
-  * Install either via config
-  * `spark.sql.extensions=graft.GraftExtensions` (cluster deployment)
-  * or programmatically with [[GraftExtensions.register]] on an
-  * existing session (local/driver-owned sessions, as in Verify/Bench).
+  * Installed at session build: [[Sessions.local]] passes it to
+  * `withExtensions` for every local session, and a cluster deployment
+  * sets `spark.sql.extensions=graft.GraftExtensions`.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   import org.apache.spark.sql.catalyst.FunctionIdentifier
@@ -41,13 +40,4 @@ object GraftExtensions {
     "l2_q" -> (exprs => L2Quant(exprs(0), exprs(1))),
     "kmv_sketch" -> (exprs =>
       KmvSketch(exprs(0), intLit(exprs(1))).toAggregateExpression()))
-
-  /** Register the same functions on an already-built session (the
-    * extensions hook only applies at session build time).
-    */
-  def register(spark: SparkSession): Unit =
-    builders.foreach { case (name, builder) =>
-      spark.sessionState.functionRegistry
-        .createOrReplaceTempFunction(name, builder, "built-in")
-    }
 }

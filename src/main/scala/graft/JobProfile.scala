@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd,
   SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 
 /** Empirical profiling loop (optimization guide §1.1) without the UI:
   * runs one or more catalog queries under a SparkListener and prints,
@@ -27,24 +27,7 @@ object JobProfile {
     val names = args(0).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = if (args.length > 1) args(1) else "/root/testdata/sf0.1"
     val reps = if (args.length > 2) args(2).toInt else 2
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // 64k coalesce floor: keep compute-dense small shuffles parallel
-      // (see OPTIMIZATION_r20.md; scale-inert — parallelism-first AQE
-      // sizing dominates once shuffles exceed a few MB)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // fork-free local fs (graft.hadoop.FastLocalFileSystem scaladoc)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.FastLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Sessions.local(Sessions.cpus)
 
     val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
     val stagesByJob =

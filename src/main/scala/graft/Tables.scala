@@ -18,8 +18,7 @@ import org.apache.spark.sql.types.StructType
   * events.ts contract — SCHEMA-ADAPTIVE, the file footer decides:
   *  - parquet TIMESTAMP(NANOS): Spark 4 refuses to read nanos as a
   *    timestamp, so under `spark.sql.legacy.parquet.nanosAsLong=true`
-  *    (set at session build by Verify/Bench/SparkTestBase; build.sbt
-  *    also sets it JVM-wide for forked runs) it arrives as raw BIGINT
+  *    (set at session build by [[graft.Sessions]]) it arrives as raw BIGINT
   *    nanos and is truncated to a microsecond TimestampType with
   *    integer division (`div` — a double division would lose precision
   *    above 2^53 ns; DuckDB performs the same nanos → micros

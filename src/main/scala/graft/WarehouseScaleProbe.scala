@@ -1,7 +1,6 @@
 package graft
 
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** 100×-file-count probe for the warehouse READ paths (VERDICT r15
@@ -31,23 +30,7 @@ object WarehouseScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val partCounts = args(1).split(",").map(_.trim.toInt).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // 64k coalesce floor: keep compute-dense small shuffles parallel
-      // (see OPTIMIZATION_r20.md; scale-inert — parallelism-first AQE
-      // sizing dominates once shuffles exceed a few MB)
-      .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-      // fork-free local fs (graft.hadoop.FastLocalFileSystem scaladoc)
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.hadoop.FastLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.hadoop.FastLocalFs].getName)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local(Sessions.cpus)
 
     def timed[T](f: => T): (T, Double) = {
       val t0 = System.nanoTime(); val r = f; (r, (System.nanoTime() - t0) / 1e9)

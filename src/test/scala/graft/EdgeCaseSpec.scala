@@ -101,8 +101,7 @@ class EdgeCaseSpec extends SparkFunSuite {
     val short = Seq((Seq(3L, 4L, 5L), Seq(1L, 1L)))
       .toDF("a", "b").select(l2_q(col("a"), col("b"))).collect()(0)
     assert(short.getLong(0) == 13L)
-    // registered as a SQL function through GraftExtensions
-    GraftExtensions.register(spark)
+    // installed as a SQL function through GraftExtensions
     val sql = spark.sql(
       "SELECT l2_q(array(1L, 2L), array(4L, 6L)) AS d").collect()(0)
     assert(sql.getLong(0) == 25L)

@@ -1,8 +1,6 @@
 package graft
 
-import java.nio.file.{Files, Path, Paths}
-
-import scala.jdk.CollectionConverters._
+import java.nio.file.{Files, Path}
 
 /** Hot-path read lint: a `read…parquet(` without `.schema(` in the
   * sinks or in `Tables.scala` pays a footer-inference Spark job on every
@@ -27,52 +25,18 @@ class ParquetReadLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     ("""\bread((?:\s*\.\s*(?:option|options|format|schema)\s*\((?:[^()]|\([^()]*\))*\))*)""" +
       """\s*\.\s*parquet\s*\((?:[^()]|\([^()]*\))*\)""").r
 
-  /** `src` with every comment blanked (newlines kept) and string
-    * literals left intact.
-    */
-  private def stripComments(src: String): String = {
-    val out = new StringBuilder
-    var i = 0
-    def at(s: String) = src.startsWith(s, i)
-    while (i < src.length) {
-      if (at("//")) {
-        while (i < src.length && src(i) != '\n') { out += ' '; i += 1 }
-      } else if (at("/*")) {
-        val end = src.indexOf("*/", i + 2) match { case -1 => src.length; case e => e + 2 }
-        src.substring(i, end).foreach(c => out += (if (c == '\n') '\n' else ' '))
-        i = end
-      } else if (at("\"\"\"")) {
-        val end = src.indexOf("\"\"\"", i + 3) match { case -1 => src.length; case e => e + 3 }
-        out ++= src.substring(i, end); i = end
-      } else if (at("\"")) {
-        var j = i + 1
-        while (j < src.length && src(j) != '"' && src(j) != '\n') j += (if (src(j) == '\\') 2 else 1)
-        val end = math.min(j + 1, src.length)
-        out ++= src.substring(i, end); i = end
-      } else { out += src(i); i += 1 }
-    }
-    out.toString
-  }
-
   /** Schema-less parquet reads in `src`: (line, read without whitespace). */
   private def schemaLessReads(src: String): Seq[(Int, String)] = {
-    val code = stripComments(src)
+    val code = SourceLint.stripComments(src)
     readChain.findAllMatchIn(code).toSeq
       .filterNot(_.group(1).replaceAll("\\s", "").contains(".schema("))
-      .map(m => (code.substring(0, m.start).count(_ == '\n') + 1,
-        m.matched.replaceAll("\\s", "")))
+      .map(m => (SourceLint.lineAt(code, m.start), m.matched.replaceAll("\\s", "")))
   }
 
-  private lazy val graftRoot: Path = {
-    val p = Paths.get(sys.props("user.dir"), "src", "main", "scala", "graft")
-    assert(Files.isDirectory(p), s"source root not found: $p")
-    p
-  }
+  private lazy val graftRoot: Path = SourceLint.srcRoot.resolve("main/scala/graft")
 
   private def hotPathFiles: Seq[Path] =
-    graftRoot.resolve("Tables.scala") +:
-      Files.list(graftRoot.resolve("sinks")).iterator().asScala
-        .filter(_.toString.endsWith(".scala")).toSeq.sortBy(_.toString)
+    graftRoot.resolve("Tables.scala") +: SourceLint.scalaFiles(graftRoot.resolve("sinks"))
 
   test("the scan sees a multi-line schema-less read and skips comments and declared reads") {
     val src =

@@ -67,8 +67,7 @@ class RelationalSpec extends SparkFunSuite {
     }
   }
 
-  test("custom expressions are callable from SQL after register") {
-    GraftExtensions.register(spark)
+  test("custom expressions are callable from SQL in a factory-built session") {
     val r = spark.sql(
       "SELECT indel_ratio('abc', 'axc') AS r, " +
         "size(word_shingles('a b c d', 3)) AS ns, " +

@@ -5,30 +5,10 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One shared local SparkSession for the whole test JVM. */
 object SparkTestBase {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    // 64k coalesce floor: keep compute-dense small shuffles parallel
-    // (see OPTIMIZATION_r20.md; scale-inert — parallelism-first AQE
-    // sizing dominates once shuffles exceed a few MB)
-    .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
-    // fork-free local fs (graft.hadoop.FastLocalFileSystem scaladoc)
-    .config("spark.hadoop.fs.file.impl",
-      classOf[graft.hadoop.FastLocalFileSystem].getName)
-    .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-      classOf[graft.hadoop.FastLocalFs].getName)
-    .getOrCreate()
+  lazy val spark: SparkSession = Sessions.local(4)
 }
 
 abstract class SparkFunSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = {
-    val s = SparkTestBase.spark
-    s.sparkContext.setLogLevel("WARN")
-    s
-  }
+  lazy val spark: SparkSession = SparkTestBase.spark
   val sfDir = "/root/testdata/sf0.001"
 }
