@@ -26,10 +26,10 @@ object Ckpt {
   private[graft] val level: StorageLevel =
     sys.env.get("SPARK_GRAFT_CKPT_LEVEL").map { name =>
       val l = StorageLevel.fromString(name)
-      // NONE would truncate lineage while storing ZERO replicas — the
-      // Pipeline queries delete source files right after .ckpt(true),
-      // so the missing blocks only surface later, far from the
-      // misconfiguration. Reject it here with the env var named.
+      // NONE would truncate lineage while storing ZERO replicas — rows
+      // under graft.Scratch.frame delete their source files right after
+      // .ckpt(true), so the missing blocks only surface later, far from
+      // the misconfiguration. Reject it here with the env var named.
       require(l.isValid,
         s"SPARK_GRAFT_CKPT_LEVEL=$name stores no replicas: a local " +
           "checkpoint at this level truncates lineage with nothing " +

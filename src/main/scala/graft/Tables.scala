@@ -55,10 +55,9 @@ object Tables {
 
   /** (total length, max mtime) fingerprint of a source file or
     * directory-shaped export — two filesystem metadata ops. Artifact
-    * cache keys ([[graft.operators.Graph.edgeArtifactRoot]],
-    * [[graft.operators.Similarity.pqArtifactRoot]]) fold this in so a
-    * REGENERATED corpus at the same path busts the key instead of
-    * silently serving the previous corpus's derived artifacts.
+    * cache keys ([[fingerprintKey]]) fold this in so a REGENERATED
+    * corpus at the same path busts the key instead of silently serving
+    * the previous corpus's derived artifacts.
     */
   def sourceFingerprint(spark: SparkSession, path: String): (Long, Long) = {
     val p = new org.apache.hadoop.fs.Path(path)
@@ -69,6 +68,22 @@ object Tables {
       (children.map(_.getLen).sum,
         if (children.isEmpty) 0L else children.map(_.getModificationTime).max)
     } else (st.getLen, st.getModificationTime)
+  }
+
+  /** Cache key of the source at `path` (`<dir>/<table>.parquet`): the
+    * first 16 bytes, as hex, of a sha-256 over `dir` and the source's
+    * [[sourceFingerprint]]. Content-strength, so two corpora never share
+    * a key (a 32-bit `String.hashCode` could collide two paths). Every
+    * artifact cache ([[graft.Scratch.cached]], [[graft.operators.Graph.edgeArtifactRoot]],
+    * [[graft.operators.Similarity.pqArtifactRoot]]) names its dirs with
+    * it, so the existing cache dirs keep their names.
+    */
+  def fingerprintKey(spark: SparkSession, path: String): String = {
+    val (len, mtime) = sourceFingerprint(spark, path)
+    val dir = path.substring(0, path.lastIndexOf('/'))
+    java.security.MessageDigest.getInstance("SHA-256")
+      .digest(s"$dir|$len|$mtime".getBytes("UTF-8"))
+      .take(16).map(b => f"$b%02x").mkString
   }
 
   /** Input-parallelism restoration for compute-heavy kernels

@@ -50,22 +50,22 @@ object WarehouseScaleProbe {
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
           least(floor(col("o_totalprice") / (600000.0 / n)), lit(n - 1L))
             .cast("long").as("pk"))
-      val base = java.nio.file.Files.createTempDirectory(s"graft_wsp_$n").toString + "/t"
-      val (_, buildS) = timed {
-        graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
-          Seq("o_orderkey"), Seq("pk"), statsCols = Seq("o_totalprice"))
+      Scratch.dir(s"graft_wsp_$n") { d =>
+        val base = d.resolve("t").toString
+        val (_, buildS) = timed {
+          graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
+            Seq("o_orderkey"), Seq("pk"), statsCols = Seq("o_totalprice"))
+        }
+        val store = new graft.sinks.SnapshotStore(spark, new Path(base))
+        val all = store.readPartitions(o.schema, null).inputFiles.length
+        val (got, readS) = timed {
+          val df = store.readRange(o.schema, "o_totalprice", 50000.0, 60000.0)
+          (df.inputFiles.length, df.count())
+        }
+        out += s"""{"probe":"range","parts":$n,"build_s":${f(buildS)},""" +
+          s""""read_s":${f(readS)},"files_total":$all,"files_read":${got._1},""" +
+          s""""rows":${got._2}}"""
       }
-      val store = new graft.sinks.SnapshotStore(spark, new Path(base))
-      val all = store.readPartitions(o.schema, null).inputFiles.length
-      val (got, readS) = timed {
-        val df = store.readRange(o.schema, "o_totalprice", 50000.0, 60000.0)
-        (df.inputFiles.length, df.count())
-      }
-      out += s"""{"probe":"range","parts":$n,"build_s":${f(buildS)},""" +
-        s""""read_s":${f(readS)},"files_total":$all,"files_read":${got._1},""" +
-        s""""rows":${got._2}}"""
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
     }
 
     // --- file-band pruning (Z-order) at growing file counts ---
@@ -76,26 +76,25 @@ object WarehouseScaleProbe {
           col("l_partkey"), col("l_suppkey"),
           pmod(col("l_orderkey"), lit(4L)).as("pk"))
         .distinct()
-      val base = java.nio.file.Files.createTempDirectory(s"graft_wspz_$maxRec")
-        .toString + "/t"
-      graft.sinks.SnapshotMerge.upsertUpdate(spark, base, li,
-        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"), Seq("pk"))
-      val store = new graft.sinks.SnapshotStore(spark, new Path(base))
-      val (_, zS) = timed {
-        store.compactZOrder(li.schema, Seq("pk"),
-          Seq("l_partkey", "l_suppkey"), maxRecordsPerFile = maxRec)
+      Scratch.dir(s"graft_wspz_$maxRec") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertUpdate(spark, base, li,
+          Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"), Seq("pk"))
+        val store = new graft.sinks.SnapshotStore(spark, new Path(base))
+        val (_, zS) = timed {
+          store.compactZOrder(li.schema, Seq("pk"),
+            Seq("l_partkey", "l_suppkey"), maxRecordsPerFile = maxRec)
+        }
+        val all = store.readPartitions(li.schema, null).inputFiles.length
+        val (got, readS) = timed {
+          val df = store.readBoxFiles(li.schema,
+            Seq(("l_partkey", 500.0, 700.0), ("l_suppkey", 50.0, 80.0)))
+          (df.inputFiles.length, df.count())
+        }
+        out += s"""{"probe":"zorder_box","max_rec":$maxRec,"zorder_s":${f(zS)},""" +
+          s""""read_s":${f(readS)},"files_total":$all,"files_read":${got._1},""" +
+          s""""rows":${got._2}}"""
       }
-      val all = store.readPartitions(li.schema, null).inputFiles.length
-      val (got, readS) = timed {
-        val df = store.readBoxFiles(li.schema,
-          Seq(("l_partkey", 500.0, 700.0), ("l_suppkey", 50.0, 80.0)))
-        (df.inputFiles.length, df.count())
-      }
-      out += s"""{"probe":"zorder_box","max_rec":$maxRec,"zorder_s":${f(zS)},""" +
-        s""""read_s":${f(readS)},"files_total":$all,"files_read":${got._1},""" +
-        s""""rows":${got._2}}"""
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
     }
 
     // --- deletion-vector read overhead at high file count (r17) ---
@@ -108,32 +107,32 @@ object WarehouseScaleProbe {
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
           least(floor(col("o_totalprice") / (600000.0 / 512)), lit(511L))
             .cast("long").as("pk"))
-      val base = java.nio.file.Files.createTempDirectory("graft_wspdv").toString + "/t"
-      graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
-        Seq("o_orderkey"), Seq("pk"), statsCols = Seq("o_totalprice"))
-      val store = new graft.sinks.SnapshotStore(spark, new Path(base))
-      def scanAll(): (Long, Double) = timed(store.read(o.schema).count())
-      val (n0, before) = scanAll()
-      val (nDel, delS) = timed(store.deleteWhere(o.schema,
-        col("o_orderkey") % 97 === 0))
-      val (n1, after) = scanAll()
-      val (band, bandS) = timed {
-        val df = store.readRange(o.schema, "o_totalprice", 50000.0, 60000.0)
-        // count DATA files only: inputFiles also lists the
-        // deletion-vector sidecar parquet the anti-join reads, which
-        // would overstate the "pruned band read stays pruned" metric
-        // (ADVICE r17)
-        val dataPrefix = new Path(base, "data").toUri.getPath
-        (df.inputFiles.count(f =>
-          new java.net.URI(f).getPath.startsWith(dataPrefix)), df.count())
+      Scratch.dir("graft_wspdv") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
+          Seq("o_orderkey"), Seq("pk"), statsCols = Seq("o_totalprice"))
+        val store = new graft.sinks.SnapshotStore(spark, new Path(base))
+        def scanAll(): (Long, Double) = timed(store.read(o.schema).count())
+        val (n0, before) = scanAll()
+        val (nDel, delS) = timed(store.deleteWhere(o.schema,
+          col("o_orderkey") % 97 === 0))
+        val (n1, after) = scanAll()
+        val (band, bandS) = timed {
+          val df = store.readRange(o.schema, "o_totalprice", 50000.0, 60000.0)
+          // count DATA files only: inputFiles also lists the
+          // deletion-vector sidecar parquet the anti-join reads, which
+          // would overstate the "pruned band read stays pruned" metric
+          // (ADVICE r17)
+          val dataPrefix = new Path(base, "data").toUri.getPath
+          (df.inputFiles.count(f =>
+            new java.net.URI(f).getPath.startsWith(dataPrefix)), df.count())
+        }
+        out += s"""{"probe":"dv_read","rows":$n0,"tombstoned":$nDel,""" +
+          s""""delete_s":${f(delS)},"scan_before_s":${f(before)},""" +
+          s""""scan_after_s":${f(after)},"rows_after":$n1,""" +
+          s""""band_files_read":${band._1},"band_rows":${band._2},""" +
+          s""""band_s":${f(bandS)}}"""
       }
-      out += s"""{"probe":"dv_read","rows":$n0,"tombstoned":$nDel,""" +
-        s""""delete_s":${f(delS)},"scan_before_s":${f(before)},""" +
-        s""""scan_after_s":${f(after)},"rows_after":$n1,""" +
-        s""""band_files_read":${band._1},"band_rows":${band._2},""" +
-        s""""band_s":${f(bandS)}}"""
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
     }
 
     // --- MoR vs CoW write amplification (r18) --------------------
@@ -165,43 +164,42 @@ object WarehouseScaleProbe {
           .filter(e => !before.contains(e.batch)).map(_.bytes).sum
       }
       def run(mor: Boolean): (Double, Seq[Long], Seq[Double], Double) = {
-        val base = java.nio.file.Files.createTempDirectory(
-          s"graft_wsp_mor_$mor").toString + "/t"
-        graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
-          Seq("o_orderkey"), Seq("pk"))
-        val store = new graft.sinks.SnapshotStore(spark, new Path(base))
-        val bytes = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val readS = scala.collection.mutable.ArrayBuffer.empty[Double]
-        val (_, s) = timed {
-          (0 until nCycles).foreach { i =>
-            val before = store.currentResolved().get match {
-              case (_, e, _, m) => e.values.map(_.batch).toSet ++ m.map(_._2.batch)
+        Scratch.dir(s"graft_wsp_mor_$mor") { d =>
+          val base = d.resolve("t").toString
+          graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
+            Seq("o_orderkey"), Seq("pk"))
+          val store = new graft.sinks.SnapshotStore(spark, new Path(base))
+          val bytes = scala.collection.mutable.ArrayBuffer.empty[Long]
+          val readS = scala.collection.mutable.ArrayBuffer.empty[Double]
+          val (_, s) = timed {
+            (0 until nCycles).foreach { i =>
+              val before = store.currentResolved().get match {
+                case (_, e, _, m) => e.values.map(_.batch).toSet ++ m.map(_._2.batch)
+              }
+              if (mor) graft.sinks.SnapshotMerge.upsertMor(spark, base,
+                cycle(i), Seq("o_orderkey"), Seq("pk"), retain = 8)
+              else graft.sinks.SnapshotMerge.upsertUpdate(spark, base,
+                cycle(i), Seq("o_orderkey"), Seq("pk"), retain = 8)
+              bytes += newBatchBytes(store, before)
             }
-            if (mor) graft.sinks.SnapshotMerge.upsertMor(spark, base,
-              cycle(i), Seq("o_orderkey"), Seq("pk"), retain = 8)
-            else graft.sinks.SnapshotMerge.upsertUpdate(spark, base,
-              cycle(i), Seq("o_orderkey"), Seq("pk"), retain = 8)
-            bytes += newBatchBytes(store, before)
           }
+          // READ DEPTH: full-scan latency as slice depth (or batch
+          // fan-out) accumulates — what the reader pays for MoR's cheap
+          // writes until the autopilot folds
+          (0 until 3).foreach { _ =>
+            val (_, rs) = timed(store.read(o.schema).count())
+            readS += rs
+          }
+          // pure updates of existing keys: the row count must not move
+          val n = graft.sinks.SnapshotMerge.read(spark, base, o.schema).count()
+          require(n == o.count(), s"row count drifted: $n vs ${o.count()}")
+          // the autopilot: fold slice-hot partitions, read again
+          val (_, foldReadS) = timed {
+            store.compactSlices(o.schema, Seq("pk"), maxSlices = 2)
+            store.read(o.schema).count()
+          }
+          (s, bytes.toSeq, readS.toSeq, foldReadS)
         }
-        // READ DEPTH: full-scan latency as slice depth (or batch
-        // fan-out) accumulates — what the reader pays for MoR's cheap
-        // writes until the autopilot folds
-        (0 until 3).foreach { _ =>
-          val (_, rs) = timed(store.read(o.schema).count())
-          readS += rs
-        }
-        // pure updates of existing keys: the row count must not move
-        val n = graft.sinks.SnapshotMerge.read(spark, base, o.schema).count()
-        require(n == o.count(), s"row count drifted: $n vs ${o.count()}")
-        // the autopilot: fold slice-hot partitions, read again
-        val (_, foldReadS) = timed {
-          store.compactSlices(o.schema, Seq("pk"), maxSlices = 2)
-          store.read(o.schema).count()
-        }
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          java.nio.file.Paths.get(base).getParent.toFile)
-        (s, bytes.toSeq, readS.toSeq, foldReadS)
       }
       val (cowS, cowB, cowR, cowFR) = run(mor = false)
       val (morS, morB, morR, morFR) = run(mor = true)
@@ -233,34 +231,33 @@ object WarehouseScaleProbe {
         .withColumn("p0", (col("p0").cast("decimal(18,2)")
           + lit(i).cast("decimal(18,2)")).cast("double"))
       def run(sparse: Boolean): (Double, Seq[Long], Double) = {
-        val base = java.nio.file.Files.createTempDirectory(
-          s"graft_wsp_smor_$sparse").toString + "/t"
-        graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
-          Seq("o_orderkey"), Seq("pk"))
-        val store = new graft.sinks.SnapshotStore(spark, new Path(base))
-        val bytes = scala.collection.mutable.ArrayBuffer.empty[Long]
-        val (_, s) = timed {
-          (0 until nCycles).foreach { i =>
-            val before = {
+        Scratch.dir(s"graft_wsp_smor_$sparse") { d =>
+          val base = d.resolve("t").toString
+          graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
+            Seq("o_orderkey"), Seq("pk"))
+          val store = new graft.sinks.SnapshotStore(spark, new Path(base))
+          val bytes = scala.collection.mutable.ArrayBuffer.empty[Long]
+          val (_, s) = timed {
+            (0 until nCycles).foreach { i =>
+              val before = {
+                val cur = store.resolveCurrent().get
+                cur.entries.values.map(_.batch).toSet ++
+                  cur.mors.map(_._2.batch) ++ cur.smors.map(_.batch)
+              }
+              if (sparse) graft.sinks.SnapshotMerge.upsertMorSparse(spark, base,
+                cycle(i), Seq("o_orderkey"), Seq("pk"), Seq("p0"), retain = 8)
+              else graft.sinks.SnapshotMerge.upsertMor(spark, base,
+                cycle(i), Seq("o_orderkey"), Seq("pk"), retain = 8)
               val cur = store.resolveCurrent().get
-              cur.entries.values.map(_.batch).toSet ++
-                cur.mors.map(_._2.batch) ++ cur.smors.map(_.batch)
+              bytes += (cur.entries.values.toSeq ++ cur.mors.map(_._2))
+                .filter(e => !before.contains(e.batch)).map(_.bytes).sum +
+                cur.smors.filter(m => !before.contains(m.batch)).map(_.bytes).sum
             }
-            if (sparse) graft.sinks.SnapshotMerge.upsertMorSparse(spark, base,
-              cycle(i), Seq("o_orderkey"), Seq("pk"), Seq("p0"), retain = 8)
-            else graft.sinks.SnapshotMerge.upsertMor(spark, base,
-              cycle(i), Seq("o_orderkey"), Seq("pk"), retain = 8)
-            val cur = store.resolveCurrent().get
-            bytes += (cur.entries.values.toSeq ++ cur.mors.map(_._2))
-              .filter(e => !before.contains(e.batch)).map(_.bytes).sum +
-              cur.smors.filter(m => !before.contains(m.batch)).map(_.bytes).sum
           }
+          val (n, readS) = timed(store.read(o.schema).count())
+          require(n == o.count(), s"row count drifted: $n vs ${o.count()}")
+          (s, bytes.toSeq, readS)
         }
-        val (n, readS) = timed(store.read(o.schema).count())
-        require(n == o.count(), s"row count drifted: $n vs ${o.count()}")
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          java.nio.file.Paths.get(base).getParent.toFile)
-        (s, bytes.toSeq, readS)
       }
       val (fullS, fullB, fullR) = run(sparse = false)
       val (spS, spB, spR) = run(sparse = true)
@@ -297,38 +294,37 @@ object WarehouseScaleProbe {
         else Seq(s"p${(i - 12) % 12 + 1}", s"p${(i - 11) % 12 + 1}")
       sys.env.getOrElse("SPARK_GRAFT_SIG_COUNTS", "1,4,16")
         .split(",").map(_.trim.toInt).foreach { k =>
-        val base = java.nio.file.Files.createTempDirectory(
-          s"graft_wsp_sig_$k").toString + "/t"
-        graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
-          Seq("o_orderkey"), Seq("pk"))
-        val store = new graft.sinks.SnapshotStore(spark, new Path(base))
-        val (_, writeS) = timed {
-          (0 until k).foreach { i =>
-            val cols = sigCols(i)
-            val patch = cols.foldLeft(
-              o.where(col("o_orderkey") % 17 === 1)) { (d, c) =>
-              d.withColumn(c, concat(lit(s"sig$i#"), col(c)))
+        Scratch.dir(s"graft_wsp_sig_$k") { d =>
+          val base = d.resolve("t").toString
+          graft.sinks.SnapshotMerge.upsertUpdate(spark, base, o,
+            Seq("o_orderkey"), Seq("pk"))
+          val store = new graft.sinks.SnapshotStore(spark, new Path(base))
+          val (_, writeS) = timed {
+            (0 until k).foreach { i =>
+              val cols = sigCols(i)
+              val patch = cols.foldLeft(
+                o.where(col("o_orderkey") % 17 === 1)) { (d, c) =>
+                d.withColumn(c, concat(lit(s"sig$i#"), col(c)))
+              }
+              graft.sinks.SnapshotMerge.upsertMorSparse(spark, base, patch,
+                Seq("o_orderkey"), Seq("pk"), cols, retain = 8)
             }
-            graft.sinks.SnapshotMerge.upsertMorSparse(spark, base, patch,
-              Seq("o_orderkey"), Seq("pk"), cols, retain = 8)
           }
+          val nSigs = store.resolveCurrent().get.smors
+            .map(m => (m.keys, m.cols)).distinct.size
+          val readS = (0 until 3).map { _ =>
+            val (n, rs) = timed(store.read(o.schema).count())
+            require(n == o.count(), s"row count drifted: $n vs ${o.count()}")
+            rs
+          }
+          val (_, foldReadS) = timed {
+            store.compactSlices(o.schema, Seq("pk"), maxSlices = 1)
+            store.read(o.schema).count()
+          }
+          out += s"""{"probe":"smor_signatures","k":$k,"distinct_sigs":$nSigs,""" +
+            s""""write_s":${f(writeS)},"read_s":[${readS.map(f).mkString(",")}],""" +
+            s""""fold_read_s":${f(foldReadS)}}"""
         }
-        val nSigs = store.resolveCurrent().get.smors
-          .map(m => (m.keys, m.cols)).distinct.size
-        val readS = (0 until 3).map { _ =>
-          val (n, rs) = timed(store.read(o.schema).count())
-          require(n == o.count(), s"row count drifted: $n vs ${o.count()}")
-          rs
-        }
-        val (_, foldReadS) = timed {
-          store.compactSlices(o.schema, Seq("pk"), maxSlices = 1)
-          store.read(o.schema).count()
-        }
-        org.apache.commons.io.FileUtils.deleteQuietly(
-          java.nio.file.Paths.get(base).getParent.toFile)
-        out += s"""{"probe":"smor_signatures","k":$k,"distinct_sigs":$nSigs,""" +
-          s""""write_s":${f(writeS)},"read_s":[${readS.map(f).mkString(",")}],""" +
-          s""""fold_read_s":${f(foldReadS)}}"""
       }
     }
 

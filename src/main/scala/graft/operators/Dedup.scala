@@ -3,7 +3,7 @@ package graft.operators
 import graft.Ckpt.CkptOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Scratch, Tables}
 
 /** Deduplication operators over the `documents` table — the
   * training-data-pipeline extensions (BASELINE.json north star). The
@@ -548,134 +548,131 @@ object Dedup extends QueryModule {
     * is an idempotent overwrite.
     */
   def streamNearDupKept(s: SparkSession, docs: DataFrame,
-      threshold: Double = 0.8): DataFrame = {
-    val root = java.nio.file.Files.createTempDirectory("graft_strmnd_")
+      threshold: Double = 0.8): DataFrame = Scratch.frame("graft_strmnd_") { root =>
     val drop = root.resolve("waves"); java.nio.file.Files.createDirectories(drop)
     val store = root.resolve("store").toString
     val shst = root.resolve("shst").toString
     val kept = root.resolve("kept").toString
-    try {
-      val t0 = System.currentTimeMillis()
-      (0 to 2).foreach(w => graft.streaming.EventStreams.stageWave(
-        docs.where(pmod(col("doc_id"), lit(3)) === w),
-        root, drop, s"w$w.parquet", t0 - (2 - w) * 60000L))
-      // prior batch dirs STRICTLY BELOW `id`: a retry of batch id must
-      // not glob in its own failed attempt's partial store write
-      def priorDirs(base: String, id: Long): Seq[String] = {
-        val d = new java.io.File(base)
-        if (!d.isDirectory) Nil
-        else d.listFiles().toSeq.map(_.getName)
-          .filter(n => n.startsWith("b") && n.drop(1).nonEmpty &&
-            n.drop(1).forall(_.isDigit) && n.drop(1).toLong < id)
-          .sorted.map(n => s"$base/$n")
+    val t0 = System.currentTimeMillis()
+    (0 to 2).foreach(w => graft.streaming.EventStreams.stageWave(
+      docs.where(pmod(col("doc_id"), lit(3)) === w),
+      root, drop, s"w$w.parquet", t0 - (2 - w) * 60000L))
+    // prior batch dirs STRICTLY BELOW `id`: a retry of batch id must
+    // not glob in its own failed attempt's partial store write
+    def priorDirs(base: String, id: Long): Seq[String] = {
+      val d = new java.io.File(base)
+      if (!d.isDirectory) Nil
+      else d.listFiles().toSeq.map(_.getName)
+        .filter(n => n.startsWith("b") && n.drop(1).nonEmpty &&
+          n.drop(1).forall(_.isDigit) && n.drop(1).toLong < id)
+        .sorted.map(n => s"$base/$n")
+    }
+    // the shingle store is hash-BUCKETED by kept doc id (16 `kb=`
+    // partition dirs per batch), so a batch's verify stage reads
+    // only the buckets its CANDIDATES' kept ids hash into — at a
+    // large kept corpus the per-batch verify scan is bounded by
+    // candidate bucket spread, not corpus size (r18, gap #1 of the
+    // mid-round list)
+    val kbOf = (c: org.apache.spark.sql.Column) =>
+      pmod(xxhash64(c), lit(16)).cast("int")
+    val fb = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
+        id: Long) => {
+      val sh = batch.select(col("doc_id"),
+        array_distinct(shingles(col("text"))).as("sh")).ckpt(false)
+      val bnd = md5Bands(sh).ckpt(false)
+      val priorKeys = priorDirs(store, id) match {
+        case Nil => s.createDataFrame(
+          s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
+          org.apache.spark.sql.types.StructType(Seq(
+            org.apache.spark.sql.types.StructField("band",
+              org.apache.spark.sql.types.IntegerType),
+            org.apache.spark.sql.types.StructField("key",
+              org.apache.spark.sql.types.StringType),
+            org.apache.spark.sql.types.StructField("doc_id",
+              org.apache.spark.sql.types.LongType))))
+        case ds => s.read.parquet(ds: _*)
       }
-      // the shingle store is hash-BUCKETED by kept doc id (16 `kb=`
-      // partition dirs per batch), so a batch's verify stage reads
-      // only the buckets its CANDIDATES' kept ids hash into — at a
-      // large kept corpus the per-batch verify scan is bounded by
-      // candidate bucket spread, not corpus size (r18, gap #1 of the
-      // mid-round list)
-      val kbOf = (c: org.apache.spark.sql.Column) =>
-        pmod(xxhash64(c), lit(16)).cast("int")
-      val fb = (batch: org.apache.spark.sql.Dataset[org.apache.spark.sql.Row],
-          id: Long) => {
-        val sh = batch.select(col("doc_id"),
-          array_distinct(shingles(col("text"))).as("sh")).ckpt(false)
-        val bnd = md5Bands(sh).ckpt(false)
-        val priorKeys = priorDirs(store, id) match {
-          case Nil => s.createDataFrame(
-            s.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("band",
-                org.apache.spark.sql.types.IntegerType),
-              org.apache.spark.sql.types.StructField("key",
-                org.apache.spark.sql.types.StringType),
-              org.apache.spark.sql.types.StructField("doc_id",
-                org.apache.spark.sql.types.LongType))))
-          case ds => s.read.parquet(ds: _*)
+      // candidates: bucket-collision pairs (new doc, kept doc) —
+      // bounded by bucket occupancy, never all-pairs. ckpt'd: the
+      // bucket collect AND the verify join both consume it.
+      val cands = bnd.join(
+          priorKeys.select(col("band"), col("key"), col("doc_id").as("kept_id")),
+          Seq("band", "key"))
+        .select(col("doc_id"), col("kept_id")).distinct().ckpt(false)
+      // the candidate kept ids' hash buckets — ≤16 small values, the
+      // driver-side prune list for the shingle-store read
+      val buckets = cands.select(kbOf(col("kept_id")).as("kb"))
+        .distinct().collect().map(_.getInt(0)).toSeq
+      // exact verify (the dedup_minhash_md5 verify join): drop only
+      // candidates whose TRUE shingle Jaccard clears the threshold.
+      // No candidates ⇒ no verify scan at all.
+      val dropIds =
+        if (buckets.isEmpty) cands.select(col("doc_id")).limit(0)
+        else {
+          // explicit schema: a kept-empty prior batch wrote no
+          // partition dirs, and inference over only-_SUCCESS dirs
+          // throws; a declared schema reads them as empty instead
+          val shSchema = sh.schema.add("kb",
+            org.apache.spark.sql.types.IntegerType)
+          val priorSh = priorDirs(shst, id)
+            .map(d => s.read.option("basePath", d).schema(shSchema).parquet(d))
+            .reduce(_.unionByName(_))
+            .where(col("kb").isin(buckets: _*)) // partition-dir prune
+          cands
+            .join(sh, Seq("doc_id"))
+            .join(priorSh.select(col("doc_id").as("kept_id"), col("sh").as("kept_sh")),
+              Seq("kept_id"))
+            .where(shingleSetJaccard(col("sh"), col("kept_sh")) >= threshold)
+            .select(col("doc_id")).distinct()
         }
-        // candidates: bucket-collision pairs (new doc, kept doc) —
-        // bounded by bucket occupancy, never all-pairs. ckpt'd: the
-        // bucket collect AND the verify join both consume it.
-        val cands = bnd.join(
-            priorKeys.select(col("band"), col("key"), col("doc_id").as("kept_id")),
-            Seq("band", "key"))
-          .select(col("doc_id"), col("kept_id")).distinct().ckpt(false)
-        // the candidate kept ids' hash buckets — ≤16 small values, the
-        // driver-side prune list for the shingle-store read
-        val buckets = cands.select(kbOf(col("kept_id")).as("kb"))
-          .distinct().collect().map(_.getInt(0)).toSeq
-        // exact verify (the dedup_minhash_md5 verify join): drop only
-        // candidates whose TRUE shingle Jaccard clears the threshold.
-        // No candidates ⇒ no verify scan at all.
-        val dropIds =
-          if (buckets.isEmpty) cands.select(col("doc_id")).limit(0)
-          else {
-            // explicit schema: a kept-empty prior batch wrote no
-            // partition dirs, and inference over only-_SUCCESS dirs
-            // throws; a declared schema reads them as empty instead
-            val shSchema = sh.schema.add("kb",
-              org.apache.spark.sql.types.IntegerType)
-            val priorSh = priorDirs(shst, id)
-              .map(d => s.read.option("basePath", d).schema(shSchema).parquet(d))
-              .reduce(_.unionByName(_))
-              .where(col("kb").isin(buckets: _*)) // partition-dir prune
-            cands
-              .join(sh, Seq("doc_id"))
-              .join(priorSh.select(col("doc_id").as("kept_id"), col("sh").as("kept_sh")),
-                Seq("kept_id"))
-              .where(shingleSetJaccard(col("sh"), col("kept_sh")) >= threshold)
-              .select(col("doc_id")).distinct()
-          }
-        val crossKept = batch.select(col("doc_id"))
-          .join(dropIds, Seq("doc_id"), "left_anti").ckpt(false)
-        // INTRA-BATCH dedup (r19): two near-duplicates arriving in
-        // the SAME micro-batch used to both survive (the store holds
-        // prior batches only) — the reference's within-run set-dedup
-        // (`cmdline.py:289-296`) says they must not. Same band/verify
-        // algebra, restricted to the batch's cross-surviving docs,
-        // keep-first by doc_id: a doc drops when a verified colliding
-        // partner with a SMALLER id cross-survived the same batch.
-        // Pair-min-wins, not sequential-greedy: in a chain A~B~C
-        // (A<B<C, A≁C) both B and C drop — B loses to A, C to B
-        // (B cross-survived; its own intra drop doesn't resurrect C).
-        // Bounded by intra-batch bucket occupancy, never batch².
-        val bndK = bnd.join(crossKept, Seq("doc_id"))
-        val intraPairs = bndK.as("l").join(bndK.as("r"),
-            col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
-              col("l.doc_id") < col("r.doc_id"))
-          .select(col("l.doc_id").as("keep_id"), col("r.doc_id").as("doc_id"))
-          .distinct()
-        val intraDrop = intraPairs
-          .join(sh, Seq("doc_id"))
-          .join(sh.select(col("doc_id").as("keep_id"), col("sh").as("keep_sh")),
-            Seq("keep_id"))
-          .where(shingleSetJaccard(col("sh"), col("keep_sh")) >= threshold)
-          .select(col("doc_id")).distinct()
-        val keptIds = crossKept.join(intraDrop, Seq("doc_id"), "left_anti")
-          .ckpt(false)
-        bnd.join(keptIds, Seq("doc_id"))
-          .select(col("band"), col("key"), col("doc_id")).distinct()
-          .write.mode("overwrite").parquet(s"$store/b$id")
-        sh.join(keptIds, Seq("doc_id"))
-          .withColumn("kb", kbOf(col("doc_id")))
-          .write.mode("overwrite").partitionBy("kb").parquet(s"$shst/b$id")
-        keptIds.write.mode("overwrite").parquet(s"$kept/b$id")
-        releaseCheckpoints(sh); releaseCheckpoints(bnd)
-        releaseCheckpoints(cands); releaseCheckpoints(crossKept)
-        releaseCheckpoints(keptIds)
-        ()
-      }
-      val q = s.readStream.schema(docs.schema)
-        .option("maxFilesPerTrigger", 1).parquet(drop.toString)
-        .writeStream
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .option("checkpointLocation", root.resolve("cp").toString)
-        .foreachBatch(fb)
-        .start()
-      q.awaitTermination()
-      s.read.parquet(s"$kept/*").ckpt(true)
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+      val crossKept = batch.select(col("doc_id"))
+        .join(dropIds, Seq("doc_id"), "left_anti").ckpt(false)
+      // INTRA-BATCH dedup (r19): two near-duplicates arriving in
+      // the SAME micro-batch used to both survive (the store holds
+      // prior batches only) — the reference's within-run set-dedup
+      // (`cmdline.py:289-296`) says they must not. Same band/verify
+      // algebra, restricted to the batch's cross-surviving docs,
+      // keep-first by doc_id: a doc drops when a verified colliding
+      // partner with a SMALLER id cross-survived the same batch.
+      // Pair-min-wins, not sequential-greedy: in a chain A~B~C
+      // (A<B<C, A≁C) both B and C drop — B loses to A, C to B
+      // (B cross-survived; its own intra drop doesn't resurrect C).
+      // Bounded by intra-batch bucket occupancy, never batch².
+      val bndK = bnd.join(crossKept, Seq("doc_id"))
+      val intraPairs = bndK.as("l").join(bndK.as("r"),
+          col("l.band") === col("r.band") && col("l.key") === col("r.key") &&
+            col("l.doc_id") < col("r.doc_id"))
+        .select(col("l.doc_id").as("keep_id"), col("r.doc_id").as("doc_id"))
+        .distinct()
+      val intraDrop = intraPairs
+        .join(sh, Seq("doc_id"))
+        .join(sh.select(col("doc_id").as("keep_id"), col("sh").as("keep_sh")),
+          Seq("keep_id"))
+        .where(shingleSetJaccard(col("sh"), col("keep_sh")) >= threshold)
+        .select(col("doc_id")).distinct()
+      val keptIds = crossKept.join(intraDrop, Seq("doc_id"), "left_anti")
+        .ckpt(false)
+      bnd.join(keptIds, Seq("doc_id"))
+        .select(col("band"), col("key"), col("doc_id")).distinct()
+        .write.mode("overwrite").parquet(s"$store/b$id")
+      sh.join(keptIds, Seq("doc_id"))
+        .withColumn("kb", kbOf(col("doc_id")))
+        .write.mode("overwrite").partitionBy("kb").parquet(s"$shst/b$id")
+      keptIds.write.mode("overwrite").parquet(s"$kept/b$id")
+      releaseCheckpoints(sh); releaseCheckpoints(bnd)
+      releaseCheckpoints(cands); releaseCheckpoints(crossKept)
+      releaseCheckpoints(keptIds)
+      ()
+    }
+    val q = s.readStream.schema(docs.schema)
+      .option("maxFilesPerTrigger", 1).parquet(drop.toString)
+      .writeStream
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", root.resolve("cp").toString)
+      .foreachBatch(fb)
+      .start()
+    q.awaitTermination()
+    s.read.parquet(s"$kept/*").ckpt(true)
   }
 
   /** The entity-resolution labeling stage — every `part` record with
@@ -891,11 +888,13 @@ object Dedup extends QueryModule {
     // land the mapping off the block manager so the final round's
     // checkpoint can be released too (see scaladoc)
     val dir = java.nio.file.Files.createTempDirectory("graft-cc-").toString
-    // consumers read this dir lazily for the rest of the session, so
-    // it can only be reclaimed at JVM exit (observed: ~16 KB/run
-    // accumulating in /tmp across bench/verify sessions)
-    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(dir))
     result.write.mode("overwrite").parquet(dir)
+    // consumers read this dir lazily for the rest of the session, so
+    // it can only be reclaimed at JVM exit. Registered AFTER the write:
+    // forceDeleteOnExit registers only the files present when called,
+    // and a dir still holding files at exit is silently kept (measured:
+    // one graft-cc- dir left in /tmp per call when registered first)
+    org.apache.commons.io.FileUtils.forceDeleteOnExit(new java.io.File(dir))
     releaseCheckpoints(e)
     spark.read.parquet(dir)
   }

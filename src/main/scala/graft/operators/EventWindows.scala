@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.Ckpt.CkptOps
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Scratch, Tables}
 
 /** Event-time windowing over the `events` table (SURVEY.md §2.11).
   *
@@ -29,23 +29,23 @@ object EventWindows extends QueryModule {
     */
   private val strmRunIds = new java.util.concurrent.atomic.AtomicLong(0L)
 
-  /** Stage the events table as a drop FOLDER for the `strm_*` queries
-    * (file-source streams consume directories), repeating every data
-    * file `copies` times under distinct names (strm_dedup stages the
-    * corpus twice so the stream must eliminate genuine duplicates).
-    * Handles BOTH export shapes: a single-file export is copied
-    * directly; a directory-shaped export has each of its `.parquet`
-    * data files copied in (a naive `Files.copy` on the directory path
-    * would create an EMPTY directory and a silently zero-row stream).
-    * The caller deletes the returned temp dir after the drain —
-    * `drainToMemory` returns a materialized local frame, so nothing
-    * reads the staged files afterwards (r13 leaked one corpus-sized
-    * copy per bench rep).
+  /** Run `body` over a scratch drop FOLDER holding the events table
+    * for the `strm_*` queries (file-source streams consume
+    * directories), every data file repeated `copies` times under
+    * distinct names (strm_dedup stages the corpus twice so the stream
+    * must eliminate genuine duplicates). Handles BOTH export shapes: a
+    * single-file export is copied directly; a directory-shaped export
+    * has each of its `.parquet` data files copied in (a naive
+    * `Files.copy` on the directory path would create an EMPTY directory
+    * and a silently zero-row stream). The folder is a [[Scratch.frame]]
+    * dir, gone when `body` returns — `drainToMemory` returns a
+    * materialized local frame, so nothing reads the staged files
+    * afterwards (r13 leaked one corpus-sized copy per bench rep).
     */
-  private def stageEventsDrop(dir: String, copies: Int = 1): java.nio.file.Path = {
+  private def stageEventsDrop(dir: String, copies: Int = 1)(
+      body: String => DataFrame): DataFrame = Scratch.frame("strm_drop") { d =>
     import java.nio.file.{Files, Path, Paths}
     val src = Paths.get(s"$dir/events.parquet")
-    val d = Files.createTempDirectory("strm_drop")
     val dataFiles: Seq[Path] =
       if (Files.isDirectory(src)) {
         val st = Files.list(src)
@@ -58,7 +58,7 @@ object EventWindows extends QueryModule {
     require(dataFiles.nonEmpty, s"no parquet data files under $src")
     for (c <- 1 to copies; (f, i) <- dataFiles.zipWithIndex)
       Files.copy(f, d.resolve(s"c${c}_f$i.parquet"))
-    d
+    body(d.toString)
   }
 
   /** Stage the late-arrival fixture for strm_late_drop as THREE
@@ -79,77 +79,29 @@ object EventWindows extends QueryModule {
     *      below the now-armed late filter, so the aggregation MUST
     *      drop them all.
     *
-    * All three waves are written through batch Spark (coalesce(1)) so
-    * each is exactly one file regardless of the export's file layout.
+    * All three waves are written through [[graft.streaming.EventStreams.stageWave]]
+    * so each is exactly one file regardless of the export's file layout.
     *
-    * CACHED per (sf-dir, events fingerprint) — the edgeArtifactRoot
-    * convention: the fixture is pure function of the source, three
-    * Spark writes cost ~1–2 s at sf0.1, and re-staging per invocation
-    * would put FIXTURE cost inside the measured catalog row. The
-    * cached dir is never deleted by callers (unlike the per-call
-    * stageEventsDrop temp dirs); a regenerated export moves the
-    * (length, mtime) fingerprint and so the key. Concurrent builders
-    * race benignly: each builds into its own temp dir and the loser's
-    * atomic-move fails onto the winner's identical artifact. Wave
-    * mtime ORDER (w1 < w2 < w3) is what maxFilesPerTrigger=1 paces
-    * on; it is preserved by the directory move.
+    * CACHED per (sf-dir, events fingerprint) through [[Scratch.cached]]:
+    * the fixture is a pure function of the source, three Spark writes
+    * cost ~1–2 s at sf0.1, and re-staging per invocation would put
+    * FIXTURE cost inside the measured catalog row.
     */
-  private[graft] def stageLateDrop(s: SparkSession, dir: String): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val (len, mtime0) = Tables.sourceFingerprint(s, s"$dir/events.parquet")
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$dir|$len|$mtime0".getBytes("UTF-8"))
-      .take(16).map(b => f"$b%02x").mkString
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_strm_fixtures")
-    Files.createDirectories(root)
-    val cached = root.resolve(s"late_${digest}_v1")
-    if (Files.isDirectory(cached)) return cached
-    val drop = Files.createTempDirectory(root, "late_build_")
-    val t0 = System.currentTimeMillis()
-    val ev = Tables.load(s, dir, "events")
-    val maxUs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    val stage = Files.createTempDirectory("strm_late_stage")
-    def writeWave(df: DataFrame, name: String, mtime: Long): Unit = {
-      df.coalesce(1).write.mode("overwrite")
-        .parquet(stage.resolve(name).toString)
-      val st = Files.list(stage.resolve(name))
-      val part = try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      } finally st.close()
-      val dst = drop.resolve(s"$name.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst, FileTime.fromMillis(mtime))
+  private[graft] def stageLateDrop(s: SparkSession, dir: String): java.nio.file.Path =
+    Scratch.cached(s, s"$dir/events.parquet", "late") { drop =>
+      val t0 = System.currentTimeMillis()
+      val ev = Tables.load(s, dir, "events")
+      val maxUs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
+      Scratch.dir("strm_late_stage") { stage =>
+        def wave(df: DataFrame, name: String, mtime: Long): Unit =
+          graft.streaming.EventStreams.stageWave(df, stage, drop, s"$name.parquet", mtime)
+        wave(ev, "w1_ontime", t0 - 120000)
+        wave(ev.limit(0), "w2_spacer", t0 - 60000)
+        wave(ev.where(
+          unix_micros(col("ts")) < maxUs - 3L * 3600L * 1000000L),
+          "w3_late", t0)
+      }
     }
-    writeWave(ev, "w1_ontime", t0 - 120000)
-    writeWave(ev.limit(0), "w2_spacer", t0 - 60000)
-    writeWave(ev.where(
-      unix_micros(col("ts")) < maxUs - 3L * 3600L * 1000000L),
-      "w3_late", t0)
-    org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
-    // Publish-or-adopt: a FileSystemException here is EITHER a lost
-    // publish race (another builder landed `cached` first — adopt
-    // theirs, drop ours) or an environmental atomic-move failure
-    // (e.g. ATOMIC_MOVE across devices when java.io.tmpdir is
-    // remapped). Only the first leaves a usable artifact; swallowing
-    // the second used to return a nonexistent path and fail the drain
-    // later with a confusing missing-path error (r14 advice). So:
-    // verify the winner's artifact actually exists, fall back to a
-    // plain move when it doesn't, and stay loud if even that fails.
-    try Files.move(drop, cached, StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException =>
-      if (Files.isDirectory(cached))
-        org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
-      else
-        try Files.move(drop, cached)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile) }
-    }
-    cached
-  }
 
   /** Stage the outer-join fixture: wave 1 = the full events table,
     * wave 2 = two SENTINEL rows at max(ts)+3h — one click (user −1)
@@ -162,66 +114,25 @@ object EventWindows extends QueryModule {
     * unmatched click in the last hour would be silently withheld.
     * Cached per source fingerprint (the stageLateDrop convention).
     */
-  private[graft] def stageOuterJoin(s: SparkSession, dir: String): java.nio.file.Path = {
-    import java.nio.file.{Files, Paths, StandardCopyOption}
-    import java.nio.file.attribute.FileTime
-    val (len, mtime0) = Tables.sourceFingerprint(s, s"$dir/events.parquet")
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$dir|$len|$mtime0".getBytes("UTF-8"))
-      .take(16).map(b => f"$b%02x").mkString
-    val root = Paths.get(System.getProperty("java.io.tmpdir"),
-      "graft_strm_fixtures")
-    Files.createDirectories(root)
-    val cached = root.resolve(s"outer_${digest}_v1")
-    if (Files.isDirectory(cached)) return cached
-    val drop = Files.createTempDirectory(root, "outer_build_")
-    val t0 = System.currentTimeMillis()
-    val ev = Tables.load(s, dir, "events")
-    val maxUs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
-    val sentinels = s.range(1, 3).select(
-      (col("id") * -1L).as("event_id"),
-      timestamp_micros(lit(maxUs + 3L * 3600L * 1000000L)).as("ts"),
-      (col("id") * -1L).as("user_id"),
-      when(col("id") === 1, "click").otherwise("purchase").as("event_type"),
-      lit(0.0).as("value"),
-      lit("{}").as("props"))
-    val stage = Files.createTempDirectory("strm_outer_stage")
-    def writeWave(df: DataFrame, name: String, mtime: Long): Unit = {
-      df.coalesce(1).write.mode("overwrite")
-        .parquet(stage.resolve(name).toString)
-      val st = Files.list(stage.resolve(name))
-      val part = try {
-        import scala.jdk.CollectionConverters._
-        st.iterator().asScala
-          .filter(_.getFileName.toString.endsWith(".parquet")).toSeq.head
-      } finally st.close()
-      val dst = drop.resolve(s"$name.parquet")
-      Files.copy(part, dst)
-      Files.setLastModifiedTime(dst, FileTime.fromMillis(mtime))
+  private[graft] def stageOuterJoin(s: SparkSession, dir: String): java.nio.file.Path =
+    Scratch.cached(s, s"$dir/events.parquet", "outer") { drop =>
+      val t0 = System.currentTimeMillis()
+      val ev = Tables.load(s, dir, "events")
+      val maxUs = ev.agg(max(unix_micros(col("ts")))).collect()(0).getLong(0)
+      val sentinels = s.range(1, 3).select(
+        (col("id") * -1L).as("event_id"),
+        timestamp_micros(lit(maxUs + 3L * 3600L * 1000000L)).as("ts"),
+        (col("id") * -1L).as("user_id"),
+        when(col("id") === 1, "click").otherwise("purchase").as("event_type"),
+        lit(0.0).as("value"),
+        lit("{}").as("props"))
+      Scratch.dir("strm_outer_stage") { stage =>
+        def wave(df: DataFrame, name: String, mtime: Long): Unit =
+          graft.streaming.EventStreams.stageWave(df, stage, drop, s"$name.parquet", mtime)
+        wave(ev, "w1_events", t0 - 120000)
+        wave(sentinels, "w2_sentinels", t0 - 60000)
+      }
     }
-    writeWave(ev, "w1_events", t0 - 120000)
-    writeWave(sentinels, "w2_sentinels", t0 - 60000)
-    org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
-    // Publish-or-adopt: a FileSystemException here is EITHER a lost
-    // publish race (another builder landed `cached` first — adopt
-    // theirs, drop ours) or an environmental atomic-move failure
-    // (e.g. ATOMIC_MOVE across devices when java.io.tmpdir is
-    // remapped). Only the first leaves a usable artifact; swallowing
-    // the second used to return a nonexistent path and fail the drain
-    // later with a confusing missing-path error (r14 advice). So:
-    // verify the winner's artifact actually exists, fall back to a
-    // plain move when it doesn't, and stay loud if even that fails.
-    try Files.move(drop, cached, StandardCopyOption.ATOMIC_MOVE)
-    catch { case _: java.nio.file.FileSystemException =>
-      if (Files.isDirectory(cached))
-        org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
-      else
-        try Files.move(drop, cached)
-        catch { case _: java.nio.file.FileAlreadyExistsException =>
-          org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile) }
-    }
-    cached
-  }
 
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // Tumbling 1-hour window per event_type.
@@ -251,14 +162,13 @@ object EventWindows extends QueryModule {
     // state lives in the state store keyed by (window, type) — the
     // standing-pipeline twin of the batch query.
     "strm_tumbling" -> ((s, dir) => {
-      val drop = stageEventsDrop(dir)
-      try {
+      stageEventsDrop(dir) { drop =>
         val out = s"strm_tumbling_out_${strmRunIds.incrementAndGet()}"
         graft.streaming.EventStreams.drainToMemory(s,
           graft.streaming.EventStreams.tumblingCounts(
-            graft.streaming.EventStreams.readEvents(s, drop.toString)),
+            graft.streaming.EventStreams.readEvents(s, drop)),
           out)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY #1b — the SAME tumbling drain on the
@@ -274,17 +184,16 @@ object EventWindows extends QueryModule {
     // every round — if the backend swap changed any row, the driver
     // would see it.
     "strm_rocksdb" -> ((s, dir) => {
-      val drop = stageEventsDrop(dir)
-      try {
+      stageEventsDrop(dir) { drop =>
         val out = s"strm_rocksdb_out_${strmRunIds.incrementAndGet()}"
         graft.streaming.EventStreams.drainToMemory(s,
           graft.streaming.EventStreams.tumblingCounts(
-            graft.streaming.EventStreams.readEvents(s, drop.toString)),
+            graft.streaming.EventStreams.readEvents(s, drop)),
           out, org.apache.spark.sql.streaming.OutputMode.Complete(),
           Map("spark.sql.streaming.stateStore.providerClass" ->
             ("org.apache.spark.sql.execution.streaming.state." +
               "RocksDBStateStoreProvider")))
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY #2 — stream-stream interval JOIN, the
@@ -299,14 +208,13 @@ object EventWindows extends QueryModule {
     // stateful streaming join (state store, watermark eviction and
     // all) every round. StreamingSpec pins the same parity in-suite.
     "strm_join" -> ((s, dir) => {
-      val drop = stageEventsDrop(dir)
-      try {
+      stageEventsDrop(dir) { drop =>
         val out = s"strm_join_out_${strmRunIds.incrementAndGet()}"
         graft.streaming.EventStreams.drainToMemory(s,
           graft.streaming.EventStreams.clickPurchaseJoin(
-            graft.streaming.EventStreams.readEvents(s, drop.toString)),
+            graft.streaming.EventStreams.readEvents(s, drop)),
           out, org.apache.spark.sql.streaming.OutputMode.Append())
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY #2b — LEFT OUTER stream-stream join:
@@ -352,17 +260,16 @@ object EventWindows extends QueryModule {
       // every event staged TWICE (shared stager handles both export
       // shapes — the bespoke Files.copy it replaced silently copied a
       // directory-shaped export as an empty folder)
-      val drop = stageEventsDrop(dir, copies = 2)
-      try {
+      stageEventsDrop(dir, copies = 2) { drop =>
         val out = s"strm_dedup_out_${strmRunIds.incrementAndGet()}"
         graft.streaming.EventStreams.drainToMemory(s,
           graft.streaming.EventStreams.dedupEvents(
-            graft.streaming.EventStreams.readEvents(s, drop.toString)),
+            graft.streaming.EventStreams.readEvents(s, drop)),
           out, org.apache.spark.sql.streaming.OutputMode.Append())
           .select(col("event_id"),
             date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"),
             col("user_id"), col("event_type"), col("value"), col("props"))
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY #4 — SESSION windows as a stream: the
@@ -382,14 +289,13 @@ object EventWindows extends QueryModule {
     // comparable. At scale session state is keyed by (user, session)
     // in the state store and merges locally per key.
     "strm_session" -> ((s, dir) => {
-      val drop = stageEventsDrop(dir)
-      try {
+      stageEventsDrop(dir) { drop =>
         val out = s"strm_session_out_${strmRunIds.incrementAndGet()}"
         graft.streaming.EventStreams.drainToMemory(s,
           graft.streaming.EventStreams.sessionCounts(
-            graft.streaming.EventStreams.readEvents(s, drop.toString)),
+            graft.streaming.EventStreams.readEvents(s, drop)),
           out)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY #4b — SESSIONS through transformWithState
@@ -457,8 +363,7 @@ object EventWindows extends QueryModule {
                             element_at(a, 1).value,
                             (s, x) -> 0.25D * x.value + 0.75D * s)""")
             .as("ewma"))
-      val drop = java.nio.file.Files.createTempDirectory("ewma_boot")
-      try {
+      Scratch.frame("ewma_boot") { drop =>
         tailEv.write.mode("overwrite").parquet(s"$drop/tail")
         import s.implicits._
         val out = s"strm_ewma_boot_out_${strmRunIds.incrementAndGet()}"
@@ -476,7 +381,7 @@ object EventWindows extends QueryModule {
           .agg(max(struct(col("n"), col("ewma"))).as("f"))
           .select(col("user_id"), col("f.n").cast("int").as("n_events"),
             col("f.ewma").as("ewma"))
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY #5c — MAP state through
@@ -487,12 +392,11 @@ object EventWindows extends QueryModule {
     // (user, type) is the complete tally, so a plain GROUP BY oracle
     // hash-checks the MapState read/modify/write path every round.
     "strm_type_counts_tws" -> ((s, dir) => {
-      val drop = stageEventsDrop(dir)
-      try {
+      stageEventsDrop(dir) { drop =>
         val out = s"strm_tcnt_out_${strmRunIds.incrementAndGet()}"
         val drained = graft.streaming.EventStreams.drainToMemory(s,
           graft.streaming.EventStreams.userTypeCountsTws(s,
-            graft.streaming.EventStreams.readEvents(s, drop.toString))
+            graft.streaming.EventStreams.readEvents(s, drop))
             .toDF("user_id", "event_type", "n"),
           out, org.apache.spark.sql.streaming.OutputMode.Update(),
           Map("spark.sql.streaming.stateStore.providerClass" ->
@@ -500,7 +404,7 @@ object EventWindows extends QueryModule {
               "RocksDBStateStoreProvider")))
         drained.groupBy(col("user_id"), col("event_type"))
           .agg(max(col("n")).as("n_events"))
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY — CHECKPOINT-RESTART RECOVERY (VERDICT
@@ -523,8 +427,6 @@ object EventWindows extends QueryModule {
     // the recovery path a 1000-executor deployment leans on: restart
     // cost is O(failed batch), never O(history).
     "strm_restart_resume" -> ((s, dir) => {
-      import java.nio.file.{Files, Paths}
-      import java.nio.file.attribute.FileTime
       val ev = Tables.load(s, dir, "events")
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("value"), pmod(col("event_id"), lit(8L)).as("pk"))
@@ -533,9 +435,8 @@ object EventWindows extends QueryModule {
         .withColumn("value",
           (col("value").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double"))
-      val root = Files.createTempDirectory("strm_restart")
-      try {
-        val drop = root.resolve("drop"); Files.createDirectories(drop)
+      Scratch.frame("strm_restart") { root =>
+        val drop = root.resolve("drop"); java.nio.file.Files.createDirectories(drop)
         def wave(df: DataFrame, name: String, mtime: Long): Unit =
           graft.streaming.EventStreams.stageWave(df, root, drop, name, mtime)
         val t0 = System.currentTimeMillis()
@@ -559,7 +460,7 @@ object EventWindows extends QueryModule {
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY #6 — WATERMARK LATE-DATA DROP,
@@ -612,19 +513,18 @@ object EventWindows extends QueryModule {
     // numbers per key — the O(1)-per-key class that survives an
     // unbounded stream.
     "strm_ewma" -> ((s, dir) => {
-      val drop = stageEventsDrop(dir)
-      try {
+      stageEventsDrop(dir) { drop =>
         val out = s"strm_ewma_out_${strmRunIds.incrementAndGet()}"
         val drained = graft.streaming.EventStreams.drainToMemory(s,
           graft.streaming.EventStreams.userEwma(s,
-            graft.streaming.EventStreams.readEvents(s, drop.toString))
+            graft.streaming.EventStreams.readEvents(s, drop))
             .toDF("user_id", "n", "ewma"),
           out, org.apache.spark.sql.streaming.OutputMode.Update())
         drained.groupBy(col("user_id"))
           .agg(max(struct(col("n"), col("ewma"))).as("f"))
           .select(col("user_id"), col("f.n").cast("int").as("n_events"),
             col("f.ewma").as("ewma"))
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // STREAMING CATALOG ENTRY #5b — the SAME per-user EWMA through
@@ -640,12 +540,11 @@ object EventWindows extends QueryModule {
     // tws-vs-mapGroups drain parity and that the tws operator
     // actually ran on RocksDB (provider metrics in the progress).
     "strm_ewma_tws" -> ((s, dir) => {
-      val drop = stageEventsDrop(dir)
-      try {
+      stageEventsDrop(dir) { drop =>
         val out = s"strm_ewma_tws_out_${strmRunIds.incrementAndGet()}"
         val drained = graft.streaming.EventStreams.drainToMemory(s,
           graft.streaming.EventStreams.userEwmaTws(s,
-            graft.streaming.EventStreams.readEvents(s, drop.toString))
+            graft.streaming.EventStreams.readEvents(s, drop))
             .toDF("user_id", "n", "ewma"),
           out, org.apache.spark.sql.streaming.OutputMode.Update(),
           Map("spark.sql.streaming.stateStore.providerClass" ->
@@ -655,7 +554,7 @@ object EventWindows extends QueryModule {
           .agg(max(struct(col("n"), col("ewma"))).as("f"))
           .select(col("user_id"), col("f.n").cast("int").as("n_events"),
             col("f.ewma").as("ewma"))
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
+      }
     }),
 
     // Sliding 1-hour window every 30 minutes (each event lands in 2).

@@ -628,10 +628,7 @@ object Graph extends QueryModule {
   private[graft] def edgeArtifactRoot(s: SparkSession,
       dir: String): org.apache.hadoop.fs.Path = {
     import org.apache.hadoop.fs.Path
-    val (len, mtime) = Tables.sourceFingerprint(s, s"$dir/lineitem.parquet")
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$dir|$len|$mtime".getBytes("UTF-8"))
-      .take(16).map(b => f"$b%02x").mkString
+    val digest = Tables.fingerprintKey(s, s"$dir/lineitem.parquet")
     new Path(new Path(System.getProperty("java.io.tmpdir"),
       "graft_graph_edges"), s"${new java.io.File(dir).getName}_${digest}_v1")
   }

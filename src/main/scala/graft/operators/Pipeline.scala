@@ -3,7 +3,7 @@ package graft.operators
 import graft.Ckpt.CkptOps
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Scratch, Tables}
 import graft.sinks.Merge
 
 /** Pipeline-state operators: MERGE-emulation sinks exercised as
@@ -31,16 +31,14 @@ object Pipeline extends QueryModule {
     // (offset = id·4093, len = 997 — coprime to the 64-byte block).
     "s7_range_read" -> ((s, dir) => {
       val content = (0 until 4096).map(i => "%08d".format(i) * 8).mkString
-      val f = java.nio.file.Files.createTempFile("graft_ranges", ".bin")
-      java.nio.file.Files.write(f, content.getBytes("US-ASCII"))
       val ranges = s.range(0, 64).select(
         col("id").as("range_id"),
         (col("id") * 4093L).as("offset"),
         lit(997).as("len")).repartition(8)
-      val out = graft.sources.RangeReads
-        .readRanges(f.toString, ranges).ckpt(true)
-      java.nio.file.Files.deleteIfExists(f)
-      out
+      Scratch.dir("graft_ranges") { d =>
+        val f = java.nio.file.Files.write(d.resolve("ranges.bin"), content.getBytes("US-ASCII"))
+        graft.sources.RangeReads.readRanges(f.toString, ranges).ckpt(true)
+      }
     }),
 
     // K1: upsert-ignore — existing keys keep their row, new keys append.
@@ -88,26 +86,15 @@ object Pipeline extends QueryModule {
           (col("o_totalprice").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double").as("o_totalprice"),
           lit("U").as("o_orderstatus"), pk)
-      // Fresh temp dir per invocation: a path keyed by dir.hashCode
-      // would race when bench and verify run over the same SF dir
-      // concurrently, and would leak in /tmp between runs. NOTE: a
-      // driver-local java.nio temp path assumes driver and executors
-      // share a filesystem — true only in local mode, which is where
-      // this QUERY-harness scaffolding runs. On a cluster, callers use
-      // PartitionedMerge directly against shared storage (the library
-      // path resolves filesystems per-path via AtomicDir.fileSystem).
-      val base = java.nio.file.Files.createTempDirectory("graft_k2p_").toString + "/t"
-      target.write.mode("overwrite").partitionBy("pk").parquet(base)
-      graft.sinks.PartitionedMerge.upsertUpdate(
-        s, base, incoming, Seq("o_orderkey"), Seq("pk"))
-      // localCheckpoint materializes the read-back into executor block
-      // storage so the temp dir can be removed before the frame is used.
-      val out = s.read.parquet(base).select(col("o_orderkey"), col("o_totalprice"),
-        col("o_orderstatus"), col("pk").cast("long").as("pk"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_k2p_") { d =>
+        val base = d.resolve("t").toString
+        target.write.mode("overwrite").partitionBy("pk").parquet(base)
+        graft.sinks.PartitionedMerge.upsertUpdate(
+          s, base, incoming, Seq("o_orderkey"), Seq("pk"))
+        s.read.parquet(base).select(col("o_orderkey"), col("o_totalprice"),
+          col("o_orderstatus"), col("pk").cast("long").as("pk"))
+          .ckpt(true)
+      }
     }),
 
     // K2 with cross-partition atomicity: the same partitioned
@@ -127,21 +114,18 @@ object Pipeline extends QueryModule {
           (col("o_totalprice").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double").as("o_totalprice"),
           lit("U").as("o_orderstatus"), pk)
-      // driver-local temp path: local-mode-only harness scaffolding,
-      // same caveat as k2_upsert_partitioned above
-      val base = java.nio.file.Files.createTempDirectory("graft_k2s_").toString + "/t"
-      // seed snapshot v1 = target, then merge incoming as v2
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, target, Seq("o_orderkey"), Seq("pk"))
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, incoming, Seq("o_orderkey"), Seq("pk"))
-      val out = graft.sinks.SnapshotMerge.read(s, base, target.schema)
-        .select(col("o_orderkey"), col("o_totalprice"),
-          col("o_orderstatus"), col("pk").cast("long").as("pk"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_k2s_") { d =>
+        val base = d.resolve("t").toString
+        // seed snapshot v1 = target, then merge incoming as v2
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, target, Seq("o_orderkey"), Seq("pk"))
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, incoming, Seq("o_orderkey"), Seq("pk"))
+        graft.sinks.SnapshotMerge.read(s, base, target.schema)
+          .select(col("o_orderkey"), col("o_totalprice"),
+            col("o_orderstatus"), col("pk").cast("long").as("pk"))
+          .ckpt(true)
+      }
     }),
 
     // K2 under MULTI-WRITER CONCURRENCY: two upserts race on the same
@@ -167,10 +151,8 @@ object Pipeline extends QueryModule {
             (col("o_totalprice").cast("decimal(18,2)") + lit(bump).cast("decimal(18,2)"))
               .cast("double").as("o_totalprice"),
             lit(st).as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2c_").toString + "/t"
-      // try/finally: a thread failure must not strand the temp
-      // snapshot dir (the driver re-runs this query every round).
-      try {
+      Scratch.frame("graft_k2c_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         val incs = Seq(batch(0, 1000, "A"), batch(2, 2000, "B"))
@@ -191,8 +173,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // STREAMING COLUMN-SPARSE MoR INGEST (r19) — the reference's cron
@@ -225,23 +206,13 @@ object Pipeline extends QueryModule {
             .otherwise((price + lit(7000).cast("decimal(18,2)")).cast("double"))
             .as("o_totalprice"),
           lit("Z2-SENTINEL").as("o_orderstatus"), pk)
-      val root = java.nio.file.Files.createTempDirectory("strm_smor")
-      try {
+      Scratch.frame("strm_smor") { root =>
         val drop = root.resolve("waves")
         java.nio.file.Files.createDirectories(drop)
         val tableDir = root.resolve("table").toString
         val ckptDir = root.resolve("ckpt").toString
-        def dropFile(df: org.apache.spark.sql.DataFrame, name: String): Unit = {
-          val tmp = root.resolve(s"stage_$name")
-          df.coalesce(1).write.parquet(tmp.toString)
-          val st = java.nio.file.Files.list(tmp)
-          val part =
-            try st.toArray.map(_.toString)
-              .filter(p => p.endsWith(".parquet") && p.contains("part-")).head
-            finally st.close()
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(part), drop.resolve(name))
-        }
+        def dropFile(df: DataFrame, name: String): Unit = graft.streaming.EventStreams
+          .stageWave(df, root, drop, name, System.currentTimeMillis())
         def drain(): Unit = graft.streaming.EventStreams.sparseMorStream(s,
           s.readStream.schema(target.schema).parquet(drop.toString),
           tableDir, Seq("o_orderkey"), Seq("o_totalprice"), Seq("pk"), ckptDir)
@@ -255,7 +226,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+      }
     }),
 
     // SHALLOW CLONE (r20, VERDICT r19 #3) — the Delta CREATE TABLE
@@ -284,8 +255,7 @@ object Pipeline extends QueryModule {
           lit("S").as("o_orderstatus"), pk)
       val cloneWrite = o.where(col("o_orderkey") % 40 === 1)
         .select(col("o_orderkey"), lit("C").as("o_orderstatus"), pk)
-      val root = java.nio.file.Files.createTempDirectory("graft_k2cl_")
-      try {
+      Scratch.frame("graft_k2cl_") { root =>
         val src = root.resolve("src").toString
         val dst = root.resolve("clone").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
@@ -315,7 +285,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+      }
     }),
 
     // STREAMING SPARSE INGEST × SCHEMA EVOLUTION (r20, VERDICT r19
@@ -355,21 +325,12 @@ object Pipeline extends QueryModule {
         .select(col("o_orderkey"),
           when(col("o_orderkey") % 20 === 1, col("o_orderkey") % 100 + 500)
             .otherwise(col("o_orderkey") % 100 + 700).as("score"), pk)
-      val root = java.nio.file.Files.createTempDirectory("strm_smev")
-      try {
+      Scratch.frame("strm_smev") { root =>
         val tableDir = root.resolve("table").toString
-        def dropTo(drop: java.nio.file.Path,
-            df: org.apache.spark.sql.DataFrame, name: String): Unit = {
+        def dropTo(drop: java.nio.file.Path, df: DataFrame, name: String): Unit = {
           java.nio.file.Files.createDirectories(drop)
-          val tmp = root.resolve(s"stage_$name")
-          df.coalesce(1).write.parquet(tmp.toString)
-          val st = java.nio.file.Files.list(tmp)
-          val part =
-            try st.toArray.map(_.toString)
-              .filter(p => p.endsWith(".parquet") && p.contains("part-")).head
-            finally st.close()
-          java.nio.file.Files.move(
-            java.nio.file.Paths.get(part), drop.resolve(name))
+          graft.streaming.EventStreams.stageWave(df, root, drop, name,
+            System.currentTimeMillis())
         }
         def drain(drop: java.nio.file.Path, ckpt: String,
             schema: org.apache.spark.sql.types.StructType,
@@ -395,7 +356,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("pk").cast("long").as("pk"), col("score"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+      }
     }),
 
     // CHECK CONSTRAINTS (r19, the Delta ALTER TABLE ADD CONSTRAINT
@@ -418,8 +379,8 @@ object Pipeline extends QueryModule {
       val bad = o.where(col("o_orderkey") % 40 === 1)
         .select(col("o_orderkey"), lit(-1.0).as("o_totalprice"),
           lit("X").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2ck_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2ck_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"), retain = 8)
         graft.sinks.SnapshotMerge.addConstraint(s, base,
@@ -436,8 +397,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // RESTORE / rollback (r19): three commits mutate the table (CoW
@@ -458,8 +418,8 @@ object Pipeline extends QueryModule {
           (col("o_totalprice").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double").as("o_totalprice"),
           lit("U").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2rs_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2rs_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"), retain = 8)
         val store = new graft.sinks.SnapshotStore(
@@ -475,8 +435,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // MULTI-WRITER CONCURRENCY through the CONDITIONAL-PUT backend
@@ -500,8 +459,8 @@ object Pipeline extends QueryModule {
             (col("o_totalprice").cast("decimal(18,2)") + lit(bump).cast("decimal(18,2)"))
               .cast("double").as("o_totalprice"),
             lit(st).as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2cas_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2cas_") { d =>
+        val base = d.resolve("t").toString
         val root = new org.apache.hadoop.fs.Path(base)
         val backend = new graft.sinks.InProcessCasBackend(s, root)
         def casStore() = {
@@ -532,8 +491,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // MoR MAINTENANCE AUTOPILOT (r19): the k2_upsert_mor fixture with
@@ -561,8 +519,8 @@ object Pipeline extends QueryModule {
           (price + lit(3000).cast("decimal(18,2)")).cast("double")
             .as("o_totalprice"),
           lit("V").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2ac_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2ac_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.upsertMor(s, base, inc1,
@@ -580,8 +538,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // WRITER vs COMPACTION concurrency (VERDICT r16 #4 — the OTHER
@@ -621,8 +578,8 @@ object Pipeline extends QueryModule {
           (col("o_totalprice").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double").as("o_totalprice"),
           lit("A").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2cc_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2cc_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         val gate = new java.util.concurrent.CountDownLatch(1)
@@ -650,8 +607,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // PER-PARTITION TABLE CHECKSUM (anti-entropy verification — how
@@ -701,19 +657,18 @@ object Pipeline extends QueryModule {
           (col("o_totalprice").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double").as("o_totalprice"),
           col("o_orderpriority"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2e_").toString + "/t"
-      graft.sinks.SnapshotMerge.upsertEvolve(
-        s, base, target, Seq("o_orderkey"), Seq("pk"))
-      graft.sinks.SnapshotMerge.upsertEvolve(
-        s, base, incoming, Seq("o_orderkey"), Seq("pk"))
-      val out = graft.sinks.SnapshotMerge.readEvolved(s, base)
-        .select(col("o_orderkey"), col("o_totalprice"),
-          coalesce(col("o_orderpriority"), lit("NONE")).as("prio"),
-          col("pk").cast("long").as("pk"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_k2e_") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertEvolve(
+          s, base, target, Seq("o_orderkey"), Seq("pk"))
+        graft.sinks.SnapshotMerge.upsertEvolve(
+          s, base, incoming, Seq("o_orderkey"), Seq("pk"))
+        graft.sinks.SnapshotMerge.readEvolved(s, base)
+          .select(col("o_orderkey"), col("o_totalprice"),
+            coalesce(col("o_orderpriority"), lit("NONE")).as("prio"),
+            col("pk").cast("long").as("pk"))
+          .ckpt(true)
+      }
     }),
 
     // K2 with TYPE-WIDENING schema evolution (r17) — the OTHER
@@ -738,8 +693,8 @@ object Pipeline extends QueryModule {
       val incoming = o.where(col("o_orderkey") % 4 === 0)
         .select(col("o_orderkey"),
           (cents.cast("bigint") + lit(3000000000L)).as("cents"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2w_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2w_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertEvolve(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.upsertEvolve(
@@ -748,8 +703,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("cents"),
             col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // BLOOM-SIDECAR POINT LOOKUP (r17) — the equality complement of
@@ -767,8 +721,8 @@ object Pipeline extends QueryModule {
       val o = Tables.load(s, dir, "orders")
       val target = o.select(col("o_orderkey"), col("o_totalprice"),
         col("o_orderstatus"), pmod(col("o_custkey"), lit(32L)).as("pk"))
-      val base = java.nio.file.Files.createTempDirectory("graft_k2bl_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2bl_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         val store = new graft.sinks.SnapshotStore(
@@ -780,8 +734,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // METADATA-ONLY DROP COLUMN (r17) — the third evolution beside
@@ -803,8 +756,8 @@ object Pipeline extends QueryModule {
           (col("o_totalprice").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double").as("o_totalprice"),
           col("o_orderstatus"), col("o_orderpriority"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2dc_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2dc_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertEvolve(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.upsertEvolve(
@@ -815,8 +768,7 @@ object Pipeline extends QueryModule {
             coalesce(col("o_orderpriority"), lit("NONE")).as("prio"),
             col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // ROW-LEVEL DELETE via positional DELETION VECTORS (r17) — the
@@ -838,8 +790,8 @@ object Pipeline extends QueryModule {
       val pk = pmod(col("o_orderkey"), lit(5L)).as("pk")
       val target = o.where(col("o_orderkey") % 10 === 1)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2dv_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2dv_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         val store = new graft.sinks.SnapshotStore(
@@ -851,8 +803,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // ROW-LEVEL UPDATE via MERGE-ON-READ (r18) — the reference's
@@ -884,8 +835,8 @@ object Pipeline extends QueryModule {
           (price + lit(3000).cast("decimal(18,2)")).cast("double")
             .as("o_totalprice"),
           lit("V").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2mor_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2mor_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.upsertMor(
@@ -896,8 +847,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // COLUMN-SPARSE MERGE-ON-READ UPDATE (r19) — the reference's
@@ -928,8 +878,8 @@ object Pipeline extends QueryModule {
       val inc2 = o.where(col("o_orderkey") % 40 === 1)
         .select(col("o_orderkey"), lit(-1.0).as("o_totalprice"),
           lit("V").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2ms_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2ms_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.upsertMorSparse(
@@ -945,8 +895,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // MAP-TYPED COLUMN-SPARSE PATCHES (r20, VERDICT r19 #1) — the
@@ -980,8 +929,8 @@ object Pipeline extends QueryModule {
       val inc2 = o.where(col("o_orderkey") % 40 === 1)
         .select(col("o_orderkey"), map(lit("z"), lit(9L)).as("attrs"),
           lit("V").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2msm_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2msm_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.upsertMorSparse(
@@ -1002,8 +951,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("mkey"), col("mval"),
             col("o_orderstatus"), col("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // SCHEMA EVOLUTION through MERGE-ON-READ (r18) — the same
@@ -1022,8 +970,8 @@ object Pipeline extends QueryModule {
       val incoming = o.where(col("o_orderkey") % 4 === 0)
         .select(col("o_orderkey"),
           (cents.cast("bigint") + lit(3000000000L)).as("cents"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2me_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2me_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertEvolve(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.upsertMorEvolve(
@@ -1032,8 +980,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("cents"),
             col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // MoR MAINTENANCE: the same two stacked merge-on-read commits as
@@ -1061,8 +1008,8 @@ object Pipeline extends QueryModule {
           (price + lit(3000).cast("decimal(18,2)")).cast("double")
             .as("o_totalprice"),
           lit("V").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2mc_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2mc_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.upsertMor(
@@ -1082,8 +1029,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("o_totalprice"),
             col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // METADATA-ONLY COLUMN RENAME via column mapping (r18) — the
@@ -1107,8 +1053,8 @@ object Pipeline extends QueryModule {
         .select(col("o_orderkey"),
           when(col("o_orderkey") % 20 === 4, concat(lit("C-"), col("o_orderpriority")))
             .otherwise(col("o_orderpriority")).as("cover"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2rn_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2rn_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertEvolve(
           s, base, target, Seq("o_orderkey"), Seq("pk"))
         graft.sinks.SnapshotMerge.renameColumn(s, base, "pic", "cover")
@@ -1118,8 +1064,7 @@ object Pipeline extends QueryModule {
           .select(col("o_orderkey"), col("cover"),
             col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // STRING-KEY bloom-sidecar point lookup (r18) — the reference's
@@ -1133,8 +1078,8 @@ object Pipeline extends QueryModule {
       val skey = concat(lit("BV"), lpad(col("o_orderkey").cast("string"), 10, "0"))
       val target = o.select(skey.as("bvid"), col("o_totalprice"),
         pmod(col("o_custkey"), lit(32L)).as("pk"))
-      val base = java.nio.file.Files.createTempDirectory("graft_k2bls_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2bls_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("bvid"), Seq("pk"))
         val store = new graft.sinks.SnapshotStore(
@@ -1146,8 +1091,7 @@ object Pipeline extends QueryModule {
           .select(col("bvid"), col("o_totalprice"),
             col("pk").cast("long").as("pk"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // CHANGE-FEED FOLLOWER drain (r18) — the poll-based CDC consumer
@@ -1173,8 +1117,8 @@ object Pipeline extends QueryModule {
           (price + lit(1000).cast("decimal(18,2)")).cast("double")
             .as("o_totalprice"),
           lit("U").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2ff_").toString + "/t"
-      try {
+      Scratch.frame("graft_k2ff_") { d =>
+        val base = d.resolve("t").toString
         graft.sinks.SnapshotMerge.upsertUpdate(
           s, base, target, Seq("o_orderkey"), Seq("pk"), retain = 4)
         val store = new graft.sinks.SnapshotStore(
@@ -1198,8 +1142,7 @@ object Pipeline extends QueryModule {
             col("o_orderstatus"), col("pk").cast("long").as("pk"),
             col("_change"), col("commit_version").cast("long").as("commit_version"))
           .ckpt(true)
-      } finally org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
+      }
     }),
 
     // Time-travel read through the snapshot version log (r11): seed
@@ -1222,22 +1165,19 @@ object Pipeline extends QueryModule {
           (col("o_totalprice").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double").as("o_totalprice"),
           lit("U").as("o_orderstatus"), pk)
-      // driver-local temp path: local-mode-only harness scaffolding,
-      // same caveat as k2_upsert_partitioned above
-      val base = java.nio.file.Files.createTempDirectory("graft_k2tt_").toString + "/t"
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, target, Seq("o_orderkey"), Seq("pk"))
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, incoming, Seq("o_orderkey"), Seq("pk"))
-      val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
-      val v = store.currentVersion().get
-      val out = store.readAt(v - 1, target.schema)
-        .select(col("o_orderkey"), col("o_totalprice"),
-          col("o_orderstatus"), col("pk").cast("long").as("pk"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_k2tt_") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, target, Seq("o_orderkey"), Seq("pk"))
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, incoming, Seq("o_orderkey"), Seq("pk"))
+        val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
+        val v = store.currentVersion().get
+        store.readAt(v - 1, target.schema)
+          .select(col("o_orderkey"), col("o_totalprice"),
+            col("o_orderstatus"), col("pk").cast("long").as("pk"))
+          .ckpt(true)
+      }
     }),
 
     // STATS-PRUNED range read over the snapshot table (the sidecar
@@ -1264,22 +1204,21 @@ object Pipeline extends QueryModule {
           (col("o_totalprice").cast("decimal(18,2)") + lit(1000).cast("decimal(18,2)"))
             .cast("double").as("o_totalprice"),
           lit("U").as("o_orderstatus"), pk)
-      val base = java.nio.file.Files.createTempDirectory("graft_k2sk_").toString + "/t"
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, target, Seq("o_orderkey"), Seq("pk"),
-        statsCols = Seq("o_totalprice"))
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, updates, Seq("o_orderkey"), Seq("pk"),
-        statsCols = Seq("o_totalprice"))
-      val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
-      val out = store
-        .readRange(target.schema, "o_totalprice", 50000.0, 150000.0)
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
-          col("pk").cast("long").as("pk"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_k2sk_") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, target, Seq("o_orderkey"), Seq("pk"),
+          statsCols = Seq("o_totalprice"))
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, updates, Seq("o_orderkey"), Seq("pk"),
+          statsCols = Seq("o_totalprice"))
+        val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
+        store
+          .readRange(target.schema, "o_totalprice", 50000.0, 150000.0)
+          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
+            col("pk").cast("long").as("pk"))
+          .ckpt(true)
+      }
     }),
 
     // Z-ORDERED box read over the snapshot table: seed the store,
@@ -1305,23 +1244,22 @@ object Pipeline extends QueryModule {
           col("l_partkey"), col("l_suppkey"),
           pmod(col("l_orderkey"), lit(4L)).as("pk"))
         .distinct()
-      val base = java.nio.file.Files.createTempDirectory("graft_k2zo_").toString + "/t"
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, target,
-        Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"), Seq("pk"))
-      val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
-      store.compactZOrder(target.schema, Seq("pk"),
-        Seq("l_partkey", "l_suppkey"), maxRecordsPerFile = 2000L)
-      val out = store
-        .readBoxFiles(target.schema,
-          Seq(("l_partkey", 500.0, 700.0), ("l_suppkey", 50.0, 80.0)))
-        .select(col("l_orderkey"), col("l_linenumber"),
-          col("l_partkey"), col("l_suppkey"),
-          col("pk").cast("long").as("pk"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_k2zo_") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, target,
+          Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"), Seq("pk"))
+        val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
+        store.compactZOrder(target.schema, Seq("pk"),
+          Seq("l_partkey", "l_suppkey"), maxRecordsPerFile = 2000L)
+        store
+          .readBoxFiles(target.schema,
+            Seq(("l_partkey", 500.0, 700.0), ("l_suppkey", 50.0, 80.0)))
+          .select(col("l_orderkey"), col("l_linenumber"),
+            col("l_partkey"), col("l_suppkey"),
+            col("pk").cast("long").as("pk"))
+          .ckpt(true)
+      }
     }),
 
     // Change-data-feed READ between two snapshot versions: seed v1,
@@ -1344,20 +1282,19 @@ object Pipeline extends QueryModule {
           lit("U").as("o_orderstatus"), pk)
         .unionByName(o.where(col("o_orderkey") % 10 === 2)
           .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"), pk))
-      val base = java.nio.file.Files.createTempDirectory("graft_k2ch_").toString + "/t"
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, target, Seq("o_orderkey"), Seq("pk"))
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, incoming, Seq("o_orderkey"), Seq("pk"))
-      val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
-      val v = store.currentVersion().get
-      val out = store.readChangesBetween(v - 1, v, target.schema, Seq("o_orderkey"))
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
-          col("pk").cast("long").as("pk"), col("_change"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_k2ch_") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, target, Seq("o_orderkey"), Seq("pk"))
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, incoming, Seq("o_orderkey"), Seq("pk"))
+        val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
+        val v = store.currentVersion().get
+        store.readChangesBetween(v - 1, v, target.schema, Seq("o_orderkey"))
+          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
+            col("pk").cast("long").as("pk"), col("_change"))
+          .ckpt(true)
+      }
     }),
 
     // Per-commit change HISTORY (the table_changes(from, to) face):
@@ -1385,23 +1322,22 @@ object Pipeline extends QueryModule {
         .unionByName(o.where(col("o_orderkey") % 20 === 11)
           .select(col("o_orderkey"), lit(1L).as("seq"), lit("delete").as("op"),
             col("o_totalprice"), col("o_orderstatus"), pk))
-      val base = java.nio.file.Files.createTempDirectory("graft_k2h_").toString + "/t"
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, target, Seq("o_orderkey"), Seq("pk"), retain = 3)
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, updates, Seq("o_orderkey"), Seq("pk"), retain = 3)
-      graft.sinks.SnapshotMerge.applyCdc(
-        s, base, cdc, Seq("o_orderkey"), "seq", "op", Seq("pk"), retain = 3)
-      val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
-      val v = store.currentVersion().get
-      val out = store.readChangesEach(v - 2, v, target.schema, Seq("o_orderkey"))
-        .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
-          col("pk").cast("long").as("pk"), col("_change"),
-          (col("_commit_version") - (v - 3)).as("commit_step"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_k2h_") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, target, Seq("o_orderkey"), Seq("pk"), retain = 3)
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, updates, Seq("o_orderkey"), Seq("pk"), retain = 3)
+        graft.sinks.SnapshotMerge.applyCdc(
+          s, base, cdc, Seq("o_orderkey"), "seq", "op", Seq("pk"), retain = 3)
+        val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
+        val v = store.currentVersion().get
+        store.readChangesEach(v - 2, v, target.schema, Seq("o_orderkey"))
+          .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"),
+            col("pk").cast("long").as("pk"), col("_change"),
+            (col("_commit_version") - (v - 3)).as("commit_step"))
+          .ckpt(true)
+      }
     }),
 
     // Incremental VIEW MAINTENANCE from the change feed — the payoff
@@ -1430,39 +1366,38 @@ object Pipeline extends QueryModule {
         .unionByName(o.where(col("o_orderkey") % 20 === 11)
           .select(col("o_orderkey"), lit(1L).as("seq"), lit("delete").as("op"),
             col("o_totalprice"), pk))
-      val base = java.nio.file.Files.createTempDirectory("graft_ivm_").toString + "/t"
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, base, target, Seq("o_orderkey"), Seq("pk"))
-      graft.sinks.SnapshotMerge.applyCdc(
-        s, base, changes, Seq("o_orderkey"), "seq", "op", Seq("pk"))
-      val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
-      val v = store.currentVersion().get
-      // the standing view at v1 (in production this is the already-
-      // materialized aggregate, not a re-read)
-      val v1view = store.readAt(v - 1, target.schema)
-        .groupBy(col("pk"))
-        .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("s1"),
-          count(lit(1)).as("n1"))
-      val delta = store.readChangesBetween(v - 1, v, target.schema,
-        Seq("o_orderkey"), includeUpdatePreimages = true)
-      val adj = delta.select(col("pk"),
-          when(col("_change").isin("insert", "update"),
-            col("o_totalprice").cast("decimal(18,2)"))
-            .otherwise(-col("o_totalprice").cast("decimal(18,2)")).as("d"),
-          when(col("_change").isin("insert", "update"), lit(1L))
-            .otherwise(lit(-1L)).as("dn"))
-        .groupBy(col("pk")).agg(sum(col("d")).as("sd"), sum(col("dn")).as("sn"))
-      val out = v1view.join(adj, Seq("pk"), "full_outer")
-        .select(col("pk").cast("long").as("pk"),
-          (coalesce(col("s1"), lit(0).cast("decimal(18,2)"))
-            + coalesce(col("sd"), lit(0).cast("decimal(18,2)")))
-            .cast("double").as("total"),
-          (coalesce(col("n1"), lit(0L)) + coalesce(col("sn"), lit(0L))).as("n"))
-        .where(col("n") > 0)
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        java.nio.file.Paths.get(base).getParent.toFile)
-      out
+      Scratch.frame("graft_ivm_") { d =>
+        val base = d.resolve("t").toString
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, base, target, Seq("o_orderkey"), Seq("pk"))
+        graft.sinks.SnapshotMerge.applyCdc(
+          s, base, changes, Seq("o_orderkey"), "seq", "op", Seq("pk"))
+        val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
+        val v = store.currentVersion().get
+        // the standing view at v1 (in production this is the already-
+        // materialized aggregate, not a re-read)
+        val v1view = store.readAt(v - 1, target.schema)
+          .groupBy(col("pk"))
+          .agg(sum(col("o_totalprice").cast("decimal(18,2)")).as("s1"),
+            count(lit(1)).as("n1"))
+        val delta = store.readChangesBetween(v - 1, v, target.schema,
+          Seq("o_orderkey"), includeUpdatePreimages = true)
+        val adj = delta.select(col("pk"),
+            when(col("_change").isin("insert", "update"),
+              col("o_totalprice").cast("decimal(18,2)"))
+              .otherwise(-col("o_totalprice").cast("decimal(18,2)")).as("d"),
+            when(col("_change").isin("insert", "update"), lit(1L))
+              .otherwise(lit(-1L)).as("dn"))
+          .groupBy(col("pk")).agg(sum(col("d")).as("sd"), sum(col("dn")).as("sn"))
+        v1view.join(adj, Seq("pk"), "full_outer")
+          .select(col("pk").cast("long").as("pk"),
+            (coalesce(col("s1"), lit(0).cast("decimal(18,2)"))
+              + coalesce(col("sd"), lit(0).cast("decimal(18,2)")))
+              .cast("double").as("total"),
+            (coalesce(col("n1"), lit(0L)) + coalesce(col("sn"), lit(0L))).as("n"))
+          .where(col("n") > 0)
+          .ckpt(true)
+      }
     }),
 
     // K3: bulk join-update — set order priority from a per-customer
@@ -1530,42 +1465,29 @@ object Pipeline extends QueryModule {
           col("l_returnflag").as("o_orderstatus"),
           col("l_extendedprice").as("o_totalprice"))
         .withColumn("pk", pmod(col("o_orderkey"), lit(8L)))
-      val root = java.nio.file.Files.createTempDirectory("strm_cdc")
-      val drop = root.resolve("changes")
-      java.nio.file.Files.createDirectories(drop)
-      val tableDir = root.resolve("table").toString
-      val ckptDir = root.resolve("ckpt").toString
-      // file streams list FILES, not nested dirs: stage each change
-      // batch as one parquet file inside the drop folder
-      def dropFile(df: DataFrame, name: String): Unit = {
-        val tmp = root.resolve(s"stage_$name")
-        df.coalesce(1).write.parquet(tmp.toString)
-        // Files.list holds a directory handle until closed — close it
-        // before the move (one leaked fd per staged change file adds up
-        // in a long-running ingest loop)
-        val st = java.nio.file.Files.list(tmp)
-        val part =
-          try st.toArray.map(_.toString)
-            .filter(p => p.endsWith(".parquet") && p.contains("part-")).head
-          finally st.close()
-        java.nio.file.Files.move(
-          java.nio.file.Paths.get(part), drop.resolve(name))
+      Scratch.frame("strm_cdc") { root =>
+        val drop = root.resolve("changes")
+        java.nio.file.Files.createDirectories(drop)
+        val tableDir = root.resolve("table").toString
+        val ckptDir = root.resolve("ckpt").toString
+        // file streams list FILES, not nested dirs: stage each change
+        // batch as one parquet file inside the drop folder
+        def dropFile(df: DataFrame, name: String): Unit = graft.streaming.EventStreams
+          .stageWave(df, root, drop, name, System.currentTimeMillis())
+        def drain(): Unit = graft.streaming.EventStreams.cdcStream(s,
+          s.readStream.schema(changes.schema).parquet(drop.toString),
+          tableDir, Seq("o_orderkey"), "seq", "op", Seq("pk"), ckptDir)
+        // seed the snapshot with the target, then stream the changes in
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          s, tableDir, target, Seq("o_orderkey"), Seq("pk"))
+        dropFile(changes.where(col("seq") <= 3), "c1.parquet")
+        drain()
+        dropFile(changes.where(col("seq") >= 4), "c2.parquet")
+        drain()
+        graft.sinks.SnapshotMerge.read(s, tableDir, target.schema)
+          .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
+          .ckpt(true)
       }
-      def drain(): Unit = graft.streaming.EventStreams.cdcStream(s,
-        s.readStream.schema(changes.schema).parquet(drop.toString),
-        tableDir, Seq("o_orderkey"), "seq", "op", Seq("pk"), ckptDir)
-      // seed the snapshot with the target, then stream the changes in
-      graft.sinks.SnapshotMerge.upsertUpdate(
-        s, tableDir, target, Seq("o_orderkey"), Seq("pk"))
-      dropFile(changes.where(col("seq") <= 3), "c1.parquet")
-      drain()
-      dropFile(changes.where(col("seq") >= 4), "c2.parquet")
-      drain()
-      val out = graft.sinks.SnapshotMerge.read(s, tableDir, target.schema)
-        .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"))
-        .ckpt(true)
-      org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
-      out
     }),
 
     "k3_join_update" -> ((s, dir) => {

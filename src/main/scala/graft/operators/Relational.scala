@@ -4,7 +4,7 @@ import graft.Ckpt.CkptOps
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import graft.{QueryModule, Tables}
+import graft.{QueryModule, Scratch, Tables}
 
 /** Relational operator catalog (SURVEY.md §2.3–§2.8).
   *
@@ -236,14 +236,12 @@ object Relational extends QueryModule {
     // shuffles both sides; the merge hint here keeps the
     // demonstration honest (without it the planner would broadcast
     // the small side at this SF and the bucketing would be moot).
-    // The tables land in a per-invocation temp dir (local-mode
-    // harness scaffolding, same caveat as k2_upsert_partitioned) as
-    // EXTERNAL tables with a unique name, dropped after the result
-    // materializes; semantics = plain join+agg, which is what the
-    // oracle hash-checks.
-    "j11_bucketed_join" -> ((s, dir) => {
+    // The tables land in a per-invocation scratch dir as EXTERNAL
+    // tables with a unique name, dropped once the result materializes,
+    // or when the row fails; semantics = plain join+agg, which is what
+    // the oracle hash-checks.
+    "j11_bucketed_join" -> ((s, dir) => Scratch.frame("graft_bkt_") { d =>
       val tag = java.util.UUID.randomUUID().toString.replace("-", "")
-      val base = java.nio.file.Files.createTempDirectory("graft_bkt_").toString
       // spread (§2.5): the one-row-group exports give the bucketed
       // WRITES ~1-3 real tasks each — the lineitem write alone was a
       // 3 s 3-task stage (per-task sort + 8 bucket files). Bucket
@@ -255,23 +253,24 @@ object Relational extends QueryModule {
         .select(col("o_orderkey"), col("o_orderstatus"))
       val l = Tables.spread(Tables.load(s, dir, "lineitem"), col("l_orderkey"))
         .select(col("l_orderkey"), col("l_extendedprice"))
-      o.write.format("parquet").bucketBy(8, "o_orderkey")
-        .sortBy("o_orderkey").option("path", s"$base/o")
-        .saveAsTable(s"graft_bkt_o_$tag")
-      l.write.format("parquet").bucketBy(8, "l_orderkey")
-        .sortBy("l_orderkey").option("path", s"$base/l")
-        .saveAsTable(s"graft_bkt_l_$tag")
-      val res = s.table(s"graft_bkt_o_$tag")
-        .join(s.table(s"graft_bkt_l_$tag").hint("merge"),
-          col("o_orderkey") === col("l_orderkey"))
-        .groupBy(col("o_orderstatus"))
-        .agg(count(lit(1)).as("n_items"),
-          dsum(col("l_extendedprice")).as("revenue"))
-        .ckpt(true)
-      s.sql(s"DROP TABLE graft_bkt_o_$tag")
-      s.sql(s"DROP TABLE graft_bkt_l_$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
-      res
+      try {
+        o.write.format("parquet").bucketBy(8, "o_orderkey")
+          .sortBy("o_orderkey").option("path", s"$d/o")
+          .saveAsTable(s"graft_bkt_o_$tag")
+        l.write.format("parquet").bucketBy(8, "l_orderkey")
+          .sortBy("l_orderkey").option("path", s"$d/l")
+          .saveAsTable(s"graft_bkt_l_$tag")
+        s.table(s"graft_bkt_o_$tag")
+          .join(s.table(s"graft_bkt_l_$tag").hint("merge"),
+            col("o_orderkey") === col("l_orderkey"))
+          .groupBy(col("o_orderstatus"))
+          .agg(count(lit(1)).as("n_items"),
+            dsum(col("l_extendedprice")).as("revenue"))
+          .ckpt(true)
+      } finally {
+        s.sql(s"DROP TABLE IF EXISTS graft_bkt_o_$tag")
+        s.sql(s"DROP TABLE IF EXISTS graft_bkt_l_$tag")
+      }
     }),
 
     // J12: runtime bloom-filter join pruning — the pattern behind

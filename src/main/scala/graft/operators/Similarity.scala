@@ -225,11 +225,7 @@ object Similarity extends QueryModule {
     */
   private[graft] def pqArtifactRoot(s: SparkSession,
       dir: String): org.apache.hadoop.fs.Path = {
-    val (len, mtime) =
-      graft.Tables.sourceFingerprint(s, s"$dir/embeddings.parquet")
-    val digest = java.security.MessageDigest.getInstance("SHA-256")
-      .digest(s"$dir|$len|$mtime".getBytes("UTF-8"))
-      .take(16).map(b => f"$b%02x").mkString
+    val digest = graft.Tables.fingerprintKey(s, s"$dir/embeddings.parquet")
     val key = s"${new java.io.File(dir).getName}_${digest}_v2"
     new org.apache.hadoop.fs.Path(
       new org.apache.hadoop.fs.Path(

@@ -66,25 +66,20 @@ object EventStreams {
   def readEvents(spark: SparkSession, eventsDir: String): DataFrame =
     readEventsPaced(spark, eventsDir, maxFilesPerTrigger = None)
 
-  /** [[readEvents]] with a per-micro-batch file budget. The file
-    * source takes the `maxFilesPerTrigger` OLDEST files (by
-    * modification time) per batch, so a caller that stages files with
-    * staggered mtimes controls exactly which files share a
-    * micro-batch — the lever the late-arrival pin (strm_late_drop)
-    * uses to place stale files AFTER the watermark has advanced.
-    */
   /** Stage `df` as ONE parquet file named `name` under `dropDir` with
-    * a forced mtime — the mtime-paced micro-batch fixture the wave
-    * rows share (the file source orders by modification time, so
-    * waves arrive as distinct batches under maxFilesPerTrigger=1).
-    * The single shared spelling keeps the pacing convention (staging
-    * layout, part-file match, stream hygiene) from drifting between
-    * rows.
+    * mtime `mtimeMs` — the single-file wave writer every staged stream
+    * row and fixture shares. The file source orders by modification
+    * time, so mtime-paced waves arrive as distinct batches under
+    * maxFilesPerTrigger=1; a wave drained before the next is staged
+    * can take the current time. The write lands in `stageRoot`, which
+    * must lie outside `dropDir`: a file stream would read a `stage_*`
+    * subdir of the drop dir as a partition.
     */
   def stageWave(df: DataFrame, stageRoot: java.nio.file.Path,
       dropDir: java.nio.file.Path, name: String, mtimeMs: Long): Unit = {
     val tmp = stageRoot.resolve(s"stage_$name")
     df.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+    // Files.list holds a directory handle until closed
     val st = java.nio.file.Files.list(tmp)
     val part =
       try st.toArray.map(_.toString)
@@ -96,6 +91,13 @@ object EventStreams {
       java.nio.file.attribute.FileTime.fromMillis(mtimeMs))
   }
 
+  /** [[readEvents]] with a per-micro-batch file budget. The file
+    * source takes the `maxFilesPerTrigger` OLDEST files (by
+    * modification time) per batch, so a caller that stages files with
+    * staggered mtimes controls exactly which files share a
+    * micro-batch — the lever the late-arrival pin (strm_late_drop)
+    * uses to place stale files AFTER the watermark has advanced.
+    */
   def readEventsPaced(spark: SparkSession, eventsDir: String,
       maxFilesPerTrigger: Option[Int]): DataFrame = {
     val schema =

@@ -21,6 +21,27 @@ class TablesSpec extends SparkFunSuite {
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
 
+  test("fingerprintKey keeps the cache dir names of the inline digest it replaced") {
+    // the formula graft_strm_fixtures, graft_pq_index and
+    // graft_graph_edges named their dirs with, kept here as the reference
+    def inlineDigest(dir: String, table: String): String = {
+      val (len, mtime) = Tables.sourceFingerprint(spark, s"$dir/$table.parquet")
+      java.security.MessageDigest.getInstance("SHA-256")
+        .digest(s"$dir|$len|$mtime".getBytes("UTF-8"))
+        .take(16).map(b => f"$b%02x").mkString
+    }
+    for (dir <- Seq(sfDir, s"$sfDir/"); table <- Seq("events", "embeddings", "lineitem")) {
+      val key = Tables.fingerprintKey(spark, s"$dir/$table.parquet")
+      assert(key == inlineDigest(dir, table), s"$dir $table")
+      assert(key.matches("[0-9a-f]{32}"), key)
+    }
+    val name = new java.io.File(sfDir).getName
+    assert(operators.Graph.edgeArtifactRoot(spark, sfDir).getName ==
+      s"${name}_${inlineDigest(sfDir, "lineitem")}_v1")
+    assert(operators.Similarity.pqArtifactRoot(spark, sfDir).getName ==
+      s"${name}_${inlineDigest(sfDir, "embeddings")}_v2")
+  }
+
   test("a second load of the same table runs no Spark job") {
     withTempDir { dir =>
       Files.copy(java.nio.file.Paths.get(s"$sfDir/orders.parquet"),
