@@ -456,7 +456,7 @@ object EventWindows extends QueryModule {
           catch { case _: org.apache.spark.sql.streaming.StreamingQueryException => true }
         require(crashed, "injected mid-drain crash did not surface")
         stream(failAt = -1L) // restart from the same checkpoint
-        s.read.parquet(tableDir)
+        graft.sinks.SnapshotMerge.read(s, tableDir, ev.schema)
           .select(col("event_id"), col("user_id"), col("event_type"),
             col("value"), col("pk").cast("long").as("pk"))
           .ckpt(true)

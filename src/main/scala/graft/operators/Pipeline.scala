@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.Ckpt.CkptOps
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Scratch, Tables}
 import graft.sinks.Merge
@@ -67,19 +67,20 @@ object Pipeline extends QueryModule {
       Merge.upsertUpdate(target, incoming, Seq("o_orderkey"))
     }),
 
-    // K2 at scale: the same upsert-update, but against an on-disk
-    // hive-partitioned target via PartitionedMerge — only partitions
-    // holding affected keys are read or rewritten (pk = key-derived
-    // hash bucket, so the partition is determined by the merge key).
-    // The read-back of the merged table is what the oracle checks:
-    // partition-pruned merge must equal the whole-frame K2 semantics.
+    // K2 through the DataFrameWriter surface: the same partitioned
+    // upsert-update as k2_upsert_snapshot, but seeded and merged with
+    // `df.write.format("graft-snapshot")` (ErrorIfExists seeds a new
+    // table, Append upserts). This row pins the writer-format path —
+    // option parsing and the SaveMode mapping onto SnapshotMerge —
+    // against the same K2 oracle (pk = key-derived hash bucket, so the
+    // partition is determined by the merge key).
     "k2_upsert_partitioned" -> ((s, dir) => {
       val o = Tables.load(s, dir, "orders")
       val pk = pmod(col("o_orderkey"), lit(5L)).as("pk")
       val target = o.where(col("o_orderkey") % 3 =!= 0)
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"), pk)
-      // incoming touches only buckets 0 and 1 — buckets 2-4 of the
-      // on-disk target are never read, never rewritten
+      // incoming touches only buckets 0 and 1 — buckets 2-4 carry
+      // forward by manifest reference, never read or rewritten
       val incoming = o.where(col("o_orderkey") % 2 === 0 &&
           pmod(col("o_orderkey"), lit(5L)) < 2)
         .select(col("o_orderkey"),
@@ -88,11 +89,15 @@ object Pipeline extends QueryModule {
           lit("U").as("o_orderstatus"), pk)
       Scratch.frame("graft_k2p_") { d =>
         val base = d.resolve("t").toString
-        target.write.mode("overwrite").partitionBy("pk").parquet(base)
-        graft.sinks.PartitionedMerge.upsertUpdate(
-          s, base, incoming, Seq("o_orderkey"), Seq("pk"))
-        s.read.parquet(base).select(col("o_orderkey"), col("o_totalprice"),
-          col("o_orderstatus"), col("pk").cast("long").as("pk"))
+        def save(df: DataFrame, mode: SaveMode): Unit =
+          df.write.format("graft-snapshot").option("path", base)
+            .option("keys", "o_orderkey").option("partitionBy", "pk")
+            .mode(mode).save()
+        save(target, SaveMode.ErrorIfExists)
+        save(incoming, SaveMode.Append)
+        graft.sinks.SnapshotMerge.read(s, base, target.schema)
+          .select(col("o_orderkey"), col("o_totalprice"),
+            col("o_orderstatus"), col("pk").cast("long").as("pk"))
           .ckpt(true)
       }
     }),

@@ -1,31 +1,30 @@
 package graft.sinks
 
 import org.apache.hadoop.fs.{FileSystem, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.SparkSession
 
-/** Crash-safe publish protocol for parquet "table" directories.
+/** Crash-safe publish of write-once artifact directories, and the
+  * per-path filesystem resolution the snapshot layer shares.
   *
-  * The reference gets commit atomicity for free from Postgres
-  * (`ON CONFLICT`, reference `db/recording.py:44-66`); a parquet table
-  * rewritten in place has no such guarantee, and the naive
-  * `delete(target); rename(staging, target)` loses the WHOLE table if
-  * the process dies between the two calls. This object provides the
-  * smallest protocol that never exposes that window:
+  * Upserts do not come through here: every durable upsert commits a
+  * [[SnapshotMerge]] manifest with one atomic pointer swap. This object
+  * publishes dirs that are written once and then only read — the
+  * served-PQ codebook, codes and coarse tables — where the naive
+  * `delete(target); rename(staging, target)` would lose the artifact if
+  * the process died between the two calls. The protocol never exposes
+  * that window:
   *
   *   1. writer produces `dir.staging` (complete, self-consistent)
   *   2. [[commit]]: rename `dir` -> `dir.old`   (old data intact, renamed aside)
   *   3. [[commit]]: rename `dir.staging` -> `dir` (new data live)
   *   4. [[commit]]: delete `dir.old`
   *
-  * A crash at ANY point leaves exactly one complete copy of the table
-  * on disk (`dir`, or `dir.old` when the crash hit between steps 2 and
-  * 3); [[recover]] restores the `dir`-is-the-table invariant before the
-  * next read, so a checkpoint-driven foreachBatch retry finds a readable
-  * target instead of a missing path. Directory renames are atomic
-  * per-entry on HDFS and posix filesystems; on object stores a real
-  * deployment would swap a manifest/pointer object instead — same
-  * protocol, one indirection up.
+  * A crash at ANY point leaves exactly one complete copy on disk (`dir`,
+  * or `dir.old` when the crash hit between steps 2 and 3); [[recover]]
+  * restores the `dir`-is-the-artifact invariant before the next read.
+  * Directory renames are atomic per-entry on HDFS and posix
+  * filesystems; on object stores the snapshot layer's pointer object is
+  * the same protocol one indirection up.
   */
 object AtomicDir {
 
@@ -49,7 +48,7 @@ object AtomicDir {
     if (fs.exists(dir) && !fs.rename(dir, old))
       throw new java.io.IOException(s"rename $dir -> $old failed")
     if (!fs.rename(staging, dir)) {
-      // put the old table back before surfacing the error
+      // put the old artifact back before surfacing the error
       if (fs.exists(old)) fs.rename(old, dir)
       throw new java.io.IOException(s"rename $staging -> $dir failed")
     }
@@ -57,9 +56,9 @@ object AtomicDir {
     ()
   }
 
-  /** Restore the invariant after a crash: if the table was renamed
-    * aside but never replaced, bring it back; if the new table went
-    * live but the aside copy was never deleted, drop the aside copy.
+  /** Restore the invariant after a crash: if the artifact was renamed
+    * aside but never replaced, bring it back; if the new one went live
+    * but the aside copy was never deleted, drop the aside copy.
     * Idempotent; a no-op on a healthy directory.
     */
   def recover(fs: FileSystem, dir: Path): Unit = {
@@ -69,33 +68,5 @@ object AtomicDir {
       else fs.delete(old, true)                // crashed at step 4
       ()
     }
-  }
-
-  /** True when `dir` exists and holds at least one non-hidden file —
-    * `spark.read.parquet` on a missing or file-less directory throws
-    * instead of returning an empty frame.
-    */
-  def hasData(fs: FileSystem, dir: Path): Boolean = {
-    if (!fs.exists(dir)) return false
-    val it = fs.listFiles(dir, true)
-    while (it.hasNext) {
-      val f = it.next()
-      val n = f.getPath.getName
-      if (!n.startsWith("_") && !n.startsWith(".")) return true
-    }
-    false
-  }
-
-  /** Recover `dir` if needed, then read it — or, for a first batch
-    * where the target does not exist yet, return an empty frame with
-    * the caller's schema (the ADVICE fix: foreachBatch merges must not
-    * require the target to pre-exist).
-    */
-  def readOrEmpty(spark: SparkSession, dir: String, schema: StructType): DataFrame = {
-    val p = new Path(dir)
-    val fs = fileSystem(spark, p)
-    recover(fs, p)
-    if (hasData(fs, p)) spark.read.parquet(dir)
-    else spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
   }
 }

@@ -18,7 +18,7 @@ import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
   *    kept as [[ReferenceParityBatchSize]]); the write DEFAULT is
   *    Spark's 1000 — 50-row round trips would throttle a large
   *    cluster's insert throughput;
-  *  - '''merge semantics''' stay in [[Merge]]/[[PartitionedMerge]]:
+  *  - '''merge semantics''' stay in [[Merge]]/[[SnapshotMerge]]:
   *    Spark's JDBC sink has no ON CONFLICT, so K1–K3 run as
   *    read → merge plan → write-back, exactly the shape the catalog's
   *    k1/k2/k3 queries pin.

@@ -8,24 +8,26 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 
 /** Partition-pruned merge with cross-partition atomicity, on top of
-  * [[SnapshotStore]].
+  * [[SnapshotStore]] — the engine's one durable upsert path.
   *
-  * Same plan shape as [[PartitionedMerge]] — distinct touched
-  * partition tuples, pruned read of just those partitions, merge,
-  * write replacements — but the publish step is ONE atomic pointer
-  * swap instead of a per-partition rename loop, so a crash anywhere
-  * leaves readers on the previous complete snapshot: all-old or
-  * all-new, never mixed (the guarantee the reference gets from a
-  * single Postgres transaction, `db/occurrence.py:22-51`).
+  * Plan shape: collect the distinct partition tuples `incoming`
+  * touches, read just those partitions (manifest-level pruning), merge,
+  * and write the replacements into a fresh immutable batch dir. The
+  * publish step is ONE atomic pointer swap, so a crash anywhere leaves
+  * readers on the previous complete snapshot: all-old or all-new,
+  * never mixed (the guarantee the reference gets from a single
+  * Postgres transaction, `db/occurrence.py:22-51`).
   *
   * Untouched partitions are carried forward in the manifest by
-  * reference — never read, never rewritten, zero data movement, same
-  * as PartitionedMerge's untouched-directory guarantee. Partitions
-  * the merge empties out are dropped from the manifest, which makes
-  * deletes atomic too (no torn-delete window at all).
+  * reference — never read, never rewritten, zero data movement.
+  * Partitions the merge empties out are dropped from the manifest,
+  * which makes deletes atomic too (no torn-delete window at all).
   *
-  * Same precondition as PartitionedMerge: partition columns must be
-  * determined by the merge keys.
+  * Precondition: snapshot tables are partitioned, and the partition
+  * columns must be determined by the merge keys (same key => same
+  * partition tuple in target and incoming) — e.g. a key-derived date
+  * or hash bucket. Otherwise a key could "move" partitions and the
+  * partition-scoped merge would miss its old row.
   */
 object SnapshotMerge {
 
@@ -153,7 +155,6 @@ object SnapshotMerge {
       schemaBase: Option[Option[Long]] = None,
       embedSchema: Option[StructType] = None,
       validated: Option[Map[String, String]] = None): Option[Long] = {
-    require(partCols.nonEmpty, "use Merge + AtomicDir for unpartitioned targets")
     requirePartitionable(incMapped.schema, partCols)
     // dropDuplicates BEFORE the pin: Merge.upsertUpdate's
     // arbitrary-winner collapse, evaluated once
@@ -348,7 +349,6 @@ object SnapshotMerge {
       incMapped: DataFrame, keysPhys: Seq[String], updPhys: Seq[String],
       partCols: Seq[String], retain: Int,
       validated: Option[Map[String, String]] = None): Option[Long] = {
-    require(partCols.nonEmpty, "use Merge + AtomicDir for unpartitioned targets")
     requirePartitionable(incMapped.schema, partCols)
     require(updPhys.nonEmpty, "updateCols must name at least one column")
     require(updPhys.intersect(keysPhys ++ partCols).isEmpty,
@@ -968,7 +968,6 @@ object SnapshotMerge {
   def replaceAll(spark: SparkSession, rootDir: String, incoming0: DataFrame,
       partCols: Seq[String], retain: Int = 2,
       statsCols: Seq[String] = Nil): Unit = {
-    require(partCols.nonEmpty, "use AtomicDir for unpartitioned targets")
     requirePartitionable(incoming0.schema, partCols)
     val store = new SnapshotStore(spark, new Path(rootDir))
     val cbase = requireConstraints(store, incoming0)
@@ -1233,21 +1232,28 @@ object SnapshotMerge {
     * writer escapes directory names, so manifest suffixes and
     * on-disk dirs always agree).
     */
-  def partitionSuffix(partCols: Seq[String], r: Row): String =
+  private[sinks] def partitionSuffix(partCols: Seq[String], r: Row): String =
     partCols.zipWithIndex.map { case (c, i) =>
       ExternalCatalogUtils.getPartitionPathString(c, String.valueOf(r.get(i)))
     }.mkString("/")
 
-  /** The suffix contract above relies on `String.valueOf(value)`
+  /** The partition-column contract every front checks up front.
+    * Snapshot tables are partitioned: with no partition columns the
+    * touched set would be one empty suffix that matches no manifest
+    * entry, so a guard like [[freshOnly]] would silently read nothing.
+    * The suffix contract above relies on `String.valueOf(value)`
     * matching Spark's partition-directory formatting. That holds for
     * integral, string, boolean, and date partition columns — NOT for
     * timestamps (writer emits `2020-01-01 00%3A00%3A00`, valueOf
-    * gives `…00:00:00.0`) or fractional types. Reject the unsafe
-    * types up front instead of silently missing every partition.
+    * gives `…00:00:00.0`) or fractional types. Reject both cases
+    * instead of silently missing every partition.
     */
-  def requirePartitionable(schema: org.apache.spark.sql.types.StructType,
+  private[sinks] def requirePartitionable(schema: org.apache.spark.sql.types.StructType,
       partCols: Seq[String]): Unit = {
     import org.apache.spark.sql.types._
+    require(partCols.nonEmpty,
+      "snapshot tables are partitioned: derive a key-determined bucket column " +
+        "(e.g. pmod(key, n)) and pass it as the partition column")
     val ok: Set[DataType] = Set(ByteType, ShortType, IntegerType, LongType,
       StringType, BooleanType, DateType)
     partCols.foreach { c =>
@@ -1317,7 +1323,6 @@ object SnapshotMerge {
       embedSchema: Option[StructType] = None,
       validated: Option[Map[String, String]] = None)(
       mergeFn: (DataFrame, DataFrame) => DataFrame): Option[Long] = {
-    require(partCols.nonEmpty, "use Merge + AtomicDir for unpartitioned targets")
     requirePartitionable(incoming0.schema, partCols)
     val rootDir = store.root.toString
 

@@ -89,19 +89,11 @@ object SnapshotStore {
   @volatile var backendProvider: Path => Option[CommitPointerBackend] =
     _ => None
 
-  /** Relative `col=val[/col=val…]` paths of the partition leaf dirs
-    * under `root` — the parents of its DATA files; dirs holding only
-    * hidden/marker files (`_SUCCESS`, `.crc`) are not partitions.
-    * Shared by the snapshot layer and [[PartitionedMerge]]'s crash
-    * recovery.
-    */
-  def listPartitionDirs(fs: FileSystem, root: Path): Set[String] =
-    partitionSizes(fs, root).keySet
-
-  /** Data bytes per partition leaf dir under `root` — the SAME single
-    * recursive listing as [[listPartitionDirs]] (each listed file
-    * already carries its length), so callers that need sizes pay zero
-    * extra metadata calls over the plain dir walk.
+  /** Data bytes per partition leaf dir under `root`, keyed by the
+    * relative `col=val[/col=val…]` path — the parents of its DATA
+    * files; dirs holding only hidden/marker files (`_SUCCESS`, `.crc`)
+    * are not partitions. One recursive listing: each listed file
+    * already carries its length, so sizes cost no extra metadata call.
     */
   def partitionSizes(fs: FileSystem, root: Path): Map[String, Long] = {
     val base = root.toUri.getPath
@@ -132,8 +124,8 @@ object SnapshotStore {
 /** Versioned-snapshot table layout with an atomic pointer commit —
   * cross-partition all-or-nothing for partitioned merges.
   *
-  * [[PartitionedMerge]] makes each partition swap individually
-  * crash-safe, but a crash mid-loop over many partitions leaves a
+  * Swapping partition directories in one by one is crash-safe per
+  * partition, but a crash mid-loop over many partitions leaves a
   * mixed old/new table. The reference never sees that window because
   * its whole upsert runs inside one Postgres transaction
   * (`db/occurrence.py:22-51`). This object provides the same
@@ -1557,8 +1549,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   /** Read only the partitions whose suffix is in `suffixes` (all when
     * `suffixes` is null). This is manifest-level pruning: unlisted
     * partitions contribute no input paths at all, so the scan never
-    * lists their directories — the snapshot twin of
-    * [[PartitionedMerge]]'s IN-list directory pruning.
+    * lists their directories.
     */
   def readPartitions(schema: StructType, suffixes: Set[String]): DataFrame =
     currentManifestName() match {
@@ -2670,7 +2661,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * under `batchPath` (the parents of its data files).
     */
   def listPartitionDirs(batchPath: Path): Set[String] =
-    SnapshotStore.listPartitionDirs(fs, batchPath)
+    SnapshotStore.partitionSizes(fs, batchPath).keySet
 
   /** Delete orphans: batch dirs and manifests STRICTLY BELOW the
     * `retain`-version window that nothing retained references, plus

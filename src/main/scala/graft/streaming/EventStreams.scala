@@ -488,25 +488,21 @@ object EventStreams {
     }
   }
 
-  /** Streaming MERGE: drain a stream into a parquet "table" with
+  /** Streaming MERGE: drain a stream into a snapshot table with
     * idempotent upsert-update semantics per micro-batch (foreachBatch
-    * + [[graft.sinks.Merge.upsertUpdate]] — the reference's ON
+    * + [[graft.sinks.SnapshotMerge.upsertUpdate]] — the reference's ON
     * CONFLICT re-runnability, SURVEY §2.11, as a stream). Returns
     * after all available data is processed.
     *
-    * The rewrite goes through a staging directory and the
-    * [[graft.sinks.AtomicDir]] rename-aside swap: a crash at any point
-    * leaves a complete copy of the table recoverable, and a
-    * checkpoint-driven retry (or a first batch with no target yet)
-    * starts from an empty frame instead of failing on a missing path.
-    *
-    * With `partitionCols` set, each micro-batch rewrites ONLY the
-    * partitions its rows touch ([[graft.sinks.PartitionedMerge]],
-    * dynamic-partition-overwrite shape) — O(|affected partitions|)
-    * per batch instead of O(|target|), the difference between a
-    * streaming merge that survives a 100 TB target and one that
-    * rereads the world every trigger. Partition columns must be
-    * key-determined (see PartitionedMerge's contract).
+    * Each non-empty micro-batch reads and rewrites ONLY the partitions
+    * its rows touch — O(|affected partitions|) per batch instead of
+    * O(|target|) — and publishes them with one atomic pointer swap;
+    * untouched partitions carry forward by manifest reference. A crash
+    * at any point leaves readers on the previous complete snapshot, so
+    * a checkpoint-driven retry re-merges the replayed batch
+    * idempotently onto it, and a first batch with no table yet creates
+    * it. Partition columns must be key-determined (see
+    * [[graft.sinks.SnapshotMerge.upsertIgnore]]'s contract).
     *
     * `checkpointDir` carries the source offsets across runs — without
     * it (null) Spark uses a session-temporary checkpoint, so a
@@ -526,10 +522,9 @@ object EventStreams {
     */
   def upsertStream(spark: SparkSession, incoming: DataFrame,
       targetDir: String, keys: Seq[String],
-      partitionCols: Seq[String] = Nil,
+      partitionCols: Seq[String],
       checkpointDir: String = null,
       failAtBatch: Long = -1L): Unit = {
-    import graft.sinks.{AtomicDir, Merge, PartitionedMerge}
     lastUpsertBatches = Vector.empty
     val w0 = incoming.writeStream.outputMode(OutputMode.Append())
     val q = (if (checkpointDir != null)
@@ -538,19 +533,10 @@ object EventStreams {
         if (batchId == failAtBatch)
           throw new IllegalStateException(
             s"injected crash at micro-batch $batchId (recovery pin)")
-        if (batch.isEmpty) {
-          // an empty micro-batch must not read+rewrite the target
-        } else if (partitionCols.nonEmpty) {
-          PartitionedMerge.upsertUpdate(
+        // an empty micro-batch must not read+rewrite the target
+        if (!batch.isEmpty)
+          graft.sinks.SnapshotMerge.upsertUpdate(
             spark, targetDir, batch, keys, partitionCols)
-        } else {
-          val target = AtomicDir.readOrEmpty(spark, targetDir, batch.schema)
-          val merged = Merge.upsertUpdate(
-            target, batch.select(target.columns.map(col): _*), keys)
-          merged.write.mode("overwrite").parquet(targetDir + ".staging")
-          val dst = new org.apache.hadoop.fs.Path(targetDir)
-          AtomicDir.commit(AtomicDir.fileSystem(spark, dst), dst)
-        }
         lastUpsertBatches :+= batchId
         ()
       }

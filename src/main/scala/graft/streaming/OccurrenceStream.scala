@@ -29,75 +29,17 @@ object OccurrenceStream {
       spark.readStream.option("wholetext", "true").text(dir))
 
   /** Run the incremental occurrence sync over a transcript drop-folder
-    * until all currently-available files are processed. The target
-    * parquet path accumulates occurrences across batches (MERGE per
-    * micro-batch via [[graft.api.Vcut.syncOccurrences]]). Checkpoint
-    * state makes re-runs process only unseen files.
-    *
-    * SMALL TABLES ONLY: every micro-batch rewrites the WHOLE target —
-    * cost grows with the accumulated table, not the batch. The
-    * scale-correct twin is [[runAvailableSnapshot]], which upserts
-    * just the batch's increment into hash buckets; this variant
-    * remains for targets a plain unpartitioned parquet dir serves
-    * (tooling that can't read the snapshot layout).
-    */
-  @deprecated("rewrites the whole target per micro-batch; use " +
-    "runAvailableSnapshot for anything beyond small tables", "round-5")
-  def runAvailable(
-      spark: SparkSession,
-      transcriptsDir: String,
-      checkpointDir: String,
-      targetDir: String,
-      songs: DataFrame,
-      vtuberSongs: DataFrame,
-      archives: DataFrame,
-      threshold: Double = 40.0): Unit = {
-    val segments = readSegmentsStream(spark, transcriptsDir)
-    val q = segments.writeStream
-      .outputMode(OutputMode.Append())
-      .option("checkpointLocation", checkpointDir)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          // Crash-safe swap (graft.sinks.AtomicDir): recover any
-          // half-finished swap from a previous crashed run, merge, then
-          // publish via rename-aside — a checkpoint-driven retry always
-          // finds a readable target, and a FIRST batch with no target
-          // yet starts from an empty frame instead of failing on the
-          // missing path.
-          import graft.sinks.AtomicDir
-          import org.apache.spark.sql.types._
-          val occSchema = StructType(Seq(
-            StructField("song_id", LongType), StructField("vtuber_song_id", LongType),
-            StructField("live_recording_archive_id", LongType),
-            StructField("start", LongType), StructField("page", IntegerType)))
-          val dst = new org.apache.hadoop.fs.Path(targetDir)
-          val fs = AtomicDir.fileSystem(spark, dst)
-          AtomicDir.recover(fs, dst)
-          val existing = AtomicDir.readOrEmpty(spark, targetDir, occSchema)
-          val merged = Vcut.syncOccurrences(
-            existing, songs, vtuberSongs, archives, batch, threshold)
-            .select(existing.columns.map(col): _*)
-          merged.write.mode("overwrite").parquet(targetDir + ".staging")
-          AtomicDir.commit(fs, dst)
-        }
-        ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-  }
-
-  /** [[runAvailable]] with a bucketed snapshot-table sink: the 100 TB
-    * variant. Instead of rewriting the whole occurrence table each
-    * micro-batch, the batch's occurrence INCREMENT upserts through
-    * [[graft.sinks.SnapshotMerge]] into a table hash-bucketed on
-    * `live_recording_archive_id` (part of the merge key, so the
-    * key→partition contract holds): only buckets holding new
-    * occurrences are read or rewritten, untouched buckets carry
-    * forward by manifest reference, and each batch commits with one
-    * atomic pointer swap — a checkpoint-driven retry of a crashed
-    * batch finds the previous snapshot intact and re-merges
-    * idempotently (upsert on the unique key).
+    * until all currently-available files are processed, into a table
+    * hash-bucketed on `live_recording_archive_id` (part of the merge
+    * key, so the key→partition contract holds). Checkpoint state makes
+    * re-runs process only unseen files. Each micro-batch upserts just
+    * its occurrence INCREMENT through [[graft.sinks.SnapshotMerge]]:
+    * only buckets holding new occurrences are read or rewritten,
+    * untouched buckets carry forward by manifest reference, and each
+    * batch commits with one atomic pointer swap — a checkpoint-driven
+    * retry of a crashed batch finds the previous snapshot intact and
+    * re-merges idempotently (upsert on the unique key). A first batch
+    * with no table yet creates it.
     */
   def runAvailableSnapshot(
       spark: SparkSession,

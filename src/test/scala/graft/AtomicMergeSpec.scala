@@ -1,24 +1,17 @@
 package graft
 
-import java.nio.file.{Files, Paths}
 import org.apache.hadoop.fs.Path
-import org.apache.spark.sql.functions._
-import graft.sinks.{AtomicDir, Merge, PartitionedMerge}
+import graft.sinks.AtomicDir
 
-/** Crash-safety + partition-pruning pins for the table-publish layer:
-  * the rename-aside swap must leave a readable table across a simulated
-  * crash at every protocol step, and a partitioned merge must leave
-  * untouched partitions' files byte-identical (the reference's PG
-  * `ON CONFLICT` gives both properties for free — `db/recording.py:44-66`;
-  * these specs pin the parquet re-expression).
+/** Crash-safety pins for the write-once artifact publish: the
+  * rename-aside swap must leave a readable dir across a simulated crash
+  * at every protocol step. Upsert crash safety is pinned by
+  * SnapshotMergeSpec.
   */
 class AtomicMergeSpec extends SparkFunSuite {
   import spark.implicits._
 
   private def fs = AtomicDir.fileSystem(spark, new Path("/tmp"))
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   private def writeVals(dir: String, vals: (Long, String)*): Unit =
     vals.toSeq.toDF("id", "v").write.mode("overwrite").parquet(dir)
@@ -57,88 +50,5 @@ class AtomicMergeSpec extends SparkFunSuite {
     AtomicDir.recover(fs, new Path(dir))
     assert(readVals(dir) == Map(1L -> "new"))
     assert(!fs.exists(new Path(dir + ".old")))
-  }
-
-  test("readOrEmpty returns an empty typed frame for a missing first-batch target") {
-    val dir = tmp("missing")
-    val schema = Seq((1L, "x")).toDF("id", "v").schema
-    val df = AtomicDir.readOrEmpty(spark, dir, schema)
-    assert(df.schema == schema && df.count() == 0)
-  }
-
-  // ---- partitioned merge ------------------------------------------------
-
-  /** target: keys 0..9 in partitions pk = id % 5; incoming touches only
-    * pk 0 and 1 (ids 0,1,5,6 updated, ids 10,11 new).
-    */
-  private def seedPartitioned(): (String, Map[Long, String]) = {
-    val dir = tmp("pmerge")
-    val target = (0L until 10L).map(i => (i, s"t$i", i % 5)).toDF("id", "v", "pk")
-    target.write.partitionBy("pk").parquet(dir)
-    (dir, target.collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
-  }
-
-  private def incomingRows = Seq(
-    (0L, "U0", 0L), (5L, "U5", 0L), (1L, "U1", 1L), (6L, "U6", 1L),
-    (10L, "N10", 0L), (11L, "N11", 1L)).toDF("id", "v", "pk")
-
-  test("partitioned upsertUpdate equals the whole-frame merge") {
-    val (dir, _) = seedPartitioned()
-    PartitionedMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
-    val got = spark.read.parquet(dir)
-      .collect().map(r => r.getAs[Long]("id") ->
-        (r.getAs[String]("v"), r.getAs[Int]("pk").toLong)).toMap
-    val want = Merge.upsertUpdate(
-      (0L until 10L).map(i => (i, s"t$i", i % 5)).toDF("id", "v", "pk"),
-      incomingRows, Seq("id"))
-      .collect().map(r => r.getAs[Long]("id") ->
-        (r.getAs[String]("v"), r.getAs[Long]("pk"))).toMap
-    assert(got == want)
-  }
-
-  test("partitioned upsertIgnore keeps existing rows") {
-    val (dir, before) = seedPartitioned()
-    PartitionedMerge.upsertIgnore(spark, dir, incomingRows, Seq("id"), Seq("pk"))
-    val got = readVals(dir)
-    assert(got == before ++ Map(10L -> "N10", 11L -> "N11"))
-  }
-
-  test("untouched partitions' files are byte-identical after a merge") {
-    val (dir, _) = seedPartitioned()
-    def snapshot(pk: Long): Map[String, Seq[Byte]] = {
-      val d = Paths.get(dir.stripPrefix("file:"), s"pk=$pk")
-      import scala.jdk.CollectionConverters._
-      Files.list(d).iterator().asScala
-        .filter(p => !p.getFileName.toString.startsWith("."))
-        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
-    }
-    val before = (2L to 4L).map(pk => pk -> snapshot(pk)).toMap
-    PartitionedMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
-    (2L to 4L).foreach { pk =>
-      assert(snapshot(pk) == before(pk),
-        s"partition pk=$pk was rewritten though no incoming row touches it")
-    }
-  }
-
-  test("a crashed partition swap recovers to a readable partition") {
-    val (dir, before) = seedPartitioned()
-    // simulate a crash after rename-aside of pk=0: the partition dir is
-    // gone from the root, its content parked under .oldparts
-    val aside = new Path(dir + ".oldparts/pk=0")
-    fs.mkdirs(aside.getParent)
-    assert(fs.rename(new Path(dir + "/pk=0"), aside))
-    PartitionedMerge.recoverPartitions(spark, dir)
-    assert(readVals(dir) == before, "parked partition must be restored")
-    assert(!fs.exists(new Path(dir + ".oldparts")))
-    // and a merge over the recovered table works end-to-end
-    PartitionedMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
-    assert(readVals(dir)(0L) == "U0")
-  }
-
-  test("merge into a not-yet-existing partitioned target creates it") {
-    val dir = tmp("pmerge_new")
-    PartitionedMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
-    assert(readVals(dir) ==
-      Map(0L -> "U0", 5L -> "U5", 1L -> "U1", 6L -> "U6", 10L -> "N10", 11L -> "N11"))
   }
 }

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.{FileContext, Options, Path}
 import graft.sinks.{CommitPointerBackend, Merge, SnapshotConcurrentWriteException,
   SnapshotMerge, SnapshotStore}
@@ -16,9 +15,6 @@ import graft.sinks.{CommitPointerBackend, Merge, SnapshotConcurrentWriteExceptio
   */
 class CasBackendSpec extends SparkFunSuite {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   /** The object-store double: one instance = one store endpoint. The
     * mutex stands in for the service's server-side If-Match

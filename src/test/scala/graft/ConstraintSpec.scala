@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import graft.sinks.{SnapshotMerge, SnapshotStore}
@@ -14,9 +13,6 @@ import graft.sinks.{SnapshotMerge, SnapshotStore}
   */
 class ConstraintSpec extends SparkFunSuite {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   private def rows = (1L until 9L).map(i => (i, i * 10.0, i % 2)).toDF("id", "x", "pk")
 

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.sinks.{SnapshotMerge, SnapshotStore}
@@ -14,9 +13,6 @@ import graft.sinks.{SnapshotMerge, SnapshotStore}
   */
 class DeletionVectorSpec extends SparkFunSuite {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   private def rows = (0L until 10L).map(i => (i, s"t$i", i % 2)).toDF("id", "v", "pk")
 

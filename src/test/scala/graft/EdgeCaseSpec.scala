@@ -124,7 +124,7 @@ class EdgeCaseSpec extends SparkFunSuite {
     // chunking, but this pin is what future corpora with irregular
     // whitespace get.
     import org.apache.spark.sql.functions._
-    val dir = java.nio.file.Files.createTempDirectory("seg_pin").toString
+    val dir = tempDir("seg_pin").toString
     Seq(
       (1L, "w1 w2 w3 w4 w5 w6 w7", "en", "s", 20L),   // 6-word chunk + tail
       (2L, "a  b", "en", "s", 4L),                     // double space splits segments
@@ -148,7 +148,7 @@ class EdgeCaseSpec extends SparkFunSuite {
     // sequence(1, size-4) DESCENDING-ramp guard (size < 5 -> empty
     // array) never executes there — pin it on synthetic shorts.
     // Two identical 5-token docs make their single gram duplicated.
-    val dir = java.nio.file.Files.createTempDirectory("span_edge_").toString
+    val dir = tempDir("span_edge_").toString
     Seq(
       (1L, "only four words here", "en", "src0", 20L),
       (2L, "", "en", "src0", 0L),

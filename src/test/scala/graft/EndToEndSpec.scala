@@ -27,7 +27,7 @@ class EndToEndSpec extends SparkFunSuite {
     assert(segments.count() == 4 + 5 + 3)
 
     // K5: persist as the reference's nested JSON documents, re-read S2
-    val outDir = java.nio.file.Files.createTempDirectory("e2e_json").toString
+    val outDir = tempDir("e2e_json").toString
     TranscriptJson.assembleNested(segments)
       .write.mode("overwrite").json(outDir)
     val reread = spark.read
@@ -55,7 +55,7 @@ class EndToEndSpec extends SparkFunSuite {
 
   test("EP1 discovery end to end: paged listing → parsed archives → snapshot table, idempotent") {
     import graft.sources.v2.PagedArchiveSource
-    val dir = java.nio.file.Files.createTempDirectory("e2e_disc").toString + "/archives"
+    val dir = tempDir("e2e_disc").toString + "/archives"
     def run(): Long = Vcut.discoverNewRecordingsIncremental(
       spark, Seq(201L, 202L), dir,
       classOf[DiscoveryFetcher].getName, pageSize = 2)
@@ -98,7 +98,7 @@ class EndToEndSpec extends SparkFunSuite {
   }
 
   test("EP1 as a stream: checkpoint offsets replace table anchors across runs") {
-    val root = java.nio.file.Files.createTempDirectory("e2e_stream")
+    val root = tempDir("e2e_stream")
     val dir = root.resolve("archives").toString
     val ckpt = root.resolve("ckpt").toString
     val tableSchema = Vcut.archiveTableSchema
@@ -227,7 +227,7 @@ class EndToEndSpec extends SparkFunSuite {
   test("EP2 as a stream: checkpoint offsets replace song anchors; each drain commits the converged state") {
     import graft.sinks.{SnapshotMerge, SnapshotStore}
     import graft.sources.v2.ArchiveRecord
-    val root = java.nio.file.Files.createTempDirectory("e2e_ep2s")
+    val root = tempDir("e2e_ep2s")
     val dir = root.resolve("vtuber_songs").toString
     val ckpt = root.resolve("ckpt").toString
     val profiles = Seq((1L, 501L)).toDF("id", "mid")
@@ -273,7 +273,7 @@ class EndToEndSpec extends SparkFunSuite {
   }
 
   test("EP1 backfill: two-sided window ingests older history the anchors skip") {
-    val dir = java.nio.file.Files.createTempDirectory("e2e_bf").toString + "/archives"
+    val dir = tempDir("e2e_bf").toString + "/archives"
     val tableSchema = Vcut.archiveTableSchema
     // seed: only the MIDDLE of 201's history is ingested (ts2..ts3) —
     // newer (BVnew ts10) and older (BV201a ts1) both exist upstream

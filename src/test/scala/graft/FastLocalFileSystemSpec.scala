@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.Files
-
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.{FileSystem, Path, RawLocalFileSystem}
 import org.apache.hadoop.fs.permission.FsPermission
@@ -14,7 +12,7 @@ import graft.hadoop.NoForkRawLocalFileSystem
   * permission bits — the special (sticky) bit included — in both
   * directions.
   */
-class FastLocalFileSystemSpec extends AnyFunSuite {
+class FastLocalFileSystemSpec extends AnyFunSuite with TestScratch {
   private def init(fs: FileSystem): FileSystem = {
     fs.initialize(java.net.URI.create("file:///"), new Configuration())
     fs
@@ -23,7 +21,7 @@ class FastLocalFileSystemSpec extends AnyFunSuite {
   private lazy val shim = init(new NoForkRawLocalFileSystem)
 
   private def tmpDir(): Path =
-    new Path("file://" + Files.createTempDirectory("fastfs"))
+    new Path("file://" + tempDir("fastfs"))
 
   private def sameStatus(p: Path): Unit = {
     val (a, b) = (stock.getFileStatus(p), shim.getFileStatus(p))

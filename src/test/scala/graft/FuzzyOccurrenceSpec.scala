@@ -80,7 +80,7 @@ class FuzzyOccurrenceSpec extends SparkFunSuite {
 
   test("pipeline matches reference loop semantics on domain fixture") {
     import spark.implicits._
-    val dir = Files.createTempDirectory("transcripts").toString
+    val dir = tempDir("transcripts").toString
     writeTranscriptJson(dir)
 
     val segments = TranscriptJson.readSegments(spark, s"$dir/*.json")
@@ -121,7 +121,7 @@ class FuzzyOccurrenceSpec extends SparkFunSuite {
   }
 
   test("nested JSON round-trip (S2 read → K5 assemble)") {
-    val dir = Files.createTempDirectory("transcripts2").toString
+    val dir = tempDir("transcripts2").toString
     writeTranscriptJson(dir)
     val segs = TranscriptJson.readSegments(spark, s"$dir/*.json")
     assert(segs.columns.toSeq ==

@@ -514,7 +514,7 @@ class GraphSpec extends SparkFunSuite {
     // staleness defense: a REGENERATED corpus at the same path (new
     // length/mtime) must key to a DIFFERENT artifact root — a
     // path-only key would silently serve the old graph
-    val tmp = java.nio.file.Files.createTempDirectory("edge_fp").toString
+    val tmp = tempDir("edge_fp").toString
     Seq((1L, 1L), (1L, 2L)).toDF("l_orderkey", "l_partkey")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/lineitem.parquet")
     val root1 = Graph.edgeArtifactRoot(spark, tmp)
@@ -531,6 +531,9 @@ class GraphSpec extends SparkFunSuite {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(e2 == Set((1L, 2L, 1L), (1L, 3L, 1L), (2L, 3L, 2L)),
       s"rebuilt edges wrong: $e2")
+    // no later run reuses this temp corpus's artifacts
+    Seq(root1, root2).foreach(r =>
+      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(r.toUri.getPath)))
   }
 
   test("g9 recursion keeps its broadcast hint on the recursion side") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import graft.sinks.{SnapshotMerge, SnapshotStore}
@@ -16,9 +15,6 @@ import graft.sinks.{SnapshotMerge, SnapshotStore}
   */
 class KeyContractSpec extends SparkFunSuite {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   private def rows = (0L until 20L).map(i => (i, s"v$i", i % 5)).toDF("id", "v", "pk")
 

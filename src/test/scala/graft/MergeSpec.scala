@@ -54,7 +54,7 @@ class MergeSpec extends SparkFunSuite {
   test("partitioned write prunes partitions on read") {
     // §1.4: hive-style date partitioning = the reference's object-key
     // layout; a filtered read must touch only matching files.
-    val dir = java.nio.file.Files.createTempDirectory("part").toString
+    val dir = tempDir("part").toString
     Tables.load(spark, sfDir, "events")
       .withColumn("sh", from_utc_timestamp(col("ts"), "+08:00"))
       .withColumn("y", year(col("sh"))).withColumn("m", month(col("sh")))

@@ -15,9 +15,6 @@ import graft.sinks.{Merge, SnapshotMerge, SnapshotStore}
 class MorUpdateSpec extends SparkFunSuite {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   private def targetRows = (0L until 10L).map(i => (i, s"t$i", i % 5)).toDF("id", "v", "pk")
 
   private def incomingRows = Seq(

@@ -1,17 +1,15 @@
 package graft
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.streaming.OccurrenceStream
 
 /** The cron-as-stream test: transcript files dropped into a folder
   * drive incremental occurrence sync; a second run with a new file
   * processes ONLY that file (checkpoint offsets replace the
-  * reference's lastSongOccurrenceScan state column) and merges into
-  * the accumulated target.
+  * reference's lastSongOccurrenceScan state column) and upserts into
+  * the accumulated snapshot table.
   */
-@scala.annotation.nowarn("cat=deprecation") // runAvailable's small-table contract is itself under test
 class OccurrenceStreamSpec extends SparkFunSuite {
   import spark.implicits._
 
@@ -35,41 +33,8 @@ class OccurrenceStreamSpec extends SparkFunSuite {
   private val doc =
     """[[{"start": 4.0, "text": "夜空中最亮的星"}, {"start": 9.0, "text": "能否听清"}, {"start": 14.0, "text": "那仰望的人"}]]"""
 
-  test("incremental transcript stream merges occurrences per batch") {
-    val root = Files.createTempDirectory("occ_stream")
-    val drop = root.resolve("transcripts"); Files.createDirectories(drop)
-    val target = root.resolve("occurrences").toString
-    val ckpt = root.resolve("ckpt").toString
-
-    // no pre-seeded target: the first batch must start from an empty
-    // frame, not fail on the missing path
-
-    // batch 1: one transcript
-    Files.writeString(drop.resolve("BVa.json"), doc)
-    OccurrenceStream.runAvailable(spark, drop.toString, ckpt, target,
-      songs, vtuberSongs, archives)
-    val after1 = spark.read.parquet(target)
-    assert(after1.count() == 1)
-    assert(after1.select("live_recording_archive_id").as[Long].collect()(0) == 1L)
-
-    // batch 2: a second file appears; only it is processed, target
-    // accumulates both occurrences
-    Files.writeString(drop.resolve("BVb.json"), doc)
-    OccurrenceStream.runAvailable(spark, drop.toString, ckpt, target,
-      songs, vtuberSongs, archives)
-    val after2 = spark.read.parquet(target)
-    assert(after2.count() == 2)
-    assert(after2.select("live_recording_archive_id").as[Long].collect().toSet ==
-      Set(1L, 2L))
-
-    // re-run with nothing new: no change (exactly-once file tracking)
-    OccurrenceStream.runAvailable(spark, drop.toString, ckpt, target,
-      songs, vtuberSongs, archives)
-    assert(spark.read.parquet(target).count() == 2)
-  }
-
   test("snapshot-sink stream upserts increments, untouched buckets carry forward") {
-    val root = Files.createTempDirectory("occ_snap")
+    val root = tempDir("occ_snap")
     val drop = root.resolve("transcripts"); Files.createDirectories(drop)
     val target = root.resolve("occurrences").toString
     val ckpt = root.resolve("ckpt").toString
@@ -119,7 +84,7 @@ class OccurrenceStreamSpec extends SparkFunSuite {
   }
 
   test("auto-compact folds stream churn once the manifest exceeds compactAbove") {
-    val root = Files.createTempDirectory("occ_compact")
+    val root = tempDir("occ_compact")
     val drop = root.resolve("transcripts"); Files.createDirectories(drop)
     val target = root.resolve("occurrences").toString
     val ckpt = root.resolve("ckpt").toString

@@ -235,7 +235,7 @@ class PagedArchiveSourceSpec extends SparkFunSuite {
 
   test("streaming: checkpointed per-key anchors deliver each record exactly once") {
     import org.apache.spark.sql.streaming.Trigger
-    val root = java.nio.file.Files.createTempDirectory("paged_stream")
+    val root = tempDir("paged_stream")
     val ckpt = root.resolve("ckpt").toString
     val got = new java.util.concurrent.ConcurrentLinkedQueue[(Long, String, Long)]()
     def drain(): Unit = {

@@ -17,9 +17,7 @@ class ParquetReadLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     ("Tables.scala", "read.parquet(path)") ->
       "the one footer inference per file version, stored and reused by every later load",
     ("sinks/SnapshotMerge.scala", "read.option(\"basePath\",p).parquet(p)") ->
-      "evolve fronts' stored-schema fallback: a table without a persisted schema has only its footer",
-    ("sinks/AtomicDir.scala", "read.parquet(dir)") ->
-      "readOrEmpty returns the target as written; the caller's schema describes only the empty first batch")
+      "evolve fronts' stored-schema fallback: a table without a persisted schema has only its footer")
 
   private val readChain =
     ("""\bread((?:\s*\.\s*(?:option|options|format|schema)\s*\((?:[^()]|\([^()]*\))*\))*)""" +

@@ -523,7 +523,7 @@ class RelationalSpec extends SparkFunSuite {
     conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val tag = "spec" + System.nanoTime()
-      val base = java.nio.file.Files.createTempDirectory("graft_bktspec_").toString
+      val base = tempDir("graft_bktspec_").toString
       val o = Tables.load(spark, sfDir, "orders")
         .select(col("o_orderkey"), col("o_orderstatus"))
       val l = Tables.load(spark, sfDir, "lineitem")
@@ -557,7 +557,6 @@ class RelationalSpec extends SparkFunSuite {
       assert(a == b)
       spark.sql(s"DROP TABLE bkt_o_$tag")
       spark.sql(s"DROP TABLE bkt_l_$tag")
-      org.apache.commons.io.FileUtils.deleteQuietly(new java.io.File(base))
     } finally conf.set("spark.sql.autoBroadcastJoinThreshold", saved)
   }
 

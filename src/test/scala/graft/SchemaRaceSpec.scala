@@ -23,9 +23,6 @@ import graft.sinks.{SnapshotConcurrentWriteException, SnapshotMerge, SnapshotSto
 class SchemaRaceSpec extends SparkFunSuite {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   private def seedRows = (0L until 8L).map(i => (i, s"v$i", i % 2))
     .toDF("id", "v", "pk")
 

@@ -13,7 +13,9 @@ import graft.streaming.EventStreams
 /** `graft.Scratch` owns every driver-local scratch dir: a dir is gone
   * once its body returns or throws, a frame that still reads it is
   * refused, and a cached fixture is built once per source version. The
-  * lint pins that no other `src/main` file creates temp dirs.
+  * lints pin that no other `src/main` file, and no test outside the
+  * per-test `Scratch.dir` and the listed suite fixtures, creates temp
+  * dirs.
   */
 class ScratchSpec extends SparkFunSuite {
 
@@ -124,11 +126,52 @@ class ScratchSpec extends SparkFunSuite {
       .map(m => (SourceLint.lineAt(code, m.start), m.matched.replaceAll("\\s", "")))
   }
 
+  /** Files the lint skips, with the reason: the owner of temp dirs,
+    * and this spec, whose string literals are the scanner's test
+    * inputs and the allow-lists below.
+    */
+  private val exempt: Map[String, String] = Map(
+    "Scratch.scala" -> "the one place that creates and removes scratch dirs",
+    "ScratchSpec.scala" -> "the lint's own self-test literals and allow-list keys")
+
   /** (file under src/main/scala/graft, call without whitespace) → reason. */
-  private val allowed: Map[(String, String), String] = Map(
+  private val allowedMain: Map[(String, String), String] = Map(
     ("operators/Dedup.scala", "createTempDirectory(\"graft-cc-\")") ->
       ("connectedComponents' result is read lazily for the rest of the session, " +
         "so its dir is reclaimed at JVM exit (forceDeleteOnExit), not at return"))
+
+  /** (file under src/test/scala/graft, call without whitespace) → reason.
+    * A test body takes its dirs from `tempDir`/`tmp` (the test's
+    * `Scratch.dir`); only suite-level fixtures, deleted in `afterAll`,
+    * create their own.
+    */
+  private val allowedTest: Map[(String, String), String] = Map(
+    ("StreamingSpec.scala", "createTempDirectory(\"events_stream\")") ->
+      "suite fixture: the events drop dir the streaming tests share",
+    ("SourcesSpec.scala", "createTempDirectory(\"metas\")") ->
+      "suite fixture: the metadata tree the glob-scan tests share",
+    ("TranscriptDataSourceSpec.scala", "createTempDirectory(\"dsv2\")") ->
+      "suite fixture: the transcript files the DSv2 source tests share")
+
+  /** Fails on a temp-dir site under `src/<tree>` outside `allowed`, and
+    * on an allowed entry that matches no site (the list stays exact).
+    */
+  private def assertOnlyAllowed(tree: String,
+      allowed: Map[(String, String), String]): Unit = {
+    val graftRoot = SourceLint.srcRoot.resolve(s"$tree/scala/graft")
+    val found = SourceLint.scalaFiles(SourceLint.srcRoot.resolve(tree))
+      .filterNot(f => exempt.contains(f.getFileName.toString))
+      .flatMap { f =>
+        val rel = graftRoot.relativize(f).toString
+        tempCalls(Files.readString(f)).map { case (line, call) => (rel, line, call) }
+      }
+    val unlisted = found.filterNot { case (rel, _, call) => allowed.contains(rel -> call) }
+    assert(unlisted.isEmpty, unlisted.map { case (rel, line, call) =>
+      s"$rel:$line: $call; use graft.Scratch (in a test: tempDir/tmp) or allow-list it"
+    }.mkString(s"\n${unlisted.size} site(s):\n", "\n", ""))
+    val stale = allowed.keySet -- found.map { case (rel, _, call) => rel -> call }
+    assert(stale.isEmpty, s"allow-list entries that match no call: $stale")
+  }
 
   test("the temp-dir scan sees a multi-line call and skips comments") {
     val src =
@@ -143,18 +186,10 @@ class ScratchSpec extends SparkFunSuite {
   }
 
   test("src/main creates temp dirs and files only through Scratch, outside the allow-list") {
-    val graftRoot = SourceLint.srcRoot.resolve("main/scala/graft")
-    val found = SourceLint.scalaFiles(SourceLint.srcRoot.resolve("main"))
-      .filterNot(_.getFileName.toString == "Scratch.scala")
-      .flatMap { f =>
-        val rel = graftRoot.relativize(f).toString
-        tempCalls(Files.readString(f)).map { case (line, call) => (rel, line, call) }
-      }
-    val unlisted = found.filterNot { case (rel, _, call) => allowed.contains(rel -> call) }
-    assert(unlisted.isEmpty, unlisted.map { case (rel, line, call) =>
-      s"$rel:$line: $call; use graft.Scratch.dir/frame/cached or allow-list it"
-    }.mkString(s"\n${unlisted.size} site(s):\n", "\n", ""))
-    val stale = allowed.keySet -- found.map { case (rel, _, call) => rel -> call }
-    assert(stale.isEmpty, s"allow-list entries that match no call: $stale")
+    assertOnlyAllowed("main", allowedMain)
+  }
+
+  test("src/test creates temp dirs and files only through Scratch, outside the allow-list") {
+    assertOnlyAllowed("test", allowedTest)
   }
 }

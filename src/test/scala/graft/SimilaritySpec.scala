@@ -201,7 +201,7 @@ class SimilaritySpec extends SparkFunSuite {
       s"mean recon cosine ${recon.sum / recon.length}")
     // a near-identical twin (±0.5% jitter) must encode to the same
     // codes — PQ cells are far coarser than the jitter
-    val dir = java.nio.file.Files.createTempDirectory("pq_twin_").toString
+    val dir = tempDir("pq_twin_").toString
     val e = Tables.load(spark, sfDir, "embeddings")
     e.unionByName(
       e.where(col("vec_id") === 0)
@@ -522,7 +522,7 @@ class SimilaritySpec extends SparkFunSuite {
     // silently serve the previous corpus's codebook/codes/coarse
     // table (the edgeArtifactRoot staleness defense, applied to the
     // served-PQ index)
-    val tmp = java.nio.file.Files.createTempDirectory("pq_fp").toString
+    val tmp = tempDir("pq_fp").toString
     Seq((1L, Seq(0.1f, 0.2f))).toDF("vec_id", "v")
       .coalesce(1).write.mode("overwrite").parquet(s"$tmp/embeddings.parquet")
     val r1 = Similarity.pqArtifactRoot(spark, tmp)

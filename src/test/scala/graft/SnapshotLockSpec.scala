@@ -13,9 +13,6 @@ import graft.sinks.{SnapshotConcurrentWriteException, SnapshotStore}
   */
 class SnapshotLockSpec extends SparkFunSuite {
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   /** Seed a v1 table whose manifest the hammer threads then grow. The
     * batch dirs never need data files — commit() is pure metadata.
     */

@@ -1,8 +1,8 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
-import graft.sinks.{Merge, PartitionedMerge, SnapshotMerge, SnapshotStore}
+import org.apache.spark.JobCounter
+import graft.sinks.{Merge, SnapshotMerge, SnapshotStore}
 
 /** Cross-partition atomicity pins for the snapshot/manifest commit
   * layer: a crash at ANY point before the pointer swap must leave a
@@ -13,9 +13,6 @@ import graft.sinks.{Merge, PartitionedMerge, SnapshotMerge, SnapshotStore}
   */
 class SnapshotMergeSpec extends SparkFunSuite {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   private def targetRows = (0L until 10L).map(i => (i, s"t$i", i % 5)).toDF("id", "v", "pk")
 
@@ -612,18 +609,17 @@ class SnapshotMergeSpec extends SparkFunSuite {
     assert(e.getMessage.contains("keys"))
   }
 
-  test("partitioned merge keeps exact string partition values (no inference loss)") {
-    // the declared-schema read contract: "00123" must NOT infer to
-    // int 123 on the second merge — that would re-key the committed
-    // rows outside the touched set and silently drop them in the swap
-    val dir = tmp("pstr")
-    val t0 = Seq((1L, "a", "00123"), (2L, "b", "7x")).toDF("id", "v", "part")
-    t0.write.partitionBy("part").parquet(dir)
-    PartitionedMerge.upsertUpdate(spark, dir,
-      Seq((1L, "a2", "00123")).toDF("id", "v", "part"), Seq("id"), Seq("part"))
-    val got = spark.read.schema(t0.schema).parquet(dir)
-      .collect().map(r => r.getLong(0) -> (r.getString(1), r.getString(2))).toMap
-    assert(got == Map(1L -> ("a2", "00123"), 2L -> ("b", "7x")))
+  test("freshOnly without partition columns is refused before any job runs") {
+    // with no partition columns the touched set is one empty suffix
+    // that matches no manifest entry: the guard would read nothing and
+    // call every committed key "fresh"
+    val dir = seed()
+    val (e, jobs) = JobCounter.jobsDuring(spark.sparkContext)(
+      intercept[IllegalArgumentException] {
+        SnapshotMerge.freshOnly(spark, dir, incomingRows, Seq("id"), Nil)
+      })
+    assert(e.getMessage.contains("snapshot tables are partitioned"), e.getMessage)
+    assert(jobs == 0, s"the refused guard ran $jobs job(s)")
   }
 
   test("null and empty-string partition values are rejected up front") {
@@ -865,21 +861,5 @@ class SnapshotMergeSpec extends SparkFunSuite {
     val v = store.currentVersion()
     SnapshotMerge.upsertUpdate(spark, dir, incomingRows.limit(0), Seq("id"), Seq("pk"))
     assert(store.currentVersion() == v)
-  }
-
-  test("PartitionedMerge recovery drops doomed partitions instead of restoring them") {
-    val dir = tmp("pdel")
-    targetRows.write.partitionBy("pk").parquet(dir)
-    val fs = graft.sinks.AtomicDir.fileSystem(spark, new Path(dir))
-    // simulate a crash mid-delete: pk=4 renamed into the doomed
-    // namespace, the recursive delete never finished
-    val doomed = new Path(dir + ".deleting/pk=4")
-    fs.mkdirs(doomed.getParent)
-    assert(fs.rename(new Path(dir + "/pk=4"), doomed))
-    PartitionedMerge.recoverPartitions(spark, dir)
-    assert(!fs.exists(new Path(dir + ".deleting")))
-    val ids = spark.read.parquet(dir).select("id").as[Long].collect().toSet
-    assert(ids == (0L until 10L).filter(_ % 5 != 4L).toSet,
-      "doomed partition must stay deleted after recovery")
   }
 }

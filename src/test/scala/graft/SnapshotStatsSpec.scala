@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions._
 import graft.sinks.{SnapshotMerge, SnapshotStore}
@@ -13,9 +12,6 @@ import graft.sinks.{SnapshotMerge, SnapshotStore}
   */
 class SnapshotStatsSpec extends SparkFunSuite {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   /** 300 rows, pk = id / 100 — each partition holds a DISJOINT value
     * band: pk=0 -> v in [0,99], pk=1 -> [100,199], pk=2 -> [200,299].

@@ -1,28 +1,37 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 
 /** Source/sink coverage not exercised by the query catalog:
   * S3 recursive metadata glob scan, S7 binary file source, K5 nested
   * JSON document sink (SURVEY.md §2.1/§2.2).
   */
-class SourcesSpec extends SparkFunSuite {
+class SourcesSpec extends SparkFunSuite with BeforeAndAfterAll {
+
+  /** Suite fixture, deleted after the suite; the glob scan's `mid`
+    * regex keys on its `metas` name.
+    */
+  private val metasRoot = Files.createTempDirectory("metas")
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(metasRoot.toFile) finally super.afterAll()
 
   private lazy val root: String = {
     // <root>/<mid>/<year>/<month>/<stamp_bvid>/meta.json — the local
     // CLI layout (reference cmdline.py:388-401)
-    val dir = Files.createTempDirectory("metas")
     Seq(
       ("42", "2025", "07", "0701_BVx1", """{"bvid": "BVx1", "duration": 3600, "title": "t1"}"""),
       ("42", "2025", "08", "0802_BVx2", """{"bvid": "BVx2", "duration": 1800, "title": "t2"}"""),
       ("77", "2024", "12", "1231_BVx3", """{"bvid": "BVx3", "duration": 900, "title": "t3"}""")
     ).foreach { case (mid, y, m, stamp, json) =>
-      val d = dir.resolve(mid).resolve(y).resolve(m).resolve(stamp)
+      val d = metasRoot.resolve(mid).resolve(y).resolve(m).resolve(stamp)
       Files.createDirectories(d)
       Files.writeString(d.resolve("meta.json"), json)
     }
-    dir.toString
+    metasRoot.toString
   }
 
   test("S3: glob scan replaces the recursive FS walk") {
@@ -46,7 +55,7 @@ class SourcesSpec extends SparkFunSuite {
   }
 
   test("S7: distributed byte-range reads return exact windows and fail on short reads") {
-    val f = Files.createTempFile("range_probe", ".bin")
+    val f = tempDir("range_probe").resolve("f.bin")
     val content = (0 until 100).map(i => f"$i%04d").mkString // 400 ascii bytes
     Files.write(f, content.getBytes("US-ASCII"))
     import spark.implicits._
@@ -65,7 +74,6 @@ class SourcesSpec extends SparkFunSuite {
     intercept[org.apache.spark.SparkException] {
       graft.sources.RangeReads.readRanges(f.toString, bad).collect()
     }
-    Files.deleteIfExists(f)
   }
 
   test("S7: range reads open files through the SESSION Hadoop conf, not a fresh default") {
@@ -77,7 +85,7 @@ class SourcesSpec extends SparkFunSuite {
     // throws UnsupportedFileSystemException. Same mechanism that
     // carries S3A keys/endpoints or HDFS nameservices on a real
     // cluster.
-    val f = Files.createTempFile("range_conf", ".bin")
+    val f = tempDir("range_conf").resolve("f.bin")
     val content = "0123456789abcdef" * 8
     Files.write(f, content.getBytes("US-ASCII"))
     spark.sparkContext.hadoopConfiguration
@@ -91,19 +99,16 @@ class SourcesSpec extends SparkFunSuite {
       def md5(s: String) = java.security.MessageDigest.getInstance("MD5")
         .digest(s.getBytes("US-ASCII")).map(b => f"$b%02x").mkString
       assert(got == Map(0L -> md5(content.substring(16, 32))))
-    } finally {
-      spark.sparkContext.hadoopConfiguration.unset("fs.graftfs.impl")
-      Files.deleteIfExists(f)
-    }
+    } finally spark.sparkContext.hadoopConfiguration.unset("fs.graftfs.impl")
   }
 
   test("K5: nested JSON document sink round-trips through files") {
-    val dir = Files.createTempDirectory("transcripts_sink").toString
+    val dir = tempDir("transcripts_sink").toString
     Files.writeString(Paths.get(s"$dir/BVw.json"),
       """[[{"start": 1.0, "text": "a"}, {"start": 2.0, "text": "b"}],
          [{"start": 0.5, "text": "c"}]]""")
     val segs = sources.TranscriptJson.readSegments(spark, s"$dir/*.json")
-    val outDir = Files.createTempDirectory("transcripts_out").toString
+    val outDir = tempDir("transcripts_out").toString
     sources.TranscriptJson.assembleNested(segs)
       .write.mode("overwrite").json(outDir)
     val back = spark.read

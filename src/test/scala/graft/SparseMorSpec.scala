@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.Files
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.{col, lit}
@@ -16,9 +15,6 @@ import graft.sinks.{SnapshotMerge, SnapshotStore}
   */
 class SparseMorSpec extends SparkFunSuite {
   import spark.implicits._
-
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
 
   // a deliberately WIDE row: the write-amplification fixture
   private def wideRows: DataFrame =

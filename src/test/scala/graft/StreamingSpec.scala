@@ -1,36 +1,43 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
+
+import graft.sinks.{SnapshotMerge, SnapshotStore}
 import graft.streaming.EventStreams
 
 /** Streaming/batch parity: the streaming tumbling aggregation must
   * produce exactly the batch `ev_tumbling` result when drained with
   * AvailableNow, and keyed state must reproduce a batch groupBy.
   */
-class StreamingSpec extends SparkFunSuite {
+class StreamingSpec extends SparkFunSuite with BeforeAndAfterAll {
 
   /** File streams consume directories: stage the single events
-    * parquet into one.
+    * parquet into one, shared by the suite and deleted after it.
     */
+  private val eventsRoot = Files.createTempDirectory("events_stream")
   private lazy val eventsDir: String = {
-    val dir = java.nio.file.Files.createTempDirectory("events_stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$sfDir/events.parquet"),
-      dir.resolve("events.parquet"))
-    dir.toString
+    Files.copy(Paths.get(s"$sfDir/events.parquet"), eventsRoot.resolve("events.parquet"))
+    eventsRoot.toString
   }
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(eventsRoot.toFile) finally super.afterAll()
 
   test("validateEventSchema: clear error when files contradict the declared schema") {
     import org.apache.spark.sql.types._
     // empty folder: nothing to contradict — a no-op (stream not yet fed)
-    val empty = java.nio.file.Files.createTempDirectory("ev_schema_empty").toString
+    val empty = tempDir("ev_schema_empty").toString
     EventStreams.validateEventSchema(spark, empty,
       StructType(Seq(StructField("ts", TimestampNTZType))))
     // folder later filled by a BIGINT-nanos producer while the stream
     // declared the TIMESTAMP_NTZ fallback: must fail with the
     // restart-hint error, not misread
     import spark.implicits._
-    val nanosDir = java.nio.file.Files.createTempDirectory("ev_schema_nanos").toString
+    val nanosDir = tempDir("ev_schema_nanos").toString
     Seq((1L, 1700000000000000000L)).toDF("event_id", "ts")
       .write.mode("overwrite").parquet(nanosDir)
     val declared = StructType(Seq(
@@ -131,17 +138,16 @@ class StreamingSpec extends SparkFunSuite {
 
   test("foreachBatch streaming MERGE upserts idempotently") {
     import spark.implicits._
-    val targetDir = java.nio.file.Files.createTempDirectory("merge_target")
-      .toString + "/t"
+    val targetDir = tmp("merge_target")
     // seed target: event 0 with a stale value, plus a row the stream
     // never touches
-    Seq((0L, -1.0), (-42L, 7.0)).toDF("event_id", "value")
-      .write.parquet(targetDir)
+    val seed = Seq((0L, -1.0), (-42L, 7.0)).toDF("event_id", "value")
+      .withColumn("pk", pmod(col("event_id"), lit(8L)))
+    SnapshotMerge.upsertUpdate(spark, targetDir, seed, Seq("event_id"), Seq("pk"))
     val incoming = EventStreams.readEvents(spark, eventsDir)
-      .select(org.apache.spark.sql.functions.col("event_id"),
-        org.apache.spark.sql.functions.col("value"))
-    EventStreams.upsertStream(spark, incoming, targetDir, Seq("event_id"))
-    val merged = spark.read.parquet(targetDir)
+      .select(col("event_id"), col("value"), pmod(col("event_id"), lit(8L)).as("pk"))
+    EventStreams.upsertStream(spark, incoming, targetDir, Seq("event_id"), Seq("pk"))
+    val merged = SnapshotMerge.read(spark, targetDir, seed.schema)
     val batch = Tables.load(spark, sfDir, "events")
     assert(merged.count() == batch.count() + 1) // untouched row survives
     val v0 = merged.where($"event_id" === 0L).select("value").as[Double].collect()(0)
@@ -152,31 +158,36 @@ class StreamingSpec extends SparkFunSuite {
   }
 
   test("streaming MERGE handles a missing target on the first batch") {
-    import spark.implicits._
-    val targetDir = java.nio.file.Files.createTempDirectory("merge_first")
-      .toString + "/t" // does NOT exist yet
+    val targetDir = tmp("merge_first") // does NOT exist yet
     val incoming = EventStreams.readEvents(spark, eventsDir)
-      .select(col("event_id"), col("value"))
-    EventStreams.upsertStream(spark, incoming, targetDir, Seq("event_id"))
-    val merged = spark.read.parquet(targetDir)
+      .select(col("event_id"), col("value"), pmod(col("event_id"), lit(8L)).as("pk"))
+    EventStreams.upsertStream(spark, incoming, targetDir, Seq("event_id"), Seq("pk"))
+    val merged = SnapshotMerge.read(spark, targetDir, incoming.schema)
     assert(merged.count() == Tables.load(spark, sfDir, "events").count())
   }
 
   test("partitioned streaming MERGE rewrites only affected partitions") {
     import spark.implicits._
-    val targetDir = java.nio.file.Files.createTempDirectory("merge_part")
-      .toString + "/t"
+    val targetDir = tmp("merge_part")
     // seed: a stale row for event 0 in its key-derived partition, plus
     // a row in a partition the stream never touches (pk=99)
-    Seq((0L, -1.0, 0L), (-42L, 7.0, 99L)).toDF("event_id", "value", "pk")
-      .write.partitionBy("pk").parquet(targetDir)
-    val untouched = java.nio.file.Paths.get(targetDir, "pk=99")
+    val seed = Seq((0L, -1.0, 0L), (-42L, 7.0, 99L)).toDF("event_id", "value", "pk")
+    SnapshotMerge.upsertUpdate(spark, targetDir, seed, Seq("event_id"), Seq("pk"))
+    val store = new SnapshotStore(spark, new org.apache.hadoop.fs.Path(targetDir))
+    val m1 = store.current().get._2
+    // corrupt decoy in pk=99's committed dir: a merge that opened the
+    // untouched partition would fail on its footer
+    val untouched = Paths.get(new org.apache.hadoop.fs.Path(
+      store.dataPath(m1("pk=99")), "pk=99").toUri.getPath)
+    val decoy = untouched.resolve("part-99999-decoy.snappy.parquet")
+    Files.write(decoy, "not a parquet file".getBytes)
     def files = {
       import scala.jdk.CollectionConverters._
-      java.nio.file.Files.list(untouched).iterator().asScala
+      val st = Files.list(untouched)
+      try st.iterator().asScala
         .filter(p => !p.getFileName.toString.startsWith("."))
-        .map(p => p.toString ->
-          java.nio.file.Files.readAllBytes(p).toSeq).toMap
+        .map(p => p.toString -> Files.readAllBytes(p).toSeq).toMap
+      finally st.close()
     }
     val before = files
     val incoming = EventStreams.readEvents(spark, eventsDir)
@@ -184,17 +195,19 @@ class StreamingSpec extends SparkFunSuite {
         pmod(col("event_id"), lit(8L)).as("pk"))
     EventStreams.upsertStream(spark, incoming, targetDir, Seq("event_id"),
       partitionCols = Seq("pk"))
-    val merged = spark.read.parquet(targetDir)
+    assert(store.current().get._2("pk=99") == m1("pk=99"),
+      "untouched partition pk=99 must carry forward by reference")
+    assert(files == before, "untouched partition pk=99 was rewritten")
+    Files.delete(decoy) // so the full-table reads below stay valid
+    val merged = SnapshotMerge.read(spark, targetDir, seed.schema)
     val batch = Tables.load(spark, sfDir, "events")
     assert(merged.count() == batch.count() + 1)
     val v0 = merged.where($"event_id" === 0L).select("value").as[Double].collect()(0)
     assert(v0 == batch.where($"event_id" === 0L).select("value").as[Double].collect()(0))
-    assert(files == before, "untouched partition pk=99 was rewritten")
   }
 
   test("checkpoint restart resumes at the failed batch, never reprocessing batch 0") {
     import spark.implicits._
-    import java.nio.file.{Files, Paths}
     import java.nio.file.attribute.FileTime
     // three single-file waves, one per micro-batch; run 1 commits
     // batch 0 then crashes at batch 1 (injected); run 2 restarts from
@@ -202,7 +215,7 @@ class StreamingSpec extends SparkFunSuite {
     // resumed run's COMPLETED batch ids start at the failed batch —
     // id 0 reappearing would mean offsets were reprocessed (recompute,
     // not recovery), even though the idempotent merge would hide it.
-    val root = Files.createTempDirectory("restart_pin")
+    val root = tempDir("restart_pin")
     def wave(rows: Seq[(Long, Double, Long)], name: String, mtime: Long): Unit = {
       val tmp = root.resolve(s"stage_$name")
       rows.toDF("event_id", "value", "pk").coalesce(1)
@@ -216,51 +229,53 @@ class StreamingSpec extends SparkFunSuite {
       Files.setLastModifiedTime(root.resolve("drop").resolve(name),
         FileTime.fromMillis(mtime))
     }
-    try {
-      val t0 = System.currentTimeMillis()
-      wave(Seq((1L, 1.0, 1L), (2L, 2.0, 0L)), "w1.parquet", t0 - 120000)
-      wave(Seq((2L, 102.0, 0L), (3L, 3.0, 1L)), "w2.parquet", t0 - 60000)
-      wave(Seq((4L, 4.0, 0L)), "w3.parquet", t0)
-      val drop = root.resolve("drop").toString
-      val schema = spark.read.parquet(drop).schema
-      def stream(target: String, ckpt: String, failAt: Long): Unit =
-        EventStreams.upsertStream(spark,
-          spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-            .parquet(drop),
-          target, Seq("event_id"), Seq("pk"), ckpt, failAt)
-      val target = root.resolve("t").toString
-      val ckpt = root.resolve("ckpt").toString
-      intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
-        stream(target, ckpt, failAt = 1L)
-      }
-      // run 1 completed exactly batch 0 before dying
-      assert(EventStreams.lastUpsertBatches == Vector(0L),
-        s"crashed run completed ${EventStreams.lastUpsertBatches}")
-      // batch 0's merge really committed pre-crash
-      assert(spark.read.parquet(target).count() == 2)
-      stream(target, ckpt, failAt = -1L)
-      val resumed = EventStreams.lastUpsertBatches
-      assert(!resumed.contains(0L),
-        s"restart reprocessed batch 0: $resumed")
-      assert(resumed.headOption.contains(1L),
-        s"restart did not resume at the failed batch: $resumed")
-      assert(resumed.contains(2L), s"restart never reached batch 2: $resumed")
-      val got = spark.read.parquet(target)
-        .select($"event_id", $"value").as[(Long, Double)].collect().toSet
-      // one-shot control: fresh checkpoint + fresh target, no crash
-      val target2 = root.resolve("t2").toString
-      stream(target2, root.resolve("ckpt2").toString, failAt = -1L)
-      val oneShot = spark.read.parquet(target2)
-        .select($"event_id", $"value").as[(Long, Double)].collect().toSet
-      assert(got == oneShot)
-      assert(got == Set((1L, 1.0), (2L, 102.0), (3L, 3.0), (4L, 4.0)))
-    } finally org.apache.commons.io.FileUtils.deleteQuietly(root.toFile)
+    val t0 = System.currentTimeMillis()
+    wave(Seq((1L, 1.0, 1L), (2L, 2.0, 0L)), "w1.parquet", t0 - 120000)
+    wave(Seq((2L, 102.0, 0L), (3L, 3.0, 1L)), "w2.parquet", t0 - 60000)
+    wave(Seq((4L, 4.0, 0L)), "w3.parquet", t0)
+    val drop = root.resolve("drop").toString
+    val schema = spark.read.parquet(drop).schema
+    def stream(target: String, ckpt: String, failAt: Long): Unit =
+      EventStreams.upsertStream(spark,
+        spark.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+          .parquet(drop),
+        target, Seq("event_id"), Seq("pk"), ckpt, failAt)
+    def table(target: String) = SnapshotMerge.read(spark, target, schema)
+    val target = root.resolve("t").toString
+    val ckpt = root.resolve("ckpt").toString
+    intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+      stream(target, ckpt, failAt = 1L)
+    }
+    // run 1 completed exactly batch 0 before dying
+    assert(EventStreams.lastUpsertBatches == Vector(0L),
+      s"crashed run completed ${EventStreams.lastUpsertBatches}")
+    // batch 0's merge really committed pre-crash, as exactly one version
+    assert(table(target).count() == 2)
+    val store = new SnapshotStore(spark, new org.apache.hadoop.fs.Path(target))
+    assert(store.currentVersion().contains(1L),
+      s"crashed run committed version(s) up to ${store.currentVersion()}")
+    stream(target, ckpt, failAt = -1L)
+    val resumed = EventStreams.lastUpsertBatches
+    assert(!resumed.contains(0L),
+      s"restart reprocessed batch 0: $resumed")
+    assert(resumed.headOption.contains(1L),
+      s"restart did not resume at the failed batch: $resumed")
+    assert(resumed.contains(2L), s"restart never reached batch 2: $resumed")
+    val got = table(target)
+      .select($"event_id", $"value").as[(Long, Double)].collect().toSet
+    // one-shot control: fresh checkpoint + fresh target, no crash
+    val target2 = root.resolve("t2").toString
+    stream(target2, root.resolve("ckpt2").toString, failAt = -1L)
+    val oneShot = table(target2)
+      .select($"event_id", $"value").as[(Long, Double)].collect().toSet
+    assert(got == oneShot)
+    assert(got == Set((1L, 1.0), (2L, 102.0), (3L, 3.0), (4L, 4.0)))
   }
 
   test("streaming dedup within watermark == batch distinct on event_id") {
     // stage the same events file TWICE: the stream sees every event
     // duplicated; dropDuplicatesWithinWatermark must emit each once
-    val dir = java.nio.file.Files.createTempDirectory("events_dup")
+    val dir = tempDir("events_dup")
     java.nio.file.Files.copy(
       java.nio.file.Paths.get(s"$sfDir/events.parquet"),
       dir.resolve("a.parquet"))
@@ -281,7 +296,7 @@ class StreamingSpec extends SparkFunSuite {
   test("cdc stream folds change files into the snapshot table, deletes included") {
     import spark.implicits._
     import org.apache.spark.sql.types._
-    val root = java.nio.file.Files.createTempDirectory("cdc_stream")
+    val root = tempDir("cdc_stream")
     val drop = root.resolve("changes"); java.nio.file.Files.createDirectories(drop)
     val target = root.resolve("table").toString
     val ckpt = root.resolve("ckpt").toString
@@ -424,8 +439,8 @@ class StreamingSpec extends SparkFunSuite {
     //       (T+1h5m), so B must remain withheld — pinning that the
     //       fix did not weaken watermark gating.
     val base = 1700000000000000L // micros
-    val drop = Files.createTempDirectory("sess_active_waves")
-    val stage = Files.createTempDirectory("sess_active_stage")
+    val drop = tempDir("sess_active_waves")
+    val stage = tempDir("sess_active_stage")
     def wave(rows: Seq[(Long, Long, Long, Double)], name: String, mtime: Long): Unit = {
       import spark.implicits._
       val df = rows.toDF("user_id", "us", "event_id", "value")
@@ -446,23 +461,18 @@ class StreamingSpec extends SparkFunSuite {
       "w1", t0 - 120000)
     wave(Seq((1L, base + 2L * h, 3L, 1.0)), "w2", t0 - 60000)
     wave(Seq((1L, base + 2L * h + 300000000L, 4L, 2.0)), "w3", t0)
-    try {
-      val got = EventStreams.drainToMemory(spark,
-        EventStreams.userSessionsTws(spark,
-          EventStreams.readEventsPaced(spark, drop.toString, Some(1)))
-          .toDF("user_id", "start_us", "n_events", "cents"),
-        "sess_active_out", OutputMode.Append(),
-        Map("spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")))
-        .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
-          r.getLong(3))).toSet
-      assert(got == Set((1L, base, 2L, 1550L)),
-        s"closed session withheld or wrong for a continuously-active key: $got")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
-    }
+    val got = EventStreams.drainToMemory(spark,
+      EventStreams.userSessionsTws(spark,
+        EventStreams.readEventsPaced(spark, drop.toString, Some(1)))
+        .toDF("user_id", "start_us", "n_events", "cents"),
+      "sess_active_out", OutputMode.Append(),
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2),
+        r.getLong(3))).toSet
+    assert(got == Set((1L, base, 2L, 1550L)),
+      s"closed session withheld or wrong for a continuously-active key: $got")
   }
 
   test("transformWithState state AND timers survive a checkpoint restart") {
@@ -482,9 +492,9 @@ class StreamingSpec extends SparkFunSuite {
     // every piece of run-1 state survived the restart.
     val base = 1700000000000000L // micros
     val h = 3600L * 1000000L
-    val drop = Files.createTempDirectory("sess_restart_waves")
-    val stage = Files.createTempDirectory("sess_restart_stage")
-    val cp = Files.createTempDirectory("sess_restart_cp")
+    val drop = tempDir("sess_restart_waves")
+    val stage = tempDir("sess_restart_stage")
+    val cp = tempDir("sess_restart_cp")
     def wave(rows: Seq[(Long, Long, Long, Double)], name: String, mtime: Long): Unit = {
       import spark.implicits._
       val df = rows.toDF("user_id", "us", "event_id", "value")
@@ -504,7 +514,7 @@ class StreamingSpec extends SparkFunSuite {
     // the parquet sink's manifest commits make run 2 a true RESTART of
     // run 1's query. Scoped confs bind at start() (the stream clones
     // the session), restored right after, as drainToMemory does.
-    val outDir = Files.createTempDirectory("sess_restart_out").toString + "/t"
+    val outDir = tmp("sess_restart_out")
     def drain(): Set[(Long, Long, Long, Long)] = {
       val scoped = Map(
         "spark.sql.shuffle.partitions" -> "8",
@@ -538,27 +548,19 @@ class StreamingSpec extends SparkFunSuite {
       }
     }
     val t0 = System.currentTimeMillis()
-    try {
-      wave(Seq((1L, base, 1L, 10.0), (1L, base + 60000000L, 2L, 5.5)),
-        "w1", t0 - 120000)
-      wave(Seq((1L, base + 2L * h, 3L, 1.0)), "w2", t0 - 60000)
-      val run1 = drain()
-      assert(run1.isEmpty,
-        s"run 1 must withhold everything (wm below every expiry at " +
-          s"every data batch): $run1")
-      // w3 extends B from the RESTORED ValueState — if cur had been
-      // lost, w3 would open a fresh session and A's timer would be gone
-      wave(Seq((1L, base + 2L * h + 300000000L, 4L, 2.0)), "w3", t0)
-      val run2 = drain()
-      assert(run2 == Set((1L, base, 2L, 1550L)),
-        s"restart lost state or timers (expected session A only): $run2")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(cp.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(
-        Paths.get(outDir).getParent.toFile)
-    }
+    wave(Seq((1L, base, 1L, 10.0), (1L, base + 60000000L, 2L, 5.5)),
+      "w1", t0 - 120000)
+    wave(Seq((1L, base + 2L * h, 3L, 1.0)), "w2", t0 - 60000)
+    val run1 = drain()
+    assert(run1.isEmpty,
+      s"run 1 must withhold everything (wm below every expiry at " +
+        s"every data batch): $run1")
+    // w3 extends B from the RESTORED ValueState — if cur had been
+    // lost, w3 would open a fresh session and A's timer would be gone
+    wave(Seq((1L, base + 2L * h + 300000000L, 4L, 2.0)), "w3", t0)
+    val run2 = drain()
+    assert(run2 == Set((1L, base, 2L, 1550L)),
+      s"restart lost state or timers (expected session A only): $run2")
   }
 
   test("a FAILED drain still drops its memory-sink view and surfaces the error") {
@@ -613,8 +615,8 @@ class StreamingSpec extends SparkFunSuite {
     // separate batches — the final count is right only if the second
     // batch's point-read saw the first batch's point-write
     val ev = Tables.load(spark, sfDir, "events")
-    val drop = Files.createTempDirectory("tcnt_waves")
-    val stage = Files.createTempDirectory("tcnt_stage")
+    val drop = tempDir("tcnt_waves")
+    val stage = tempDir("tcnt_stage")
     def wave(df: org.apache.spark.sql.DataFrame, name: String, mtime: Long): Unit = {
       df.coalesce(1).write.mode("overwrite").parquet(s"$stage/$name")
       val part = Files.list(Paths.get(s"$stage/$name")).iterator()
@@ -628,32 +630,27 @@ class StreamingSpec extends SparkFunSuite {
     val t0 = System.currentTimeMillis()
     wave(ev.where(col("event_id") % 2 === 0), "w1", t0 - 60000)
     wave(ev.where(col("event_id") % 2 =!= 0), "w2", t0)
-    try {
-      val drained = EventStreams.drainToMemory(spark,
-        EventStreams.userTypeCountsTws(spark,
-          EventStreams.readEventsPaced(spark, drop.toString, Some(1)))
-          .toDF("user_id", "event_type", "n"),
-        "tcnt_waves_out", OutputMode.Update(),
-        Map("spark.sql.streaming.stateStore.providerClass" ->
-          ("org.apache.spark.sql.execution.streaming.state." +
-            "RocksDBStateStoreProvider")))
-      val got = drained.groupBy(col("user_id"), col("event_type"))
-        .agg(max(col("n")).as("n")).collect()
-        .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      val want = ev.groupBy(col("user_id"), col("event_type")).count().collect()
-        .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
-      assert(got == want)
-      // the carry was real: at least one (user, type) got rows in
-      // BOTH waves (guaranteed by the parity split on this corpus),
-      // and its drained emissions show a strictly increasing tally
-      val twoBatch = drained.groupBy(col("user_id"), col("event_type"))
-        .agg(countDistinct(col("n")).as("emissions"))
-        .where(col("emissions") >= 2).count()
-      assert(twoBatch > 0, "no key was updated in two separate micro-batches")
-    } finally {
-      org.apache.commons.io.FileUtils.deleteQuietly(drop.toFile)
-      org.apache.commons.io.FileUtils.deleteQuietly(stage.toFile)
-    }
+    val drained = EventStreams.drainToMemory(spark,
+      EventStreams.userTypeCountsTws(spark,
+        EventStreams.readEventsPaced(spark, drop.toString, Some(1)))
+        .toDF("user_id", "event_type", "n"),
+      "tcnt_waves_out", OutputMode.Update(),
+      Map("spark.sql.streaming.stateStore.providerClass" ->
+        ("org.apache.spark.sql.execution.streaming.state." +
+          "RocksDBStateStoreProvider")))
+    val got = drained.groupBy(col("user_id"), col("event_type"))
+      .agg(max(col("n")).as("n")).collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    val want = ev.groupBy(col("user_id"), col("event_type")).count().collect()
+      .map(r => (r.getLong(0), r.getString(1)) -> r.getLong(2)).toMap
+    assert(got == want)
+    // the carry was real: at least one (user, type) got rows in
+    // BOTH waves (guaranteed by the parity split on this corpus),
+    // and its drained emissions show a strictly increasing tally
+    val twoBatch = drained.groupBy(col("user_id"), col("event_type"))
+      .agg(countDistinct(col("n")).as("emissions"))
+      .where(col("emissions") >= 2).count()
+    assert(twoBatch > 0, "no key was updated in two separate micro-batches")
   }
 
   test("bootstrap EWMA seeds from batch state and streams only the tail") {

@@ -1,8 +1,7 @@
 package graft
 
-import java.nio.file.{Files, Path => JPath}
+import java.nio.file.Files
 
-import org.apache.commons.io.FileUtils
 import org.apache.spark.JobCounter
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.types.{BinaryType, StringType}
@@ -12,11 +11,6 @@ import org.apache.spark.sql.types.{BinaryType, StringType}
   * file or a changed parquet conf is seen by the very next load.
   */
 class TablesSpec extends SparkFunSuite {
-
-  private def withTempDir[T](body: String => T): T = {
-    val dir: JPath = Files.createTempDirectory("tables_spec")
-    try body(dir.toString) finally FileUtils.deleteQuietly(dir.toFile)
-  }
 
   private def sortedRows(df: DataFrame): Seq[String] =
     df.collect().map(_.toString).toSeq.sorted
@@ -43,7 +37,8 @@ class TablesSpec extends SparkFunSuite {
   }
 
   test("a second load of the same table runs no Spark job") {
-    withTempDir { dir =>
+    Scratch.dir("tables_spec") { d =>
+      val dir = d.toString
       Files.copy(java.nio.file.Paths.get(s"$sfDir/orders.parquet"),
         java.nio.file.Paths.get(s"$dir/orders.parquet"))
       val (_, first) = JobCounter.jobsDuring(spark.sparkContext)(
@@ -69,7 +64,8 @@ class TablesSpec extends SparkFunSuite {
 
   test("rewriting a table at the same path shows its new column on the next load") {
     import spark.implicits._
-    withTempDir { dir =>
+    Scratch.dir("tables_spec") { d =>
+      val dir = d.toString
       val path = s"$dir/t.parquet"
       Seq((1L, "a"), (2L, "b")).toDF("id", "s").write.parquet(path)
       assert(Tables.load(spark, dir, "t").columns.toSeq == Seq("id", "s"))
@@ -86,7 +82,8 @@ class TablesSpec extends SparkFunSuite {
     import org.apache.parquet.hadoop.example.ExampleParquetWriter
     import org.apache.parquet.schema.MessageTypeParser
     val key = "spark.sql.parquet.binaryAsString"
-    withTempDir { dir =>
+    Scratch.dir("tables_spec") { d =>
+      val dir = d.toString
       // written without Spark's footer schema, which would pin the type
       val schema = MessageTypeParser.parseMessageType("message t { required binary b; }")
       val w = ExampleParquetWriter.builder(

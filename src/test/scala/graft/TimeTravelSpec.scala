@@ -14,9 +14,6 @@ import graft.sinks.{SnapshotMerge, SnapshotStore}
 class TimeTravelSpec extends SparkFunSuite {
   import spark.implicits._
 
-  private def tmp(prefix: String): String =
-    Files.createTempDirectory(prefix).toString + "/t"
-
   private def v1Rows = (0L until 10L).map(i => (i, s"t$i", i % 5)).toDF("id", "v", "pk")
   private def v2Rows = Seq((0L, "U0", 0L), (10L, "N10", 0L)).toDF("id", "v", "pk")
   private def v3Rows = Seq((1L, "U1", 1L), (11L, "N11", 1L)).toDF("id", "v", "pk")

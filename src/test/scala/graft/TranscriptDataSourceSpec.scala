@@ -1,17 +1,25 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.commons.io.FileUtils
 import org.apache.spark.sql.functions._
+import org.scalatest.BeforeAndAfterAll
 import graft.sources.TranscriptJson
 
 /** The DataSource V2 transcript source must agree with the
   * whole-file JSON reader, prune columns into the reader, and feed
   * the fuzzy pipeline unchanged.
   */
-class TranscriptDataSourceSpec extends SparkFunSuite {
+class TranscriptDataSourceSpec extends SparkFunSuite with BeforeAndAfterAll {
+
+  /** Suite fixture, deleted after the suite. */
+  private val dsv2Root = Files.createTempDirectory("dsv2")
+
+  override def afterAll(): Unit =
+    try FileUtils.deleteQuietly(dsv2Root.toFile) finally super.afterAll()
 
   private lazy val dir: String = {
-    val d = Files.createTempDirectory("dsv2").toString
+    val d = dsv2Root.toString
     Files.writeString(Paths.get(s"$d/BVx.json"),
       """[[{"start": 1.0, "text": "第一段"}, {"start": 6.5, "text": "第二段"}],
          [{"start": 0.5, "text": "次页"}]]""")

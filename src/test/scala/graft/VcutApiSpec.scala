@@ -62,7 +62,7 @@ class VcutApiSpec extends SparkFunSuite {
 
   // B5: transcripts for the two transcribed archives
   private def writeTranscripts(): String = {
-    val dir = Files.createTempDirectory("vcut_transcripts").toString
+    val dir = tempDir("vcut_transcripts").toString
     def esc(s: String) = s.replace("\\", "\\\\").replace("\"", "\\\"")
     val data = Map(
       // BVscan (profile 1): exact 3-line match on page 2; 1-line match
