@@ -102,6 +102,14 @@ object Tables {
     * is the IDENTITY: no exchange is added, so it never pays a
     * corpus-scale shuffle where parallelism already exists.
     *
+    * The case it misses: it sees only the scan. When the scan is
+    * already parallel it returns the frame unchanged, yet the next
+    * exchange can still be AQE-coalesced onto ONE task, and the heavy
+    * work after that exchange runs there (measured on the vcut cron
+    * drain: a 10-split stream batch, then the fuzzy scan's grouping
+    * exchange coalesced to one partition, one 1.2–1.3 s task per
+    * tick before that scan became a single per-recording kernel).
+    *
     * Precondition: `df` must be a scan-stage frame (no exchange
     * beneath). The partition probe reads the physical RDD's partition
     * count, which is static for a scan but would force AQE stage

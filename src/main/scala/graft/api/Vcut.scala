@@ -604,18 +604,21 @@ object Vcut {
   }
 
   /** `vcut search` (cmdline.py:477-505): where is this text sung in
-    * this recording? One (bvid, probe) point lookup.
+    * this recording? One (bvid, probe) point lookup; the probe is one
+    * local row, so no job runs to produce it.
     */
   def search(segments: DataFrame, bvid: String, text: String,
-      threshold: Double = 0.0): DataFrame =
+      threshold: Double = 0.0): DataFrame = {
+    val probe = segments.sparkSession.createDataFrame(
+      java.util.List.of(org.apache.spark.sql.Row(0L, text)),
+      org.apache.spark.sql.types.StructType.fromDDL("song_id BIGINT NOT NULL, lyrics STRING"))
     FuzzyOccurrence.scan(
       segments.where(col("bvid") === bvid)
         .withColumnRenamed("bvid", "recording_id"),
-      segments.sparkSession.range(1)
-        .select(col("id").as("song_id"), lit(text).as("lyrics")),
-      threshold)
+      probe, threshold)
       .select(col("recording_id").as("bvid"), col("page"), col("start"),
         col("score"), col("matched_text"))
+  }
 
   // ---- object-store layout (F6; §1.4) -----------------------------------
 

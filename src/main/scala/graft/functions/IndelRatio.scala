@@ -5,6 +5,7 @@ import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.types.{DataType, DoubleType, StringType}
+import org.apache.spark.unsafe.Platform
 import org.apache.spark.unsafe.types.UTF8String
 
 /** Normalized indel similarity × 100 — the score the reference calls
@@ -18,15 +19,15 @@ import org.apache.spark.unsafe.types.UTF8String
   * Unicode-codepoint based (the content is CJK; byte- or UTF-16-unit
   * distances would mis-score), two empty strings score 100.
   *
-  * Implemented as a native Catalyst expression with codegen so the
-  * scoring loop of the fuzzy pipeline stays inside whole-stage codegen
-  * (no UDF serialization, no Row boxing) — this is the hot inner loop
-  * of the flagship query and the main CPU cost at scale.
+  * `indel_ratio` is a native Catalyst expression with codegen (no UDF
+  * serialization, no Row boxing). It, [[FuzzUtils.ratio]] and the
+  * fuzzy scan kernel ([[FuzzyScanKernel]]) share one LCS core,
+  * [[IndelPattern]]; [[FuzzUtils.indelDistanceDP]] is its test oracle.
   */
 object FuzzUtils {
 
-  /** Reference two-row LCS DP — kept as the slow path / test oracle
-    * for the bit-parallel implementation below.
+  /** Reference two-row LCS DP — kept as the test oracle for the
+    * bit-parallel [[IndelPattern]].
     */
   def indelDistanceDP(sa: String, sb: String): Int = {
     val a0 = sa.codePoints().toArray
@@ -64,95 +65,220 @@ object FuzzUtils {
     m + n - 2 * prev(yLen)
   }
 
-  /** Bit-parallel LCS length (Hyyrö 2004 / Crochemore–Iliopoulos–
-    * Pinzón): the pattern's positions are bits; per text symbol the
-    * column vector updates as `V' = (V + U) | (V − U)` with
-    * `U = V & M[symbol]`; LCS = zero bits of V among the pattern
-    * positions. Multi-word with explicit carry/borrow propagation so
-    * patterns longer than 64 codepoints work. O(n · ⌈m/64⌉) vs the
-    * DP's O(n · m).
-    *
-    * Pattern match-masks are cached per thread keyed by the pattern
-    * string: in the fuzzy pipeline the same song lyrics score against
-    * many windows, so the preprocessing amortizes away.
-    */
-  private final val maskCache =
-    ThreadLocal.withInitial[java.util.HashMap[String, (Int, java.util.HashMap[Integer, Array[Long]])]](
-      () => new java.util.HashMap)
-
-  private def patternMasks(p: String): (Int, java.util.HashMap[Integer, Array[Long]]) = {
-    val cache = maskCache.get()
-    var entry = cache.get(p)
-    if (entry == null) {
-      if (cache.size() > 512) cache.clear()
-      val cps = p.codePoints().toArray
-      val words = (cps.length + 63) >>> 6
-      val masks = new java.util.HashMap[Integer, Array[Long]]
-      var i = 0
-      while (i < cps.length) {
-        var m = masks.get(cps(i))
-        if (m == null) { m = new Array[Long](words); masks.put(cps(i), m) }
-        m(i >>> 6) |= 1L << (i & 63)
-        i += 1
-      }
-      entry = (cps.length, masks)
-      cache.put(p, entry)
-    }
-    entry
-  }
-
-  /** Indel distance via bit-parallel LCS; `sa` is treated as the
-    * (cached) pattern.
-    */
+  /** Indel distance via the bit-parallel core, `sa` as the pattern. */
   def indelDistance(sa: String, sb: String): Int = {
-    val (m, masks) = patternMasks(sa)
-    val bcp = sb.codePoints().toArray
-    val n = bcp.length
-    if (m == 0) return n
-    if (n == 0) return m
-    val words = (m + 63) >>> 6
-    val v = new Array[Long](words)
-    java.util.Arrays.fill(v, -1L)
-    var j = 0
-    while (j < n) {
-      val mj = masks.get(bcp(j))
-      if (mj != null) {
-        var carry = 0L  // for V + U
-        var borrow = 0L // for V - U
-        var w = 0
-        while (w < words) {
-          val x = v(w)
-          val u = x & mj(w)
-          val sum = x + u + carry
-          carry = (((x & u) | ((x | u) & ~sum)) >>> 63)
-          val diff = x - u - borrow
-          borrow = (((~x & u) | ((~x | u) & diff)) >>> 63)
-          v(w) = sum | diff
-          w += 1
-        }
-      }
-      j += 1
-    }
-    // LCS = zero bits of V among the m pattern positions
-    var lcs = 0
-    var w = 0
-    while (w < words) {
-      val bitsInWord = math.min(64, m - (w << 6))
-      val mask = if (bitsInWord == 64) -1L else (1L << bitsInWord) - 1
-      lcs += bitsInWord - java.lang.Long.bitCount(v(w) & mask)
-      w += 1
-    }
-    m + n - 2 * lcs
+    val a = Codepoints.of(sa)
+    val b = Codepoints.of(sb)
+    a.length + b.length - 2 * lcs(a, a.length, b, b.length)
   }
 
   /** rapidfuzz-compatible `fuzz.ratio` in [0, 100]. */
   def ratio(a: UTF8String, b: UTF8String): Double = {
-    val sa = a.toString
-    val sb = b.toString
-    val la = sa.codePointCount(0, sa.length)
-    val lb = sb.codePointCount(0, sb.length)
+    val ca = new Array[Int](a.numBytes())
+    val la = Codepoints.decode(a, ca, 0)
+    val cb = new Array[Int](b.numBytes())
+    val lb = Codepoints.decode(b, cb, 0)
     if (la + lb == 0) return 100.0
-    100.0 * (1.0 - indelDistance(sa, sb).toDouble / (la + lb))
+    score(la, lb, lcs(ca, la, cb, lb))
+  }
+
+  /** The ratio from the two lengths and their LCS: every scorer of
+    * `fuzz.ratio` computes this one double expression.
+    */
+  def score(la: Int, lb: Int, lcs: Int): Double =
+    100.0 * (1.0 - (la + lb - 2 * lcs).toDouble / (la + lb))
+
+  /** LCS of `a[0, la)` and `b[0, lb)`; overwrites `b` with its mask rows. */
+  private def lcs(a: Array[Int], la: Int, b: Array[Int], lb: Int): Int = {
+    val p = IndelPattern(a, la)
+    p.rows(b, 0, lb, b, 0)
+    p.lcs(b, 0, lb)
+  }
+}
+
+/** Unicode codepoints without boxing: the indel kernels count and
+  * compare codepoints, never UTF-16 units or bytes.
+  */
+object Codepoints {
+
+  /** Decodes `s` into `dst` from `at` and returns the new end. `dst`
+    * needs `s.numBytes()` free slots (a codepoint takes at least one
+    * byte). Malformed UTF-8 decodes the way `s.toString` does.
+    */
+  def decode(s: UTF8String, dst: Array[Int], at: Int): Int = {
+    val end = s.getBaseObject match {
+      case bytes: Array[Byte] =>
+        wellFormed(bytes, (s.getBaseOffset - Platform.BYTE_ARRAY_OFFSET).toInt,
+          s.numBytes(), dst, at)
+      case _ => wellFormed(s.getBytes, 0, s.numBytes(), dst, at)
+    }
+    if (end >= 0) end
+    else {
+      // malformed: let the JDK decoder place its replacement chars
+      val cps = of(s.toString)
+      System.arraycopy(cps, 0, dst, at, cps.length)
+      at + cps.length
+    }
+  }
+
+  /** Decodes well-formed UTF-8 `b[off, off + nb)`; -1 at the first
+    * ill-formed sequence (bad lead or continuation byte, truncation,
+    * overlong form, surrogate, above U+10FFFF).
+    */
+  private def wellFormed(b: Array[Byte], off: Int, nb: Int, dst: Array[Int], at: Int): Int = {
+    val end = off + nb
+    var i = off
+    var j = at
+    while (i < end) {
+      val b0 = b(i) & 0xff
+      var cp = -1
+      if (b0 < 0x80) { cp = b0; i += 1 }
+      else if (b0 >= 0xc2 && b0 < 0xe0 && i + 1 < end) {
+        val b1 = b(i + 1)
+        if ((b1 & 0xc0) == 0x80) { cp = ((b0 & 0x1f) << 6) | (b1 & 0x3f); i += 2 }
+      } else if (b0 >= 0xe0 && b0 < 0xf0 && i + 2 < end) {
+        val b1 = b(i + 1)
+        val b2 = b(i + 2)
+        if ((b1 & 0xc0) == 0x80 && (b2 & 0xc0) == 0x80) {
+          cp = ((b0 & 0x0f) << 12) | ((b1 & 0x3f) << 6) | (b2 & 0x3f)
+          if (cp < 0x800 || (cp >= 0xd800 && cp < 0xe000)) cp = -1 else i += 3
+        }
+      } else if (b0 >= 0xf0 && b0 < 0xf5 && i + 3 < end) {
+        val b1 = b(i + 1)
+        val b2 = b(i + 2)
+        val b3 = b(i + 3)
+        if ((b1 & 0xc0) == 0x80 && (b2 & 0xc0) == 0x80 && (b3 & 0xc0) == 0x80) {
+          cp = ((b0 & 0x07) << 18) | ((b1 & 0x3f) << 12) | ((b2 & 0x3f) << 6) | (b3 & 0x3f)
+          if (cp < 0x10000 || cp > 0x10ffff) cp = -1 else i += 4
+        }
+      }
+      if (cp < 0) return -1
+      dst(j) = cp
+      j += 1
+    }
+    j
+  }
+
+  def of(s: String): Array[Int] = {
+    val out = new Array[Int](s.codePointCount(0, s.length))
+    var i = 0
+    var j = 0
+    while (i < s.length) {
+      val cp = s.codePointAt(i)
+      out(j) = cp
+      j += 1
+      i += Character.charCount(cp)
+    }
+    out
+  }
+}
+
+/** Bit-parallel LCS against one fixed pattern (Hyyrö 2004 /
+  * Crochemore–Iliopoulos–Pinzón): the pattern's positions are bits;
+  * per text symbol the column vector updates as `V' = (V + U) | (V − U)`
+  * with `U = V & M[symbol]`; LCS = zero bits of V among the pattern
+  * positions. Multi-word with explicit carry/borrow propagation so
+  * patterns longer than 64 codepoints work. O(n · ⌈m/64⌉) vs the DP's
+  * O(n · m).
+  *
+  * The match masks sit in one `Long` array, one row of ⌈m/64⌉ words
+  * per distinct pattern codepoint, found through an open-addressing
+  * `Int` table: no boxing and no cache. A caller maps a text to rows
+  * once ([[rows]]) and runs [[lcs]] over any slice of them, so many
+  * overlapping windows of one text pay one lookup per codepoint.
+  * Not thread-safe (multi-word scratch state); build one per use.
+  */
+final class IndelPattern private (val length: Int) {
+  private val words = (length + 63) >>> 6
+  // table size: the power of two >= 2 · length (load factor <= 1/2)
+  private val bits = 32 - Integer.numberOfLeadingZeros(math.max(1, 2 * length - 1))
+  private val keys = new Array[Int](1 << bits)
+  private val rowPlus1 = new Array[Int](1 << bits) // 0 = empty slot
+  private val masks = new Array[Long](length * words)
+  private val v = if (words > 1) new Array[Long](words) else null
+
+  /** The mask row of codepoint `cp`, or -1 when the pattern lacks it. */
+  def row(cp: Int): Int = {
+    var h = slot(cp)
+    while (rowPlus1(h) != 0 && keys(h) != cp) h = (h + 1) & ((1 << bits) - 1)
+    rowPlus1(h) - 1
+  }
+
+  private def slot(cp: Int): Int = (cp * 0x9e3779b9) >>> (32 - bits)
+
+  private def add(cp: Int, pos: Int, nextRow: Int): Int = {
+    var h = slot(cp)
+    while (rowPlus1(h) != 0 && keys(h) != cp) h = (h + 1) & ((1 << bits) - 1)
+    val fresh = rowPlus1(h) == 0
+    if (fresh) { keys(h) = cp; rowPlus1(h) = nextRow + 1 }
+    masks((rowPlus1(h) - 1) * words + (pos >>> 6)) |= 1L << (pos & 63)
+    if (fresh) nextRow + 1 else nextRow
+  }
+
+  /** `text[from, until)` as mask rows into `out[at, …)`. */
+  def rows(text: Array[Int], from: Int, until: Int, out: Array[Int], at: Int): Unit = {
+    var i = from
+    while (i < until) { out(at + i - from) = row(text(i)); i += 1 }
+  }
+
+  /** LCS length of the pattern and the text whose rows are
+    * `rows[from, until)`.
+    */
+  def lcs(rows: Array[Int], from: Int, until: Int): Int =
+    if (words == 0) 0
+    else if (words == 1) {
+      var x = -1L
+      var i = from
+      while (i < until) {
+        val r = rows(i)
+        if (r >= 0) { val u = x & masks(r); x = (x + u) | (x - u) }
+        i += 1
+      }
+      val live = if (length == 64) -1L else (1L << length) - 1
+      java.lang.Long.bitCount(~x & live)
+    } else {
+      java.util.Arrays.fill(v, -1L)
+      var i = from
+      while (i < until) {
+        val r = rows(i)
+        if (r >= 0) {
+          val base = r * words
+          var carry = 0L  // for V + U
+          var borrow = 0L // for V - U
+          var w = 0
+          while (w < words) {
+            val x = v(w)
+            val u = x & masks(base + w)
+            val sum = x + u + carry
+            carry = ((x & u) | ((x | u) & ~sum)) >>> 63
+            val diff = x - u - borrow
+            borrow = ((~x & u) | ((~x | u) & diff)) >>> 63
+            v(w) = sum | diff
+            w += 1
+          }
+        }
+        i += 1
+      }
+      var zeros = 0
+      var w = 0
+      while (w < words) {
+        val inWord = math.min(64, length - (w << 6))
+        val live = if (inWord == 64) -1L else (1L << inWord) - 1
+        zeros += java.lang.Long.bitCount(~v(w) & live)
+        w += 1
+      }
+      zeros
+    }
+}
+
+object IndelPattern {
+  /** The pattern of the codepoints `cps[0, length)`. */
+  def apply(cps: Array[Int], length: Int): IndelPattern = {
+    val p = new IndelPattern(length)
+    var next = 0
+    var i = 0
+    while (i < length) { next = p.add(cps(i), i, next); i += 1 }
+    p
   }
 }
 

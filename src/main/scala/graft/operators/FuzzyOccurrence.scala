@@ -1,9 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Tables}
-import graft.functions.IndelRatio.indel_ratio
+import graft.functions.FuzzyScan
+import graft.functions.FuzzyScan.fuzzy_scan
 
 /** The flagship operator: sliding-window fuzzy lyric search
   * (reference `src/firefly_vcut/fuzz.py:3-43`, driven by
@@ -21,25 +22,23 @@ import graft.functions.IndelRatio.indel_ratio
   * results under the threshold (default 40).
   *
   * Spark-first design (not a loop port):
-  *  1. one shuffle groups segments into per-(recording, page) sorted
-  *     arrays — O(segments), map-side combinable;
-  *  2. the distinct window sizes N (tiny: one per distinct lyric line
-  *     count) are broadcast; `sequence` + `slice` + `array_join`
-  *     generate each page's windows inside whole-stage codegen —
-  *     O(distinct_N × segments) window rows, NOT O(songs × segments)
-  *     like the reference (`fuzz.py:23-41` recomputes windows per
-  *     song);
-  *  3. songs broadcast-join on N, scoring runs in the codegen'd
-  *     [[graft.functions.IndelRatio]] expression;
-  *  4. arg-max is a hash aggregate over `max(struct(score, -page,
-  *     -w0, payload…))` — lexicographic struct max reproduces the
-  *     reference tie-break with partial (map-side) aggregation and no
-  *     sort, which is the 100 TB-safe shape (no per-key row explosion
-  *     survives the map side).
+  *  1. one shuffle groups the flat segments into one sorted array per
+  *     recording — O(segments), map-side combinable;
+  *  2. the song catalog becomes ONE row, `collect_list(struct(song_id,
+  *     lyrics))`, cross-joined to every recording by broadcast. The
+  *     catalog is the bounded song list (`modal/occurrence.py:90-100`:
+  *     a fixed catalog against unbounded transcripts); it is read in
+  *     one task and broadcast whole, never shuffled;
+  *  3. the codegen'd [[graft.functions.FuzzyScan]] expression scores
+  *     every window of every page against every song inside one call
+  *     per recording and keeps each song's first-strictly-best window
+  *     over the threshold; `inline` expands those few rows. No row per
+  *     (window, song) pair exists anywhere: each segment is decoded
+  *     once, each song's pattern masks are built once per recording.
   *
-  * At cluster scale the only wide exchanges are the page grouping (1)
-  * and the final arg-max (4); both key on high-cardinality ids, and
-  * the song side stays broadcast.
+  * At cluster scale the only wide exchange is the grouping (1), keyed
+  * on the high-cardinality recording id, and the song side stays
+  * broadcast.
   */
 object FuzzyOccurrence extends QueryModule {
 
@@ -49,87 +48,35 @@ object FuzzyOccurrence extends QueryModule {
     *                 `(recording_id, page, seg_idx, start, text)`
     *                 (0-based page / seg_idx, see
     *                 [[graft.sources.TranscriptJson.readSegments]])
-    * @param songs    `(song_id, lyrics)` — small side, broadcast
+    * @param songs    `(song_id, lyrics)` — the bounded song catalog,
+    *                 collected into one broadcast row
     * @param threshold minimum score kept (reference default 40)
     * @return one row per (song_id, recording_id) that clears the
     *         threshold: `(song_id, recording_id, page (1-based),
     *         start, score, matched_text)`
     */
-  def scan(segments: DataFrame, songs: DataFrame, threshold: Double): DataFrame = {
-    // (3) score against all songs with this window size.
-    val scored = windowed(segments, songs)
-      .withColumn("score", indel_ratio(col("lyrics"), col("win_text")))
+  def scan(segments: DataFrame, songs: DataFrame, threshold: Double): DataFrame =
+    fused(segments, songs, threshold, FuzzyScan.Ratio)
 
-    // (4) first-strictly-best arg-max per (song, recording):
-    // lexicographic struct max on (score, -page, -w0) == reference
-    // iteration order with `>` updates; (page, w0) is unique per key
-    // so payload fields never participate in the comparison.
-    scored
-      .groupBy(col("song_id"), col("recording_id"))
-      .agg(max(struct(col("score"), (-col("page")).as("neg_page"),
-        (-col("w0")).as("neg_w0"), col("start"), col("win_text"))).as("best"))
-      .where(col("best.score") >= threshold)
-      .select(
-        col("song_id"), col("recording_id"),
-        (-col("best.neg_page") + 1).cast("int").as("page"),
-        col("best.start").as("start"),
-        col("best.score").as("score"),
-        col("best.win_text").as("matched_text"))
-  }
-
-  /** Stages (1)+(2)+(song join) of [[scan]], shared with the
-    * `fuzzy_occurrence_q` oracle twin so the window algebra the twin
-    * hash-checks is THE flagship's, not a restatement: per-page sorted
-    * segment arrays, `sequence`+`slice`+`array_join` window
-    * generation (whole-page fallback for short pages), broadcast song
-    * join on the window size. Output: one row per (window × song of
-    * that size) — `(recording_id, page, n, w0, win_text, start,
-    * song_id, lyrics)`.
+  /** [[scan]] with a chosen scorer, shared with the `fuzzy_occurrence_q`
+    * oracle twin so the window algebra the twin hash-checks is THE
+    * flagship's kernel, not a restatement.
     */
-  private[graft] def windowed(segments: DataFrame, songs: DataFrame): DataFrame = {
-    // spread (opt guide §2.5): the window explode × song join × scoring
-    // kernel is the pipeline's dominant compute, and it runs in the
-    // stage fed by the tiny per-page exchange — which AQE coalesces to
-    // ONE partition at fixture scale (measured: 3.2 s of
-    // fuzzy_occurrence_q's 4.1 s in that single-task stage). Hashing
-    // the segments onto defaultParallelism partitions BY the page key
-    // is reused by the pages groupBy (same clustering, no second
-    // exchange) and, being user-specified, is exempt from AQE
-    // coalescing — so the window stage keeps its parallelism. At scale
-    // the segments scan is already parallel and this is the identity.
-    val segs = Tables.spread(segments, col("recording_id"), col("page"))
-    val songsN = songs
-      .where(col("lyrics").isNotNull && col("lyrics") =!= "")
-      .withColumn("n", greatest(lit(1), size(split(col("lyrics"), "\n"))))
-
-    // Distinct window sizes; bounded by distinct lyric line counts.
-    val ns = songsN.select(col("n")).distinct()
-
-    // (1) one page = one row: sorted texts + starts arrays.
-    val pages = segs
-      .groupBy(col("recording_id"), col("page"))
-      .agg(sort_array(collect_list(struct(col("seg_idx"), col("start"), col("text"))))
-        .as("segs"))
-      .select(
-        col("recording_id"), col("page"),
-        expr("transform(segs, s -> s.text)").as("texts"),
-        expr("transform(segs, s -> s.start)").as("starts"),
-        size(col("segs")).as("page_len"))
-
-    // (2) windows per (page × distinct N). A page shorter than N
-    // yields exactly one whole-page window (slice caps at the end).
-    val windows = pages
-      .join(broadcast(ns))
-      .withColumn("w0",
-        explode(when(col("page_len") >= col("n"),
-          sequence(lit(0), col("page_len") - col("n")))
-          .otherwise(array(lit(0)))))
-      .select(
-        col("recording_id"), col("page"), col("n"), col("w0"),
-        array_join(slice(col("texts"), col("w0") + 1, col("n")), "\n").as("win_text"),
-        element_at(col("starts"), col("w0") + 1).as("start"))
-
-    windows.join(broadcast(songsN), "n")
+  private def fused(segments: DataFrame, songs: DataFrame, threshold: Double,
+      scorer: String): DataFrame = {
+    val recordings = segments
+      .groupBy(col("recording_id"))
+      .agg(sort_array(collect_list(struct(col("page").cast("int").as("page"),
+        col("seg_idx"), col("start"), col("text")))).as("segs"))
+    // coalesce(1): the catalog's global collect runs in one task with
+    // no exchange under the broadcast
+    val catalog = songs.coalesce(1)
+      .agg(collect_list(struct(col("song_id"), col("lyrics"))).as("catalog"))
+    recordings.crossJoin(broadcast(catalog))
+      .select(col("recording_id"),
+        inline(fuzzy_scan(col("segs"), col("catalog"), threshold, scorer)))
+      .select(col("song_id"), col("recording_id"), col("page"), col("start"),
+        col("score"), col("matched_text"))
   }
 
   /** Deterministic "transcript-ification" of the `documents` table so
@@ -171,7 +118,7 @@ object FuzzyOccurrence extends QueryModule {
     */
   def documentProbes(s: SparkSession, dir: String): DataFrame = {
     // probe lengths cycle 2/3/4 lines so the flagship exercises the
-    // multi-window-size path (windows built once per distinct N)
+    // multi-window-size path (one catalog, several window sizes)
     documentSegments(s, dir)
       .where(col("recording_id").isin(0L, 25L, 50L, 75L, 100L, 125L, 150L, 175L))
       .withColumn("probe_len",
@@ -194,23 +141,23 @@ object FuzzyOccurrence extends QueryModule {
     }),
 
     // FULL-ORACLE TWIN of the flagship (r19, VERDICT r18 #5): the
-    // SAME window machinery — [[windowed]] verbatim: per-page sorted
-    // segment arrays, sequence/slice/array_join window generation
-    // with the whole-page fallback, broadcast song join on window
-    // size — and the same first-strictly-best arg-max + post-argmax
-    // threshold, with ONLY the scoring kernel swapped: plain
-    // `levenshtein` (exact integers on both engines) instead of
-    // indel-ratio, which DuckDB cannot compute (the kernel itself is
-    // pinned by FuzzSpec's DP-oracle property tests). The transcript
-    // is additionally PAGED (8 segments per page) so the per-page
-    // window scan, short-last-page fallback, and 1-based page
-    // arithmetic — trivial in the flagship's 1-page fixture — are all
-    // hash-checked. Keep rule in exact integer units:
-    // lev·100 ≤ 55·max(len(lyrics), len(win_text)). The transcript
-    // CORPUS is a deterministic subset (doc_id ≡ 1 (mod 8), plus the
-    // probe docs so exact self-matches exist): levenshtein is an
-    // O(m·n) DP with no bit-parallel kernel on either engine, so the
-    // full corpus would make this row cost 10× the flagship it
+    // SAME kernel — [[fused]] verbatim: per-recording sorted segment
+    // arrays, window slicing with the whole-page fallback, the
+    // first-strictly-best arg-max — with ONLY the scorer swapped:
+    // `-levenshtein` (exact integers on both engines, Spark's own
+    // `UTF8String.levenshteinDistance`) instead of indel-ratio, which
+    // DuckDB cannot compute (the ratio itself is pinned by FuzzSpec's
+    // DP-oracle property tests), and no threshold inside the kernel.
+    // The transcript is additionally PAGED (8 segments per page) so
+    // the per-page window scan, short-last-page fallback, and 1-based
+    // page arithmetic — trivial in the flagship's 1-page fixture — are
+    // all hash-checked. Keep rule in exact integer units, applied to
+    // the kernel's output with the probes joined back for their
+    // length: lev·100 ≤ 55·max(len(lyrics), len(matched_text)). The
+    // transcript CORPUS is a deterministic subset (doc_id ≡ 1 (mod 8),
+    // plus the probe docs so exact self-matches exist): levenshtein is
+    // an O(m·n) DP with no bit-parallel kernel on either engine, so
+    // the full corpus would make this row cost 10× the flagship it
     // verifies — the subset keeps every pipeline stage exercised at
     // flagship-comparable cost on BOTH engines.
     "fuzzy_occurrence_q" -> ((s, dir) => {
@@ -221,20 +168,14 @@ object FuzzyOccurrence extends QueryModule {
           (col("seg_idx") / 8).cast("int").as("page"),
           (col("seg_idx") % 8).cast("int").as("seg_idx"),
           col("start"), col("text"))
-      windowed(paged, documentProbes(s, dir))
-        .withColumn("lev", levenshtein(col("lyrics"), col("win_text")))
-        .groupBy(col("song_id"), col("recording_id"))
-        .agg(max(struct((-col("lev")).as("neg_lev"), (-col("page")).as("neg_page"),
-          (-col("w0")).as("neg_w0"), col("start"), col("win_text"),
-          col("lyrics"))).as("best"))
-        .where((-col("best.neg_lev")) * 100 <=
-          lit(55) * greatest(length(col("best.lyrics")), length(col("best.win_text"))))
-        .select(
-          col("song_id"), col("recording_id"),
-          (-col("best.neg_page") + 1).cast("int").as("page"),
-          col("best.start").as("start"),
-          (-col("best.neg_lev")).cast("long").as("lev"),
-          col("best.win_text").as("matched_text"))
+      val probes = documentProbes(s, dir)
+      fused(paged, probes, Double.NegativeInfinity, FuzzyScan.Levenshtein)
+        .join(probes.select(col("song_id"), col("lyrics")), "song_id")
+        .withColumn("lev", (-col("score")).cast("long"))
+        .where(col("lev") * 100 <=
+          lit(55) * greatest(length(col("lyrics")), length(col("matched_text"))))
+        .select(col("song_id"), col("recording_id"), col("page"), col("start"),
+          col("lev"), col("matched_text"))
     }),
 
     // Oracle-checkable fuzzy scalar: plain Levenshtein (built-in on

@@ -63,29 +63,29 @@ object OccurrenceStream {
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          import graft.sinks.{SnapshotMerge, SnapshotStore}
-          // The fuzzy scan runs WITHOUT the skip guard; freshOnly then
-          // anti-joins against ONLY the buckets the scan's output
-          // touches (bucket is derived from the merge key, so an
-          // already-recorded pair can live nowhere else) — the guard
-          // must not re-read the whole accumulated table every batch.
-          val inc = SnapshotMerge.freshOnly(spark, targetDir,
-            Vcut.occurrenceScan(songs, vtuberSongs, archives, batch, threshold)
-              .withColumn("bucket",
-                pmod(col("live_recording_archive_id"), lit(buckets.toLong))),
-            Seq("vtuber_song_id", "live_recording_archive_id"), Seq("bucket"))
-          SnapshotMerge.upsertUpdate(spark, targetDir, inc,
-            Seq("vtuber_song_id", "live_recording_archive_id"), Seq("bucket"))
-          val store = new SnapshotStore(
-            spark, new org.apache.hadoop.fs.Path(targetDir))
-          // bound read fragmentation: a long-running stream commits a
-          // new batch dir per micro-batch; once the manifest references
-          // more than `compactAbove` batches, fold the small churn
-          // batches together — the cold bulk of the table is never
-          // rewritten from this hot loop
-          store.compactIncremental(tableSchema, Seq("bucket"), compactAbove)
-        }
+        import graft.sinks.{SnapshotMerge, SnapshotStore}
+        // No emptiness pre-check (a job of its own): a batch of empty
+        // transcripts scans to no rows, and an empty increment commits
+        // nothing. The fuzzy scan runs WITHOUT the skip guard; freshOnly then
+        // anti-joins against ONLY the buckets the scan's output
+        // touches (bucket is derived from the merge key, so an
+        // already-recorded pair can live nowhere else) — the guard
+        // must not re-read the whole accumulated table every batch.
+        val inc = SnapshotMerge.freshOnly(spark, targetDir,
+          Vcut.occurrenceScan(songs, vtuberSongs, archives, batch, threshold)
+            .withColumn("bucket",
+              pmod(col("live_recording_archive_id"), lit(buckets.toLong))),
+          Seq("vtuber_song_id", "live_recording_archive_id"), Seq("bucket"))
+        SnapshotMerge.upsertUpdate(spark, targetDir, inc,
+          Seq("vtuber_song_id", "live_recording_archive_id"), Seq("bucket"))
+        val store = new SnapshotStore(
+          spark, new org.apache.hadoop.fs.Path(targetDir))
+        // bound read fragmentation: a long-running stream commits a
+        // new batch dir per micro-batch; once the manifest references
+        // more than `compactAbove` batches, fold the small churn
+        // batches together — the cold bulk of the table is never
+        // rewritten from this hot loop
+        store.compactIncremental(tableSchema, Seq("bucket"), compactAbove)
         ()
       }
       .trigger(Trigger.AvailableNow())

@@ -63,9 +63,9 @@ class FuzzSpec extends SparkFunSuite {
       assert(FuzzUtils.indelDistance(a, b) == FuzzUtils.indelDistanceDP(a, b),
         s"mismatch at |a|=$la |b|=${b.length}")
     }
-    // The per-thread pattern-mask cache must not bleed state across
-    // threads: hammer the same + different patterns from many threads
-    // concurrently and check every result against the DP oracle.
+    // No state may bleed across threads: hammer the same + different
+    // patterns from many threads concurrently and check every result
+    // against the DP oracle.
     val p = longString(100)
     val texts = (0 until 10).map(i => longString(50 + i))
     val expected = texts.map(t => FuzzUtils.indelDistanceDP(p, t))
@@ -77,7 +77,7 @@ class FuzzSpec extends SparkFunSuite {
     try {
       val futures = (0 until 64).map { k =>
         Future {
-          // interleave an unrelated pattern to force cache eviction races
+          // interleave an unrelated pattern
           FuzzUtils.indelDistance(longString(80), texts(k % texts.length))
           texts.map(t => FuzzUtils.indelDistance(p, t))
         }
@@ -85,6 +85,31 @@ class FuzzSpec extends SparkFunSuite {
       Await.result(Future.sequence(futures), 60.seconds)
         .foreach(rs => assert(rs == expected))
     } finally pool.shutdown()
+  }
+
+  test("codepoint decode ≡ the JDK decoder, malformed UTF-8 included") {
+    import org.apache.spark.unsafe.types.UTF8String
+    import graft.functions.Codepoints
+    val rnd = new Random(11)
+    val cps = "aé夜😀𝄞\n".codePoints().toArray
+    def decoded(u: UTF8String): Seq[Int] = {
+      val out = new Array[Int](u.numBytes())
+      out.take(Codepoints.decode(u, out, 0)).toSeq
+    }
+    for (_ <- 0 until 200) {
+      val str = (0 until rnd.nextInt(20))
+        .map(_ => new String(Character.toChars(cps(rnd.nextInt(cps.length))))).mkString
+      assert(decoded(UTF8String.fromString(str)) == str.codePoints().toArray.toSeq)
+    }
+    // truncated, overlong, surrogate, stray continuation, lone lead byte
+    val bad = Seq(Array(0xe5, 0xa4), Array(0xc0, 0xaf), Array(0xed, 0xa0, 0x80),
+      Array(0x61, 0x80, 0x62), Array(0xf8, 0x61), Array(0xe5, 0xa4, 0x9c, 0xf0, 0x9f))
+    bad.map(_.map(_.toByte)).foreach { bytes =>
+      val u = UTF8String.fromBytes(bytes)
+      assert(decoded(u) == u.toString.codePoints().toArray.toSeq)
+      assert(FuzzUtils.ratio(u, UTF8String.fromString("a")) ==
+        ratio(u.toString, "a"))
+    }
   }
 
   test("ratio invariants: symmetry, range, identity") {

@@ -2,7 +2,12 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
-import graft.functions.FuzzUtils
+import org.apache.spark.sql.catalyst.expressions.Inline
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+import graft.functions.{FuzzUtils, FuzzyScan}
 import graft.operators.FuzzyOccurrence
 import graft.sources.TranscriptJson
 
@@ -118,6 +123,135 @@ class FuzzyOccurrenceSpec extends SparkFunSuite {
     assert(!got.contains((3L, "BVabc")) && !got.contains((3L, "BVshort")))
     // whole-page fallback matched the 1-segment page
     assert(got.contains((5L, "BVshort")) && got((5L, "BVshort"))._1 == 1)
+  }
+
+  // --- the engine contract, restated without Spark ------------------------
+
+  /** One recording: (page, segments in seg_idx order) with (start, text). */
+  private type Rec = Seq[(Int, Seq[(Option[Double], Option[String])])]
+
+  /** `scan`'s contract in plain Scala: windows in (page asc, w0 asc)
+    * order, null texts skipped with no separator, first strictly best
+    * window per (song, recording), threshold after the arg-max, scored
+    * through the DP oracle.
+    */
+  private def contractScan(recs: Map[String, Rec], songs: Seq[(Long, String)],
+      threshold: Double): Set[(Long, String, Int, Option[Double], Double, String)] =
+    (for {
+      (songId, lyrics) <- songs if lyrics != null && lyrics.nonEmpty
+      n = lyrics.count(_ == '\n') + 1
+      (rec, pages) <- recs.toSeq
+      best <- {
+        var best: Option[(Double, Int, Option[Double], String)] = None
+        for ((page, segs) <- pages.sortBy(_._1) if segs.nonEmpty) {
+          val windows =
+            if (segs.length < n) Seq(segs) else segs.sliding(n).toSeq
+          for (w <- windows) {
+            val text = w.flatMap(_._2).mkString("\n")
+            val la = lyrics.codePointCount(0, lyrics.length)
+            val lb = text.codePointCount(0, text.length)
+            val score = 100.0 * (1.0 -
+              FuzzUtils.indelDistanceDP(lyrics, text).toDouble / (la + lb))
+            if (best.forall(score > _._1)) best = Some((score, page + 1, w.head._1, text))
+          }
+        }
+        best
+      }
+      if best._1 >= threshold
+    } yield (songId, rec, best._2, best._3, best._1, best._4)).toSet
+
+  test("scan ≡ the engine contract on seeded random recordings") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    // a small pool of segment texts makes exact ties across pages
+    // common; supplementary-plane codepoints count as one unit each
+    val chars = "夜空中最亮的星能否听清那仰望的人abc 𝄞🎵".codePoints().toArray
+    def word(rnd: scala.util.Random, len: Int): String =
+      new String(Array.fill(len)(chars(rnd.nextInt(chars.length))), 0, len)
+    for (seed <- 1 to 4) {
+      val rnd = new scala.util.Random(seed)
+      val pool = IndexedSeq.fill(12)(word(rnd, 1 + rnd.nextInt(8)))
+      def text(): Option[String] = rnd.nextInt(10) match {
+        case 0 => None
+        case 1 => Some("")
+        case _ => Some(pool(rnd.nextInt(pool.length)))
+      }
+      // 0–12 segments per page index: 0 is an empty page (no rows)
+      val recs: Map[String, Rec] = (0 until 10).map { r =>
+        s"R$r" -> (0 until 1 + rnd.nextInt(4)).map { page =>
+          page -> Seq.fill(rnd.nextInt(13))(
+            (if (rnd.nextInt(10) == 0) None else Some(rnd.nextInt(1000) / 4.0), text()))
+        }
+      }.toMap
+      // 1–4 lines; planted lines from the pool or random words, sized
+      // so some lyrics exceed 64 and 128 codepoints
+      val songs: Seq[(Long, String)] = (1 to 16).map { k =>
+        val lines = 1 + rnd.nextInt(4)
+        val perLine = Seq(4, 24, 45)(k % 3)
+        k.toLong -> (if (k % 2 == 0) Seq.fill(lines)(pool(rnd.nextInt(pool.length)))
+          else Seq.fill(lines)(word(rnd, 1 + rnd.nextInt(perLine)))).mkString("\n")
+      } ++ Seq(17L -> null, 18L -> "", 19L -> "a\n", 20L -> word(rnd, 140))
+      assert(songs.exists(s => s._2 != null && s._2.codePointCount(0, s._2.length) > 128))
+
+      val segSchema = StructType(Seq(StructField("recording_id", StringType),
+        StructField("page", IntegerType), StructField("seg_idx", IntegerType),
+        StructField("start", DoubleType), StructField("text", StringType)))
+      val rows = rnd.shuffle(for {
+        (rec, pages) <- recs.toSeq
+        (page, segs) <- pages
+        ((start, t), i) <- segs.zipWithIndex
+      } yield Row(rec, page, i, start.map(Double.box).orNull, t.orNull))
+      val segments = spark.createDataFrame(java.util.Arrays.asList(rows: _*), segSchema)
+      val songsDf = spark.createDataFrame(
+        java.util.Arrays.asList(songs.map { case (id, l) => Row(id, l) }: _*),
+        StructType(Seq(StructField("song_id", LongType), StructField("lyrics", StringType))))
+
+      for (threshold <- Seq(0.0, 40.0)) {
+        val got = FuzzyOccurrence.scan(segments, songsDf, threshold).collect().map { r =>
+          (r.getLong(0), r.getString(1), r.getInt(2),
+            if (r.isNullAt(3)) None else Some(r.getDouble(3)), r.getDouble(4), r.getString(5))
+        }
+        val want = contractScan(recs, songs, threshold)
+        assert(got.length == got.toSet.size)
+        assert(got.toSet == want,
+          s"seed $seed threshold $threshold: extra ${got.toSet -- want}, missing ${want -- got.toSet}")
+        // at threshold 0 every scoring song keeps one window per recording
+        if (threshold == 0.0) assert(want.size ==
+          songs.count(s => s._2 != null && s._2.nonEmpty) * recs.count(_._2.exists(_._2.nonEmpty)))
+      }
+    }
+  }
+
+  /** Every node of an executed plan, through AQE wrappers and subqueries. */
+  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
+    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
+    case q: QueryStageExec => q +: planNodes(q.plan)
+    case r: ReusedExchangeExec => r +: planNodes(r.child)
+    case other => other +: (other.children ++ other.subqueries).flatMap(planNodes)
+  }
+
+  test("scan plans one shuffle, generates only through the kernel, joins by no hash") {
+    import spark.implicits._
+    val segments = Seq(("BV", 0, 0, 0.0, "夜空中最亮的星"), ("BV", 0, 1, 5.0, "能否听清"),
+      ("BW", 1, 0, 2.0, "那仰望的人")).toDF("recording_id", "page", "seg_idx", "start", "text")
+    val songs = Seq((1L, "夜空中最亮的星\n能否听清"), (2L, "那仰望的人")).toDF("song_id", "lyrics")
+    val df = FuzzyOccurrence.scan(segments, songs, 40.0)
+    assert(df.collect().length == 2)
+    val nodes = planNodes(df.queryExecution.executedPlan)
+    val plan = df.queryExecution.executedPlan.toString
+    assert(nodes.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, plan)
+    val gens = nodes.collect { case g: GenerateExec => g.generator }
+    assert(gens.length == 1 && gens.head.isInstanceOf[Inline] &&
+      gens.head.children.head.isInstanceOf[FuzzyScan], plan)
+    assert(!nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan)
+  }
+
+  test("fuzzy_occurrence_q runs the flagship's kernel with the Levenshtein scorer") {
+    val df = SparkEntry.queries("fuzzy_occurrence_q")(spark, sfDir)
+    val kernels = planNodes(df.queryExecution.executedPlan)
+      .flatMap(_.expressions.flatMap(_.collect { case k: FuzzyScan => k }))
+    assert(kernels.nonEmpty && kernels.forall(_.scorer == FuzzyScan.Levenshtein),
+      df.queryExecution.executedPlan.toString)
   }
 
   test("nested JSON round-trip (S2 read → K5 assemble)") {

@@ -30,6 +30,13 @@ class OccurrenceStreamSpec extends SparkFunSuite {
       org.apache.spark.sql.Row(2L, 1L, "BVb")), schema)
   }
 
+  /** The occurrence table `runAvailableSnapshot` writes. */
+  private val occSchema = StructType(Seq(
+    StructField("song_id", LongType), StructField("vtuber_song_id", LongType),
+    StructField("live_recording_archive_id", LongType),
+    StructField("start", LongType), StructField("page", IntegerType),
+    StructField("bucket", LongType)))
+
   private val doc =
     """[[{"start": 4.0, "text": "夜空中最亮的星"}, {"start": 9.0, "text": "能否听清"}, {"start": 14.0, "text": "那仰望的人"}]]"""
 
@@ -40,14 +47,7 @@ class OccurrenceStreamSpec extends SparkFunSuite {
     val ckpt = root.resolve("ckpt").toString
     def run() = OccurrenceStream.runAvailableSnapshot(spark, drop.toString,
       ckpt, target, songs, vtuberSongs, archives, buckets = 8)
-    def table() = {
-      val schema = StructType(Seq(
-        StructField("song_id", LongType), StructField("vtuber_song_id", LongType),
-        StructField("live_recording_archive_id", LongType),
-        StructField("start", LongType), StructField("page", IntegerType),
-        StructField("bucket", LongType)))
-      graft.sinks.SnapshotMerge.read(spark, target, schema)
-    }
+    def table() = graft.sinks.SnapshotMerge.read(spark, target, occSchema)
 
     // batch 1 creates the table (no pre-seeding needed)
     Files.writeString(drop.resolve("BVa.json"), doc)
@@ -83,6 +83,37 @@ class OccurrenceStreamSpec extends SparkFunSuite {
     assert(store.currentVersion() == v)
   }
 
+  test("a batch of only empty transcripts commits no version and leaves the table unchanged") {
+    val root = tempDir("occ_empty")
+    val drop = root.resolve("transcripts"); Files.createDirectories(drop)
+    val target = root.resolve("occurrences").toString
+    val ckpt = root.resolve("ckpt").toString
+    val store = new graft.sinks.SnapshotStore(
+      spark, new org.apache.hadoop.fs.Path(target))
+    def run() = OccurrenceStream.runAvailableSnapshot(spark, drop.toString,
+      ckpt, target, songs, vtuberSongs, archives, buckets = 8)
+
+    // first batch: empty transcripts only, and no table yet
+    Files.writeString(drop.resolve("BVx.json"), "[]")
+    run()
+    assert(store.currentVersion().isEmpty, "an empty batch must not create the table")
+
+    Files.writeString(drop.resolve("BVa.json"), doc)
+    run()
+    val v = store.currentVersion()
+    val m = store.current().get._2
+    assert(v.isDefined)
+
+    // a later batch of empty transcripts only
+    Files.writeString(drop.resolve("BVb.json"), "[]")
+    Files.writeString(drop.resolve("BVy.json"), "[[]]")
+    run()
+    assert(store.currentVersion() == v && store.current().get._2 == m)
+    assert(graft.sinks.SnapshotMerge.read(spark, target, occSchema)
+      .select("live_recording_archive_id", "start", "page").as[(Long, Long, Int)]
+      .collect().toSeq == Seq((1L, 4L, 1)))
+  }
+
   test("auto-compact folds stream churn once the manifest exceeds compactAbove") {
     val root = tempDir("occ_compact")
     val drop = root.resolve("transcripts"); Files.createDirectories(drop)
@@ -115,12 +146,7 @@ class OccurrenceStreamSpec extends SparkFunSuite {
     run()
     assert(batches() <= 2, "third batch must trigger the incremental fold")
     // all three occurrences intact after folding
-    val schema = StructType(Seq(
-      StructField("song_id", LongType), StructField("vtuber_song_id", LongType),
-      StructField("live_recording_archive_id", LongType),
-      StructField("start", LongType), StructField("page", IntegerType),
-      StructField("bucket", LongType)))
-    assert(graft.sinks.SnapshotMerge.read(spark, target, schema)
+    assert(graft.sinks.SnapshotMerge.read(spark, target, occSchema)
       .select("live_recording_archive_id").as[Long].collect().toSet == Set(1L, 2L, 3L))
   }
 }
