@@ -17,7 +17,8 @@ object Sessions {
 
   /** A `local[cpus]` session with `cpus` shuffle partitions, the UTC
     * session zone, TIMESTAMP(NANOS) read as long ([[Tables]]), no UI,
-    * and the engine's SQL functions ([[GraftExtensions]]) installed.
+    * a codegen cache sized for the engine's working set, and the
+    * engine's SQL functions ([[GraftExtensions]]) installed.
     */
   def local(cpus: Int): SparkSession = {
     val spark = SparkSession.builder()
@@ -30,6 +31,12 @@ object Sessions {
       // (see OPTIMIZATION_r20.md; scale-inert — parallelism-first AQE
       // sizing dominates once shuffles exceed a few MB)
       .config("spark.sql.adaptive.coalescePartitions.minPartitionSize", "64k")
+      // generated-class cache (static, default 100): driver and task
+      // compiles of one class take two entries, so a few dozen
+      // distinct plans already overflow the default and recompile
+      // code compiled moments before; 1000 leaves the cron path and a
+      // catalog sweep room
+      .config("spark.sql.codegen.cache.maxEntries", "1000")
       // fork-free local fs (graft.hadoop.FastLocalFileSystem scaladoc)
       .config("spark.hadoop.fs.file.impl",
         classOf[graft.hadoop.FastLocalFileSystem].getName)

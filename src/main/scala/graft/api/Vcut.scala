@@ -149,6 +149,27 @@ object Vcut {
     Merge.upsertIgnore(archives, incoming, Seq("bvid"))
   }
 
+  /** The archive snapshot-table schema shared by every EP1 entry
+    * point (and their specs).
+    */
+  val archiveTableSchema: org.apache.spark.sql.types.StructType =
+    org.apache.spark.sql.types.StructType.fromDDL(
+      "mid BIGINT, bvid STRING, title STRING, cover STRING, pubdate BIGINT, date TIMESTAMP")
+
+  /** F16 + F1 over a fetched listing frame: `pic`→`cover`, parse the
+    * title date (dropping unparseable rows) and project to the table
+    * schema. The same bvid can legitimately appear twice in one fetch
+    * (a new upload shifting the listing down one slot mid-walk
+    * re-serves a page-boundary record); upsertIgnore, which every
+    * caller feeds, collapses such duplicates to one row.
+    */
+  private def parseListing(fetched: DataFrame): DataFrame =
+    fetched
+      .withColumnRenamed("pic", "cover")
+      .withColumn("date", parseArchiveDate(col("title")))
+      .where(col("date").isNotNull)
+      .select(archiveTableSchema.fieldNames.map(col): _*)
+
   /** EP1 end-to-end, incremental: the full `discover_new_recordings`
     * job (`modal/recording.py:9-57`) as one composition —
     *
@@ -166,35 +187,16 @@ object Vcut {
     *      table partitioned by `mid` (bvid determines mid, so the
     *      partitioned-merge key/partition contract holds) — the
     *      all-or-nothing commit the reference gets from its PG
-    *      transaction.
+    *      transaction, in one pass over the fetch
+    *      ([[graft.sinks.SnapshotMerge.upsertIgnore]]).
     *
     * Idempotent: a second run fetches one page per creator, finds
     * nothing past the anchors, and commits nothing.
     *
     * @return number of new recordings ingested (the reference's
-    *         return value)
+    *         return value): upsertIgnore's count, so a re-served known
+    *         bvid is not counted
     */
-  /** The archive snapshot-table schema shared by every EP1 entry
-    * point (and their specs).
-    */
-  val archiveTableSchema: org.apache.spark.sql.types.StructType =
-    org.apache.spark.sql.types.StructType.fromDDL(
-      "mid BIGINT, bvid STRING, title STRING, cover STRING, pubdate BIGINT, date TIMESTAMP")
-
-  /** F16 + F1 over a fetched listing frame: `pic`→`cover`, parse the
-    * title date (dropping unparseable rows), project to the table
-    * schema, and dedup on bvid — a new upload shifting the listing
-    * down one slot mid-walk re-serves a page-boundary record, so the
-    * same bvid can legitimately appear twice in one fetch.
-    */
-  private def parseListing(fetched: DataFrame): DataFrame =
-    fetched
-      .withColumnRenamed("pic", "cover")
-      .withColumn("date", parseArchiveDate(col("title")))
-      .where(col("date").isNotNull)
-      .select(archiveTableSchema.fieldNames.map(col): _*)
-      .dropDuplicates("bvid")
-
   def discoverNewRecordingsIncremental(
       spark: org.apache.spark.sql.SparkSession,
       mids: Seq[Long],
@@ -225,20 +227,13 @@ object Vcut {
         reader.option("anchors", spans.map(r =>
           s"${r.getLong(0)}:${r.getLong(1)}").mkString(",")))
         .load()
-    // Count (and merge) only genuinely-new bvids: a listing can
-    // re-serve an already-ingested bvid past the anchor (edited /
-    // republished upload); upsert-ignore would drop it anyway, but
-    // counting it would overstate the return value and force a
-    // no-op commit. freshOnly prunes the guard to the touched mid
-    // partitions and checkpoints, so ONE fetch pass feeds the count
-    // and the merge's collect + write.
-    val fresh = graft.sinks.SnapshotMerge.freshOnly(
+    // upsertIgnore counts (and commits) only genuinely-new bvids: a
+    // listing can re-serve an already-ingested bvid past the anchor
+    // (edited / republished upload), which must neither inflate the
+    // return value nor force a commit. It pins the fetch once and
+    // reads only the touched mid partitions' keys.
+    graft.sinks.SnapshotMerge.upsertIgnore(
       spark, archiveTableDir, parseListing(fetched), Seq("bvid"), Seq("mid"))
-    val n = fresh.count()
-    if (n > 0)
-      graft.sinks.SnapshotMerge.upsertIgnore(
-        spark, archiveTableDir, fresh, Seq("bvid"), Seq("mid"))
-    n
   }
 
   /** EP1 as a LONG-RUNNING STREAM: the paged listing is read through
@@ -267,19 +262,13 @@ object Vcut {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // same freshness guard as the batch path: a re-served known
-        // bvid (republished upload) must not force a no-op commit.
-        // freshOnly prunes the guard's scan to the batch's own mid
-        // partitions — bvid determines mid, so a known bvid can live
-        // nowhere else; a micro-batch touching 3 creators must not
-        // re-read a million-creator table.
-        if (!batch.isEmpty) {
-          val fresh = graft.sinks.SnapshotMerge.freshOnly(spark,
-            archiveTableDir, parseListing(batch), Seq("bvid"), Seq("mid"))
-          if (!fresh.isEmpty)
-            graft.sinks.SnapshotMerge.upsertIgnore(
-              spark, archiveTableDir, fresh, Seq("bvid"), Seq("mid"))
-        }
+        // same insert as the batch path, with no emptiness pre-job:
+        // an empty or all-known batch commits nothing. upsertIgnore
+        // reads only the batch's own mid partitions — bvid determines
+        // mid, so a known bvid can live nowhere else; a micro-batch
+        // touching 3 creators must not re-read a million-creator table.
+        graft.sinks.SnapshotMerge.upsertIgnore(
+          spark, archiveTableDir, parseListing(batch), Seq("bvid"), Seq("mid"))
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
@@ -537,7 +526,7 @@ object Vcut {
   /** The UNGUARDED occurrence scan: every (song, recording) occurrence
     * the fuzzy scan finds in `segments`, attributed to its vtuber_song
     * — before any skip guard. For sinks that run their own pruned
-    * anti-join (e.g. [[graft.sinks.SnapshotMerge.freshOnly]]).
+    * anti-join (e.g. [[graft.sinks.SnapshotMerge.upsertIgnore]]).
     */
   def occurrenceScan(
       songs: DataFrame,

@@ -31,8 +31,23 @@ import org.apache.spark.sql.types.StructType
   */
 object SnapshotMerge {
 
-  /** K1 on a snapshot table: keep existing rows, add unseen keys.
+  /** K1 on a snapshot table, `INSERT … ON CONFLICT DO NOTHING`
+    * (`db/recording.py:44-66`): commits the rows of `incoming` whose
+    * keys are not committed yet and returns how many it committed.
+    * Keys duplicated within `incoming` collapse to one arbitrary row.
     * Accepts logical names on renamed (column-mapped) tables.
+    *
+    * Only the partitions that gain a row are rewritten: a touched
+    * partition whose incoming keys are all known keeps its manifest
+    * entry by reference, and a call that commits 0 rows writes no
+    * version and runs no vacuum — so callers need no emptiness or
+    * freshness pre-check. Three SQL executions per committing call:
+    * pinning `incoming` (an expensive upstream — a paged fetch, a
+    * fuzzy scan — runs once) names the touched partitions; pinning its
+    * anti-join against their committed keys names the partitions that
+    * gain rows and the count; and the staged batch of those
+    * partitions is the commit, fenced on the one snapshot resolution
+    * the anti-join read.
     *
     * CONTRACT: partition columns must be determined by the merge keys
     * — the scan prunes to the partitions `incoming` touches, so a key
@@ -46,9 +61,33 @@ object SnapshotMerge {
   def upsertIgnore(spark: SparkSession, rootDir: String, incoming: DataFrame,
       keys: Seq[String], partCols: Seq[String], retain: Int = 2,
       statsCols: Seq[String] = Nil,
-      checkKeyPartition: Boolean = false): Unit =
-    upsertKeyed(spark, rootDir, incoming, keys, partCols, retain, statsCols,
-      checkKeyPartition)(Merge.upsertIgnore)
+      checkKeyPartition: Boolean = false): Long = {
+    val store = new SnapshotStore(spark, new Path(rootDir))
+    if (checkKeyPartition)
+      requireKeyContract(spark, rootDir, incoming, keys, partCols)
+    val cbase = requireConstraints(store, incoming)
+    val (inc, ks, sc) = toPhysIncoming(store, incoming, keys, statsCols)
+    requirePartitionable(inc.schema, partCols)
+    val (pinned, touched, _) = pinTouched(inc.dropDuplicates(ks), partCols)
+    if (touched.isEmpty) return 0L
+    val cur = store.resolveCurrent()
+    val base = baseOf(cur)
+    // the committed keys of the touched partitions only (keys are
+    // never patched, so sparse slices need no resolution here)
+    val known = store.readSlices(base.slices, pinned.schema, touched,
+      base.dvs).select(ks.map(col): _*)
+    val (fresh, gained, n) =
+      pinTouched(pinned.join(known, ks, "left_anti"), partCols)
+    if (n == 0L) return 0L
+    // fresh keys by construction: the partitions that gain a row are
+    // their committed rows plus the fresh ones, with no second dedup
+    // or anti-join
+    val existing = store.readSlices(base.slices, pinned.schema, gained,
+      base.dvs, base.smors)
+    commitRewrite(store, cur, existing.unionByName(fresh), pinned.schema,
+      partCols, gained, retain, sc, None, Some(cbase))
+    n
+  }
 
   /** K2 on a snapshot table: incoming wins on key collision.
     * Accepts logical names on renamed (column-mapped) tables.
@@ -58,24 +97,14 @@ object SnapshotMerge {
   def upsertUpdate(spark: SparkSession, rootDir: String, incoming: DataFrame,
       keys: Seq[String], partCols: Seq[String], retain: Int = 2,
       statsCols: Seq[String] = Nil,
-      checkKeyPartition: Boolean = false): Unit =
-    upsertKeyed(spark, rootDir, incoming, keys, partCols, retain, statsCols,
-      checkKeyPartition)(Merge.upsertUpdate)
-
-  /** The copy-on-write keyed fronts' one body; [[upsertIgnore]] and
-    * [[upsertUpdate]] differ only in the [[Merge]] function `fn`.
-    */
-  private def upsertKeyed(spark: SparkSession, rootDir: String,
-      incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
-      retain: Int, statsCols: Seq[String], checkKeyPartition: Boolean)(
-      fn: (DataFrame, DataFrame, Seq[String]) => DataFrame): Unit = {
+      checkKeyPartition: Boolean = false): Unit = {
     val store = new SnapshotStore(spark, new Path(rootDir))
     if (checkKeyPartition)
       requireKeyContract(spark, rootDir, incoming, keys, partCols)
     val cbase = requireConstraints(store, incoming)
     val (inc, ks, sc) = toPhysIncoming(store, incoming, keys, statsCols)
-    mergePhys(spark, store, inc, partCols, retain, sc,
-      validated = Some(cbase))((target, i) => fn(target, i, ks))
+    mergePhys(store, inc, partCols, retain, sc,
+      validated = Some(cbase))((target, i) => Merge.upsertUpdate(target, i, ks))
   }
 
   /** K2 via MERGE-ON-READ — [[upsertUpdate]] semantics (incoming wins
@@ -158,12 +187,9 @@ object SnapshotMerge {
     requirePartitionable(incMapped.schema, partCols)
     // dropDuplicates BEFORE the pin: Merge.upsertUpdate's
     // arbitrary-winner collapse, evaluated once
-    val incoming = incMapped.dropDuplicates(keysPhys).ckpt(true)
-    val parts: Array[Row] =
-      incoming.select(partCols.map(col): _*).distinct().collect()
-    if (parts.isEmpty) return None
-    requirePartitionValues(parts)
-    val touched: Set[String] = parts.map(partitionSuffix(partCols, _)).toSet
+    val (incoming, touched, _) =
+      pinTouched(incMapped.dropDuplicates(keysPhys), partCols)
+    if (touched.isEmpty) return None
 
     val cur = store.resolveCurrent()
     requireSchemaBase(store, schemaBase, cur.map(_.version))
@@ -179,10 +205,8 @@ object SnapshotMerge {
     // table. Sparse patches are NOT resolved here: only key columns
     // are consumed, and keys are never patched — skipping the patch
     // joins is free correctness.
-    val liveMeta = store.liveWithMeta(
-      curEntries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-        curMors.map(m => m._1 -> m._2.batch),
-      incoming.schema, touched, curDvs)
+    val liveMeta = store.liveWithMeta(baseOf(cur).slices, incoming.schema,
+      touched, curDvs)
     val hits = liveMeta
       .join(incoming.select(keysPhys.map(col): _*), keysPhys, "left_semi")
       .select(col("__dv_path").as("path"), col("__dv_pos").as("pos"))
@@ -369,12 +393,9 @@ object SnapshotMerge {
       "incoming columns must not collide with the patch resolver's working " +
         "names (__pv, __sv, __sv_*)")
     val spark = store.spark
-    val incoming = incMapped.dropDuplicates(keysPhys).ckpt(true)
-    val parts: Array[Row] =
-      incoming.select(partCols.map(col): _*).distinct().collect()
-    if (parts.isEmpty) return None
-    requirePartitionValues(parts)
-    val touched: Set[String] = parts.map(partitionSuffix(partCols, _)).toSet
+    val (incoming, touched, _) =
+      pinTouched(incMapped.dropDuplicates(keysPhys), partCols)
+    if (touched.isEmpty) return None
 
     val cur = store.resolveCurrent()
     val SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
@@ -386,11 +407,8 @@ object SnapshotMerge {
     // it to the key columns; patches skipped — keys are never
     // patched): matched keys become a sparse PATCH, unmatched keys
     // insert whole rows.
-    val liveKeys = store.readSlices(
-      curEntries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-        curMors.map(m => m._1 -> m._2.batch),
-      incoming.schema, touched, curDvs)
-      .select(keysPhys.map(col): _*)
+    val liveKeys = store.readSlices(baseOf(cur).slices, incoming.schema,
+      touched, curDvs).select(keysPhys.map(col): _*)
     // ONE membership join + ONE pin, filtered twice from cache (a
     // semi + anti pair would run the join and the materialization
     // twice; the flag spelling halves the write path's job count)
@@ -490,7 +508,7 @@ object SnapshotMerge {
     // remove keys (their payload may legitimately be stale/junk), so
     // they are exempt — the SQL-CHECK shape Delta enforces
     val cbase = requireConstraints(store, changes.where(col(opCol) =!= "delete"))
-    mergePhys(spark, store, changes, partCols, retain, statsCols,
+    mergePhys(store, changes, partCols, retain, statsCols,
       validated = Some(cbase))(
       (target, inc) =>
         Merge.applyCdc(target.drop(seqCol, opCol), inc, keys, seqCol, opCol))
@@ -733,7 +751,7 @@ object SnapshotMerge {
     // concurrent commit between the schema read and the merge's own
     // resolution aborts instead of letting this sidecar union drop it
     // (ADVICE r18).
-    mergePhys(spark, store, widened, partCols, retain, physStats,
+    mergePhys(store, widened, partCols, retain, physStats,
       Some(schemaBase), Some(union), validated = Some(cbase))(
       (target, inc) => Merge.upsertUpdate(target, inc, physKeys))
       .foreach(v => store.writeSchemaFile(v, union))
@@ -971,10 +989,8 @@ object SnapshotMerge {
     requirePartitionable(incoming0.schema, partCols)
     val store = new SnapshotStore(spark, new Path(rootDir))
     val cbase = requireConstraints(store, incoming0)
-    val incoming = incoming0.ckpt(true)
-    val parts: Array[Row] =
-      incoming.select(partCols.map(col): _*).distinct().collect()
-    requirePartitionValues(parts)
+    // the counts are unused: an empty frame still commits (truncates)
+    val (incoming, _, _) = pinTouched(incoming0, partCols)
     val cur = store.resolveCurrent()
     val newVersion = cur.map(_.version).getOrElse(0L) + 1
     val (batch, written) = store.stageBatch(incoming, partCols, newVersion)
@@ -1171,10 +1187,7 @@ object SnapshotMerge {
     val touched = parts.map(partitionSuffix(partCols, _)).toSet
     val outside = cur.entries.keySet -- touched
     if (outside.isEmpty) return empty
-    store.readSlices(
-      cur.entries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-        cur.mors.map(m => m._1 -> m._2.batch),
-      narrow, outside, cur.dvs)
+    store.readSlices(cur.slices, narrow, outside, cur.dvs)
       .join(inc.select(keysPhys.map(col): _*).distinct(), keysPhys, "left_semi")
   }
 
@@ -1192,41 +1205,6 @@ object SnapshotMerge {
         "partition derivation or delete the old copies first")
   }
 
-  /** Rows of `incoming` whose `joinKeys` are NOT already in the
-    * committed snapshot, with the guard's scan pruned to the
-    * partitions `incoming` itself touches — under [[merge]]'s
-    * key-determines-partition contract a committed row with a matching
-    * key can live nowhere else, so this anti-join costs the batch's
-    * partitions, never the table. This is the freshness guard the
-    * streaming sinks run per micro-batch.
-    *
-    * `incoming` is localCheckpointed on entry (the guard runs a
-    * distinct-partition collect plus the join over it; an expensive
-    * upstream — a paged fetch, a fuzzy scan — must execute once), and
-    * the result is localCheckpointed too (callers always run at least
-    * an emptiness check plus the merge over it). A subsequent
-    * [[upsertIgnore]]/[[upsertUpdate]] re-collects its own touched set
-    * from the RESULT — intentionally: the guard can empty out a
-    * partition entirely, and merging with the guard's coarser set
-    * would identity-rewrite it.
-    */
-  def freshOnly(spark: SparkSession, rootDir: String, incoming: DataFrame,
-      joinKeys: Seq[String], partCols: Seq[String]): DataFrame = {
-    // same contracts as merge(), checked up front: a type or value
-    // that formats differently in a partition path would make the
-    // guard silently vacuous (suffixes that never match => everything
-    // "fresh"), which must be a loud error instead
-    requirePartitionable(incoming.schema, partCols)
-    val inc = incoming.ckpt(true)
-    val store = new SnapshotStore(spark, new Path(rootDir))
-    val parts = inc.select(partCols.map(col): _*).distinct().collect()
-    requirePartitionValues(parts)
-    val touched = parts.map(partitionSuffix(partCols, _)).toSet
-    val existing = store.readPartitions(inc.schema, touched)
-    inc.join(existing.select(joinKeys.map(col): _*), joinKeys, "left_anti")
-      .ckpt(true)
-  }
-
   /** Hive-style partition path suffix for one tuple, e.g. "pk=0" or
     * "a=1/b=x%20y" (values escaped the same way Spark's partitioned
     * writer escapes directory names, so manifest suffixes and
@@ -1240,7 +1218,8 @@ object SnapshotMerge {
   /** The partition-column contract every front checks up front.
     * Snapshot tables are partitioned: with no partition columns the
     * touched set would be one empty suffix that matches no manifest
-    * entry, so a guard like [[freshOnly]] would silently read nothing.
+    * entry, so [[upsertIgnore]]'s anti-join would silently read
+    * nothing and call every committed key new.
     * The suffix contract above relies on `String.valueOf(value)`
     * matching Spark's partition-directory formatting. That holds for
     * integral, string, boolean, and date partition columns — NOT for
@@ -1267,13 +1246,13 @@ object SnapshotMerge {
     }
   }
 
-  /** Partition-tuple VALUE contract shared by the merge paths and
-    * [[freshOnly]]: no NULLs (no directory form) and no empty strings
-    * (the partitioned writer emits `__HIVE_DEFAULT_PARTITION__`, which
-    * reads back as NULL — the key would silently stop matching and
-    * every later merge of it would accrete a duplicate).
+  /** Partition-tuple VALUE contract every write front checks: no
+    * NULLs (no directory form) and no empty strings (the partitioned
+    * writer emits `__HIVE_DEFAULT_PARTITION__`, which reads back as
+    * NULL — the key would silently stop matching and every later merge
+    * of it would accrete a duplicate).
     */
-  private[sinks] def requirePartitionValues(parts: Array[Row]): Unit =
+  private def requirePartitionValues(parts: Seq[Row]): Unit =
     require(parts.forall(r => (0 until r.length).forall(i =>
       !r.isNullAt(i) && String.valueOf(r.get(i)).nonEmpty)),
       "null or empty-string partition values are not supported: both lose " +
@@ -1300,7 +1279,7 @@ object SnapshotMerge {
     val store = new SnapshotStore(spark, new Path(rootDir))
     requireNoMappedLogicalCols(store, incoming0.schema)
     val cbase = requireConstraints(store, incoming0)
-    mergePhys(spark, store, incoming0, partCols, retain, statsCols,
+    mergePhys(store, incoming0, partCols, retain, statsCols,
       validated = Some(cbase))(mergeFn)
   }
 
@@ -1317,31 +1296,23 @@ object SnapshotMerge {
     * the retryable conflict instead of committing data whose sidecar
     * silently drops the concurrent evolve's columns (ADVICE r18).
     */
-  private[sinks] def mergePhys(spark: SparkSession, store: SnapshotStore,
-      incoming0: DataFrame, partCols: Seq[String], retain: Int,
-      statsCols: Seq[String], schemaBase: Option[Option[Long]] = None,
+  private[sinks] def mergePhys(store: SnapshotStore, incoming0: DataFrame,
+      partCols: Seq[String], retain: Int, statsCols: Seq[String],
+      schemaBase: Option[Option[Long]] = None,
       embedSchema: Option[StructType] = None,
       validated: Option[Map[String, String]] = None)(
       mergeFn: (DataFrame, DataFrame) => DataFrame): Option[Long] = {
     requirePartitionable(incoming0.schema, partCols)
-    val rootDir = store.root.toString
 
-    // One evaluation of the incoming plan: the merge runs a distinct
-    // collect AND the staged write (whose mergeFn may reference
-    // incoming twice) over it — an expensive or non-deterministic
-    // upstream must not run per action. (A caller that already
-    // checkpointed — freshOnly — pays one cheap extra copy.)
-    val incoming = incoming0.ckpt(true)
-    val parts: Array[Row] =
-      incoming.select(partCols.map(col): _*).distinct().collect()
-    if (parts.isEmpty) return None
-    requirePartitionValues(parts)
-    val touched: Set[String] = parts.map(partitionSuffix(partCols, _)).toSet
+    // One evaluation of the incoming plan: the staged write (whose
+    // mergeFn may reference incoming twice) reads the pin — an
+    // expensive or non-deterministic upstream must not run per action.
+    val (incoming, touched, _) = pinTouched(incoming0, partCols)
+    if (touched.isEmpty) return None
 
     val cur = store.resolveCurrent()
     requireSchemaBase(store, schemaBase, cur.map(_.version))
-    val SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
-      curSmors, _, _) = baseOf(cur)
+    val base = baseOf(cur)
 
     // Manifest-level prune from the SAME snapshot resolution that the
     // commit below fences on: only the touched partitions' data dirs
@@ -1350,50 +1321,83 @@ object SnapshotMerge {
     // see — or resurrect — tombstoned rows), and a touched partition's
     // merge-on-read slices — full and sparse — read WITH its base
     // slice (the rewrite below materializes them).
-    val pruned = store.readSlices(
-      curEntries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-        curMors.map(m => m._1 -> m._2.batch),
-      incoming.schema, touched, curDvs, curSmors)
-    val merged = mergeFn(pruned, incoming)
+    val pruned = store.readSlices(base.slices, incoming.schema, touched,
+      base.dvs, base.smors)
+    Some(commitRewrite(store, cur, mergeFn(pruned, incoming), incoming.schema,
+      partCols, touched, retain, statsCols, embedSchema, validated))
+  }
 
-    // Stage the replacement partitions into a fresh immutable batch
-    // dir. Unreferenced until the commit below — a crash here leaves
-    // only an orphan for vacuum. `written` holds the partitions the
-    // merge actually produced (a touched partition the merge emptied
-    // simply has no dir => dropped from the manifest => atomically
-    // deleted) with each one's bytes, recorded into the manifest so
-    // compaction never re-stats what this merge already measured.
-    val newVersion = curVersion + 1
-    val (batch, written) = store.stageBatch(merged, partCols, newVersion)
-    require(written.keySet.subsetOf(touched),
-      s"merge produced unexpected partitions: ${(written.keySet -- touched).mkString(", ")}")
+  /** Pin `df` — an eager local checkpoint: its upstream runs once,
+    * its lineage is cut, and a lost block fails loudly where `persist`
+    * would silently re-run a paged fetch or a fuzzy scan — and return
+    * it with the partition suffixes it touches and its row count,
+    * after checking the partition values. Suffixes and count are
+    * observed metrics of the checkpoint job itself, so the pin is one
+    * SQL execution with no aggregate query of its own. An empty `df`
+    * touches no suffix.
+    */
+  private def pinTouched(df: DataFrame, partCols: Seq[String])
+      : (DataFrame, Set[String], Long) = {
+    val name = s"graft_pin_${java.util.UUID.randomUUID()}"
+    val observed = df.observe(name,
+      collect_set(struct(partCols.map(col): _*)).as("parts"), count(lit(1)).as("rows"))
+    val pinned = observed.ckpt(true)
+    // read off the checkpoint's own execution, which has finished and
+    // merged its tasks' metrics by now; an Observation would instead
+    // wait for a listener-bus event
+    val m = observed.queryExecution.observedMetrics(name)
+    val parts = m.getSeq[Row](0)
+    requirePartitionValues(parts)
+    (pinned, parts.map(partitionSuffix(partCols, _)).toSet, m.getLong(1))
+  }
 
-    // Opt-in stats sidecar for the staged batch (one bounded agg over
-    // the just-written, page-warm files) — the metadata readRange
-    // prunes on. Written before the commit: an unreferenced batch
-    // with a sidecar is just a bigger orphan for vacuum.
-    store.writeBatchStats(batch, incoming.schema, partCols, statsCols)
-    val entries = (curEntries -- touched) ++ written.map { case (s, sz) =>
+  /** The copy-on-write commit tail of [[mergePhys]] and
+    * [[upsertIgnore]]: stage `rows` as the whole new content of the
+    * `rewritten` partitions and commit it fenced on `cur`, the
+    * resolution `rows` was read from, then vacuum. Returns the
+    * committed version.
+    *
+    * The staged batch is unreferenced until the commit — a crash
+    * leaves only an orphan for vacuum. A rewritten partition `rows`
+    * leaves empty simply has no dir, so it drops from the manifest
+    * (an atomic delete); each written partition's bytes go into the
+    * manifest, so compaction never re-stats them. The opt-in stats
+    * sidecar (one bounded agg over the just-written files, the
+    * metadata readRange prunes on) is written before the commit: an
+    * unreferenced batch with a sidecar is just a bigger orphan.
+    *
+    * The base's deletion vectors carry forward: untouched partitions
+    * keep their files (and so their tombstones); rewritten partitions
+    * were read DV-filtered, so their old tombstones become harmless
+    * no-ops against dead paths. Their merge-on-read slices — full and
+    * sparse — drop (the rewrite materialized them); other partitions
+    * keep theirs. The evolve fronts REPLACE the embedded schema with
+    * their union (atomic with this commit — the sidecar-lag race
+    * closer); every other commit CARRIES the base's.
+    */
+  private def commitRewrite(store: SnapshotStore,
+      cur: Option[SnapshotStore.Resolved], rows: DataFrame, schema: StructType,
+      partCols: Seq[String], rewritten: Set[String], retain: Int,
+      statsCols: Seq[String], embedSchema: Option[StructType],
+      validated: Option[Map[String, String]]): Long = {
+    val base = baseOf(cur)
+    val newVersion = base.version + 1
+    val (batch, written) = store.stageBatch(rows, partCols, newVersion)
+    require(written.keySet.subsetOf(rewritten),
+      s"merge produced unexpected partitions: ${(written.keySet -- rewritten).mkString(", ")}")
+    store.writeBatchStats(batch, schema, partCols, statsCols)
+    val entries = (base.entries -- rewritten) ++ written.map { case (s, sz) =>
       s -> SnapshotStore.SnapshotEntry(batch, sz)
     }
-    // fenced on the exact base this merge read: a concurrent commit
-    // in the window above aborts with SnapshotConcurrentWriteException
-    // instead of silently dropping that writer's merge. The base's
-    // deletion vectors carry forward: untouched partitions keep their
-    // files (and so their tombstones); touched partitions were read
-    // DV-filtered and rewritten, so their old tombstones become
-    // harmless no-ops against dead paths. Touched partitions' MoR
-    // slices — full and sparse — drop (the rewrite just materialized
-    // them); untouched partitions keep theirs.
-    // embedded schema: the evolve fronts REPLACE it with their union
-    // (atomic with this commit — the sidecar-lag race closer); every
-    // other merge CARRIES the base's
-    store.commitSized(newVersion, entries, cur.map(_.version), curDvs,
-      curMors.filterNot(m => touched(m._1)),
-      curSmors.filterNot(m => touched(m.suffix)),
+    // fenced on the exact base `rows` read: a concurrent commit in
+    // between aborts with SnapshotConcurrentWriteException instead of
+    // silently dropping that writer's merge
+    store.commitSized(newVersion, entries, cur.map(_.version), base.dvs,
+      base.mors.filterNot(m => rewritten(m._1)),
+      base.smors.filterNot(m => rewritten(m.suffix)),
       embedSchema.map(_.json).orElse(cur.flatMap(_.schemaJson)),
       validatedConstraints = validated)
     store.vacuum(retain)
-    Some(newVersion)
+    newVersion
   }
 }

@@ -73,7 +73,14 @@ object SnapshotStore {
       entries: Map[String, SnapshotEntry], dvs: Seq[String],
       mors: Seq[(String, SnapshotEntry)], smors: Seq[SparseSlice],
       schemaJson: Option[String],
-      constraints: Option[Map[String, String]])
+      constraints: Option[Map[String, String]]) {
+    /** Every row-holding (suffix, batch) pair — each partition's base
+      * entry plus its merge-on-read append slices — the `slices`
+      * argument of [[SnapshotStore.readSlices]].
+      */
+    def slices: Seq[(String, String)] =
+      entries.toSeq.map(kv => kv._1 -> kv._2.batch) ++ mors.map(m => m._1 -> m._2.batch)
+  }
 
   /** Deployment-wide commit-backend wiring: every [[SnapshotStore]]
     * constructed from now on initializes its `pointerBackend` from
@@ -327,6 +334,22 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   private def leafName(name: String): String =
     name.substring(name.lastIndexOf('/') + 1)
+
+  /** A name for a file the commit of `version` writes and then renames
+    * into place: `<prefix>v-<version>-<uuid>`. The version tag lets
+    * [[vacuum]] keep an in-flight writer's temp file (its version is
+    * at or above the window) the way it keeps its staged batch.
+    */
+  private def tmpName(prefix: String, version: Long): String =
+    s"$prefix${versionName(version)}-${java.util.UUID.randomUUID()}"
+
+  /** Version tag of a [[tmpName]] with `prefix`; None when `name` does
+    * not carry one (untagged leftovers of older writers).
+    */
+  private def tmpVersion(prefix: String, name: String): Option[Long] = {
+    val rest = name.stripPrefix(prefix)
+    if (rest.startsWith("v-")) scala.util.Try(parseVersion(rest)).toOption else None
+  }
 
   /** Version prefix of a `b-<version>-<uuid>` batch dir name; None
     * when the name doesn't carry one.
@@ -851,7 +874,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // writer's file is unreferenced garbage for vacuum).
     val manifestName =
       s"${versionName(version)}-${java.util.UUID.randomUUID().toString.take(8)}"
-    val manifestTmp = new Path(manifestsDir, s".tmp-${java.util.UUID.randomUUID()}")
+    val manifestTmp = new Path(manifestsDir, tmpName(".tmp-", version))
     writeFile(manifestTmp, body)
     val manifestFinal = new Path(manifestsDir, manifestName)
     if (!fs.rename(manifestTmp, manifestFinal))
@@ -922,7 +945,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
         if (versionLogEntry(base).isEmpty)
           currentManifestName().foreach(writeVersionLogEntry(base, _))
       }
-      val pointerTmp = new Path(root, s".CURRENT.tmp-${java.util.UUID.randomUUID()}")
+      val pointerTmp = new Path(root, tmpName(".CURRENT.tmp-", version))
       writeFile(pointerTmp, manifestName)
       beforeSwapHook()
       // Ownership re-check immediately before the swap: a holder that
@@ -962,7 +985,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   private def writeVersionLogEntry(version: Long, manifestName: String): Unit = {
     fs.mkdirs(versionsDir)
-    val tmp = new Path(versionsDir, s".tmp-${java.util.UUID.randomUUID()}")
+    val tmp = new Path(versionsDir, tmpName(".tmp-", version))
     writeFile(tmp, manifestName)
     val fc = FileContext.getFileContext(root.toUri, spark.sessionState.newHadoopConf())
     fc.rename(tmp, new Path(versionsDir, versionName(version)), Options.Rename.OVERWRITE)
@@ -1988,8 +2011,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       hashes: Seq[Long], residual: org.apache.spark.sql.Column): DataFrame = {
     require(hashes.nonEmpty, "point lookup needs at least one key")
     val (slices, dvs, smors) = resolveCurrent()
-      .map(r => (r.entries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-        r.mors.map(m => m._1 -> m._2.batch), r.dvs, r.smors))
+      .map(r => (r.slices, r.dvs, r.smors))
       .getOrElse((Nil, Nil, Nil))
     // a partition with an outstanding sparse patch of the LOOKUP
     // column is unprunable: its sketches were built over pre-patch
@@ -2305,8 +2327,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   def readRange(schema: StructType, statsCol: String,
       lo: Double, hi: Double): DataFrame = {
     val (slices, dvs, smors) = resolveCurrent()
-      .map(r => (r.entries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-        r.mors.map(m => m._1 -> m._2.batch), r.dvs, r.smors))
+      .map(r => (r.slices, r.dvs, r.smors))
       .getOrElse((Nil, Nil, Nil))
     // stats sidecars are written at batch-stage time and never
     // re-tightened by a delete, so post-delete bands can only be
@@ -2406,9 +2427,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   private[graft] def boxFilePaths(preds: Seq[(String, Double, Double)])
       : Seq[(Seq[String], Path)] = {
     val r = resolveCurrent()
-    boxFilePaths(r
-      .map(r => r.entries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-        r.mors.map(m => m._1 -> m._2.batch)).getOrElse(Nil), preds,
+    boxFilePaths(r.map(_.slices).getOrElse(Nil), preds,
       smorUnprunable(r.map(_.smors).getOrElse(Nil), preds))
   }
 
@@ -2471,8 +2490,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // after) and resurrect tombstoned rows — the exact race
     // resolveCurrent() exists for.
     val (slices, dvs, smors) = resolveCurrent()
-      .map(r => (r.entries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-        r.mors.map(m => m._1 -> m._2.batch), r.dvs, r.smors))
+      .map(r => (r.slices, r.dvs, r.smors))
       .getOrElse((Nil, Nil, Nil))
     requireWorkingNamesFree(schema, dv = dvs.nonEmpty, patch = smors.nonEmpty)
     val nonEmpty = boxFilePaths(slices, preds, smorUnprunable(smors, preds))
@@ -2663,9 +2681,10 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   def listPartitionDirs(batchPath: Path): Set[String] =
     SnapshotStore.partitionSizes(fs, batchPath).keySet
 
-  /** Delete orphans: batch dirs and manifests STRICTLY BELOW the
-    * `retain`-version window that nothing retained references, plus
-    * crashed `.tmp-*` leftovers.
+  /** Delete orphans: batch dirs, manifests and temp files STRICTLY
+    * BELOW the `retain`-version window that nothing retained
+    * references. Temp files carry the version they commit
+    * ([[tmpName]]); an untagged one is treated as below the window.
     *
     * Anything at or above the window floor survives even when
     * unreferenced — a fenced concurrent writer retries by staging a
@@ -2710,8 +2729,13 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
         .getOrElse(Set.empty[String])).toSet ++
       currentManifestName().map(readManifestBatches).getOrElse(Set.empty) ++
       clonePinned
+    // a temp file of a commit at or above the window may belong to a
+    // writer between its write and its rename: deleting it would fail
+    // that commit (the rename finds no source)
+    def tmpBelow(prefix: String, n: String): Boolean =
+      n.startsWith(prefix) && tmpVersion(prefix, n).forall(_ < keepMin)
     manifestNames.foreach { n =>
-      val doomed = n.startsWith(".tmp-") ||
+      val doomed = tmpBelow(".tmp-", n) ||
         (n.startsWith("v-") && parseVersion(n) < keepMin)
       if (doomed) fs.delete(new Path(manifestsDir, n), true)
     }
@@ -2719,7 +2743,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // manifests, so readAt fails the same clear way for both.
     if (fs.exists(versionsDir)) fs.listStatus(versionsDir).foreach { st =>
       val n = st.getPath.getName
-      if (n.startsWith(".tmp-") || (n.startsWith("v-") && parseVersion(n) < keepMin))
+      if (tmpBelow(".tmp-", n) || (n.startsWith("v-") && parseVersion(n) < keepMin))
         fs.delete(st.getPath, false)
     }
     if (fs.exists(dataDir)) fs.listStatus(dataDir).foreach { st =>
@@ -2772,7 +2796,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       val n = st.getPath.getName
       // .LOCK.stale-* = a lock takeover that crashed between its
       // arbiter rename and the tombstone delete — plain garbage.
-      if (n.startsWith(".CURRENT.tmp-") || n.startsWith(".LOCK.stale-"))
+      if (tmpBelow(".CURRENT.tmp-", n) || n.startsWith(".LOCK.stale-"))
         fs.delete(st.getPath, false)
     }
   }

@@ -65,18 +65,18 @@ object OccurrenceStream {
       .foreachBatch { (batch: DataFrame, _: Long) =>
         import graft.sinks.{SnapshotMerge, SnapshotStore}
         // No emptiness pre-check (a job of its own): a batch of empty
-        // transcripts scans to no rows, and an empty increment commits
-        // nothing. The fuzzy scan runs WITHOUT the skip guard; freshOnly then
-        // anti-joins against ONLY the buckets the scan's output
-        // touches (bucket is derived from the merge key, so an
-        // already-recorded pair can live nowhere else) — the guard
-        // must not re-read the whole accumulated table every batch.
-        val inc = SnapshotMerge.freshOnly(spark, targetDir,
+        // transcripts scans to no rows, and an increment with no new
+        // pair commits nothing. The fuzzy scan runs WITHOUT the skip
+        // guard; upsertIgnore pins it once and anti-joins against ONLY
+        // the buckets its output touches (bucket is derived from the
+        // merge key, so an already-recorded pair can live nowhere
+        // else) — the stream must not re-read the whole accumulated
+        // table every batch. Known pairs keep their row, as the skip
+        // guard's `ON CONFLICT DO UPDATE` never saw them either.
+        SnapshotMerge.upsertIgnore(spark, targetDir,
           Vcut.occurrenceScan(songs, vtuberSongs, archives, batch, threshold)
             .withColumn("bucket",
               pmod(col("live_recording_archive_id"), lit(buckets.toLong))),
-          Seq("vtuber_song_id", "live_recording_archive_id"), Seq("bucket"))
-        SnapshotMerge.upsertUpdate(spark, targetDir, inc,
           Seq("vtuber_song_id", "live_recording_archive_id"), Seq("bucket"))
         val store = new SnapshotStore(
           spark, new org.apache.hadoop.fs.Path(targetDir))

@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.functions._
 import graft.api.Vcut
 import graft.operators.{FuzzyOccurrence, TranscribeStub}
@@ -95,6 +96,22 @@ class EndToEndSpec extends SparkFunSuite {
     assert(t3.where(col("bvid") === "BVnew").count() == 1)
     assert(DiscoveryFetcher.pagesFetched ==
       Set((201L, 1), (201L, 2), (202L, 1)))
+  }
+
+  test("a committing discoverNewRecordingsIncremental call runs at most 4 SQL executions") {
+    val dir = tempDir("e2e_disc_exec").toString + "/archives"
+    def run(): Long = Vcut.discoverNewRecordingsIncremental(
+      spark, Seq(201L, 202L), dir,
+      classOf[DiscoveryFetcher].getName, pageSize = 2)
+    // the anchors collect, the insert's pin of the fetch, its pin of
+    // the fresh rows and the staged write: every one pays planning and
+    // code generation
+    DiscoveryFetcher.newestFirst = false
+    val (n1, e1) = JobCounter.executionsDuring(spark.sparkContext)(run())
+    assert(n1 == 5 && e1 <= 4, s"first run: $n1 rows in $e1 SQL executions")
+    DiscoveryFetcher.newestFirst = true
+    val (n2, e2) = JobCounter.executionsDuring(spark.sparkContext)(run())
+    assert(n2 == 1 && e2 <= 4, s"new upload: $n2 rows in $e2 SQL executions")
   }
 
   test("EP1 as a stream: checkpoint offsets replace table anchors across runs") {

@@ -1,6 +1,7 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.JobCounter
 import org.apache.spark.sql.types._
 import graft.streaming.OccurrenceStream
 
@@ -81,6 +82,24 @@ class OccurrenceStreamSpec extends SparkFunSuite {
     val v = store.currentVersion()
     run()
     assert(store.currentVersion() == v)
+  }
+
+  test("a drain micro-batch runs at most 3 SQL executions inside foreachBatch") {
+    val root = tempDir("occ_exec")
+    val drop = root.resolve("transcripts"); Files.createDirectories(drop)
+    val target = root.resolve("occurrences").toString
+    def run() = OccurrenceStream.runAvailableSnapshot(spark, drop.toString,
+      root.resolve("ckpt").toString, target, songs, vtuberSongs, archives, buckets = 8)
+    Files.writeString(drop.resolve("BVa.json"), doc)
+    run()
+    Files.writeString(drop.resolve("BVb.json"), doc)
+    // the insert's pin of the scan (the fuzzy scan runs inside it), its
+    // pin of the fresh pairs and the staged write; the micro-batch's
+    // own execution is not nested
+    val (_, n) = JobCounter.executionsDuring(spark.sparkContext, nestedOnly = true)(run())
+    assert(n <= 3, s"one micro-batch ran $n SQL executions inside foreachBatch")
+    assert(graft.sinks.SnapshotMerge.read(spark, target, occSchema)
+      .select("live_recording_archive_id").as[Long].collect().toSet == Set(1L, 2L))
   }
 
   test("a batch of only empty transcripts commits no version and leaves the table unchanged") {

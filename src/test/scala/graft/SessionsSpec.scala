@@ -36,6 +36,7 @@ class SessionsSpec extends SparkFunSuite {
       "spark.sql.session.timeZone" -> "UTC",
       "spark.sql.legacy.parquet.nanosAsLong" -> "true",
       "spark.sql.adaptive.coalescePartitions.minPartitionSize" -> "64k",
+      "spark.sql.codegen.cache.maxEntries" -> "1000",
       "spark.hadoop.fs.file.impl" -> classOf[graft.hadoop.FastLocalFileSystem].getName,
       "spark.hadoop.fs.AbstractFileSystem.file.impl" -> classOf[graft.hadoop.FastLocalFs].getName,
       "spark.ui.enabled" -> "false",

@@ -46,6 +46,57 @@ class SnapshotMergeSpec extends SparkFunSuite {
     assert(readVals(dir) == want)
   }
 
+  test("upsertIgnore of only known keys returns 0 and commits no version, no vacuum") {
+    val dir = seed()
+    SnapshotMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
+    SnapshotMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
+    val store = new SnapshotStore(spark, new Path(dir))
+    val v = store.currentVersion()
+    val entries = store.current().get._2
+    val rows = readVals(dir)
+    // an orphan below the retention window: any vacuum would take it
+    val orphan = store.dataPath("b-000000000001-orphan")
+    store.fs.mkdirs(orphan)
+    val known = Seq((0L, "X0", 0L), (6L, "X6", 1L), (6L, "Y6", 1L), (11L, "X11", 1L))
+      .toDF("id", "v", "pk")
+    assert(SnapshotMerge.upsertIgnore(spark, dir, known, Seq("id"), Seq("pk")) == 0L)
+    assert(store.currentVersion() == v, "nothing new must commit no version")
+    assert(store.current().get._2 == entries)
+    assert(store.fs.exists(orphan), "nothing new must run no vacuum")
+    assert(readVals(dir) == rows)
+  }
+
+  test("upsertIgnore keeps a partition with only known keys by reference while another gains rows") {
+    val dir = seed()
+    val store = new SnapshotStore(spark, new Path(dir))
+    val before = store.current().get._2
+    // ids 0 and 5 live in pk=0 already; id 11 is new in pk=1
+    val inc = Seq((0L, "X0", 0L), (5L, "X5", 0L), (11L, "N11", 1L)).toDF("id", "v", "pk")
+    assert(SnapshotMerge.upsertIgnore(spark, dir, inc, Seq("id"), Seq("pk")) == 1L)
+    val after = store.current().get._2
+    assert(after("pk=0") == before("pk=0"),
+      "a touched partition that gains no row must keep its batch entry")
+    assert(after("pk=1") != before("pk=1"))
+    (2L to 4L).foreach(pk => assert(after(s"pk=$pk") == before(s"pk=$pk")))
+    assert(readVals(dir) ==
+      targetRows.collect().map(r => r.getLong(0) -> r.getString(1)).toMap + (11L -> "N11"))
+  }
+
+  test("upsertIgnore's count is exact with duplicated and republished keys") {
+    val dir = seed()
+    // new keys 20, 21, 22 (20 and 21 twice each); 3 and 8 republished
+    val inc = Seq((20L, "A", 0L), (20L, "B", 0L), (21L, "C", 1L), (21L, "C", 1L),
+      (3L, "R3", 3L), (8L, "R8", 3L), (22L, "D", 3L)).toDF("id", "v", "pk")
+    assert(SnapshotMerge.upsertIgnore(spark, dir, inc, Seq("id"), Seq("pk")) == 3L)
+    val vals = readVals(dir)
+    assert(SnapshotMerge.read(spark, dir, targetRows.schema).count() == 13L,
+      "each new key lands once")
+    assert(vals(3L) == "t3" && vals(8L) == "t8", "known keys keep their row")
+    assert(Set("A", "B").contains(vals(20L)) && vals(21L) == "C" && vals(22L) == "D")
+    // the same batch again adds nothing
+    assert(SnapshotMerge.upsertIgnore(spark, dir, inc, Seq("id"), Seq("pk")) == 0L)
+  }
+
   test("untouched partitions are carried forward by reference — same batch, same bytes") {
     val dir = seed()
     val store = new SnapshotStore(spark, new Path(dir))
@@ -116,6 +167,35 @@ class SnapshotMergeSpec extends SparkFunSuite {
     assert(versions == Set(2L, 3L),
       s"retention window is current + previous, got versions $versions")
     assert(readVals(dir)(0L) == "U0b")
+  }
+
+  test("vacuum sweeps only commit temp files tagged below the retention window") {
+    val dir = seed()
+    SnapshotMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
+    SnapshotMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
+    val store = new SnapshotStore(spark, new Path(dir))
+    assert(store.currentVersion().contains(3L))
+    // retain = 2 keeps versions 2 and 3: a tag of 4 is a commit in
+    // flight, a tag of 1 a crashed writer's leftover
+    def tmps(v: Long) = Seq(s"manifests/.tmp-v-00000000000$v-x",
+      s"versions/.tmp-v-00000000000$v-x", s".CURRENT.tmp-v-00000000000$v-x")
+      .map(n => new Path(dir, n))
+    (tmps(1L) ++ tmps(4L)).foreach(p => store.fs.create(p, true).close())
+    store.vacuum(2)
+    tmps(4L).foreach(p => assert(store.fs.exists(p), s"in-flight $p must survive"))
+    tmps(1L).foreach(p => assert(!store.fs.exists(p), s"below-window $p must go"))
+  }
+
+  test("a vacuum between a writer's temp write and its rename does not fail the commit") {
+    val dir = seed()
+    val store = new SnapshotStore(spark, new Path(dir))
+    // the hook runs with the pointer temp file written, right before
+    // its rename: a concurrent writer's trailing vacuum lands there
+    store.beforeSwapHook = () => new SnapshotStore(spark, new Path(dir)).vacuum()
+    val (v, _) = store.currentSized().get
+    store.commitSized(v + 1, store.currentSized().get._2, Some(v))
+    assert(store.currentVersion().contains(v + 1))
+    assert(readVals(dir) == targetRows.collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
   }
 
   test("a reader pinned before a commit+vacuum still reads its version in full") {
@@ -609,17 +689,17 @@ class SnapshotMergeSpec extends SparkFunSuite {
     assert(e.getMessage.contains("keys"))
   }
 
-  test("freshOnly without partition columns is refused before any job runs") {
+  test("upsertIgnore without partition columns is refused before any job runs") {
     // with no partition columns the touched set is one empty suffix
-    // that matches no manifest entry: the guard would read nothing and
-    // call every committed key "fresh"
+    // that matches no manifest entry: the anti-join would read nothing
+    // and call every committed key new
     val dir = seed()
     val (e, jobs) = JobCounter.jobsDuring(spark.sparkContext)(
       intercept[IllegalArgumentException] {
-        SnapshotMerge.freshOnly(spark, dir, incomingRows, Seq("id"), Nil)
+        SnapshotMerge.upsertIgnore(spark, dir, incomingRows, Seq("id"), Nil)
       })
     assert(e.getMessage.contains("snapshot tables are partitioned"), e.getMessage)
-    assert(jobs == 0, s"the refused guard ran $jobs job(s)")
+    assert(jobs == 0, s"the refused insert ran $jobs job(s)")
   }
 
   test("null and empty-string partition values are rejected up front") {
@@ -630,7 +710,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
     }
     assert(e1.getMessage.contains("empty-string"))
     val e2 = intercept[IllegalArgumentException] {
-      SnapshotMerge.freshOnly(spark, dir, empty, Seq("id"), Seq("pk"))
+      SnapshotMerge.upsertIgnore(spark, dir, empty, Seq("id"), Seq("pk"))
     }
     assert(e2.getMessage.contains("empty-string"))
   }
