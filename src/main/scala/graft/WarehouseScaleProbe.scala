@@ -159,8 +159,8 @@ object WarehouseScaleProbe {
           lit("U").as("o_orderstatus"), col("pk"))
       def newBatchBytes(store: graft.sinks.SnapshotStore,
           before: Set[String]): Long = {
-        val (_, entries, _, mors) = store.currentResolved().get
-        (entries.values.toSeq ++ mors.map(_._2))
+        val cur = store.resolveCurrent().get
+        (cur.entries.values.toSeq ++ cur.mors.map(_._2))
           .filter(e => !before.contains(e.batch)).map(_.bytes).sum
       }
       def run(mor: Boolean): (Double, Seq[Long], Seq[Double], Double) = {
@@ -173,9 +173,7 @@ object WarehouseScaleProbe {
           val readS = scala.collection.mutable.ArrayBuffer.empty[Double]
           val (_, s) = timed {
             (0 until nCycles).foreach { i =>
-              val before = store.currentResolved().get match {
-                case (_, e, _, m) => e.values.map(_.batch).toSet ++ m.map(_._2.batch)
-              }
+              val before = store.resolveCurrent().get.batches
               if (mor) graft.sinks.SnapshotMerge.upsertMor(spark, base,
                 cycle(i), Seq("o_orderkey"), Seq("pk"), retain = 8)
               else graft.sinks.SnapshotMerge.upsertUpdate(spark, base,

@@ -470,25 +470,23 @@ object Vcut {
       .writeStream
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty) {
-          val updates = batch
-            .withColumn("song_title", extractSongTitle(col("title")))
-            .where(col("song_title").isNotNull)
-            .join(broadcast(profiles.select(col("id").as("vtuber_profile_id"),
-              col("mid"))), "mid")
-            .join(broadcast(index), Seq("song_title", "vtuber_profile_id"))
-            .groupBy(col("vtuber_song_id").as("id"))
-            .agg(max(struct(col("pubdate"), col("bvid"))).as("u"))
-            .select(col("id"), col("u.bvid").as("bvid"),
-              col("u.pubdate").as("pubdate"),
-              pmod(col("id"), lit(buckets.toLong)).as("bucket"))
-          // K3 through ONE pruned, fenced merge: only the touched
-          // buckets are read (from the same snapshot resolution the
-          // commit fences on), matched rows get the new bvid/pubdate,
-          // unmatched rows and untouched buckets carry forward
-          SnapshotMerge.merge(spark, vtuberSongTableDir, updates, Seq("bucket"))(
-            (target, u) => Merge.joinUpdate(target, u, "id", Seq("bvid", "pubdate")))
-        }
+        val updates = batch
+          .withColumn("song_title", extractSongTitle(col("title")))
+          .where(col("song_title").isNotNull)
+          .join(broadcast(profiles.select(col("id").as("vtuber_profile_id"),
+            col("mid"))), "mid")
+          .join(broadcast(index), Seq("song_title", "vtuber_profile_id"))
+          .groupBy(col("vtuber_song_id").as("id"))
+          .agg(max(struct(col("pubdate"), col("bvid"))).as("u"))
+          .select(col("id"), col("u.bvid").as("bvid"),
+            col("u.pubdate").as("pubdate"),
+            pmod(col("id"), lit(buckets.toLong)).as("bucket"))
+        // K3 through ONE pruned, fenced merge: only the touched
+        // buckets are read (from the same snapshot resolution the
+        // commit fences on), matched rows get the new bvid/pubdate,
+        // unmatched rows and untouched buckets carry forward
+        SnapshotMerge.merge(spark, vtuberSongTableDir, updates, Seq("bucket"))(
+          (target, u) => Merge.joinUpdate(target, u, "id", Seq("bvid", "pubdate")))
         ()
       }
       .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())

@@ -1028,7 +1028,7 @@ object Pipeline extends QueryModule {
         // is a multiple of 5), inserts ≡2 (mod 10) in pk=2 — so pk=1
         // carries both slices (hot at maxSlices=2) and pk=2 none; the
         // fold must leave ZERO slice lines
-        val (_, _, _, mors) = store.currentResolved().get
+        val mors = store.resolveCurrent().get.mors
         require(mors.isEmpty, s"slice compaction left slices: $mors")
         graft.sinks.SnapshotMerge.read(s, base, target.schema)
           .select(col("o_orderkey"), col("o_totalprice"),

@@ -71,7 +71,7 @@ object SnapshotMerge {
     val (pinned, touched, _) = pinTouched(inc.dropDuplicates(ks), partCols)
     if (touched.isEmpty) return 0L
     val cur = store.resolveCurrent()
-    val base = baseOf(cur)
+    val base = cur.getOrElse(SnapshotStore.Resolved.empty)
     // the committed keys of the touched partitions only (keys are
     // never patched, so sparse slices need no resolution here)
     val known = store.readSlices(base.slices, pinned.schema, touched,
@@ -193,8 +193,8 @@ object SnapshotMerge {
 
     val cur = store.resolveCurrent()
     requireSchemaBase(store, schemaBase, cur.map(_.version))
-    val SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
-      curSmors, _, _) = baseOf(cur)
+    val base @ SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
+      curSmors, _, _) = cur.getOrElse(SnapshotStore.Resolved.empty)
     store.beforeMorCommitHook()
 
     // Positions of the CURRENT copies of incoming keys — across the
@@ -205,7 +205,7 @@ object SnapshotMerge {
     // table. Sparse patches are NOT resolved here: only key columns
     // are consumed, and keys are never patched — skipping the patch
     // joins is free correctness.
-    val liveMeta = store.liveWithMeta(baseOf(cur).slices, incoming.schema,
+    val liveMeta = store.liveWithMeta(base.slices, incoming.schema,
       touched, curDvs)
     val hits = liveMeta
       .join(incoming.select(keysPhys.map(col): _*), keysPhys, "left_semi")
@@ -398,8 +398,8 @@ object SnapshotMerge {
     if (touched.isEmpty) return None
 
     val cur = store.resolveCurrent()
-    val SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
-      curSmors, _, _) = baseOf(cur)
+    val base @ SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
+      curSmors, _, _) = cur.getOrElse(SnapshotStore.Resolved.empty)
     store.beforeMorCommitHook()
 
     // Split on LIVE key membership within the touched partitions
@@ -407,7 +407,7 @@ object SnapshotMerge {
     // it to the key columns; patches skipped — keys are never
     // patched): matched keys become a sparse PATCH, unmatched keys
     // insert whole rows.
-    val liveKeys = store.readSlices(baseOf(cur).slices, incoming.schema,
+    val liveKeys = store.readSlices(base.slices, incoming.schema,
       touched, curDvs).select(keysPhys.map(col): _*)
     // ONE membership join + ONE pin, filtered twice from cache (a
     // semi + anti pair would run the join and the materialization
@@ -960,13 +960,12 @@ object SnapshotMerge {
   private def storedSchema(spark: SparkSession,
       store: SnapshotStore): Option[StructType] =
     store.currentSchema().orElse {
-      store.currentResolved().map { case (_, entries, _, mors) =>
+      store.resolveCurrent().map { cur =>
         // ONE batch dir, scanned with itself as basePath: every batch
         // of a pre-evolution table carries the caller-contract schema
         // (evolved tables never reach this fallback), and a multi-dir
         // read would trip Spark's conflicting-partition-roots check
-        val batch = (entries.values.map(_.batch) ++ mors.map(_._2.batch))
-          .toSeq.sorted.head
+        val batch = cur.slices.map(_._2).sorted.head
         val p = store.dataPath(batch).toString
         spark.read.option("basePath", p).parquet(p).schema
       }
@@ -1124,14 +1123,6 @@ object SnapshotMerge {
     }
     cs
   }
-
-  /** The base a commit path builds on: the resolved current commit,
-    * or an empty version-0 table when nothing has committed yet (the
-    * fence still takes `cur.map(_.version)`, which tells the two
-    * apart).
-    */
-  private def baseOf(cur: Option[SnapshotStore.Resolved]): SnapshotStore.Resolved =
-    cur.getOrElse(SnapshotStore.Resolved(0L, Map.empty, Nil, Nil, Nil, None, None))
 
   /** The schema-resolution fence shared by the evolve commit paths —
     * see `schemaBase` on [[mergePhys]].
@@ -1312,7 +1303,7 @@ object SnapshotMerge {
 
     val cur = store.resolveCurrent()
     requireSchemaBase(store, schemaBase, cur.map(_.version))
-    val base = baseOf(cur)
+    val base = cur.getOrElse(SnapshotStore.Resolved.empty)
 
     // Manifest-level prune from the SAME snapshot resolution that the
     // commit below fences on: only the touched partitions' data dirs
@@ -1380,7 +1371,7 @@ object SnapshotMerge {
       partCols: Seq[String], rewritten: Set[String], retain: Int,
       statsCols: Seq[String], embedSchema: Option[StructType],
       validated: Option[Map[String, String]]): Long = {
-    val base = baseOf(cur)
+    val base = cur.getOrElse(SnapshotStore.Resolved.empty)
     val newVersion = base.version + 1
     val (batch, written) = store.stageBatch(rows, partCols, newVersion)
     require(written.keySet.subsetOf(rewritten),

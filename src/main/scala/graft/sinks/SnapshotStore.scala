@@ -4,7 +4,7 @@ import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, lit, when}
-import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** A [[SnapshotStore.commit]] found the table advanced past the
   * version the merge was derived from: another writer committed in
@@ -39,15 +39,16 @@ object SnapshotStore {
   final case class SparseSlice(suffix: String, batch: String, bytes: Long,
       keys: Seq[String], cols: Seq[String])
 
-  /** One resolution of a committed manifest — everything a writer
-    * must derive BOTH its read and its commit fence from (two pointer
-    * reads can straddle a concurrent commit). Carry-forward contract:
-    * a committer that keeps a partition's existing files keeps its
+  /** One parsed manifest: the committed version, and the only value a
+    * manifest is ever read into. Everything a writer must derive BOTH
+    * its read and its commit fence from (two pointer reads can
+    * straddle a concurrent commit). Carry-forward contract: a
+    * committer that keeps a partition's existing files keeps its
     * deletion vectors, `#mor` slices AND `#smor` sparse slices; a
     * committer that rewrites a partition drops that partition's
     * slices — the rewrite IS their materialization.
-    */
-  /** `schemaJson` — the table schema EMBEDDED in this version's
+    *
+    * `schemaJson` — the table schema EMBEDDED in this version's
     * manifest (`#schema` line), authoritative for exactly this
     * version. Written atomically WITH the commit, unlike the
     * post-commit sidecar files, so a racing schema reader can never
@@ -56,8 +57,8 @@ object SnapshotStore {
     * forward like dvs/mors; the evolve/rename/drop paths REPLACE it
     * with their new schema. Sidecar files are still written for
     * beyond-retention history ([[SnapshotStore.schemaHistory]]).
-    */
-  /** `constraints` — the CHECK-constraint set in force from this
+    *
+    * `constraints` — the CHECK-constraint set in force from this
     * version on, EMBEDDED in the manifest (`#constraintset` marker +
     * one `#constraint` line per entry) exactly like the schema, so
     * add/drop/restore publish data and the constraint set governing
@@ -80,6 +81,26 @@ object SnapshotStore {
       */
     def slices: Seq[(String, String)] =
       entries.toSeq.map(kv => kv._1 -> kv._2.batch) ++ mors.map(m => m._1 -> m._2.batch)
+
+    /** Every batch dir this version references — base entries AND
+      * merge-on-read slices, full and sparse: [[SnapshotStore.vacuum]]'s
+      * liveness set (a slice batch collected early would silently lose
+      * rows).
+      */
+    def batches: Set[String] =
+      entries.values.map(_.batch).toSet ++ mors.map(_._2.batch) ++ smors.map(_.batch)
+
+    /** The embedded table schema, decoded. */
+    def schema: Option[StructType] =
+      schemaJson.map(j => DataType.fromJson(j).asInstanceOf[StructType])
+  }
+
+  object Resolved {
+    /** The base of a table that has never committed: version 0, no
+      * entries (a fence still takes the real `Option`, which tells the
+      * two apart).
+      */
+    val empty: Resolved = Resolved(0L, Map.empty, Nil, Nil, Nil, None, None)
   }
 
   /** Deployment-wide commit-backend wiring: every [[SnapshotStore]]
@@ -211,11 +232,14 @@ object SnapshotStore {
   * free from Postgres, for training-data snapshots that must be
   * re-readable bit-for-bit.
   *
-  * FORMAT NOTE: every commit writes manifest header `graft-snapshot 2`
-  * (the sized format), which a pre-v2 build rejects. The upgrade is
-  * one-way: once any merge lands on a table under this build, rolling
-  * the BINARY back past v2 support cannot read the table (the data
-  * files themselves are untouched plain parquet).
+  * FORMAT NOTE: every commit writes the LOWEST manifest header from
+  * `graft-snapshot 2` to `graft-snapshot 5` that can represent its
+  * manifest (2 sized entries, 3 `#mor` slices, 4 `#smor` slices or an
+  * embedded schema, 5 an embedded constraint set — see
+  * [[commitSized]]), and a build older than that header rejects it.
+  * The upgrade is one-way: once a merge lands a header on a table,
+  * rolling the BINARY back past that header's support cannot read the
+  * table (the data files themselves are untouched plain parquet).
   */
 final class SnapshotStore(val spark: SparkSession, val root: Path,
     lockWaitMs: Long = 30000L, lockStaleMs: Long = 600000L) {
@@ -430,10 +454,10 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     finally in.close()
   }
 
-  /** Manifest file name the CURRENT pointer references, if any. */
-  /** The CURRENT pointer read tolerates two transient local-FS
-    * artifacts of a RACING writer's swap, both impossible on a real
-    * object store / HDFS (single-op atomic rename there):
+  /** Manifest file name the CURRENT pointer references, if any. The
+    * read tolerates two transient local-FS artifacts of a RACING
+    * writer's swap, both impossible on a real object store / HDFS
+    * (single-op atomic rename there):
     *  - Hadoop's ChecksumFs renames the data file and its `.crc`
     *    sidecar as TWO metadata ops, so a read between them sees the
     *    new bytes verified against the old crc → ChecksumException
@@ -493,9 +517,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   private def embeddedSchemaAt(version: Long): Option[StructType] = {
     val name = versionLogEntry(version).orElse(
       currentManifestName().filter(parseVersion(_) == version))
-    name.flatMap(n => scala.util.Try(readManifestAll(n)._5).toOption.flatten)
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
+    name.flatMap(n => scala.util.Try(parseManifest(n)).toOption).flatMap(_.schema)
   }
 
   private def sidecarSchemaAt(version: Long): Option[StructType] = {
@@ -518,9 +540,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   def currentSchema(): Option[StructType] =
     currentManifestName().flatMap { n =>
-      scala.util.Try(readManifestAll(n)._5).toOption.flatten
-        .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-          .asInstanceOf[StructType])
+      scala.util.Try(parseManifest(n)).toOption.flatMap(_.schema)
         .orElse(sidecarSchemaAt(parseVersion(n)))
     }
 
@@ -555,43 +575,34 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     val committedNames: Seq[String] =
       (versions().flatMap(versionLogEntry) ++ currentManifestName().toSeq).distinct
     val embedded: Seq[StructType] = committedNames
-      .flatMap(n => scala.util.Try(readManifestAll(n)._5).toOption.flatten)
+      .flatMap(n => scala.util.Try(parseManifest(n)).toOption.flatMap(_.schema))
       .distinct
-      .map(j => org.apache.spark.sql.types.DataType.fromJson(j)
-        .asInstanceOf[StructType])
     sidecars ++ embedded.filterNot(sidecars.contains)
   }
 
 
-  /** Live partition map with recorded sizes. Format v1
-    * (`graft-snapshot 1`, `suffix\tbatch`) reads with unknown bytes
-    * (-1); v2 (`graft-snapshot 2`) appends a bytes column so metadata
-    * consumers ([[compactIncremental]]'s ranking) never walk the
-    * filesystem for sizes the writer already knew; v3
-    * (`graft-snapshot 3`) additionally carries `#mor` append-slice
-    * lines (merge-on-read updates) and is only emitted when some
-    * partition actually has one — tables that never MoR-update stay
-    * byte-identical v2.
+  /** ONE parse of a manifest file into [[SnapshotStore.Resolved]], the
+    * version taken from its name — the only way a manifest is read.
+    * Format v1 (`graft-snapshot 1`, `suffix\tbatch`) reads with unknown
+    * bytes (-1); v2 appends a bytes column so metadata consumers
+    * ([[compactIncremental]]'s ranking) never walk the filesystem for
+    * sizes the writer already knew; v3 adds `#mor` append-slice lines,
+    * v4 `#smor` sparse slices and the `#schema` line, v5 the embedded
+    * constraint set. `#dv` lines reference deletion-vector files and
+    * `#mor` lines reference APPEND SLICES — additional (suffix, batch)
+    * pairs whose rows belong to the partition ON TOP of its base entry
+    * (the merge-on-read write path: updates tombstone old row versions
+    * via a DV and append the new versions as a slice, no partition
+    * rewrite). No marker can collide with a real suffix — partition
+    * dirs are `col=val` forms and can never start with `#`. The
+    * manifest is the sole source of DV/slice applicability — a dir
+    * staged by a crashed or fenced writer is never referenced and so
+    * never applies, and a later version that materialized them
+    * (compaction, full replace) simply lists none. `constraints` is
+    * the EMBEDDED set only; the pre-embedding sidecar fallback lives in
+    * [[resolveCurrent]].
     */
-  /** ONE parse of a manifest file: (sized base entries, deletion-
-    * vector names, merge-on-read append slices). `#dv` lines
-    * reference deletion-vector files and `#mor` lines reference
-    * APPEND SLICES — additional (suffix, batch) pairs whose rows
-    * belong to the partition ON TOP of its base entry (the
-    * merge-on-read write path: updates tombstone old row versions via
-    * a DV and append the new versions as a slice, no partition
-    * rewrite). Neither marker can collide with a real suffix —
-    * partition dirs are `col=val` forms and can never start with `#`.
-    * The manifest is the sole source of DV/slice applicability — a
-    * dir staged by a crashed or fenced writer is never referenced and
-    * so never applies, and a later version that materialized them
-    * (compaction, full replace) simply lists none.
-    */
-  private def readManifestAll(name: String)
-      : (Map[String, SnapshotStore.SnapshotEntry], Seq[String],
-         Seq[(String, SnapshotStore.SnapshotEntry)],
-         Seq[SnapshotStore.SparseSlice], Option[String],
-         Option[Map[String, String]]) = {
+  private def parseManifest(name: String): SnapshotStore.Resolved = {
     val lines = readSmallFile(new Path(manifestsDir, name))
       .linesIterator.toList
     val header = lines.headOption.getOrElse("")
@@ -647,67 +658,32 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       SnapshotStore.SparseSlice(suffix, batch, bytes.toLong,
         keys.split(',').toSeq, cols.split(',').toSeq)
     }
-    (entries, dvLines.map(_.split('\t')(1)), mors, smors,
+    SnapshotStore.Resolved(parseVersion(name), entries,
+      dvLines.map(_.split('\t')(1)), mors, smors,
       schemaLines.headOption.map(_.stripPrefix("#schema\t")), constraints)
   }
 
-  private def readManifestSized(name: String): Map[String, SnapshotStore.SnapshotEntry] =
-    readManifestAll(name)._1
-
-  private def readManifestDvs(name: String): Seq[String] =
-    readManifestAll(name)._2
-
-  /** Every batch dir a manifest references — base entries AND
-    * merge-on-read slices (full and sparse) — for vacuum's liveness
-    * sweep.
-    */
-  private def readManifestBatches(name: String): Set[String] = {
-    val (entries, _, mors, smors, _, _) = readManifestAll(name)
-    entries.values.map(_.batch).toSet ++ mors.map(_._2.batch) ++
-      smors.map(_.batch)
-  }
-
-  /** One-pointer-read resolution of the CURRENT commit: (version,
-    * sized base entries, deletion-vector names, merge-on-read append
-    * slices) all from the same manifest file — the quadruple every
-    * writer must derive its read AND its commit fence from (two
-    * pointer reads can straddle a concurrent commit). Any committer
-    * that keeps existing batch files must carry the DV list AND the
-    * untouched partitions' slices forward; dropping a slice it didn't
-    * rewrite loses rows.
-    */
-  def currentResolved(): Option[(Long, Map[String, SnapshotStore.SnapshotEntry],
-      Seq[String], Seq[(String, SnapshotStore.SnapshotEntry)])] =
-    resolveCurrent().map(r => (r.version, r.entries, r.dvs, r.mors))
-
-  /** The full resolution INCLUDING column-sparse `#smor` slices —
-    * what every COMMITTER must build from ([[currentResolved]]'s
-    * 4-tuple drops the sparse list and is for inspection only: a
-    * commit derived from it on a table with outstanding sparse
-    * patches would silently lose them).
+  /** One-pointer-read resolution of the CURRENT commit — what every
+    * COMMITTER must build from: its read AND its commit fence come from
+    * the same manifest file (two pointer reads can straddle a
+    * concurrent commit), and carrying its DVs, full and sparse slices
+    * forward is the carry-forward contract of [[SnapshotStore.Resolved]].
+    * A pre-embedding manifest on a table that DID use constraints
+    * resolves its set through the sidecar history (and migrates to
+    * embedded on its next commit); Some(empty) post-drop never falls
+    * back.
     */
   def resolveCurrent(): Option[SnapshotStore.Resolved] =
     currentManifestName().map { n =>
-      val (entries, dvs, mors, smors, schemaJson, cons) = readManifestAll(n)
-      val version = parseVersion(n)
-      // pre-embedding manifests on a table that DID use constraints
-      // resolve through the sidecar history (and migrate to embedded
-      // on their next commit); Some(empty) post-drop never falls back
-      val effective = cons.orElse(
-        if (fs.exists(constraintsDir)) Some(constraintsAt(version)) else None)
-      SnapshotStore.Resolved(version, entries, dvs, mors, smors,
-        schemaJson, effective)
+      val r = parseManifest(n)
+      if (r.constraints.isDefined || !fs.exists(constraintsDir)) r
+      else r.copy(constraints = Some(constraintsAt(r.version)))
     }
 
-  /** `(version, manifest)` of the committed snapshot, if any. */
+  /** `(version, partition -> batch)` of the committed snapshot, if any. */
   def current(): Option[(Long, Map[String, String])] =
-    currentSized().map { case (v, m) =>
-      (v, m.view.mapValues(_.batch).toMap)
-    }
-
-  /** [[current]] with each entry's recorded byte size. */
-  def currentSized(): Option[(Long, Map[String, SnapshotStore.SnapshotEntry])] =
-    currentManifestName().map(n => (parseVersion(n), readManifestSized(n)))
+    currentManifestName().map(parseManifest)
+      .map(r => (r.version, r.entries.view.mapValues(_.batch).toMap))
 
   /** [[commit]] with the expected base derived from `version` — for
     * callers constructing the next version directly from the current
@@ -736,11 +712,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       expectedBase)
 
   /** [[commit]] carrying per-partition byte sizes into the manifest
-    * (format v2) — the merge and compaction paths record the sizes
+    * (format v2 and up) — the merge and compaction paths record the sizes
     * they learned from their own post-write walk, so later compactions
     * rank batches from the manifest alone.
-    */
-  /** `dvs` — deletion-vector dir names (under deletes/) whose
+    *
+    * `dvs` — deletion-vector dir names (under deletes/) whose
     * tombstones apply to this version's reads, written into the
     * manifest as `#dv` lines. A committer that keeps ANY existing
     * batch files must carry the base's DV list forward (entries for
@@ -748,8 +724,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * batch); a committer that rewrites or replaces the whole table
     * (compact/compactClustered/compactZOrder/replaceAll) passes the
     * default Nil, which is what MATERIALIZES deletes.
-    */
-  /** `mors` — merge-on-read append slices, written as `#mor` lines:
+    *
+    * `mors` — merge-on-read append slices, written as `#mor` lines:
     * additional (suffix, batch) pairs whose rows belong to the
     * partition on top of its base entry. Same carry-forward contract
     * as `dvs`: a committer that keeps a partition's existing files
@@ -759,8 +735,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * entry ([[SnapshotMerge.upsertMor]] promotes brand-new partitions
     * to base entries), so partition-set invariants stay expressible
     * over `entries` alone.
-    */
-  /** `smors` — COLUMN-SPARSE merge-on-read patch slices, written as
+    *
+    * `smors` — COLUMN-SPARSE merge-on-read patch slices, written as
     * `#smor` lines (`suffix, batch, bytes, keys, cols` — key/col
     * lists comma-joined; the sparse writer refuses names carrying
     * `,`/tab/newline). Same carry-forward contract as `mors`; a
@@ -768,15 +744,15 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * build REJECTS — reading a sparse slice as a full slice would
     * surface NULL for every unpatched column, so loud refusal is the
     * only safe downgrade.
-    */
-  /** `schemaJson` — the table schema to EMBED in this manifest
+    *
+    * `schemaJson` — the table schema to EMBED in this manifest
     * (`#schema` line), atomic with the commit. Committers on an
     * evolved table must CARRY the resolved base's value (like dvs and
     * slices — dropping it reopens the sidecar-lag race this field
     * closes); the evolve/rename/drop paths pass their NEW schema.
     * None keeps pre-evolution tables byte-identical.
-    */
-  /** `constraints` — the CHECK-constraint set to EMBED in this
+    *
+    * `constraints` — the CHECK-constraint set to EMBED in this
     * manifest (see [[SnapshotStore.Resolved.constraints]]). None
     * (default) = CARRY the base's effective set forward, resolved
     * here so no committer can forget it (dropping the set would
@@ -1014,13 +990,13 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * whose log entry exists is readable in full.
     */
   def readAt(version: Long, schema: StructType): DataFrame = {
-    val (entries, dvs, mors, smors) = resolvedAt(version)
-    readSlices(entries.toSeq ++ mors, schema, null, dvs, smors)
+    val r = resolvedAt(version)
+    readSlices(r.slices, schema, null, r.dvs, r.smors)
   }
 
   /** The committed manifest of `version`, resolved through the version
     * log with the same winner proof as [[readAt]] (which is this
-    * resolution + [[readEntries]]).
+    * resolution + [[readSlices]]).
     */
   private def manifestNameAt(version: Long): String = {
     val cur = currentVersion().getOrElse(throw new IllegalArgumentException(
@@ -1035,31 +1011,23 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
           "(or predates the version log) — no provable winner remains"))
   }
 
-  /** ONE resolution + ONE parse of the winning manifest at `version`:
-    * (entries, deletion-vector names), with the retention-window
-    * error mapping. DVs committed after `version` must NOT apply to a
-    * read of it (the files they reference exist at `version` too,
-    * with their rows still live) — which is why the DV list rides the
-    * per-version manifest rather than a directory listing.
+  /** ONE resolution + ONE parse of the winning manifest at `version`,
+    * with the retention-window error mapping. DVs committed after
+    * `version` must NOT apply to a read of it (the files they
+    * reference exist at `version` too, with their rows still live) —
+    * which is why the DV list rides the per-version manifest rather
+    * than a directory listing.
     */
-  private def resolvedAt(version: Long)
-      : (Map[String, String], Seq[String], Seq[(String, String)],
-         Seq[SnapshotStore.SparseSlice]) = {
+  private def resolvedAt(version: Long): SnapshotStore.Resolved = {
     val name = manifestNameAt(version)
-    try {
-      val (entries, dvs, mors, smors, _, _) = readManifestAll(name)
-      (entries.view.mapValues(_.batch).toMap, dvs,
-        mors.map(m => m._1 -> m._2.batch), smors)
-    } catch {
+    try parseManifest(name)
+    catch {
       case _: java.io.FileNotFoundException =>
         throw new IllegalArgumentException(
           s"${versionName(version)}'s manifest was vacuumed from $root — " +
             "widen vacuum retention to cover the oldest pinned reader")
     }
   }
-
-  private def manifestEntriesAt(version: Long): Map[String, String] =
-    resolvedAt(version)._1
 
   /** Partitions whose manifest entry moved between two committed
     * versions — the pruning set for [[readChangesBetween]]. A batch
@@ -1069,35 +1037,28 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * over-approximate: a compaction rewrites partitions into a fresh
     * batch without changing content — those diff to zero rows.)
     */
-  def changedPartitionsBetween(fromVersion: Long, toVersion: Long): Set[String] = {
-    val (m1, d1, r1, s1) = resolvedAt(fromVersion)
-    val (m2, d2, r2, s2) = resolvedAt(toVersion)
-    (m1.keySet ++ m2.keySet).filter(s => m1.get(s) != m2.get(s)) ++
-      morChangedSuffixes(r1, r2) ++ dvChangedSuffixes(d1, d2) ++
-      smorChangedSuffixes(s1, s2)
-  }
+  def changedPartitionsBetween(fromVersion: Long, toVersion: Long): Set[String] =
+    changeSet(resolvedAt(fromVersion), resolvedAt(toVersion))
 
-  /** Partitions whose SPARSE slice list differs between two versions —
-    * a sparse patch keeps the base entry AND commits no DV, so both
-    * other diffs are blind to it.
+  /** The partitions whose rows may differ between `a` and `b`: those
+    * whose base entry, merge-on-read slice list or SPARSE slice list
+    * differs (a MoR update keeps the base entry identical — that is its
+    * point — and a sparse patch also commits no DV, so each list is
+    * diffed on its own; slice lines carry the affected suffix
+    * directly), plus those a deletion vector added or dropped between
+    * them touches ([[dvChangedSuffixes]]).
     */
-  private def smorChangedSuffixes(s1: Seq[SnapshotStore.SparseSlice],
-      s2: Seq[SnapshotStore.SparseSlice]): Set[String] = {
-    val g1 = s1.groupBy(_.suffix).view.mapValues(_.map(_.batch).sorted).toMap
-    val g2 = s2.groupBy(_.suffix).view.mapValues(_.map(_.batch).sorted).toMap
-    (g1.keySet ++ g2.keySet).filter(s => g1.get(s) != g2.get(s))
-  }
-
-  /** Partitions whose merge-on-read slice LIST differs between two
-    * versions — a MoR update keeps the base entry identical (that is
-    * its point), so the entry diff is blind to it; the slice lines
-    * carry the affected suffix directly.
-    */
-  private def morChangedSuffixes(r1: Seq[(String, String)],
-      r2: Seq[(String, String)]): Set[String] = {
-    val g1 = r1.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    val g2 = r2.groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
-    (g1.keySet ++ g2.keySet).filter(s => g1.get(s) != g2.get(s))
+  private def changeSet(a: SnapshotStore.Resolved, b: SnapshotStore.Resolved): Set[String] = {
+    def moved(pairs: SnapshotStore.Resolved => Seq[(String, String)]): Set[String] = {
+      def bySuffix(r: SnapshotStore.Resolved) =
+        pairs(r).groupBy(_._1).view.mapValues(_.map(_._2).sorted).toMap
+      val (ga, gb) = (bySuffix(a), bySuffix(b))
+      (ga.keySet ++ gb.keySet).filter(s => ga.get(s) != gb.get(s))
+    }
+    moved(_.entries.toSeq.map(kv => kv._1 -> kv._2.batch)) ++
+      moved(_.mors.map(m => m._1 -> m._2.batch)) ++
+      dvChangedSuffixes(a.dvs, b.dvs) ++
+      moved(_.smors.map(m => m.suffix -> m.batch))
   }
 
   /** Partitions whose rows changed between two versions through
@@ -1147,8 +1108,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * null-safe equality. Keys that moved across partitions still
     * match up: both partitions are in the changed set, and the join
     * key is the logical key, not the partition.
-    */
-  /** With `includeUpdatePreimages = true`, every 'update' row (post-
+    *
+    * With `includeUpdatePreimages = true`, every 'update' row (post-
     * image) is accompanied by an 'update_preimage' row carrying the
     * fromVersion values — the extra row type that makes the feed
     * sufficient for incremental view maintenance (a sum maintains as
@@ -1163,15 +1124,12 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     require(!schema.fieldNames.exists(f => f.startsWith("__cdf_") || f == "_change"),
       "schema columns must not collide with the diff's working names " +
         "(__cdf_* markers, _change output)")
-    val (m1, d1, r1, s1) = resolvedAt(fromVersion)
-    val (m2, d2, r2, s2) = resolvedAt(toVersion)
-    val changed = (m1.keySet ++ m2.keySet).filter(s => m1.get(s) != m2.get(s)) ++
-      morChangedSuffixes(r1, r2) ++ dvChangedSuffixes(d1, d2) ++
-      smorChangedSuffixes(s1, s2)
-    val before = readSlices((m1.toSeq ++ r1).filter(kv => changed(kv._1)),
-      schema, null, d1, s1)
-    val after = readSlices((m2.toSeq ++ r2).filter(kv => changed(kv._1)),
-      schema, null, d2, s2)
+    val (from, to) = (resolvedAt(fromVersion), resolvedAt(toVersion))
+    val changed = changeSet(from, to)
+    // the changed slices only; every patch stays in (suffixes = null)
+    def side(r: SnapshotStore.Resolved) =
+      readSlices(r.slices.filter(kv => changed(kv._1)), schema, null, r.dvs, r.smors)
+    val (before, after) = (side(from), side(to))
     val nonKey = schema.fieldNames.toSeq.filterNot(keyCols.contains)
     val bRen = nonKey.foldLeft(before)((d, c) => d.withColumnRenamed(c, s"__cdf_b_$c"))
       .withColumn("__cdf_b", lit(true))
@@ -1300,9 +1258,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     val cur = resolveCurrent().getOrElse(
       throw new IllegalStateException(s"no snapshot at $root"))
     if (cur.version == version) return cur.version
-    val name = manifestNameAt(version)
-    val (entries, dvs, mors, smors, embedded, embeddedCons) =
-      readManifestAll(name)
+    val target = parseManifest(manifestNameAt(version))
     val schema = schemaAt(version)
     require(schema.isDefined || schemaHistory().isEmpty,
       s"restoring $root below its first schema evolution would leave " +
@@ -1319,12 +1275,13 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // best-knowledge set is empty — carrying the current set forward
     // would silently keep governing restored rows that never passed
     // it. None only when the table never had constraints at all.
-    val restoredCons: Option[Map[String, String]] = embeddedCons.orElse(
+    val restoredCons: Option[Map[String, String]] = target.constraints.orElse(
       if (fs.exists(constraintsDir)) Some(constraintsAt(version))
       else if (cur.constraints.isDefined) Some(Map.empty)
       else None)
-    commitSized(cur.version + 1, entries, Some(cur.version), dvs, mors, smors,
-      embedded.orElse(schema.map(_.json)), restoredCons)
+    commitSized(cur.version + 1, target.entries, Some(cur.version), target.dvs,
+      target.mors, target.smors, target.schemaJson.orElse(schema.map(_.json)),
+      restoredCons)
     schema.foreach(writeSchemaFile(cur.version + 1, _))
     // sidecar mirror for beyond-retention history only — the embedded
     // set above is authoritative, so the ordering no longer matters
@@ -1466,15 +1423,6 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
             .filter(_.nonEmpty).toList).getOrElse(Nil).toSeq
       }.toMap
 
-  /** Take the commit lease: atomic create-exclusive of `LOCK` with
-    * this writer's id as the body. Held lock -> bounded exponential
-    * backoff up to `lockWaitMs`, then [[SnapshotConcurrentWriteException]]
-    * (the caller's merge is cheap to retry; blocking forever on a
-    * wedged peer is not). Lock older than `lockStaleMs` -> crashed
-    * holder; takeover renames it to a unique tombstone first, so of N
-    * concurrent takeover attempts exactly one rename wins and the
-    * losers loop back to the create race.
-    */
   /** One atomic exclusive create of the lock file. On HDFS
     * `create(p, overwrite=false)` is a single namenode op; Hadoop's
     * LOCAL filesystem implements it as exists-then-create, which is
@@ -1495,6 +1443,15 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       try out.write(holder.getBytes(StandardCharsets.UTF_8)) finally out.close()
     }
 
+  /** Take the commit lease: atomic create-exclusive of `LOCK` with
+    * this writer's id as the body. Held lock -> bounded exponential
+    * backoff up to `lockWaitMs`, then [[SnapshotConcurrentWriteException]]
+    * (the caller's merge is cheap to retry; blocking forever on a
+    * wedged peer is not). Lock older than `lockStaleMs` -> crashed
+    * holder; takeover renames it to a unique tombstone first, so of N
+    * concurrent takeover attempts exactly one rename wins and the
+    * losers loop back to the create race.
+    */
   private def acquireLock(holder: String): Unit = {
     val deadline = System.currentTimeMillis() + lockWaitMs
     var backoff = 2L
@@ -1561,11 +1518,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     try out.write(body.getBytes(StandardCharsets.UTF_8)) finally out.close()
   }
 
-  /** Read the committed snapshot as one DataFrame. Entries are grouped
-    * by batch so each batch dir is scanned once with itself as
-    * `basePath` (partition columns parse from the `col=val` suffix
-    * dirs); batches then union. Missing table -> empty frame with
-    * `schema`.
+  /** Read the committed snapshot as one DataFrame (see [[readSlices]]
+    * for the scan). Missing table -> empty frame with `schema`.
     */
   def read(schema: StructType): DataFrame = readPartitions(schema, null)
 
@@ -1574,83 +1528,103 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * partitions contribute no input paths at all, so the scan never
     * lists their directories.
     */
-  def readPartitions(schema: StructType, suffixes: Set[String]): DataFrame =
-    currentManifestName() match {
-      case None => spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-      case Some(n) =>
-        val (entries, dvs, mors, smors, _, _) = readManifestAll(n)
-        readSlices(entries.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-          mors.map(m => m._1 -> m._2.batch), schema, suffixes, dvs, smors)
-    }
+  def readPartitions(schema: StructType, suffixes: Set[String]): DataFrame = {
+    val r = currentManifestName().map(parseManifest).getOrElse(SnapshotStore.Resolved.empty)
+    readSlices(r.slices, schema, suffixes, r.dvs, r.smors)
+  }
 
-  /** [[readPartitions]] against an already-resolved manifest — for
-    * callers (the merge path) that must build their read and their
-    * commit fence from ONE snapshot resolution instead of racing two
-    * pointer reads. The 3-arg form applies no deletion vectors (for
-    * callers that resolved a manifest with none); pass the same
-    * manifest's DV names to get the row-level-deleted view.
-    */
-  def readEntries(entries: Map[String, String], schema: StructType,
-      suffixes: Set[String]): DataFrame =
-    readSlices(entries.toSeq, schema, suffixes, Nil)
-
-  def readEntries(entries: Map[String, String], schema: StructType,
-      suffixes: Set[String], dvs: Seq[String]): DataFrame =
-    readSlices(entries.toSeq, schema, suffixes, dvs)
-
-  /** The general read: `slices` is EVERY row-holding (suffix, batch)
-    * pair of a resolved commit — the base entry per partition plus
-    * any merge-on-read append slices. Grouped by batch so each batch
-    * dir is scanned once with itself as `basePath`; deletion vectors
-    * anti-join out tombstoned rows across ALL slices (a MoR update's
-    * DV may reference base files and earlier slices alike).
-    */
-  def readSlices(slices: Seq[(String, String)], schema: StructType,
-      suffixes: Set[String], dvs: Seq[String]): DataFrame =
-    readSlices(slices, schema, suffixes, dvs, Nil)
-
-  /** [[readSlices]] with COLUMN-SPARSE patch resolution: after the
-    * base+full-slice union and the DV anti-join, each `#smor` slice
-    * left-joins onto the live rows by its keys and overwrites exactly
-    * its changed columns — but only for rows whose ORIGINATING slice
-    * predates the patch (batch names carry their commit version), so
-    * a full-row overwrite committed after a patch wins entirely and
-    * the stale patch is a no-op. Patches apply in commit order, so
-    * two patches of the same key compose column-wise with the later
-    * writer winning per column.
+  /** The general read of a resolved commit: `slices` is EVERY
+    * row-holding (suffix, batch) pair — the base entry per partition
+    * plus any merge-on-read append slices — kept when its suffix is in
+    * `suffixes` (all when null). Deletion vectors anti-join out
+    * tombstoned rows across ALL slices (a MoR update's DV may
+    * reference base files and earlier slices alike), then the
+    * COLUMN-SPARSE patches of the kept suffixes resolve: each `#smor`
+    * slice overwrites exactly its changed columns of the live rows it
+    * keys onto, but only for rows whose ORIGINATING slice predates the
+    * patch (batch names carry their commit version), so a full-row
+    * overwrite committed after a patch wins entirely and the stale
+    * patch is a no-op. Patches apply in commit order, so two patches
+    * of the same key compose column-wise with the later writer
+    * winning per column.
     */
   def readSlices(slices: Seq[(String, String)], schema: StructType,
       suffixes: Set[String], dvs: Seq[String],
-      smors: Seq[SnapshotStore.SparseSlice]): DataFrame = {
-    val patches = smors
-      .filter(s => suffixes == null || suffixes.contains(s.suffix))
-    requireWorkingNamesFree(schema, dvs.nonEmpty, patches.nonEmpty)
-    val selected = slices
-      .filter { case (s, _) => suffixes == null || suffixes.contains(s) }
-      .distinct
-    if (selected.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-    val frames = selected.groupBy(_._2).toSeq.sortBy(_._1).map { case (batch, pairs) =>
+      smors: Seq[SnapshotStore.SparseSlice] = Nil): DataFrame =
+    sliceScan(slices, schema, suffixes, dvs, smors, meta = false)
+
+  /** [[readSlices]] WITH file identity (`__dv_path`, `__dv_pos`) — what
+    * a merge-on-read writer joins against to find the positions of the
+    * row versions it must tombstone, and what [[deleteWhere]]
+    * tombstones. Patched VALUES surface (a `deleteWhere` predicate
+    * must see the table as a reader would) while the identity pair
+    * stays the UNDERLYING full row's — tombstoning the base row is
+    * what kills a patched row. Callers that only consume KEY columns
+    * (the MoR writers' hit scans — keys are never patched) pass no
+    * `smors` and skip the joins.
+    */
+  private[sinks] def liveWithMeta(slices: Seq[(String, String)],
+      schema: StructType, suffixes: Set[String], dvs: Seq[String],
+      smors: Seq[SnapshotStore.SparseSlice] = Nil): DataFrame =
+    sliceScan(slices, schema, suffixes, dvs, smors, meta = true)
+
+  /** [[scan]] of the `suffixes`-selected slices and patches. */
+  private def sliceScan(slices: Seq[(String, String)], schema: StructType,
+      suffixes: Set[String], dvs: Seq[String],
+      smors: Seq[SnapshotStore.SparseSlice], meta: Boolean): DataFrame = {
+    def kept(suffix: String) = suffixes == null || suffixes.contains(suffix)
+    val byBatch = slices.filter(s => kept(s._1)).groupBy(_._2).toSeq.sortBy(_._1)
+      .map { case (batch, pairs) => batch -> pairs.map(_._1).distinct.sorted }
+    scan(byBatch, schema, dvs, smors.filter(s => kept(s.suffix)), meta)
+  }
+
+  /** The one scan every read of a snapshot version goes through.
+    * `byBatch` lists, in union order, each batch dir with the paths
+    * under it to read (partition suffixes, or single files after file
+    * pruning); each batch is scanned once with itself as `basePath`
+    * (partition columns parse from the `col=val` dirs), then the
+    * batches union, `dvs`' tombstones anti-join out and `patches`
+    * resolve ([[applyPatches]]). `meta` keeps the file identity
+    * (`__dv_path`, `__dv_pos`) after the schema's columns. No batch ->
+    * an empty frame of that shape.
+    *
+    * Tombstone application is a LEFT ANTI on (file, row position): the
+    * DV side is parquet with size stats, so AQE broadcasts it when
+    * small (the common case — deletes are sparse) and falls back to a
+    * shuffled anti-join when a table has accumulated bulk deletes;
+    * either way the data side streams once. Tombstones referencing
+    * rewritten (dead) files match nothing — stale entries are harmless
+    * no-ops, which is what lets every carrying committer forward the
+    * whole list.
+    */
+  private def scan(byBatch: Seq[(String, Seq[String])], schema: StructType,
+      dvs: Seq[String], patches: Seq[SnapshotStore.SparseSlice],
+      meta: Boolean): DataFrame = {
+    requireWorkingNamesFree(schema, meta || dvs.nonEmpty, patches.nonEmpty)
+    val metaCols = if (meta) Seq("__dv_path", "__dv_pos") else Nil
+    if (byBatch.isEmpty)
+      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
+        StructType(schema.fields ++ (if (meta) Seq(StructField("__dv_path", StringType),
+          StructField("__dv_pos", LongType)) else Nil)))
+    var out = byBatch.map { case (batch, paths) =>
       val base = dataPath(batch)
-      val paths = pairs.map(_._1).distinct.sorted.map(s => new Path(base, s).toString)
+      val extra = (if (meta || dvs.nonEmpty) dvMetaCols else Nil) ++
+        (if (patches.nonEmpty) Seq(sliceVersionCol(batch)) else Nil)
       // The caller's schema governs partition-column TYPES: inference
       // would turn a string partition value like "00123" into int 123
       // (dropping the padding) and widen/narrow numerics batch by
       // batch. With an explicit schema the `col=val` dir names parse
       // directly to the declared types.
-      val f = spark.read.option("basePath", base.toString).schema(schema)
-        .parquet(paths: _*)
-      val extra = (if (dvs.nonEmpty) dvMetaCols else Nil) ++
-        (if (patches.nonEmpty) Seq(sliceVersionCol(batch)) else Nil)
-      f.select(schema.fieldNames.map(col) ++ extra: _*)
-    }
-    var out = frames.reduce(_.unionByName(_))
+      spark.read.option("basePath", base.toString).schema(schema)
+        .parquet(paths.map(p => new Path(base, p).toString): _*)
+        .select(schema.fieldNames.map(col) ++ extra: _*)
+    }.reduce(_.unionByName(_))
     if (dvs.nonEmpty)
       out = out.join(
         dvFrame(dvs).select(col("path").as("__dv_path"), col("pos").as("__dv_pos")),
         Seq("__dv_path", "__dv_pos"), "left_anti")
-    if (patches.nonEmpty) out = applyPatches(out, schema, patches, Nil)
-    out.select(schema.fieldNames.map(col): _*)
+    if (patches.nonEmpty) out = applyPatches(out, schema, patches, metaCols)
+    out.select((schema.fieldNames.toSeq ++ metaCols).map(col): _*)
   }
 
   /** Origin-version column for patch gating: rows read from batch
@@ -1726,14 +1700,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     for ((keys, applied, group) <- groups if applied.nonEmpty) {
       val readSchema = StructType(schema.fields.filter(f =>
         keys.contains(f.name) || applied.contains(f.name)))
+      // one scan per patch batch, so each row carries its batch's version
       val all = group.groupBy(_.batch).toSeq.sortBy(_._1)
         .map { case (batch, slices) =>
-          val base = dataPath(batch)
-          val paths = slices.map(_.suffix).distinct.sorted
-            .map(s => new Path(base, s).toString)
-          spark.read.option("basePath", base.toString)
-            .schema(readSchema).parquet(paths: _*)
-            .withColumn("__pv", lit(ver(batch)))
+          scan(Seq(batch -> slices.map(_.suffix).distinct.sorted), readSchema,
+            Nil, Nil, meta = false).withColumn("__pv", lit(ver(batch)))
         }.reduce(_.unionByName(_))
       // per-key latest patch WITHIN the group: version argmax via a
       // max + self-join (type-agnostic — a struct-max would refuse
@@ -1761,59 +1732,6 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     out
   }
 
-  /** DV-filtered live view of `slices` WITH file identity (`__dv_path`,
-    * `__dv_pos`) — what a merge-on-read writer joins against to find
-    * the positions of the row versions it must tombstone. Shared with
-    * [[deleteWhere]].
-    */
-  private[sinks] def liveWithMeta(slices: Seq[(String, String)],
-      schema: StructType, suffixes: Set[String], dvs: Seq[String]): DataFrame =
-    liveWithMeta(slices, schema, suffixes, dvs, Nil)
-
-  /** [[liveWithMeta]] with sparse-patch resolution: patched VALUES
-    * surface (a `deleteWhere` predicate must see the table as a
-    * reader would) while the identity pair stays the UNDERLYING full
-    * row's — tombstoning the base row is what kills a patched row.
-    * Callers that only consume KEY columns (the MoR writers' hit
-    * scans — keys are never patched) pass Nil and skip the joins.
-    */
-  private[sinks] def liveWithMeta(slices: Seq[(String, String)],
-      schema: StructType, suffixes: Set[String], dvs: Seq[String],
-      smors: Seq[SnapshotStore.SparseSlice]): DataFrame = {
-    val patches = smors
-      .filter(s => suffixes == null || suffixes.contains(s.suffix))
-    requireWorkingNamesFree(schema, dv = true, patch = patches.nonEmpty)
-    val selected = slices
-      .filter { case (s, _) => suffixes == null || suffixes.contains(s) }
-      .distinct
-    val metaFields = Seq(
-      org.apache.spark.sql.types.StructField("__dv_path",
-        org.apache.spark.sql.types.StringType),
-      org.apache.spark.sql.types.StructField("__dv_pos",
-        org.apache.spark.sql.types.LongType))
-    if (selected.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row],
-        StructType(schema.fields ++ metaFields))
-    var live = selected.groupBy(_._2).toSeq.sortBy(_._1).map { case (batch, pairs) =>
-      val base = dataPath(batch)
-      val paths = pairs.map(_._1).distinct.sorted.map(s => new Path(base, s).toString)
-      val extra = if (patches.nonEmpty) Seq(sliceVersionCol(batch)) else Nil
-      spark.read.option("basePath", base.toString).schema(schema)
-        .parquet(paths: _*)
-        .select(schema.fieldNames.map(col) ++ dvMetaCols ++ extra: _*)
-    }.reduce(_.unionByName(_))
-    if (dvs.nonEmpty)
-      live = live.join(
-        dvFrame(dvs).select(col("path").as("__dv_path"), col("pos").as("__dv_pos")),
-        Seq("__dv_path", "__dv_pos"), "left_anti")
-    if (patches.nonEmpty)
-      live = applyPatches(live, schema, patches,
-        Seq("__dv_path", "__dv_pos"))
-        .select(schema.fieldNames.map(col) ++
-          Seq(col("__dv_path"), col("__dv_pos")): _*)
-    live
-  }
-
   /** The file-identity columns a deletion-vector anti-join keys on —
     * Spark's hidden `_metadata` struct, available on every file-source
     * frame at zero cost until projected.
@@ -1827,15 +1745,6 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   private def dvFrame(dvs: Seq[String]): DataFrame =
     spark.read.schema(SnapshotStore.dvSchema).parquet(dvs.map(dvPath(_).toString): _*)
-
-  // Tombstone application is a LEFT ANTI on (file, row position),
-  // inlined at each read site: the DV side is parquet with size
-  // stats, so AQE broadcasts it when small (the common case — deletes
-  // are sparse) and falls back to a shuffled anti-join when a table
-  // has accumulated bulk deletes; either way the data side streams
-  // once. Tombstones referencing rewritten (dead) files match nothing
-  // — stale entries are harmless no-ops, which is what lets every
-  // carrying committer forward the whole list.
 
   /** Write the per-(partition, column) min/max STATS sidecar for a
     * freshly staged batch — the metadata that lets [[readRange]] skip
@@ -2010,13 +1919,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   private def readKeyLookupHashed(schema: StructType, bloomCol: String,
       hashes: Seq[Long], residual: org.apache.spark.sql.Column): DataFrame = {
     require(hashes.nonEmpty, "point lookup needs at least one key")
-    val (slices, dvs, smors) = resolveCurrent()
-      .map(r => (r.slices, r.dvs, r.smors))
-      .getOrElse((Nil, Nil, Nil))
+    val r = resolveCurrent().getOrElse(SnapshotStore.Resolved.empty)
     // a partition with an outstanding sparse patch of the LOOKUP
     // column is unprunable: its sketches were built over pre-patch
     // values, so a patch may have moved a probed key INTO it
-    val unprunable = smors.filter(_.cols.contains(bloomCol)).map(_.suffix).toSet
+    val unprunable = r.smors.filter(_.cols.contains(bloomCol)).map(_.suffix).toSet
     val sketchCache = scala.collection.mutable.Map.empty[
       String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
     def parse(p: Path): Map[String, org.apache.spark.util.sketch.BloomFilter] =
@@ -2036,13 +1943,13 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
           parse(statsPath(batch, s".bloom.${encodeCol(bloomCol)}")))
     // pruning is PER SLICE: a partition's base slice can skip while a
     // later MoR slice (holding a fresher copy of the key) is read
-    val keep = slices.filter { case (suffix, batch) =>
+    val keep = r.slices.filter { case (suffix, batch) =>
       unprunable(suffix) || (sketches(batch).get(suffix) match {
         case None => true // no sidecar/line: never a wrong skip
         case Some(bf) => hashes.exists(bf.mightContainLong)
       })
     }
-    readSlices(keep, schema, null, dvs, smors).where(residual)
+    readSlices(keep, schema, null, r.dvs, r.smors).where(residual)
   }
 
   /** FILE-granularity twin of the partition sidecar (`<batch>.files`):
@@ -2138,7 +2045,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       clusterCol: String, maxRecordsPerFile: Long): Unit = {
     // full rewrite: read(schema) resolves DVs, slices and sparse
     // patches; the commit below lists none — all three materialize
-    val SnapshotStore.Resolved(version, sized, dvs, mors, _, schemaJson, _) =
+    val base @ SnapshotStore.Resolved(version, sized, _, _, _, schemaJson, _) =
       resolveCurrent().getOrElse(return)
     val entries = sized.view.mapValues(_.batch).toMap
     if (entries.isEmpty) return
@@ -2151,8 +2058,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       .partitionBy(partCols: _*)
       .parquet(dataPath(batch).toString)
     val written = SnapshotStore.partitionSizes(fs, dataPath(batch))
-    requirePartitionsPreserved(written.keySet, entries.keySet,
-      sized, mors, dvs, schema, "clustered compaction")
+    requirePartitionsPreserved(written.keySet, entries.keySet, base, schema,
+      "clustered compaction")
     writeBatchStats(batch, schema, partCols, Seq(clusterCol), fileStats = true)
     beforeCompactCommitHook()
     commitSized(version + 1,
@@ -2185,7 +2092,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     require(zCols.size >= 2, "z-order needs at least two columns (use compactClustered for one)")
     require(bits * zCols.size <= 62, s"${zCols.size} cols × $bits bits overflows a long")
     // full rewrite like compactClustered: everything materializes
-    val SnapshotStore.Resolved(version, sized, dvs, mors, _, schemaJson, _) =
+    val base @ SnapshotStore.Resolved(version, sized, _, _, _, schemaJson, _) =
       resolveCurrent().getOrElse(return)
     val entries = sized.view.mapValues(_.batch).toMap
     if (entries.isEmpty) return
@@ -2225,8 +2132,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       .partitionBy(partCols: _*)
       .parquet(dataPath(batch).toString)
     val written = SnapshotStore.partitionSizes(fs, dataPath(batch))
-    requirePartitionsPreserved(written.keySet, entries.keySet,
-      sized, mors, dvs, schema, "z-order compaction")
+    requirePartitionsPreserved(written.keySet, entries.keySet, base, schema,
+      "z-order compaction")
     writeBatchStats(batch, schema, partCols, zCols, fileStats = true)
     commitSized(version + 1,
       written.map { case (s, sz) =>
@@ -2248,19 +2155,13 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     }.groupBy(_._1).view.mapValues(_.map(t => t._2 -> t._3).toMap).toMap
   }
 
-  /** Manifest entries whose recorded [min, max] band for `statsCol`
-    * intersects [lo, hi] — plus every entry with NO recorded band
-    * (unprunable, never wrongly skipped). Pure metadata: reads only
-    * the sidecars of referenced batches, lists no data directory.
-    */
-  def pruneByStats(entries: Map[String, String], statsCol: String,
-      lo: Double, hi: Double): Map[String, String] =
-    pruneSlicesByStats(entries.toSeq, statsCol, lo, hi).toMap
-
-  /** [[pruneByStats]] over the general (suffix, batch) slice list —
-    * each slice prunes on ITS OWN batch's sidecar band, so a
-    * partition's base slice can skip while a MoR append slice with
-    * in-range rows is still read (and vice versa).
+  /** The (suffix, batch) slices whose recorded [min, max] band for
+    * `statsCol` intersects [lo, hi] — plus every slice with NO
+    * recorded band (unprunable, never wrongly skipped). Each slice
+    * prunes on ITS OWN batch's sidecar band, so a partition's base
+    * slice can skip while a MoR append slice with in-range rows is
+    * still read (and vice versa). Pure metadata: reads only the
+    * sidecars of referenced batches, lists no data directory.
     */
   def pruneSlicesByStats(slices: Seq[(String, String)], statsCol: String,
       lo: Double, hi: Double): Seq[(String, String)] = {
@@ -2288,19 +2189,15 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * scan to nothing past the anti-join.
     */
   private def requirePartitionsPreserved(written: Set[String],
-      expected: Set[String], sized: Map[String, SnapshotStore.SnapshotEntry],
-      mors: Seq[(String, SnapshotStore.SnapshotEntry)], dvs: Seq[String],
+      expected: Set[String], base: SnapshotStore.Resolved,
       schema: StructType, what: String): Unit = {
     require((written -- expected).isEmpty,
       s"$what produced unexpected partitions: ${(written -- expected).mkString(", ")}")
     val lost = expected -- written
     if (lost.isEmpty) return
-    require(dvs.nonEmpty,
+    require(base.dvs.nonEmpty,
       s"$what must preserve the partition set; lost ${lost.mkString(", ")}")
-    val survivors = liveWithMeta(
-      sized.toSeq.collect { case (s, e) if lost(s) => s -> e.batch } ++
-        mors.collect { case (s, e) if lost(s) => s -> e.batch },
-      schema, lost, dvs).limit(1).count()
+    val survivors = liveWithMeta(base.slices, schema, lost, base.dvs).limit(1).count()
     require(survivors == 0L,
       s"$what lost partitions with live (non-tombstoned) rows: ${lost.mkString(", ")}")
   }
@@ -2326,9 +2223,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   def readRange(schema: StructType, statsCol: String,
       lo: Double, hi: Double): DataFrame = {
-    val (slices, dvs, smors) = resolveCurrent()
-      .map(r => (r.slices, r.dvs, r.smors))
-      .getOrElse((Nil, Nil, Nil))
+    val r = resolveCurrent().getOrElse(SnapshotStore.Resolved.empty)
     // stats sidecars are written at batch-stage time and never
     // re-tightened by a delete, so post-delete bands can only be
     // WIDER than the live data — pruning stays sound (never a wrong
@@ -2336,11 +2231,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // partition with an outstanding sparse patch of statsCol is
     // UNPRUNABLE (bands predate the patch, which may have moved a
     // value into range).
-    val unprunable = smors.filter(_.cols.contains(statsCol)).map(_.suffix).toSet
+    val unprunable = r.smors.filter(_.cols.contains(statsCol)).map(_.suffix).toSet
     val kept = pruneSlicesByStats(
-        slices.filterNot(s => unprunable(s._1)), statsCol, lo, hi) ++
-      slices.filter(s => unprunable(s._1))
-    readSlices(kept, schema, null, dvs, smors)
+        r.slices.filterNot(s => unprunable(s._1)), statsCol, lo, hi) ++
+      r.slices.filter(s => unprunable(s._1))
+    readSlices(kept, schema, null, r.dvs, r.smors)
       .where(col(statsCol) >= lo && col(statsCol) <= hi)
   }
 
@@ -2378,10 +2273,9 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * sound, less selective until the next compaction).
     */
   def deleteWhere(schema: StructType, pred: org.apache.spark.sql.Column): Long = {
-    val SnapshotStore.Resolved(version, sized, dvs, mors, smors, schemaJson, _) =
-      resolveCurrent().getOrElse(
-        throw new IllegalStateException(s"no snapshot at $root"))
-    if (sized.isEmpty) return 0L
+    val cur = resolveCurrent().getOrElse(
+      throw new IllegalStateException(s"no snapshot at $root"))
+    if (cur.entries.isEmpty) return 0L
     // live view WITH file identity across ALL slices (base + MoR
     // appends), SPARSE-PATCH-resolved — the predicate must see the
     // table as a reader would, while the tombstoned identity stays
@@ -2390,85 +2284,59 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // DVs applied so an already-deleted row is never re-tombstoned
     // (the count stays honest and DV files never accumulate
     // duplicates).
-    val live = liveWithMeta(sized.toSeq.map(kv => kv._1 -> kv._2.batch) ++
-      mors.map(m => m._1 -> m._2.batch), schema, null, dvs, smors)
+    val live = liveWithMeta(cur.slices, schema, null, cur.dvs, cur.smors)
     beforeDeleteCommitHook()
     val (name, n) = stageDv(live.where(pred)
-      .select(col("__dv_path").as("path"), col("__dv_pos").as("pos")), version + 1)
+      .select(col("__dv_path").as("path"), col("__dv_pos").as("pos")), cur.version + 1)
     if (n == 0L) return 0L
     // fenced like every commit. Slices (full AND sparse) carry forward
     // untouched — a delete rewrites nothing.
-    try commitSized(version + 1, sized, Some(version), dvs :+ name, mors,
-      smors, schemaJson)
+    try commitSized(cur.version + 1, cur.entries, Some(cur.version), cur.dvs :+ name,
+      cur.mors, cur.smors, cur.schemaJson)
     catch { case t: Throwable => fs.delete(dvPath(name), true); throw t }
     n
   }
 
-  /** Multi-column [[pruneByStats]]: a partition survives when EVERY
-    * predicate's band may intersect (missing bands keep, as always).
-    * The conjunction is what makes multi-dimensional clustering pay:
-    * each dimension prunes independently, and after [[compactZOrder]]
-    * the per-file bands are narrow in all clustered dimensions at
-    * once.
-    */
-  def pruneByStatsBox(entries: Map[String, String],
-      preds: Seq[(String, Double, Double)]): Map[String, String] =
-    preds.foldLeft(entries) { case (kept, (c, lo, hi)) =>
-      pruneByStats(kept, c, lo, hi)
-    }
-
-  /** The file lists a box read would scan, per batch — partition bands
-    * prune first, then each surviving partition's files drop when ANY
-    * predicate's file band cannot intersect. Package-visible so specs
-    * can pin SELECTIVITY (how many files a box touches) without
-    * scanning anything. Batches without a file sidecar degrade to
-    * whole-partition paths, never to silence.
+  /** The files a box read would scan, per batch (batch -> paths under
+    * it, in union order) — partition bands prune first, then each
+    * surviving partition's files drop when ANY predicate's file band
+    * cannot intersect. Package-visible so specs can pin SELECTIVITY
+    * (how many files a box touches) without scanning anything.
+    * Batches without a file sidecar degrade to whole-partition paths,
+    * never to silence.
     */
   private[graft] def boxFilePaths(preds: Seq[(String, Double, Double)])
-      : Seq[(Seq[String], Path)] = {
-    val r = resolveCurrent()
-    boxFilePaths(r.map(_.slices).getOrElse(Nil), preds,
-      smorUnprunable(r.map(_.smors).getOrElse(Nil), preds))
-  }
+      : Seq[(String, Seq[String])] =
+    boxFilePaths(resolveCurrent().getOrElse(SnapshotStore.Resolved.empty), preds)
 
-  /** Suffixes no band may prune for this predicate set: a sparse
-    * patch of a predicate column post-dates every recorded band.
-    */
-  private def smorUnprunable(smors: Seq[SnapshotStore.SparseSlice],
-      preds: Seq[(String, Double, Double)]): Set[String] = {
-    val cols = preds.map(_._1).toSet
-    smors.filter(_.cols.exists(cols)).map(_.suffix).toSet
-  }
-
-  private[graft] def boxFilePaths(slices: Seq[(String, String)],
-      preds: Seq[(String, Double, Double)],
-      unprunable: Set[String] = Set.empty): Seq[(Seq[String], Path)] = {
+  private def boxFilePaths(r: SnapshotStore.Resolved,
+      preds: Seq[(String, Double, Double)]): Seq[(String, Seq[String])] = {
+    // no band may prune a suffix with a sparse patch of a predicate
+    // column: the patch post-dates every recorded band
+    val predCols = preds.map(_._1).toSet
+    val unprunable = r.smors.filter(_.cols.exists(predCols)).map(_.suffix).toSet
     val surviving = preds.foldLeft(
-        slices.filterNot(s => unprunable(s._1))) { case (kept, (c, lo, hi)) =>
+        r.slices.filterNot(s => unprunable(s._1))) { case (kept, (c, lo, hi)) =>
       pruneSlicesByStats(kept, c, lo, hi)
-    } ++ slices.filter(s => unprunable(s._1))
+    } ++ r.slices.filter(s => unprunable(s._1))
     surviving.groupBy(_._2).toSeq.sortBy(_._1).map {
       case (batch, batchEntries) =>
-        val base = dataPath(batch)
         val suffixes = batchEntries.map(_._1).distinct.sorted
         val paths: Seq[String] = readBatchFileStats(batch) match {
-          case None =>
-            suffixes.map(s => new Path(base, s).toString)
+          case None => suffixes
           case Some(fileBands) =>
             suffixes.flatMap { s =>
               val mine = fileBands.filter(_._1.startsWith(s + "/"))
-              if (unprunable(s))
-                mine.keys.toSeq.sorted.map(rel => new Path(base, rel).toString)
+              if (unprunable(s)) mine.keys.toSeq.sorted
               else mine.collect {
                 case (rel, bands)
                     if preds.forall { case (c, lo, hi) =>
                       bands.get(c).forall { case (mn, mx) =>
-                        bandIntersects(mn, mx, lo, hi) } } =>
-                  new Path(base, rel).toString
+                        bandIntersects(mn, mx, lo, hi) } } => rel
               }
             }
         }
-        paths -> base
+        batch -> paths
     }
   }
 
@@ -2489,29 +2357,9 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // compaction (old files resolved at v, v+1's empty DV list read
     // after) and resurrect tombstoned rows — the exact race
     // resolveCurrent() exists for.
-    val (slices, dvs, smors) = resolveCurrent()
-      .map(r => (r.slices, r.dvs, r.smors))
-      .getOrElse((Nil, Nil, Nil))
-    requireWorkingNamesFree(schema, dv = dvs.nonEmpty, patch = smors.nonEmpty)
-    val nonEmpty = boxFilePaths(slices, preds, smorUnprunable(smors, preds))
-      .filter(_._1.nonEmpty)
-    if (nonEmpty.isEmpty)
-      return spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
-        .where(residual)
-    val frames = nonEmpty.map { case (paths, base) =>
-      val extra = (if (dvs.nonEmpty) dvMetaCols else Nil) ++
-        (if (smors.nonEmpty) Seq(sliceVersionCol(base.getName)) else Nil)
-      spark.read.option("basePath", base.toString).schema(schema)
-        .parquet(paths: _*)
-        .select(schema.fieldNames.map(col) ++ extra: _*)
-    }
-    var joined = frames.reduce(_.unionByName(_))
-    if (dvs.nonEmpty)
-      joined = joined.join(
-        dvFrame(dvs).select(col("path").as("__dv_path"), col("pos").as("__dv_pos")),
-        Seq("__dv_path", "__dv_pos"), "left_anti")
-    if (smors.nonEmpty) joined = applyPatches(joined, schema, smors, Nil)
-    joined.select(schema.fieldNames.map(col): _*).where(residual)
+    val r = resolveCurrent().getOrElse(SnapshotStore.Resolved.empty)
+    scan(boxFilePaths(r, preds).filter(_._2.nonEmpty), schema, r.dvs, r.smors,
+      meta = false).where(residual)
   }
 
   /** Fold the SMALLEST live batches together so the manifest
@@ -2539,10 +2387,9 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       maxBatches: Int, statsCols: Seq[String] = Nil): Unit = {
     require(maxBatches >= 2,
       "maxBatches must leave room for kept batches plus the fold target")
-    val SnapshotStore.Resolved(version, entries, dvs, mors, smors, schemaJson, _) =
+    val base @ SnapshotStore.Resolved(version, entries, dvs, mors, smors, schemaJson, _) =
       resolveCurrent().getOrElse(return)
-    if ((entries.values.map(_.batch) ++ mors.map(_._2.batch) ++
-        smors.map(_.batch)).toSet.size <= maxBatches) return
+    if (base.batches.size <= maxBatches) return
     // live bytes per batch: sum the batch's LIVE partition entries, not
     // the whole dir — a batch can also hold stale copies of partitions
     // later merges superseded, which must not inflate its rank. Sizes
@@ -2576,8 +2423,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     }.toSet
     val (batch, written) =
       stageBatch(readPartitions(schema, foldParts), partCols, version + 1)
-    requirePartitionsPreserved(written.keySet, foldParts,
-      sized, mors, dvs, schema, "incremental compaction")
+    requirePartitionsPreserved(written.keySet, foldParts, base, schema,
+      "incremental compaction")
     writeBatchStats(batch, schema, partCols, statsCols)
     // kept batches' files survive, so their tombstones must too; the
     // folded partitions' DVs became stale no-ops (their files are
@@ -2604,8 +2451,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * bulk needs nothing; full compaction would rewrite the world to
     * fix fragmentation that lives in a handful of suffixes. Same
     * crash contract as every rewrite; no-op when nothing is hot.
-    */
-  /** `maxSliceBytesFrac` — the BYTES trigger for skewed batch sizes:
+    *
+    * `maxSliceBytesFrac` — the BYTES trigger for skewed batch sizes:
     * a partition is also hot when its slices' recorded bytes reach
     * that fraction of its base entry's (one fat slice can hurt reads
     * as much as many thin ones). Defaults to never firing; a base
@@ -2616,7 +2463,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       maxSlices: Int,
       maxSliceBytesFrac: Double = Double.PositiveInfinity): Unit = {
     require(maxSlices >= 1, s"maxSlices must be >= 1, got $maxSlices")
-    val SnapshotStore.Resolved(version, sized, dvs, mors, smors, schemaJson, _) =
+    val base @ SnapshotStore.Resolved(version, sized, dvs, mors, smors, schemaJson, _) =
       resolveCurrent().getOrElse(return)
     // full and sparse slices both count: each is one more scan
     // subtree (and for sparse, one more patch JOIN) per read
@@ -2631,8 +2478,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     if (hot.isEmpty) return
     val (batch, written) =
       stageBatch(readPartitions(schema, hot), partCols, version + 1)
-    requirePartitionsPreserved(written.keySet, hot,
-      sized, mors, dvs, schema, "slice compaction")
+    requirePartitionsPreserved(written.keySet, hot, base, schema,
+      "slice compaction")
     // hot partitions' slices (full and sparse) materialized; everyone
     // else's carry. DVs carry whole (kept batches' files still need
     // theirs; the rewritten files' entries are no-ops against dead
@@ -2656,7 +2503,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   def compact(schema: StructType, partCols: Seq[String],
       statsCols: Seq[String] = Nil): Unit = {
-    val SnapshotStore.Resolved(version, sized, dvs, mors, smors, schemaJson, _) =
+    val base @ SnapshotStore.Resolved(version, sized, dvs, mors, smors, schemaJson, _) =
       resolveCurrent().getOrElse(return)
     val entries = sized.view.mapValues(_.batch).toMap
     // a single-batch table still compacts when deletion vectors or
@@ -2665,8 +2512,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     if (entries.values.toSet.size <= 1 && dvs.isEmpty && mors.isEmpty &&
       smors.isEmpty) return
     val (batch, written) = stageBatch(read(schema), partCols, version + 1)
-    requirePartitionsPreserved(written.keySet, entries.keySet,
-      sized, mors, dvs, schema, "compaction")
+    requirePartitionsPreserved(written.keySet, entries.keySet, base, schema,
+      "compaction")
     writeBatchStats(batch, schema, partCols, statsCols)
     commitSized(version + 1,
       written.map { case (s, sz) =>
@@ -2706,12 +2553,17 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       if (fs.exists(manifestsDir))
         fs.listStatus(manifestsDir).toSeq.map(_.getPath.getName)
       else Nil
-    // Batches referenced by any RETAINED manifest stay — base entries
-    // AND merge-on-read slices (a slice batch collected early would
-    // silently lose appended rows). A fenced or crashed writer's
-    // orphan manifest in/above the window keeps its batches one extra
-    // cycle (harmless); a torn orphan must not abort the sweep (Try);
-    // the CURRENT manifest is read strictly.
+    // Batches and DVs referenced by any RETAINED manifest stay
+    // ([[SnapshotStore.Resolved.batches]]; time travel inside the
+    // window applies the DVs), each manifest parsed once. A fenced or
+    // crashed writer's orphan manifest in/above the window keeps its
+    // files one extra cycle (harmless); a torn orphan must not abort
+    // the sweep (Try); the CURRENT manifest is parsed strictly.
+    val curName = currentManifestName()
+    val retained: Seq[SnapshotStore.Resolved] = curName.map(parseManifest).toSeq ++
+      manifestNames
+        .filter(n => n.startsWith("v-") && parseVersion(n) >= keepMin && !curName.contains(n))
+        .flatMap(n => scala.util.Try(parseManifest(n)).toOption)
     // batches/DVs a shallow clone references stay live regardless of
     // version windows: the clone's manifest points at these exact
     // files forever (until dropCloneRegistry) — see cloneTo's pinned
@@ -2723,12 +2575,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
         .flatMap(st =>
           scala.util.Try(readSmallFile(st.getPath).linesIterator
             .filter(_.nonEmpty).toList).getOrElse(Nil)).toSet
-    val liveBatches = manifestNames
-      .filter(n => n.startsWith("v-") && parseVersion(n) >= keepMin)
-      .flatMap(n => scala.util.Try(readManifestBatches(n))
-        .getOrElse(Set.empty[String])).toSet ++
-      currentManifestName().map(readManifestBatches).getOrElse(Set.empty) ++
-      clonePinned
+    val liveBatches = retained.flatMap(_.batches).toSet ++ clonePinned
     // a temp file of a commit at or above the window may belong to a
     // writer between its write and its rename: deleting it would fail
     // that commit (the rename finds no source)
@@ -2774,17 +2621,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       if (batchVersion(b).forall(_ < keepMin) && !liveBatches.contains(b))
         fs.delete(st.getPath, false)
     }
-    // Deletion vectors referenced by any RETAINED manifest stay (time
-    // travel inside the window applies them); a DV below the window
-    // and unreferenced — its deletes were materialized by a full
-    // rewrite, or its delete commit was fenced — is an orphan.
+    // A DV below the window and unreferenced — its deletes were
+    // materialized by a full rewrite, or its delete commit was fenced
+    // — is an orphan.
     if (fs.exists(deletesDir)) {
-      val liveDvs = manifestNames
-        .filter(n => n.startsWith("v-") && parseVersion(n) >= keepMin)
-        .flatMap(n => scala.util.Try(readManifestDvs(n)).getOrElse(Nil)).toSet ++
-        currentManifestName().map(n =>
-          scala.util.Try(readManifestDvs(n)).getOrElse(Nil).toSet)
-          .getOrElse(Set.empty) ++
+      val liveDvs = retained.flatMap(_.dvs).toSet ++
         clonePinned // clone registries list DV names too (dv- prefix)
       fs.listStatus(deletesDir).foreach { st =>
         val n = st.getPath.getName

@@ -533,10 +533,10 @@ object EventStreams {
         if (batchId == failAtBatch)
           throw new IllegalStateException(
             s"injected crash at micro-batch $batchId (recovery pin)")
-        // an empty micro-batch must not read+rewrite the target
-        if (!batch.isEmpty)
-          graft.sinks.SnapshotMerge.upsertUpdate(
-            spark, targetDir, batch, keys, partitionCols)
+        // no emptiness pre-job: an empty micro-batch pins no
+        // partition, so the merge returns without a commit
+        graft.sinks.SnapshotMerge.upsertUpdate(
+          spark, targetDir, batch, keys, partitionCols)
         lastUpsertBatches :+= batchId
         ()
       }
@@ -570,9 +570,8 @@ object EventStreams {
     val q = incoming.writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.sinks.SnapshotMerge.applyCdc(
-            spark, targetDir, batch, keys, seqCol, opCol, partitionCols)
+        graft.sinks.SnapshotMerge.applyCdc(
+          spark, targetDir, batch, keys, seqCol, opCol, partitionCols)
         ()
       }
       .trigger(Trigger.AvailableNow())
@@ -602,10 +601,9 @@ object EventStreams {
     val q = incoming.writeStream.outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        if (!batch.isEmpty)
-          graft.sinks.SnapshotMerge.upsertMorSparse(spark, targetDir, batch,
-            keys, partitionCols, updateCols,
-            autoCompactMaxSlices = autoCompactMaxSlices)
+        graft.sinks.SnapshotMerge.upsertMorSparse(spark, targetDir, batch,
+          keys, partitionCols, updateCols,
+          autoCompactMaxSlices = autoCompactMaxSlices)
         ()
       }
       .trigger(Trigger.AvailableNow())

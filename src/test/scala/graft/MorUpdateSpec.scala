@@ -42,10 +42,12 @@ class MorUpdateSpec extends SparkFunSuite {
   test("MoR rewrites NOTHING: base entries byte-identical, slices appended, DV committed") {
     val dir = seed()
     val store = new SnapshotStore(spark, new Path(dir))
-    val (_, before, dvsBefore, morsBefore) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, before, dvsBefore, morsBefore, _, _, _) =
+      store.resolveCurrent().get
     assert(dvsBefore.isEmpty && morsBefore.isEmpty)
     SnapshotMerge.upsertMor(spark, dir, incomingRows, Seq("id"), Seq("pk"))
-    val (_, after, dvs, mors) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, after, dvs, mors, _, _, _) =
+      store.resolveCurrent().get
     // every base entry — INCLUDING the touched partitions' — is the
     // exact same (batch, bytes) record: zero data rewritten
     assert(after == before, "MoR must not move a single base entry")
@@ -61,7 +63,8 @@ class MorUpdateSpec extends SparkFunSuite {
     SnapshotMerge.upsertMor(spark, dir,
       Seq((20L, "N20", 0L), (21L, "N21", 1L)).toDF("id", "v", "pk"),
       Seq("id"), Seq("pk"))
-    val (_, _, dvs, mors) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, _, dvs, mors, _, _, _) =
+      store.resolveCurrent().get
     assert(dvs.isEmpty, "nothing matched — no tombstones, no DV file")
     assert(mors.size == 2)
     assert(readVals(dir).keySet == (0L until 10L).toSet + 20L + 21L)
@@ -73,7 +76,8 @@ class MorUpdateSpec extends SparkFunSuite {
     SnapshotMerge.upsertMor(spark, dir,
       Seq((0L, "U0", 0L), (90L, "N90", 9L)).toDF("id", "v", "pk"),
       Seq("id"), Seq("pk"))
-    val (_, entries, _, mors) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, entries, _, mors, _, _, _) =
+      store.resolveCurrent().get
     assert(entries.contains("pk=9"), "new partition must be a base entry")
     assert(mors.map(_._1) == Seq("pk=0"), "existing partition appends a slice")
     assert(readVals(dir)(90L) == "N90" && readVals(dir)(0L) == "U0")
@@ -89,7 +93,8 @@ class MorUpdateSpec extends SparkFunSuite {
     assert(vals(0L) == "U0b")
     assert(vals.size == 10, "no duplicate key copies may surface")
     val store = new SnapshotStore(spark, new Path(dir))
-    val (_, _, dvs, mors) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, _, dvs, mors, _, _, _) =
+      store.resolveCurrent().get
     assert(mors.count(_._1 == "pk=0") == 2 && dvs.size == 2)
   }
 
@@ -138,7 +143,8 @@ class MorUpdateSpec extends SparkFunSuite {
     val before = readVals(dir)
     val store = new SnapshotStore(spark, new Path(dir))
     store.compact(targetRows.schema, Seq("pk"))
-    val (_, entries, dvs, mors) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, entries, dvs, mors, _, _, _) =
+      store.resolveCurrent().get
     assert(dvs.isEmpty && mors.isEmpty, "full rewrite materializes both")
     assert(entries.values.map(_.batch).toSet.size == 1)
     assert(readVals(dir) == before)
@@ -151,7 +157,8 @@ class MorUpdateSpec extends SparkFunSuite {
     SnapshotMerge.upsertUpdate(spark, dir,
       Seq((0L, "R0", 0L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
     val store = new SnapshotStore(spark, new Path(dir))
-    val (_, _, _, mors) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, _, _, mors, _, _, _) =
+      store.resolveCurrent().get
     assert(mors.map(_._1) == Seq("pk=1"),
       "pk=0's slice materialized by the rewrite; pk=1's must survive")
     val vals = readVals(dir)
@@ -173,7 +180,7 @@ class MorUpdateSpec extends SparkFunSuite {
     val dir = seed()
     val store = new SnapshotStore(spark, new Path(dir))
     // band sidecar for the seed batch
-    store.writeBatchStats(store.currentResolved().get._2.values.head.batch,
+    store.writeBatchStats(store.resolveCurrent().get.entries.values.head.batch,
       targetRows.schema, Seq("pk"), Seq("id"))
     SnapshotMerge.upsertMor(spark, dir, incomingRows, Seq("id"), Seq("pk"))
     val got = store.readRange(targetRows.schema, "id", 5.0, 11.0).collect()
@@ -267,7 +274,7 @@ class MorUpdateSpec extends SparkFunSuite {
     java.nio.file.Files.deleteIfExists(
       java.nio.file.Paths.get(s"$dir/manifests/.$name.crc"))
     assert(intercept[IllegalArgumentException] {
-      store.currentResolved()
+      store.resolveCurrent()
     }.getMessage.contains("unrecognized marker"))
   }
 

@@ -51,6 +51,19 @@ class ParquetReadLintSpec extends org.scalatest.funsuite.AnyFunSuite {
         7 -> "read.parquet(\"s3a://b/k\")"))
   }
 
+  test("SnapshotStore has one basePath scan and one deletion-vector anti-join") {
+    val code = SourceLint.stripComments(
+      Files.readString(graftRoot.resolve("sinks/SnapshotStore.scala")))
+    // a read chain up to its `.parquet(`, whatever the paths argument
+    val chainHead = ("""\bread((?:\s*\.\s*(?:option|options|format|schema)\s*""" +
+      """\((?:[^()]|\([^()]*\))*\))*)\s*\.\s*parquet\s*\(""").r
+    val basePathScans = chainHead.findAllMatchIn(code)
+      .count(_.group(1).replaceAll("\\s", "").contains(".option(\"basePath\""))
+    assert(basePathScans == 1, s"$basePathScans basePath scans; every read goes through scan()")
+    val antiJoins = "\"left_anti\"".r.findAllMatchIn(code).size
+    assert(antiJoins == 1, s"$antiJoins left_anti joins; tombstones apply in scan() only")
+  }
+
   test("sinks and Tables read parquet with a declared schema, outside the allow-list") {
     val found = hotPathFiles.flatMap { f =>
       val rel = graftRoot.relativize(f).toString

@@ -82,7 +82,7 @@ class SnapshotLockSpec extends SparkFunSuite {
     // base version, then BLOCKS inside its merge function while
     // writer A commits — so B's first commit is GUARANTEED to hit the
     // fence. The mergeFn latch works because merge() resolves
-    // currentSized() before invoking mergeFn and commits after: the
+    // resolveCurrent() before invoking mergeFn and commits after: the
     // pause sits exactly inside the read→commit conflict window.
     def pk(df: org.apache.spark.sql.DataFrame) =
       df.withColumn("pk", pmod(col("k"), lit(2L)))

@@ -192,8 +192,8 @@ class SnapshotMergeSpec extends SparkFunSuite {
     // the hook runs with the pointer temp file written, right before
     // its rename: a concurrent writer's trailing vacuum lands there
     store.beforeSwapHook = () => new SnapshotStore(spark, new Path(dir)).vacuum()
-    val (v, _) = store.currentSized().get
-    store.commitSized(v + 1, store.currentSized().get._2, Some(v))
+    val v = store.resolveCurrent().get.version
+    store.commitSized(v + 1, store.resolveCurrent().get.entries, Some(v))
     assert(store.currentVersion().contains(v + 1))
     assert(readVals(dir) == targetRows.collect().map(r => r.getLong(0) -> r.getString(1)).toMap)
   }
@@ -258,7 +258,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
     val store = new SnapshotStore(spark, new Path(dir))
     assert(store.currentSchema().map(_.fieldNames.toSeq)
       .contains(Seq("id", "v", "pk")))
-    val before = store.currentSized().get._2
+    val before = store.resolveCurrent().get.entries
 
     // v2 adds a column; only pk=0 touched
     val widened = Seq((0L, "U0", "extra", 0L)).toDF("id", "v", "v2", "pk")
@@ -280,7 +280,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
 
     // the evolve was metadata-only for untouched partitions: every
     // non-pk=0 partition still references its v1 batch
-    val after = store.currentSized().get._2
+    val after = store.resolveCurrent().get.entries
     before.keys.filterNot(_.startsWith("pk=0")).foreach { p =>
       assert(after(p) == before(p), s"untouched partition $p was rewritten")
     }
@@ -302,7 +302,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
     val store = new SnapshotStore(spark, new Path(dir))
     assert(store.currentSchema().get("cents").dataType ==
       org.apache.spark.sql.types.IntegerType)
-    val before = store.currentSized().get._2
+    val before = store.resolveCurrent().get.entries
 
     // v2: cents arrives as BIGINT beyond int range, touching pk=1 only
     SnapshotMerge.upsertEvolve(spark, dir,
@@ -312,7 +312,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
       org.apache.spark.sql.types.LongType)
     // metadata-only: the untouched pk=0 partition keeps its v1 batch
     // (its int32 files are never rewritten for the widen)
-    val after = store.currentSized().get._2
+    val after = store.resolveCurrent().get.entries
     before.keys.filter(_.startsWith("pk=0")).foreach { p =>
       assert(after(p) == before(p), s"untouched partition $p was rewritten")
     }
@@ -347,10 +347,10 @@ class SnapshotMergeSpec extends SparkFunSuite {
       Seq((0L, "a", 10L, 0L), (1L, "b", 20L, 1L)).toDF("id", "v", "score", "pk"),
       Seq("id"), Seq("pk"))
     val store = new SnapshotStore(spark, new Path(dir))
-    val before = store.currentSized().get._2
+    val before = store.resolveCurrent().get.entries
     SnapshotMerge.dropColumn(spark, dir, "score")
     // metadata-only: identical data entries, no rewrite
-    assert(store.currentSized().get._2 == before)
+    assert(store.resolveCurrent().get.entries == before)
     assert(store.currentSchema().get.fieldNames.toSeq == Seq("id", "v", "pk"))
     val got = SnapshotMerge.readEvolved(spark, dir)
     assert(!got.columns.contains("score"))
@@ -396,10 +396,10 @@ class SnapshotMergeSpec extends SparkFunSuite {
       Seq("id"), Seq("pk"))
     val store = new SnapshotStore(spark, new Path(dir))
     val v1 = store.currentVersion().get
-    val before = store.currentSized().get._2
+    val before = store.resolveCurrent().get.entries
     SnapshotMerge.renameColumn(spark, dir, "pic", "cover")
     // metadata-only: identical data entries, no rewrite
-    assert(store.currentSized().get._2 == before)
+    assert(store.resolveCurrent().get.entries == before)
     assert(store.currentSchema().get.fieldNames.toSeq == Seq("id", "cover", "pk"))
     // old files' 'pic' bytes project under the new logical name
     assert(SnapshotMerge.readEvolved(spark, dir).collect()
@@ -473,10 +473,12 @@ class SnapshotMergeSpec extends SparkFunSuite {
     val schema = (0L until 1L).map(i => (i, "x", i)).toDF("id", "v", "pk").schema
     val before = SnapshotMerge.read(spark, dir, schema).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
-    val (_, entriesB, _, morsB) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, entriesB, _, morsB, _, _, _) =
+      store.resolveCurrent().get
     assert(morsB.count(_._1 == "pk=0") == 3 && morsB.count(_._1 == "pk=1") == 1)
     store.compactSlices(schema, Seq("pk"), maxSlices = 3)
-    val (_, entriesA, dvsA, morsA) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, entriesA, dvsA, morsA, _, _, _) =
+      store.resolveCurrent().get
     assert(morsA.map(_._1) == Seq("pk=1"),
       "only the slice-hot partition's slices materialize")
     assert(entriesA("pk=0") != entriesB("pk=0"), "hot partition rewritten")
@@ -494,7 +496,8 @@ class SnapshotMergeSpec extends SparkFunSuite {
     // (1) is far below maxSlices; content unchanged
     store.compactSlices(schema, Seq("pk"), maxSlices = 99,
       maxSliceBytesFrac = 0.1)
-    val (_, _, _, morsC) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, _, _, morsC, _, _, _) =
+      store.resolveCurrent().get
     assert(morsC.isEmpty, s"bytes trigger must fold the fat-slice partition: $morsC")
     assert(SnapshotMerge.read(spark, dir, schema).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap == before)
@@ -574,7 +577,8 @@ class SnapshotMergeSpec extends SparkFunSuite {
     // physical layout sanity: the latest slice carries `pic` (cover's
     // physical) AND `pic__r1` (the re-added column's), never a
     // doubled name
-    val (_, _, _, mors) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, _, _, mors, _, _, _) =
+      store.resolveCurrent().get
     val sliceCols = spark.read.parquet(
       store.dataPath(mors.last._2.batch).toString).schema.fieldNames.toSet
     assert(sliceCols.contains("pic") && sliceCols.contains("pic__r1") &&
@@ -587,14 +591,15 @@ class SnapshotMergeSpec extends SparkFunSuite {
       Seq((0L, 10, 0L), (1L, 20, 1L), (5L, 50, 0L)).toDF("id", "score", "pk"),
       Seq("id"), Seq("pk"))
     val store = new SnapshotStore(spark, new Path(dir))
-    val before = store.currentResolved().get._2
+    val before = store.resolveCurrent().get.entries
     // incoming WIDENS score (int -> bigint) and ADDS note — through
     // merge-on-read: base entries must stay byte-identical
     SnapshotMerge.upsertMorEvolve(spark, dir,
       Seq((0L, 9999999999L, "n0", 0L), (2L, 3L, "n2", 1L))
         .toDF("id", "score", "note", "pk"),
       Seq("id"), Seq("pk"), retain = 4)
-    val (_, after, dvs, mors) = store.currentResolved().get
+    val SnapshotStore.Resolved(_, after, dvs, mors, _, _, _) =
+      store.resolveCurrent().get
     assert(after == before, "MoR evolve must not move a single base entry")
     assert(mors.map(_._1).toSet == Set("pk=0", "pk=1"),
       s"slices land on the touched partitions only: $mors")
@@ -869,7 +874,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
   test("manifest v2 records the bytes each merge wrote") {
     val dir = seed()
     val store = new SnapshotStore(spark, new Path(dir))
-    val (_, entries) = store.currentSized().get
+    val entries = store.resolveCurrent().get.entries
     entries.foreach { case (suffix, e) =>
       assert(e.bytes > 0L, s"$suffix must record a positive size")
       val onDisk = store.fs.getContentSummary(
@@ -886,7 +891,8 @@ class SnapshotMergeSpec extends SparkFunSuite {
       Seq((100L, "H0", 0L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
     SnapshotMerge.upsertUpdate(spark, dir,
       Seq((101L, "H1", 1L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
-    val (v, entries) = store.currentSized().get
+    val SnapshotStore.Resolved(v, entries, _, _, _, _, _) =
+      store.resolveCurrent().get
     val churn0 = entries("pk=0").batch
     val seedBatch = entries("pk=2").batch
     assert(Set(churn0, entries("pk=1").batch, seedBatch).size == 3)
@@ -904,7 +910,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
     store.commitSized(v + 1, lied, Some(v))
     val before = readVals(dir)
     store.compactIncremental(targetRows.schema, Seq("pk"), maxBatches = 2)
-    val after = store.currentSized().get._2
+    val after = store.resolveCurrent().get.entries
     assert(after("pk=0").batch == churn0,
       "the manifest-ranked biggest batch must be kept as-is")
     assert(Set("pk=1", "pk=2", "pk=3", "pk=4").map(after(_).batch).size == 1 &&
@@ -922,12 +928,13 @@ class SnapshotMergeSpec extends SparkFunSuite {
       Seq((101L, "H1", 1L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
     // Downgrade the whole manifest to v1 semantics (bytes unknown), as
     // a table inherited from a pre-size build would be.
-    val (v, entries) = store.currentSized().get
+    val SnapshotStore.Resolved(v, entries, _, _, _, _, _) =
+      store.resolveCurrent().get
     store.commit(v + 1, entries.view.mapValues(_.batch).toMap, Some(v))
-    assert(store.currentSized().get._2.values.forall(_.bytes < 0L))
+    assert(store.resolveCurrent().get.entries.values.forall(_.bytes < 0L))
     val before = readVals(dir)
     store.compactIncremental(targetRows.schema, Seq("pk"), maxBatches = 2)
-    val after = store.currentSized().get._2
+    val after = store.resolveCurrent().get.entries
     // every entry — folded AND carried-forward — now records real bytes,
     // so the one-time getContentSummary fallback never repeats
     assert(after.values.forall(_.bytes > 0L),
@@ -939,7 +946,22 @@ class SnapshotMergeSpec extends SparkFunSuite {
     val dir = seed()
     val store = new SnapshotStore(spark, new Path(dir))
     val v = store.currentVersion()
-    SnapshotMerge.upsertUpdate(spark, dir, incomingRows.limit(0), Seq("id"), Seq("pk"))
+    val empty = incomingRows.limit(0)
+    SnapshotMerge.upsertUpdate(spark, dir, empty, Seq("id"), Seq("pk"))
     assert(store.currentVersion() == v)
+    // every front a streaming sink calls commits nothing for an empty
+    // frame, so the sinks need no emptiness pre-job of their own
+    SnapshotMerge.applyCdc(spark, dir,
+      empty.withColumn("seq", org.apache.spark.sql.functions.lit(1L))
+        .withColumn("op", org.apache.spark.sql.functions.lit("upsert")),
+      Seq("id"), "seq", "op", Seq("pk"))
+    assert(store.currentVersion() == v, "applyCdc committed an empty frame")
+    assert(SnapshotMerge.upsertMorSparse(spark, dir, empty, Seq("id"), Seq("pk"),
+      Seq("v")).isEmpty)
+    assert(SnapshotMerge.merge(spark, dir, empty, Seq("pk"))(
+      (target, inc) => Merge.upsertUpdate(target, inc, Seq("id"))).isEmpty)
+    assert(store.currentVersion() == v)
+    assert(readVals(dir) == targetRows.collect()
+      .map(r => r.getLong(0) -> r.getString(1)).toMap)
   }
 }

@@ -29,9 +29,10 @@ class SnapshotStatsSpec extends SparkFunSuite {
     val entries = st.current().get._2
     assert(entries.keySet == Set("pk=0", "pk=1", "pk=2"))
     // metadata decision: only pk=1's band [100,199] intersects [120,180]
-    assert(st.pruneByStats(entries, "v", 120.0, 180.0).keySet == Set("pk=1"))
+    assert(st.pruneSlicesByStats(entries.toSeq, "v", 120.0, 180.0).map(_._1).toSet ==
+      Set("pk=1"))
     // boundary inclusivity: hi == a band's min keeps that partition
-    assert(st.pruneByStats(entries, "v", 50.0, 100.0).keySet ==
+    assert(st.pruneSlicesByStats(entries.toSeq, "v", 50.0, 100.0).map(_._1).toSet ==
       Set("pk=0", "pk=1"))
     val got = st.readRange(rows.schema, "v", 120.0, 180.0)
       .select(col("id")).collect().map(_.getLong(0)).sorted
@@ -50,7 +51,7 @@ class SnapshotStatsSpec extends SparkFunSuite {
       Seq("id"), Seq("pk"), statsCols = Seq("v"))
     val st = store(dir)
     val entries = st.current().get._2
-    assert(st.pruneByStats(entries, "v", 120.0, 180.0).keySet ==
+    assert(st.pruneSlicesByStats(entries.toSeq, "v", 120.0, 180.0).map(_._1).toSet ==
       Set("pk=0", "pk=1"))
     val got = st.readRange(rows.schema, "v", 120.0, 180.0)
       .select(col("id")).collect().map(_.getLong(0)).sorted
@@ -69,7 +70,7 @@ class SnapshotStatsSpec extends SparkFunSuite {
     val batch = entries.values.head
     st.fs.delete(new Path(new Path(st.root, "stats"), batch), false)
     assert(st.readBatchStats(batch).isEmpty)
-    assert(st.pruneByStats(entries, "v", 120.0, 180.0).keySet ==
+    assert(st.pruneSlicesByStats(entries.toSeq, "v", 120.0, 180.0).map(_._1).toSet ==
       entries.keySet, "no sidecar -> nothing prunable")
     val got = st.readRange(rows.schema, "v", 120.0, 180.0)
       .select(col("id")).collect().map(_.getLong(0)).sorted
@@ -93,7 +94,7 @@ class SnapshotStatsSpec extends SparkFunSuite {
     assert(!bands.getOrElse("pk=0", Map.empty).contains("v"))
     assert(bands("pk=1").contains("v"))
     // pk=0 (all-null v) is unprunable; its rows can't match anyway
-    assert(st2.pruneByStats(e2, "v", 120.0, 180.0).keySet ==
+    assert(st2.pruneSlicesByStats(e2.toSeq, "v", 120.0, 180.0).map(_._1).toSet ==
       Set("pk=0", "pk=1"))
     assert(st2.readRange(withNulls.schema, "v", 120.0, 180.0)
       .count() == 61L)
@@ -127,7 +128,8 @@ class SnapshotStatsSpec extends SparkFunSuite {
     st.compact(rows.schema, Seq("pk"), statsCols = Seq("v"))
     val entries = st.current().get._2
     assert(entries.values.toSet.size == 1, "compacted to one batch")
-    assert(st.pruneByStats(entries, "v", 120.0, 180.0).keySet == Set("pk=1"))
+    assert(st.pruneSlicesByStats(entries.toSeq, "v", 120.0, 180.0).map(_._1).toSet ==
+      Set("pk=1"))
   }
 
   test("clustered compaction makes file bands selective; reads stay exact") {
@@ -172,7 +174,7 @@ class SnapshotStatsSpec extends SparkFunSuite {
 
     def filesTouched(dir: String): Int = {
       val st = store(dir)
-      st.boxFilePaths(box).map(_._1.size).sum
+      st.boxFilePaths(box).map(_._2.size).sum
     }
 
     val linDir = tmp("stats_zlin_")
@@ -226,7 +228,8 @@ class SnapshotStatsSpec extends SparkFunSuite {
       statsCols = Seq("v"))
     val st = store(dir)
     val entries = st.current().get._2
-    assert(st.pruneByStats(entries, "v", 120.0, 180.0).keySet == Set("pk=0"),
+    assert(st.pruneSlicesByStats(entries.toSeq, "v", 120.0, 180.0).map(_._1).toSet ==
+      Set("pk=0"),
       "NaN-poisoned band must stay (unknown), clean out-of-range band must prune")
     val got = st.readRange(mixed.schema, "v", 120.0, 180.0)
       .select(col("id")).collect().map(_.getLong(0)).toSeq

@@ -198,6 +198,39 @@ class SparseMorSpec extends SparkFunSuite {
     assert(header() == "graft-snapshot 2")
   }
 
+  test("every read front returns the same rows over a base entry, a #mor slice, a #smor patch and a DV") {
+    val dir = tmp("smorfronts")
+    val rows = (0L until 20L).map(i => (i, i % 2, i.toDouble, s"s$i")).toDF("id", "pk", "v", "s")
+    SnapshotMerge.upsertUpdate(spark, dir, rows, Seq("id"), Seq("pk"),
+      statsCols = Seq("v"))
+    val store = new SnapshotStore(spark, new Path(dir))
+    store.writeBatchBloom(store.resolveCurrent().get.entries.values.head.batch,
+      rows.schema, Seq("pk"), "id")
+    // a full-row MoR update (a #mor slice plus a DV on its old copy),
+    // a sparse patch of `s`, and a delete (a second DV)
+    SnapshotMerge.upsertMor(spark, dir, Seq((3L, 1L, 30.0, "m3")).toDF("id", "pk", "v", "s"),
+      Seq("id"), Seq("pk"))
+    SnapshotMerge.upsertMorSparse(spark, dir, Seq((4L, 0L, -1.0, "p4")).toDF("id", "pk", "v", "s"),
+      Seq("id"), Seq("pk"), Seq("s"))
+    store.deleteWhere(rows.schema, col("id") === 7L)
+    val cur = store.resolveCurrent().get
+    assert(cur.mors.nonEmpty && cur.smors.nonEmpty && cur.dvs.size == 2)
+    def sorted(df: DataFrame): Seq[(Long, Long, Double, String)] =
+      df.collect().map(r => (r.getAs[Long]("id"), r.getAs[Long]("pk"),
+        r.getAs[Double]("v"), r.getAs[String]("s"))).toSeq.sorted
+    val want = sorted(store.read(rows.schema))
+    assert(want.map(_._1) == (0L until 20L).filterNot(_ == 7L))
+    assert(want.contains((3L, 1L, 30.0, "m3")) && want.contains((4L, 0L, 4.0, "p4")))
+    Seq(
+      "SnapshotMerge.read" -> SnapshotMerge.read(spark, dir, rows.schema),
+      "readAt(current)" -> store.readAt(cur.version, rows.schema),
+      "readPartitions" -> store.readPartitions(rows.schema, cur.entries.keySet),
+      "readRange" -> store.readRange(rows.schema, "v", -1e9, 1e9),
+      "readKeyLookup" -> store.readKeyLookup(rows.schema, "id", 0L until 20L),
+      "readBoxFiles" -> store.readBoxFiles(rows.schema, Seq(("v", -1e9, 1e9)))
+    ).foreach { case (front, df) => assert(sorted(df) == want, front) }
+  }
+
   test("readRange stays exact when a patch moves a value INTO the queried band") {
     val dir = tmp("smorrange")
     val rows = (0L until 20L).map(i => (i, i % 2, i.toDouble)).toDF("id", "pk", "v")

@@ -206,6 +206,26 @@ class StreamingSpec extends SparkFunSuite with BeforeAndAfterAll {
     assert(v0 == batch.where($"event_id" === 0L).select("value").as[Double].collect()(0))
   }
 
+  test("an upsertStream micro-batch runs no emptiness pre-job inside foreachBatch") {
+    import spark.implicits._
+    val root = tempDir("upsert_stream_jobs")
+    val drop = root.resolve("drop").toString
+    Seq((1L, 1.0, 1L), (2L, 2.0, 0L)).toDF("event_id", "value", "pk").coalesce(1)
+      .write.parquet(drop)
+    val target = root.resolve("t").toString
+    SnapshotMerge.upsertUpdate(spark, target,
+      Seq((0L, 0.0, 0L)).toDF("event_id", "value", "pk"), Seq("event_id"), Seq("pk"))
+    val schema = spark.read.parquet(drop).schema
+    // one micro-batch: upsertUpdate's pin and its staged write
+    val (_, n) = org.apache.spark.JobCounter.executionsDuring(
+        spark.sparkContext, nestedOnly = true) {
+      EventStreams.upsertStream(spark, spark.readStream.schema(schema).parquet(drop),
+        target, Seq("event_id"), Seq("pk"), root.resolve("ckpt").toString)
+    }
+    assert(n <= 2, s"one micro-batch ran $n SQL executions inside foreachBatch")
+    assert(SnapshotMerge.read(spark, target, schema).count() == 3L)
+  }
+
   test("checkpoint restart resumes at the failed batch, never reprocessing batch 0") {
     import spark.implicits._
     import java.nio.file.attribute.FileTime
