@@ -14,7 +14,8 @@ import org.apache.spark.sql.functions._
   *     table built at `pk % N` for N = 8 vs 512 partitions (64× the
   *     manifest/stats rows), reading one narrow price band. Reported:
   *     build s, read s, scan-input files vs total files, rows.
-  *   - FILE-BAND pruning (`readBoxFiles` after `compactZOrder`): the
+  *   - FILE-BAND pruning (`readBoxFiles` after a two-column
+  *     `compactClustered`, i.e. a Z-order rewrite): the
   *     lineitem-derived table Z-ordered at maxRecordsPerFile tuned to
   *     produce ~60 vs ~6000 files, reading one 2-D box. Same report.
   *
@@ -82,7 +83,7 @@ object WarehouseScaleProbe {
           Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"), Seq("pk"))
         val store = new graft.sinks.SnapshotStore(spark, new Path(base))
         val (_, zS) = timed {
-          store.compactZOrder(li.schema, Seq("pk"),
+          store.compactClustered(li.schema, Seq("pk"),
             Seq("l_partkey", "l_suppkey"), maxRecordsPerFile = maxRec)
         }
         val all = store.readPartitions(li.schema, null).inputFiles.length

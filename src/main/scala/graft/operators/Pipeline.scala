@@ -554,8 +554,8 @@ object Pipeline extends QueryModule {
     // the upserter invalidated the file set it was rewriting, or the
     // upserter because its base manifests were superseded — and the
     // retry wrapper REBASES it against the winner's committed state
-    // (SnapshotMerge.retryLoop over compactClustered re-reads
-    // current() whole; SnapshotMerge.retrying over upsertUpdate
+    // (SnapshotMerge.retryLoop over compactClustered re-resolves and
+    // re-reads the table whole; SnapshotMerge.retrying over upsertUpdate
     // re-prunes and re-merges). Compaction only rearranges rows, so
     // the final CONTENT equals a sequential upsert no matter which
     // order the race resolves — which is what makes a genuinely racy
@@ -602,7 +602,7 @@ object Pipeline extends QueryModule {
             val st = new graft.sinks.SnapshotStore(s,
               new org.apache.hadoop.fs.Path(base))
             graft.sinks.SnapshotMerge.retryLoop()(st.compactClustered(
-              target.schema, Seq("pk"), "o_totalprice",
+              target.schema, Seq("pk"), Seq("o_totalprice"),
               maxRecordsPerFile = 500L))
           } catch { case t: Throwable => errs.add(t) })
         writer.start(); compactor.start(); gate.countDown()
@@ -1227,7 +1227,7 @@ object Pipeline extends QueryModule {
     }),
 
     // Z-ORDERED box read over the snapshot table: seed the store,
-    // rewrite with compactZOrder on (l_partkey, l_suppkey) — rows
+    // rewrite with compactClustered on (l_partkey, l_suppkey) — rows
     // sort by the interleaved-bit morton value of per-column QUANTILE
     // codes, so every file's band is narrow in BOTH columns — then
     // read a 2-D box through readBoxFiles (partition bands, then file
@@ -1255,7 +1255,7 @@ object Pipeline extends QueryModule {
           s, base, target,
           Seq("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"), Seq("pk"))
         val store = new graft.sinks.SnapshotStore(s, new org.apache.hadoop.fs.Path(base))
-        store.compactZOrder(target.schema, Seq("pk"),
+        store.compactClustered(target.schema, Seq("pk"),
           Seq("l_partkey", "l_suppkey"), maxRecordsPerFile = 2000L)
         store
           .readBoxFiles(target.schema,

@@ -84,8 +84,8 @@ object SnapshotMerge {
     // or anti-join
     val existing = store.readSlices(base.slices, pinned.schema, gained,
       base.dvs, base.smors)
-    commitRewrite(store, cur, existing.unionByName(fresh), pinned.schema,
-      partCols, gained, retain, sc, None, Some(cbase))
+    store.commitRewrite(cur, existing.unionByName(fresh), gained, partCols, sc,
+      validated = Some(cbase), retain = retain)
     n
   }
 
@@ -259,10 +259,10 @@ object SnapshotMerge {
     * positions (only meaningful against the exact base they were read
     * from) and re-merges against the winner's committed state; the
     * final table equals sequential application in commit order. The
-    * same holds for a maintenance rewrite racing a writer
-    * (`store.compactClustered` re-reads the winner's rows and
-    * re-clusters) and for `store.deleteWhere` (whose fenced loser
-    * removes its own staged DV).
+    * same holds for a maintenance rewrite racing a writer (every
+    * compaction re-resolves and rewrites the winner's rows) and for
+    * `store.deleteWhere` (whose fenced loser removes its own staged
+    * DV).
     *
     * Runs `body` until it commits, up to `maxAttempts` total attempts;
     * after that many fenced aborts the last exception propagates — at
@@ -988,21 +988,12 @@ object SnapshotMerge {
     requirePartitionable(incoming0.schema, partCols)
     val store = new SnapshotStore(spark, new Path(rootDir))
     val cbase = requireConstraints(store, incoming0)
-    // the counts are unused: an empty frame still commits (truncates)
-    val (incoming, _, _) = pinTouched(incoming0, partCols)
+    // an empty frame touches nothing and still commits (truncates)
+    val (incoming, touched, _) = pinTouched(incoming0, partCols)
     val cur = store.resolveCurrent()
-    val newVersion = cur.map(_.version).getOrElse(0L) + 1
-    val (batch, written) = store.stageBatch(incoming, partCols, newVersion)
-    store.writeBatchStats(batch, incoming.schema, partCols, statsCols)
-    val entries = written.map { case (s, sz) =>
-      s -> SnapshotStore.SnapshotEntry(batch, sz)
-    }
-    // DVs/slices drop (replaced wholesale); the embedded schema
-    // carries, matching the sidecars it mirrors
-    store.commitSized(newVersion, entries, cur.map(_.version),
-      schemaJson = cur.flatMap(_.schemaJson),
-      validatedConstraints = Some(cbase))
-    store.vacuum(retain)
+    // every base partition is rewritten, so its DVs and slices drop
+    store.commitRewrite(cur, incoming, cur.fold(touched)(_.entries.keySet ++ touched),
+      partCols, statsCols, validated = Some(cbase), retain = retain)
   }
 
   /** Project `df` onto `schema`: shared fields pass through (types
@@ -1314,8 +1305,8 @@ object SnapshotMerge {
     // slice (the rewrite below materializes them).
     val pruned = store.readSlices(base.slices, incoming.schema, touched,
       base.dvs, base.smors)
-    Some(commitRewrite(store, cur, mergeFn(pruned, incoming), incoming.schema,
-      partCols, touched, retain, statsCols, embedSchema, validated))
+    Some(store.commitRewrite(cur, mergeFn(pruned, incoming), touched, partCols,
+      statsCols, embedSchema = embedSchema, validated = validated, retain = retain))
   }
 
   /** Pin `df` — an eager local checkpoint: its upstream runs once,
@@ -1340,55 +1331,5 @@ object SnapshotMerge {
     val parts = m.getSeq[Row](0)
     requirePartitionValues(parts)
     (pinned, parts.map(partitionSuffix(partCols, _)).toSet, m.getLong(1))
-  }
-
-  /** The copy-on-write commit tail of [[mergePhys]] and
-    * [[upsertIgnore]]: stage `rows` as the whole new content of the
-    * `rewritten` partitions and commit it fenced on `cur`, the
-    * resolution `rows` was read from, then vacuum. Returns the
-    * committed version.
-    *
-    * The staged batch is unreferenced until the commit — a crash
-    * leaves only an orphan for vacuum. A rewritten partition `rows`
-    * leaves empty simply has no dir, so it drops from the manifest
-    * (an atomic delete); each written partition's bytes go into the
-    * manifest, so compaction never re-stats them. The opt-in stats
-    * sidecar (one bounded agg over the just-written files, the
-    * metadata readRange prunes on) is written before the commit: an
-    * unreferenced batch with a sidecar is just a bigger orphan.
-    *
-    * The base's deletion vectors carry forward: untouched partitions
-    * keep their files (and so their tombstones); rewritten partitions
-    * were read DV-filtered, so their old tombstones become harmless
-    * no-ops against dead paths. Their merge-on-read slices — full and
-    * sparse — drop (the rewrite materialized them); other partitions
-    * keep theirs. The evolve fronts REPLACE the embedded schema with
-    * their union (atomic with this commit — the sidecar-lag race
-    * closer); every other commit CARRIES the base's.
-    */
-  private def commitRewrite(store: SnapshotStore,
-      cur: Option[SnapshotStore.Resolved], rows: DataFrame, schema: StructType,
-      partCols: Seq[String], rewritten: Set[String], retain: Int,
-      statsCols: Seq[String], embedSchema: Option[StructType],
-      validated: Option[Map[String, String]]): Long = {
-    val base = cur.getOrElse(SnapshotStore.Resolved.empty)
-    val newVersion = base.version + 1
-    val (batch, written) = store.stageBatch(rows, partCols, newVersion)
-    require(written.keySet.subsetOf(rewritten),
-      s"merge produced unexpected partitions: ${(written.keySet -- rewritten).mkString(", ")}")
-    store.writeBatchStats(batch, schema, partCols, statsCols)
-    val entries = (base.entries -- rewritten) ++ written.map { case (s, sz) =>
-      s -> SnapshotStore.SnapshotEntry(batch, sz)
-    }
-    // fenced on the exact base `rows` read: a concurrent commit in
-    // between aborts with SnapshotConcurrentWriteException instead of
-    // silently dropping that writer's merge
-    store.commitSized(newVersion, entries, cur.map(_.version), base.dvs,
-      base.mors.filterNot(m => rewritten(m._1)),
-      base.smors.filterNot(m => rewritten(m.suffix)),
-      embedSchema.map(_.json).orElse(cur.flatMap(_.schemaJson)),
-      validatedConstraints = validated)
-    store.vacuum(retain)
-    newVersion
   }
 }

@@ -2,8 +2,8 @@ package graft.sinks
 
 import java.nio.charset.StandardCharsets
 import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.functions.{col, lit, when}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, lit, shiftleft, shiftright, when}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
 /** A [[SnapshotStore.commit]] found the table advanced past the
@@ -42,11 +42,8 @@ object SnapshotStore {
   /** One parsed manifest: the committed version, and the only value a
     * manifest is ever read into. Everything a writer must derive BOTH
     * its read and its commit fence from (two pointer reads can
-    * straddle a concurrent commit). Carry-forward contract: a
-    * committer that keeps a partition's existing files keeps its
-    * deletion vectors, `#mor` slices AND `#smor` sparse slices; a
-    * committer that rewrites a partition drops that partition's
-    * slices — the rewrite IS their materialization.
+    * straddle a concurrent commit). What a committer carries forward
+    * from it: [[SnapshotStore.commitRewrite]]'s carry rule.
     *
     * `schemaJson` — the table schema EMBEDDED in this version's
     * manifest (`#schema` line), authoritative for exactly this
@@ -253,12 +250,12 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   private[graft] var beforeSwapHook: () => Unit = () => ()
 
-  /** Test seam: runs in [[compactClustered]] after the clustered
-    * rewrite is fully staged and immediately before its fenced
-    * commit — the window where a racing row-level writer invalidates
-    * the file set the compactor just rewrote. Lets specs force the
-    * compactor-loses direction of the writer-vs-OPTIMIZE conflict
-    * deterministically. No-op in production.
+  /** Test seam: runs in every compaction after its rewrite is fully
+    * staged and immediately before its fenced commit
+    * ([[commitRewrite]]) — the window where a racing row-level writer
+    * invalidates the file set the compactor just rewrote. Lets specs
+    * force the compactor-loses direction of the writer-vs-OPTIMIZE
+    * conflict deterministically. No-op in production.
     */
   private[graft] var beforeCompactCommitHook: () => Unit = () => ()
 
@@ -393,15 +390,72 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * `partCols` tuple (shuffled so each partition writes one file
     * set), and return (batch, data bytes per written partition). The
     * batch is unreferenced until a commit names it — a crash leaves
-    * only an orphan for [[vacuum]].
+    * only an orphan for [[vacuum]]. `sort` = (keys, max rows per
+    * file) sorts each partition's rows by the keys and splits them
+    * into files of at most that many rows: the clustered layout that
+    * makes per-file bands selective.
     */
   private[sinks] def stageBatch(df: DataFrame, partCols: Seq[String],
-      version: Long): (String, Map[String, Long]) = {
+      version: Long, sort: Option[(Seq[Column], Long)] = None): (String, Map[String, Long]) = {
     val batch = newBatch(version)
     val p = dataPath(batch)
-    df.repartition(partCols.map(col): _*).write.mode("overwrite")
+    val parted = df.repartition(partCols.map(col): _*)
+    sort.fold(parted)(s => parted.sortWithinPartitions(partCols.map(col) ++ s._1: _*))
+      .write.mode("overwrite").options(sort.map("maxRecordsPerFile" -> _._2.toString).toMap)
       .partitionBy(partCols: _*).parquet(p.toString)
     (batch, SnapshotStore.partitionSizes(fs, p))
+  }
+
+  /** The one partition-rewrite commit: every copy-on-write merge,
+    * [[SnapshotMerge.replaceAll]] and every compaction ends here.
+    * Stages `rows` as the whole new content of the `rewritten`
+    * partitions of `base` (the resolution `rows` was read from),
+    * writes the opt-in stats sidecar (`statsCols`; file bands too when
+    * `sort` clusters the files — see [[stageBatch]]), commits fenced
+    * on `base` and vacuums with `retain`. Returns the committed
+    * version. A crash before the commit leaves only an orphan batch;
+    * a concurrent commit since `base` aborts it with
+    * [[SnapshotConcurrentWriteException]].
+    *
+    * CARRY RULE, the one statement of what a commit keeps from its
+    * base: entries are `(base.entries -- rewritten) ++ written` (a
+    * rewritten partition `rows` leaves empty has no dir, so it drops —
+    * an atomic delete); the rewritten partitions' `#mor`/`#smor`
+    * slices drop (the rewrite materialized them) and every other
+    * partition keeps its own. The base's deletion vectors carry —
+    * surviving files keep their tombstones, and entries for rewritten
+    * files are harmless no-ops against dead paths — unless no base
+    * entry survives: then every old file is dead and the list drops,
+    * which is how a full rewrite materializes deletes. The embedded
+    * schema carries unless `embedSchema` replaces it (the evolve
+    * fronts); `validated` is [[commitSized]]'s constraint fence.
+    *
+    * `compaction` names a maintenance rewrite, which must keep the
+    * partition set ([[requirePartitionsPreserved]]) and fires
+    * [[beforeCompactCommitHook]] just before its commit.
+    */
+  private[sinks] def commitRewrite(base: Option[SnapshotStore.Resolved], rows: DataFrame,
+      rewritten: Set[String], partCols: Seq[String], statsCols: Seq[String] = Nil,
+      sort: Option[(Seq[Column], Long)] = None, embedSchema: Option[StructType] = None,
+      validated: Option[Map[String, String]] = None, retain: Int = 2,
+      compaction: Option[String] = None): Long = {
+    val b = base.getOrElse(SnapshotStore.Resolved.empty)
+    val version = b.version + 1
+    val (batch, written) = stageBatch(rows, partCols, version, sort)
+    require(written.keySet.subsetOf(rewritten),
+      s"${compaction.getOrElse("merge")} produced unexpected partitions: " +
+        (written.keySet -- rewritten).mkString(", "))
+    compaction.foreach(requirePartitionsPreserved(written.keySet, rewritten, b, rows.schema, _))
+    writeBatchStats(batch, rows.schema, partCols, statsCols, fileStats = sort.isDefined)
+    if (compaction.isDefined) beforeCompactCommitHook()
+    val kept = b.entries -- rewritten
+    commitSized(version,
+      kept ++ written.map { case (s, sz) => s -> SnapshotStore.SnapshotEntry(batch, sz) },
+      base.map(_.version), if (kept.isEmpty) Nil else b.dvs,
+      b.mors.filterNot(m => rewritten(m._1)), b.smors.filterNot(m => rewritten(m.suffix)),
+      embedSchema.map(_.json).orElse(b.schemaJson), validatedConstraints = validated)
+    vacuum(retain)
+    version
   }
 
   /** Version prefix of a `dv-<version>-<uuid>` deletion-vector dir
@@ -718,32 +772,24 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     *
     * `dvs` — deletion-vector dir names (under deletes/) whose
     * tombstones apply to this version's reads, written into the
-    * manifest as `#dv` lines. A committer that keeps ANY existing
-    * batch files must carry the base's DV list forward (entries for
-    * rewritten files become harmless no-ops — paths are unique per
-    * batch); a committer that rewrites or replaces the whole table
-    * (compact/compactClustered/compactZOrder/replaceAll) passes the
-    * default Nil, which is what MATERIALIZES deletes.
+    * manifest as `#dv` lines. Which of the base's a committer carries
+    * (and so how a rewrite MATERIALIZES deletes): the carry rule on
+    * [[commitRewrite]], which also governs `mors` and `smors`.
     *
     * `mors` — merge-on-read append slices, written as `#mor` lines:
     * additional (suffix, batch) pairs whose rows belong to the
-    * partition on top of its base entry. Same carry-forward contract
-    * as `dvs`: a committer that keeps a partition's existing files
-    * keeps its slices; a committer that rewrites a partition (or the
-    * whole table) drops that partition's slices — the rewrite IS
-    * their materialization. Every slice suffix must have a base
-    * entry ([[SnapshotMerge.upsertMor]] promotes brand-new partitions
-    * to base entries), so partition-set invariants stay expressible
-    * over `entries` alone.
+    * partition on top of its base entry. Every slice suffix must have
+    * a base entry ([[SnapshotMerge.upsertMor]] promotes brand-new
+    * partitions to base entries), so partition-set invariants stay
+    * expressible over `entries` alone.
     *
     * `smors` — COLUMN-SPARSE merge-on-read patch slices, written as
     * `#smor` lines (`suffix, batch, bytes, keys, cols` — key/col
     * lists comma-joined; the sparse writer refuses names carrying
-    * `,`/tab/newline). Same carry-forward contract as `mors`; a
-    * manifest carrying any bumps the header to v4, which a pre-sparse
-    * build REJECTS — reading a sparse slice as a full slice would
-    * surface NULL for every unpatched column, so loud refusal is the
-    * only safe downgrade.
+    * `,`/tab/newline). A manifest carrying any bumps the header to
+    * v4, which a pre-sparse build REJECTS — reading a sparse slice as
+    * a full slice would surface NULL for every unpatched column, so
+    * loud refusal is the only safe downgrade.
     *
     * `schemaJson` — the table schema to EMBED in this manifest
     * (`#schema` line), atomic with the commit. Committers on an
@@ -1126,9 +1172,9 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
         "(__cdf_* markers, _change output)")
     val (from, to) = (resolvedAt(fromVersion), resolvedAt(toVersion))
     val changed = changeSet(from, to)
-    // the changed slices only; every patch stays in (suffixes = null)
+    // the changed partitions' slices and patches only
     def side(r: SnapshotStore.Resolved) =
-      readSlices(r.slices.filter(kv => changed(kv._1)), schema, null, r.dvs, r.smors)
+      readSlices(r.slices, schema, changed, r.dvs, r.smors)
     val (before, after) = (side(from), side(to))
     val nonKey = schema.fieldNames.toSeq.filterNot(keyCols.contains)
     val bRen = nonKey.foldLeft(before)((d, c) => d.withColumnRenamed(c, s"__cdf_b_$c"))
@@ -1258,7 +1304,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     val cur = resolveCurrent().getOrElse(
       throw new IllegalStateException(s"no snapshot at $root"))
     if (cur.version == version) return cur.version
-    val target = parseManifest(manifestNameAt(version))
+    val target = resolvedAt(version)
     val schema = schemaAt(version)
     require(schema.isDefined || schemaHistory().isEmpty,
       s"restoring $root below its first schema evolution would leave " +
@@ -2028,118 +2074,72 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       lo: Double, hi: Double): DataFrame =
     readBoxFiles(schema, Seq((statsCol, lo, hi)))
 
-  /** Full rewrite CLUSTERED on `clusterCol` within each partition —
-    * rows sort by the cluster column inside their partition dir and
-    * split into ≤ `maxRecordsPerFile`-row files, so per-file bands
-    * (written alongside, with the partition sidecar) become
-    * near-disjoint and [[readRangeFiles]] prunes to the few files a
-    * narrow band touches. The OPTIMIZE/ZORDER idea for one dimension,
-    * at this store's crash contract: invisible until the fenced
-    * pointer swap, orphans for vacuum on a crash.
+  /** Full rewrite CLUSTERED on `clusterCols` within each partition —
+    * rows sort inside their partition dir and split into
+    * ≤ `maxRecordsPerFile`-row files, so per-file bands (written
+    * alongside, with the partition sidecar, for the cluster columns)
+    * become near-disjoint and [[readRangeFiles]] / [[readBoxFiles]]
+    * prune to the few files a narrow band or box touches. The
+    * OPTIMIZE / ZORDER BY idea, at this store's crash contract:
+    * invisible until the fenced pointer swap, orphans for vacuum on a
+    * crash.
+    *
+    * One column sorts by its value. Two or more sort by an
+    * interleaved-bit Z-value ([[zValue]]), which makes the bands narrow
+    * in EVERY cluster column at once, where a linear sort on column A
+    * leaves column B's per-file bands spanning the full range.
     *
     * The sort is per written file only — query results never depend
     * on it (parquet carries no order guarantee downstream); it exists
     * purely to make file statistics selective.
     */
   def compactClustered(schema: StructType, partCols: Seq[String],
-      clusterCol: String, maxRecordsPerFile: Long): Unit = {
-    // full rewrite: read(schema) resolves DVs, slices and sparse
-    // patches; the commit below lists none — all three materialize
-    val base @ SnapshotStore.Resolved(version, sized, _, _, _, schemaJson, _) =
-      resolveCurrent().getOrElse(return)
-    val entries = sized.view.mapValues(_.batch).toMap
-    if (entries.isEmpty) return
-    val batch = newBatch(version + 1)
-    read(schema)
-      .repartition(partCols.map(col): _*)
-      .sortWithinPartitions((partCols :+ clusterCol).map(col): _*)
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partCols: _*)
-      .parquet(dataPath(batch).toString)
-    val written = SnapshotStore.partitionSizes(fs, dataPath(batch))
-    requirePartitionsPreserved(written.keySet, entries.keySet, base, schema,
-      "clustered compaction")
-    writeBatchStats(batch, schema, partCols, Seq(clusterCol), fileStats = true)
-    beforeCompactCommitHook()
-    commitSized(version + 1,
-      written.map { case (s, sz) =>
-        s -> SnapshotStore.SnapshotEntry(batch, sz)
-      }, Some(version), schemaJson = schemaJson)
-    vacuum()
+      clusterCols: Seq[String], maxRecordsPerFile: Long): Unit = {
+    require(clusterCols.nonEmpty, "clustered compaction needs at least one column")
+    require(ZBits * clusterCols.size <= 62,
+      s"${clusterCols.size} cols × $ZBits bits overflows a long")
+    val base = resolveCurrent().getOrElse(return)
+    if (base.entries.isEmpty) return
+    val rows = readSlices(base.slices, schema, null, base.dvs, base.smors)
+    val key = if (clusterCols.size == 1) col(clusterCols.head) else zValue(rows, clusterCols)
+    commitRewrite(Some(base), rows, base.entries.keySet, partCols, clusterCols,
+      Some((Seq(key), maxRecordsPerFile)), compaction = Some("clustered compaction"))
   }
 
-  /** MULTI-dimensional clustered rewrite — the OPTIMIZE ZORDER BY
-    * idea. [[compactClustered]] makes per-file bands selective in ONE
-    * column; sorting by an interleaved-bit Z-value makes them narrow
-    * in EVERY clustered column at once, so a [[readBoxFiles]] box
-    * touches O(1) files where a linear sort on column A leaves column
-    * B's per-file bands spanning the full range.
-    *
-    * Per-column codes are QUANTILE ranks, not linear scaling: each
-    * column maps through its own approx_percentile boundary array
-    * (one aggregation pass, collected once — this is a maintenance
-    * action like the rest of compaction), so skewed distributions
-    * still spread codes uniformly and no dimension starves the
-    * interleave. `bits` per column bounds the code table at
-    * 2^bits − 1 boundaries; 6 bits (64 cells per dimension) is plenty
-    * to separate files — a file holds many rows, so sub-cell order
-    * doesn't matter. The Z-value exists only during the write; stored
-    * data and query results never depend on it.
+  /** Z-value bits per column: 2^6 = 64 cells per dimension is plenty
+    * to separate files (a file holds many rows, so sub-cell order does
+    * not matter).
     */
-  def compactZOrder(schema: StructType, partCols: Seq[String],
-      zCols: Seq[String], maxRecordsPerFile: Long, bits: Int = 6): Unit = {
-    require(zCols.size >= 2, "z-order needs at least two columns (use compactClustered for one)")
-    require(bits * zCols.size <= 62, s"${zCols.size} cols × $bits bits overflows a long")
-    // full rewrite like compactClustered: everything materializes
-    val base @ SnapshotStore.Resolved(version, sized, _, _, _, schemaJson, _) =
-      resolveCurrent().getOrElse(return)
-    val entries = sized.view.mapValues(_.batch).toMap
-    if (entries.isEmpty) return
-    val batch = newBatch(version + 1)
-    val df = read(schema)
-    val nb = (1 << bits) - 1
+  private val ZBits = 6
+
+  /** The Z-value sort key of `cols` over `df`. Per-column codes are
+    * QUANTILE ranks, not linear scaling: each column maps through its
+    * own approx_percentile boundary array (one aggregation pass,
+    * collected once — compaction is a maintenance action), so skewed
+    * distributions still spread codes uniformly and no dimension
+    * starves the interleave.
+    */
+  private def zValue(df: DataFrame, cols: Seq[String]): Column = {
+    val nb = (1 << ZBits) - 1
     val qs = (1 to nb).map(i => i.toDouble / (nb + 1))
-    val aggs = zCols.map(c => org.apache.spark.sql.functions.expr(
-      s"approx_percentile(cast(`$c` as double), array(${qs.mkString(",")}), 10000)")
-      .as(s"__q_$c"))
+    val aggs = cols.map(c =>
+      expr(s"approx_percentile(cast(`$c` as double), array(${qs.mkString(",")}), 10000)"))
     val qrow = df.agg(aggs.head, aggs.tail: _*).head()
     // code_c = #boundaries <= value (0..nb); NULLs sort first (code 0)
-    val codes = zCols.zipWithIndex.map { case (c, i) =>
+    val codes = cols.indices.map { i =>
       val bounds: Seq[Double] =
         if (qrow.isNullAt(i)) Seq.empty
         else qrow.getSeq[Any](i).map(v => String.valueOf(v).toDouble)
-      bounds.foldLeft(org.apache.spark.sql.functions.lit(0)) { (acc, b) =>
-        acc + org.apache.spark.sql.functions
-          .when(col(c).cast("double") >= b, 1).otherwise(0)
+      bounds.foldLeft(lit(0)) { (acc, b) =>
+        acc + when(col(cols(i)).cast("double") >= b, 1).otherwise(0)
       }
     }
     // interleave: bit i of code j lands at position i·k + j (k = #cols)
-    val k = zCols.size
-    val zv = (0 until bits).flatMap { i =>
+    (0 until ZBits).flatMap { i =>
       codes.zipWithIndex.map { case (code, j) =>
-        org.apache.spark.sql.functions.shiftleft(
-          org.apache.spark.sql.functions.shiftright(code, i).bitwiseAND(1)
-            .cast("long"), i * k + j)
+        shiftleft(shiftright(code, i).bitwiseAND(1).cast("long"), i * cols.size + j)
       }
     }.reduce(_ + _)
-    df.withColumn("__z", zv)
-      .repartition(partCols.map(col): _*)
-      .sortWithinPartitions((partCols.map(col) :+ col("__z")): _*)
-      .drop("__z")
-      .write.mode("overwrite")
-      .option("maxRecordsPerFile", maxRecordsPerFile)
-      .partitionBy(partCols: _*)
-      .parquet(dataPath(batch).toString)
-    val written = SnapshotStore.partitionSizes(fs, dataPath(batch))
-    requirePartitionsPreserved(written.keySet, entries.keySet, base, schema,
-      "z-order compaction")
-    writeBatchStats(batch, schema, partCols, zCols, fileStats = true)
-    commitSized(version + 1,
-      written.map { case (s, sz) =>
-        s -> SnapshotStore.SnapshotEntry(batch, sz)
-      }, Some(version), schemaJson = schemaJson)
-    vacuum()
   }
 
   /** Parsed stats sidecar of `batch`: suffix -> col -> (min, max).
@@ -2191,8 +2191,6 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   private def requirePartitionsPreserved(written: Set[String],
       expected: Set[String], base: SnapshotStore.Resolved,
       schema: StructType, what: String): Unit = {
-    require((written -- expected).isEmpty,
-      s"$what produced unexpected partitions: ${(written -- expected).mkString(", ")}")
     val lost = expected -- written
     if (lost.isEmpty) return
     require(base.dvs.nonEmpty,
@@ -2263,8 +2261,9 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     *    forward, so rewritten partitions materialize their deletes
     *    while untouched partitions keep tombstoning (a deleted row
     *    can never resurrect);
-    *  - full rewrites (compact/compactClustered/compactZOrder/
-    *    replaceAll) drop the list — deletes are materialized;
+    *  - a rewrite that keeps no base entry (`compact`,
+    *    `compactClustered`, `replaceAll`) drops the list — deletes are
+    *    materialized ([[commitRewrite]]'s carry rule);
     *  - vacuum collects DV files no retained manifest references.
     *
     * Returns the number of rows tombstoned; 0 = nothing matched and
@@ -2342,9 +2341,9 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
 
   /** Box read with partition- AND file-level pruning on every
     * predicate — the multi-dimensional twin of [[readRangeFiles]],
-    * the read path [[compactZOrder]] exists for. Residual filters
-    * keep correctness independent of pruning and push into the
-    * parquet scan for a third (row-group) pruning level.
+    * the read path a multi-column [[compactClustered]] exists for.
+    * Residual filters keep correctness independent of pruning and push
+    * into the parquet scan for a third (row-group) pruning level.
     */
   def readBoxFiles(schema: StructType,
       preds: Seq[(String, Double, Double)]): DataFrame = {
@@ -2387,27 +2386,27 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       maxBatches: Int, statsCols: Seq[String] = Nil): Unit = {
     require(maxBatches >= 2,
       "maxBatches must leave room for kept batches plus the fold target")
-    val base @ SnapshotStore.Resolved(version, entries, dvs, mors, smors, schemaJson, _) =
-      resolveCurrent().getOrElse(return)
-    if (base.batches.size <= maxBatches) return
+    val cur = resolveCurrent().getOrElse(return)
+    if (cur.batches.size <= maxBatches) return
     // live bytes per batch: sum the batch's LIVE partition entries, not
     // the whole dir — a batch can also hold stale copies of partitions
     // later merges superseded, which must not inflate its rank. Sizes
     // resolved for legacy v1 entries (bytes=-1) are RE-RECORDED in the
-    // committed manifest below, so each legacy partition's
-    // getContentSummary walk happens at most once ever — kept or folded.
-    val sized: Map[String, SnapshotStore.SnapshotEntry] = entries.map {
+    // committed manifest below (the rewrite's base carries them), so
+    // each legacy partition's getContentSummary walk happens at most
+    // once ever — kept or folded.
+    val base = cur.copy(entries = cur.entries.map {
       case (s, e) if e.bytes >= 0L => s -> e
       case (s, e) => s -> SnapshotStore.SnapshotEntry(e.batch,
         fs.getContentSummary(new Path(dataPath(e.batch), s)).getLength)
-    }
+    })
     // MoR slices — full and sparse — count toward their batch's live
     // bytes (slice writers always record sizes, no legacy fallback
     // needed)
     val bySize: Map[String, Long] =
-      (sized.toSeq.map(kv => (kv._2.batch, kv._2.bytes)) ++
-        mors.map(m => (m._2.batch, m._2.bytes)) ++
-        smors.map(m => (m.batch, m.bytes)))
+      (base.entries.toSeq.map(kv => (kv._2.batch, kv._2.bytes)) ++
+        base.mors.map(m => (m._2.batch, m._2.bytes)) ++
+        base.smors.map(m => (m.batch, m.bytes)))
       .groupBy(_._1)
       .view.mapValues(_.map(_._2).sum).toMap
     val keep = bySize.toSeq.sortBy { case (b, sz) => (-sz, b) }
@@ -2416,29 +2415,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // batch — the fold rewrites the partition whole (base + appends,
     // patch-resolved, DV-filtered), so every one of its slice lines
     // must drop with it
-    val foldParts = (sized.toSeq.map(kv => (kv._1, kv._2.batch)) ++
-      mors.map(m => (m._1, m._2.batch)) ++
-      smors.map(m => (m.suffix, m.batch))).collect {
+    val foldParts = (base.slices ++ base.smors.map(m => (m.suffix, m.batch))).collect {
       case (suffix, b) if !keep.contains(b) => suffix
     }.toSet
-    val (batch, written) =
-      stageBatch(readPartitions(schema, foldParts), partCols, version + 1)
-    requirePartitionsPreserved(written.keySet, foldParts, base, schema,
-      "incremental compaction")
-    writeBatchStats(batch, schema, partCols, statsCols)
-    // kept batches' files survive, so their tombstones must too; the
-    // folded partitions' DVs became stale no-ops (their files are
-    // dead), harmless to carry. A folded partition the DV filter
-    // emptied drops from the manifest — its delete materializes here.
-    // Unfolded partitions keep their slice lines (all in kept batches
-    // by construction); folded partitions' slices — full and sparse —
-    // materialized into the fold batch.
-    commitSized(version + 1,
-      (sized -- (foldParts -- written.keySet)) ++ written.map { case (s, sz) =>
-        s -> SnapshotStore.SnapshotEntry(batch, sz)
-      }, Some(version), dvs, mors.filterNot(m => foldParts(m._1)),
-      smors.filterNot(m => foldParts(m.suffix)), schemaJson)
-    vacuum()
+    commitRewrite(Some(base), readSlices(base.slices, schema, foldParts, base.dvs, base.smors),
+      foldParts, partCols, statsCols, compaction = Some("incremental compaction"))
   }
 
   /** SLICE-TRIGGERED compaction — the merge-on-read maintenance
@@ -2463,33 +2444,20 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       maxSlices: Int,
       maxSliceBytesFrac: Double = Double.PositiveInfinity): Unit = {
     require(maxSlices >= 1, s"maxSlices must be >= 1, got $maxSlices")
-    val base @ SnapshotStore.Resolved(version, sized, dvs, mors, smors, schemaJson, _) =
-      resolveCurrent().getOrElse(return)
+    val base = resolveCurrent().getOrElse(return)
     // full and sparse slices both count: each is one more scan
     // subtree (and for sparse, one more patch JOIN) per read
-    val bySuffix = (mors.map(m => (m._1, m._2.bytes)) ++
-      smors.map(m => (m.suffix, m.bytes))).groupBy(_._1)
+    val bySuffix = (base.mors.map(m => (m._1, m._2.bytes)) ++
+      base.smors.map(m => (m.suffix, m.bytes))).groupBy(_._1)
     val hot = bySuffix.collect { case (suffix, slices)
         if slices.size >= maxSlices || {
-          val base = sized.get(suffix).map(_.bytes).getOrElse(-1L)
-          base >= 0L && slices.map(_._2).sum >= maxSliceBytesFrac * base
+          val bytes = base.entries.get(suffix).map(_.bytes).getOrElse(-1L)
+          bytes >= 0L && slices.map(_._2).sum >= maxSliceBytesFrac * bytes
         } => suffix
       }.toSet
     if (hot.isEmpty) return
-    val (batch, written) =
-      stageBatch(readPartitions(schema, hot), partCols, version + 1)
-    requirePartitionsPreserved(written.keySet, hot, base, schema,
-      "slice compaction")
-    // hot partitions' slices (full and sparse) materialized; everyone
-    // else's carry. DVs carry whole (kept batches' files still need
-    // theirs; the rewritten files' entries are no-ops against dead
-    // paths).
-    commitSized(version + 1,
-      (sized -- (hot -- written.keySet)) ++ written.map { case (s, sz) =>
-        s -> SnapshotStore.SnapshotEntry(batch, sz)
-      }, Some(version), dvs, mors.filterNot(m => hot(m._1)),
-      smors.filterNot(m => hot(m.suffix)), schemaJson)
-    vacuum()
+    commitRewrite(Some(base), readSlices(base.slices, schema, hot, base.dvs, base.smors),
+      hot, partCols, compaction = Some("slice compaction"))
   }
 
   /** Rewrite every live partition into ONE fresh batch and commit it
@@ -2503,23 +2471,14 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   def compact(schema: StructType, partCols: Seq[String],
       statsCols: Seq[String] = Nil): Unit = {
-    val base @ SnapshotStore.Resolved(version, sized, dvs, mors, smors, schemaJson, _) =
-      resolveCurrent().getOrElse(return)
-    val entries = sized.view.mapValues(_.batch).toMap
+    val base = resolveCurrent().getOrElse(return)
     // a single-batch table still compacts when deletion vectors or
     // MoR slices (full or sparse) are outstanding — that rewrite is
     // how they materialize
-    if (entries.values.toSet.size <= 1 && dvs.isEmpty && mors.isEmpty &&
-      smors.isEmpty) return
-    val (batch, written) = stageBatch(read(schema), partCols, version + 1)
-    requirePartitionsPreserved(written.keySet, entries.keySet, base, schema,
-      "compaction")
-    writeBatchStats(batch, schema, partCols, statsCols)
-    commitSized(version + 1,
-      written.map { case (s, sz) =>
-        s -> SnapshotStore.SnapshotEntry(batch, sz)
-      }, Some(version), schemaJson = schemaJson)
-    vacuum()
+    if (base.entries.values.map(_.batch).toSet.size <= 1 && base.dvs.isEmpty &&
+      base.mors.isEmpty && base.smors.isEmpty) return
+    commitRewrite(Some(base), readSlices(base.slices, schema, null, base.dvs, base.smors),
+      base.entries.keySet, partCols, statsCols, compaction = Some("compaction"))
   }
 
   /** Relative `col=val[/col=val…]` paths of the partition leaf dirs

@@ -104,7 +104,7 @@ class DeletionVectorSpec extends SparkFunSuite {
     val (dir, store) = seed()
     store.deleteWhere(rows.schema, col("id") >= 6L)
     assert(new java.io.File(dir, "deletes").listFiles().nonEmpty)
-    store.compactClustered(rows.schema, Seq("pk"), "id", maxRecordsPerFile = 100L)
+    store.compactClustered(rows.schema, Seq("pk"), Seq("id"), maxRecordsPerFile = 100L)
     val SnapshotStore.Resolved(_, _, dvs, _, _, _, _) =
       store.resolveCurrent().get
     assert(dvs.isEmpty, "a full rewrite must drop the DV list")
@@ -132,7 +132,7 @@ class DeletionVectorSpec extends SparkFunSuite {
     // IS the materialization of that delete (pre-fix this threw
     // 'must preserve the partition set' forever, leaving no way to
     // ever materialize)
-    store.compactClustered(rows.schema, Seq("pk"), "id", maxRecordsPerFile = 100L)
+    store.compactClustered(rows.schema, Seq("pk"), Seq("id"), maxRecordsPerFile = 100L)
     val SnapshotStore.Resolved(_, entries, dvs, _, _, _, _) =
       store.resolveCurrent().get
     assert(entries.keySet == Set("pk=1"))

@@ -64,6 +64,14 @@ class ParquetReadLintSpec extends org.scalatest.funsuite.AnyFunSuite {
     assert(antiJoins == 1, s"$antiJoins left_anti joins; tombstones apply in scan() only")
   }
 
+  test("SnapshotStore and SnapshotMerge stage every partitioned write through one partitionBy") {
+    val calls = Seq("SnapshotStore.scala", "SnapshotMerge.scala").map { f =>
+      val code = SourceLint.stripComments(Files.readString(graftRoot.resolve(s"sinks/$f")))
+      """\.\s*partitionBy\s*\(""".r.findAllMatchIn(code).size
+    }.sum
+    assert(calls == 1, s"$calls .partitionBy( calls; every partitioned write goes through stageBatch")
+  }
+
   test("sinks and Tables read parquet with a declared schema, outside the allow-list") {
     val found = hotPathFiles.flatMap { f =>
       val rel = graftRoot.relativize(f).toString

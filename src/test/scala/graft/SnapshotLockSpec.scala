@@ -163,7 +163,7 @@ class SnapshotLockSpec extends SparkFunSuite {
           var n = 0
           var done = false
           while (!done) {
-            try { store.compactClustered(seed.schema, Seq("pk"), "v", 2L); done = true }
+            try { store.compactClustered(seed.schema, Seq("pk"), Seq("v"), 2L); done = true }
             catch { case _: graft.sinks.SnapshotConcurrentWriteException => n += 1 }
           }
           n
@@ -220,7 +220,7 @@ class SnapshotLockSpec extends SparkFunSuite {
     writer.start()
     assert(entered.await(60, TimeUnit.SECONDS), "writer never reached its mergeFn")
     val n = SnapshotMerge.retryLoop()(new SnapshotStore(spark, new Path(dir))
-      .compactClustered(seed.schema, Seq("pk"), "v", maxRecordsPerFile = 2L))._2
+      .compactClustered(seed.schema, Seq("pk"), Seq("v"), maxRecordsPerFile = 2L))._2
     assert(n == 0, "unopposed OPTIMIZE must commit first try")
     compacted.countDown()
     writer.join(TimeUnit.MINUTES.toMillis(3))
@@ -232,6 +232,52 @@ class SnapshotLockSpec extends SparkFunSuite {
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     val want = ((1L to 8L).map(k => k -> k * 10L).toMap + (3L -> 333L)) + (10L -> 100L)
     assert(got == want, s"post-rebase content wrong: $got")
+  }
+
+  test("every compaction is fenced by a commit landing before its own; the racer's rows stay") {
+    import spark.implicits._
+    import org.apache.spark.sql.functions.{col, lit, pmod}
+    import org.apache.spark.sql.types.StructType
+    import graft.sinks.SnapshotMerge
+    def pk(df: org.apache.spark.sql.DataFrame) =
+      df.withColumn("pk", pmod(col("k"), lit(4L)))
+    val compactions: Seq[(String, (SnapshotStore, StructType) => Unit)] = Seq(
+      "compact" -> ((st, s) => st.compact(s, Seq("pk"))),
+      "compactClustered on one column" ->
+        ((st, s) => st.compactClustered(s, Seq("pk"), Seq("v"), 2L)),
+      "compactClustered on two columns" ->
+        ((st, s) => st.compactClustered(s, Seq("pk"), Seq("k", "v"), 2L)),
+      "compactIncremental" -> ((st, s) => st.compactIncremental(s, Seq("pk"), 2)),
+      "compactSlices" -> ((st, s) => st.compactSlices(s, Seq("pk"), 1)))
+    compactions.foreach { case (name, run) =>
+      // four live batches and one #mor slice: work for every compaction
+      val dir = tmp("scfence")
+      val seed = pk((1L to 16L).map(k => (k, k * 10L)).toDF("k", "v"))
+      SnapshotMerge.upsertUpdate(spark, dir, seed, Seq("k"), Seq("pk"))
+      SnapshotMerge.upsertUpdate(spark, dir, pk(Seq((4L, 41L)).toDF("k", "v")),
+        Seq("k"), Seq("pk"))
+      SnapshotMerge.upsertUpdate(spark, dir, pk(Seq((5L, 51L)).toDF("k", "v")),
+        Seq("k"), Seq("pk"))
+      SnapshotMerge.upsertMor(spark, dir, pk(Seq((6L, 61L)).toDF("k", "v")),
+        Seq("k"), Seq("pk"))
+      val store = new SnapshotStore(spark, new Path(dir))
+      val racer = pk(Seq((7L, 71L), (17L, 170L)).toDF("k", "v"))
+      var fired = 0
+      store.beforeCompactCommitHook = () => {
+        fired += 1
+        SnapshotMerge.upsertUpdate(spark, dir, racer, Seq("k"), Seq("pk"))
+      }
+      val before = store.currentVersion().get
+      intercept[SnapshotConcurrentWriteException](run(store, seed.schema))
+      assert(fired == 1, s"$name fired its commit hook $fired times")
+      assert(store.currentVersion().contains(before + 1),
+        s"$name must not commit over the racer")
+      val got = SnapshotMerge.read(spark, dir, seed.schema)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      val want = (1L to 16L).map(k => k -> k * 10L).toMap ++
+        Map(4L -> 41L, 5L -> 51L, 6L -> 61L, 7L -> 71L, 17L -> 170L)
+      assert(got == want, s"$name: the racer's rows must stay, got $got")
+    }
   }
 
   test("a crashed holder's stale lock is taken over by age") {

@@ -141,7 +141,7 @@ class SnapshotStatsSpec extends SparkFunSuite {
     SnapshotMerge.upsertUpdate(spark, dir, shuffled, Seq("id"), Seq("pk"),
       statsCols = Seq("v"))
     val st = store(dir)
-    st.compactClustered(shuffled.schema, Seq("pk"), "v", maxRecordsPerFile = 100L)
+    st.compactClustered(shuffled.schema, Seq("pk"), Seq("v"), maxRecordsPerFile = 100L)
     val batch = st.current().get._2.values.head
     val fileBands = st.readBatchFileStats(batch).get
     assert(fileBands.size >= 10, s"expected ~10 files, got ${fileBands.size}")
@@ -180,7 +180,7 @@ class SnapshotStatsSpec extends SparkFunSuite {
     val linDir = tmp("stats_zlin_")
     SnapshotMerge.upsertUpdate(spark, linDir, grid, Seq("id"), Seq("pk"),
       statsCols = Seq("x", "y"))
-    store(linDir).compactClustered(grid.schema, Seq("pk"), "x",
+    store(linDir).compactClustered(grid.schema, Seq("pk"), Seq("x"),
       maxRecordsPerFile = 64L)
     // compactClustered records stats for the cluster column only; the
     // box prune on y then keeps every file via the missing-band rule,
@@ -191,7 +191,7 @@ class SnapshotStatsSpec extends SparkFunSuite {
     val zDir = tmp("stats_zord_")
     SnapshotMerge.upsertUpdate(spark, zDir, grid, Seq("id"), Seq("pk"),
       statsCols = Seq("x", "y"))
-    store(zDir).compactZOrder(grid.schema, Seq("pk"), Seq("x", "y"),
+    store(zDir).compactClustered(grid.schema, Seq("pk"), Seq("x", "y"),
       maxRecordsPerFile = 64L)
     val zTouched = filesTouched(zDir)
 
@@ -247,7 +247,7 @@ class SnapshotStatsSpec extends SparkFunSuite {
     SnapshotMerge.upsertUpdate(spark, dir, mixed, Seq("id"), Seq("pk"),
       statsCols = Seq("v"))
     val st = store(dir)
-    st.compactClustered(mixed.schema, Seq("pk"), "v", maxRecordsPerFile = 1L)
+    st.compactClustered(mixed.schema, Seq("pk"), Seq("v"), maxRecordsPerFile = 1L)
     val batch = st.current().get._2.values.head
     val bands = st.readBatchFileStats(batch).get
     assert(bands.nonEmpty)

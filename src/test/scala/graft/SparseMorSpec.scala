@@ -154,6 +154,40 @@ class SparseMorSpec extends SparkFunSuite {
       s"got ${changes.toSeq} — a sparse commit must diff as exactly one update")
   }
 
+  test("the change feed skips the patches of unchanged partitions; rows match a diff of full reads") {
+    val dir = seed()
+    val store = new SnapshotStore(spark, new Path(dir))
+    def row(id: Long, pk: Long, tag: String) =
+      (id, pk, s"a$tag", s"b$tag", s"c$tag", s"d$tag", s"e$tag", s"f$tag", s"g$tag", s"h$tag")
+    // a patch of pk=1, then a full-row commit of pk=0 only
+    SnapshotMerge.upsertMorSparse(spark, dir, Seq(row(1L, 1L, "!")).toDF(wideRows.columns: _*),
+      Seq("id"), Seq("pk"), Seq("b"), retain = 4)
+    val from = store.currentVersion().get
+    val patchBatches = store.resolveCurrent().get.smors.map(_.batch)
+    assert(patchBatches.nonEmpty, "fixture: an outstanding patch")
+    SnapshotMerge.upsertUpdate(spark, dir,
+      Seq(row(0L, 0L, "?"), row(100L, 0L, "+")).toDF(wideRows.columns: _*),
+      Seq("id"), Seq("pk"), retain = 4)
+    val to = store.currentVersion().get
+    val diff = store.readChangesBetween(from, to, wideRows.schema, Seq("id"))
+    val read = diff.inputFiles.filter(f => patchBatches.exists(f.contains))
+    assert(read.isEmpty, s"the unchanged partition's patch was read: ${read.toSeq}")
+    def cells(r: org.apache.spark.sql.Row) = wideRows.columns.toSeq.map(r.getAs[Any])
+    def full(v: Long) = store.readAt(v, wideRows.schema).collect()
+      .map(r => r.getAs[Long]("id") -> cells(r)).toMap
+    val (before, after) = (full(from), full(to))
+    val want = (before.keySet ++ after.keySet).flatMap { k =>
+      (before.get(k), after.get(k)) match {
+        case (None, Some(r)) => Some("insert" -> r)
+        case (Some(r), None) => Some("delete" -> r)
+        case (Some(b), Some(a)) if a != b => Some("update" -> a)
+        case _ => None
+      }
+    }
+    assert(want.map(_._1) == Set("insert", "update"), s"fixture: $want")
+    assert(diff.collect().map(r => r.getAs[String]("_change") -> cells(r)).toSet == want)
+  }
+
   test("deleteWhere evaluates over PATCHED values; killing the base row kills the patched row") {
     val dir = seed()
     SnapshotMerge.upsertMorSparse(spark, dir,

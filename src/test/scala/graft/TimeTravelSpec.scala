@@ -379,4 +379,19 @@ class TimeTravelSpec extends SparkFunSuite {
     assert(intercept[IllegalArgumentException](st2.restore(1L))
       .getMessage.contains("retention"))
   }
+
+  test("restore of a version whose manifest was vacuumed fails with readAt's retention error") {
+    val (dir, store, _) = seed3()
+    // v2 stays in the window (its version-log entry is kept) but its
+    // manifest file is gone, as a vacuum racing the restore leaves it
+    val gone = new java.io.File(dir, "manifests").listFiles()
+      .filter(_.getName.contains("v-000000000002-"))
+    assert(gone.nonEmpty, "fixture: v2's manifest file")
+    gone.foreach(f => assert(f.delete()))
+    val read = intercept[IllegalArgumentException](store.readAt(2L, v1Rows.schema))
+    assert(read.getMessage.contains("widen vacuum retention"))
+    val restored = intercept[IllegalArgumentException](store.restore(2L))
+    assert(restored.getMessage == read.getMessage)
+    assert(store.currentVersion().contains(3L), "a refused restore commits nothing")
+  }
 }
