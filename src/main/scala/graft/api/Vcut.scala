@@ -531,13 +531,23 @@ object Vcut {
       vtuberSongs: DataFrame,
       archives: DataFrame,
       segments: DataFrame,
-      threshold: Double = 40.0): DataFrame = {
-    val matches = FuzzyOccurrence.scan(
-      segments.withColumnRenamed("bvid", "recording_id"),
-      songs.select(col("id").as("song_id"),
-        col("lyrics_fragment").as("lyrics")),
+      threshold: Double = 40.0): DataFrame =
+    occurrenceScanRecordings(songs, vtuberSongs, archives,
+      FuzzyOccurrence.byRecording(segments.withColumnRenamed("bvid", "recording_id")),
       threshold)
-    matches
+
+  /** [[occurrenceScan]] over recordings already in the kernel's shape,
+    * `(recording_id, segs)`: the occurrence stream's decoded documents.
+    */
+  private[graft] def occurrenceScanRecordings(
+      songs: DataFrame,
+      vtuberSongs: DataFrame,
+      archives: DataFrame,
+      recordings: DataFrame,
+      threshold: Double): DataFrame = {
+    val catalog = songs.select(col("id").as("song_id"), col("lyrics_fragment").as("lyrics"))
+    FuzzyOccurrence.kernel(FuzzyOccurrence.withCatalog(recordings, catalog),
+      col("catalog"), threshold)
       .join(archives.select(col("id").as("live_recording_archive_id"),
         col("bvid"), col("vtuber_profile_id")),
         col("recording_id") === col("bvid"))
@@ -591,17 +601,19 @@ object Vcut {
   }
 
   /** `vcut search` (cmdline.py:477-505): where is this text sung in
-    * this recording? One (bvid, probe) point lookup; the probe is one
-    * local row, so no job runs to produce it.
+    * this recording? One (bvid, probe) point lookup. The probe is a
+    * literal one-song catalog handed straight to the kernel, so no job
+    * produces it and a new probe text compiles no new code; over
+    * [[graft.sources.TranscriptJson.readSegments]] the `bvid` filter
+    * opens only that recording's file and the per-recording grouping
+    * needs no exchange, so a search runs as one job of one stage.
     */
   def search(segments: DataFrame, bvid: String, text: String,
       threshold: Double = 0.0): DataFrame = {
-    val probe = segments.sparkSession.createDataFrame(
-      java.util.List.of(org.apache.spark.sql.Row(0L, text)),
-      org.apache.spark.sql.types.StructType.fromDDL("song_id BIGINT NOT NULL, lyrics STRING"))
-    FuzzyOccurrence.scan(
-      segments.where(col("bvid") === bvid)
-        .withColumnRenamed("bvid", "recording_id"),
+    val probe = array(struct(lit(0L).as("song_id"), lit(text).cast("string").as("lyrics")))
+    FuzzyOccurrence.kernel(
+      FuzzyOccurrence.byRecording(segments.where(col("bvid") === bvid)
+        .withColumnRenamed("bvid", "recording_id")),
       probe, threshold)
       .select(col("recording_id").as("bvid"), col("page"), col("start"),
         col("score"), col("matched_text"))

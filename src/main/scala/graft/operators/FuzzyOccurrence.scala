@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.{QueryModule, Tables}
 import graft.functions.FuzzyScan
@@ -22,23 +22,32 @@ import graft.functions.FuzzyScan.fuzzy_scan
   * results under the threshold (default 40).
   *
   * Spark-first design (not a loop port):
-  *  1. one shuffle groups the flat segments into one sorted array per
-  *     recording — O(segments), map-side combinable;
+  *  1. the segments are grouped into one sorted array per recording
+  *     ([[byRecording]]). Over the key-grouped `transcript` source
+  *     ([[graft.sources.TranscriptJson.readSegments]], one file per
+  *     recording) that grouping plans no exchange and each recording's
+  *     segments stay in the task that read them; over any other input
+  *     it is one shuffle on the recording id, map-side combinable. The
+  *     occurrence stream decodes each landed document straight into
+  *     this shape and skips the grouping;
   *  2. the song catalog becomes ONE row, `collect_list(struct(song_id,
-  *     lyrics))`, cross-joined to every recording by broadcast. The
-  *     catalog is the bounded song list (`modal/occurrence.py:90-100`:
-  *     a fixed catalog against unbounded transcripts); it is read in
-  *     one task and broadcast whole, never shuffled;
+  *     lyrics))`, cross-joined to every recording by broadcast
+  *     ([[withCatalog]]). The catalog is the bounded song list
+  *     (`modal/occurrence.py:90-100`: a fixed catalog against unbounded
+  *     transcripts); it is read in one task and broadcast whole, never
+  *     shuffled. A one-song probe ([[graft.api.Vcut.search]]) is a
+  *     literal catalog column instead, with no join at all;
   *  3. the codegen'd [[graft.functions.FuzzyScan]] expression scores
   *     every window of every page against every song inside one call
-  *     per recording and keeps each song's first-strictly-best window
-  *     over the threshold; `inline` expands those few rows. No row per
-  *     (window, song) pair exists anywhere: each segment is decoded
-  *     once, each song's pattern masks are built once per recording.
+  *     per recording ([[kernel]], the one entry to it) and keeps each
+  *     song's first-strictly-best window over the threshold; `inline`
+  *     expands those few rows. No row per (window, song) pair exists
+  *     anywhere: each segment is decoded once, each song's pattern
+  *     masks are built once per recording.
   *
-  * At cluster scale the only wide exchange is the grouping (1), keyed
-  * on the high-cardinality recording id, and the song side stays
-  * broadcast.
+  * At cluster scale the only possible wide exchange is the grouping
+  * (1), keyed on the high-cardinality recording id, and the song side
+  * stays broadcast.
   */
 object FuzzyOccurrence extends QueryModule {
 
@@ -56,28 +65,39 @@ object FuzzyOccurrence extends QueryModule {
     *         start, score, matched_text)`
     */
   def scan(segments: DataFrame, songs: DataFrame, threshold: Double): DataFrame =
-    fused(segments, songs, threshold, FuzzyScan.Ratio)
+    kernel(withCatalog(byRecording(segments), songs), col("catalog"), threshold)
 
-  /** [[scan]] with a chosen scorer, shared with the `fuzzy_occurrence_q`
-    * oracle twin so the window algebra the twin hash-checks is THE
-    * flagship's kernel, not a restatement.
+  /** Flat segments → one row per recording, `(recording_id, segs)`,
+    * `segs` the kernel's `sort_array(collect_list(struct(page,
+    * seg_idx, start, text)))`.
     */
-  private def fused(segments: DataFrame, songs: DataFrame, threshold: Double,
-      scorer: String): DataFrame = {
-    val recordings = segments
+  private[graft] def byRecording(segments: DataFrame): DataFrame =
+    segments
       .groupBy(col("recording_id"))
       .agg(sort_array(collect_list(struct(col("page").cast("int").as("page"),
         col("seg_idx"), col("start"), col("text")))).as("segs"))
-    // coalesce(1): the catalog's global collect runs in one task with
-    // no exchange under the broadcast
-    val catalog = songs.coalesce(1)
-      .agg(collect_list(struct(col("song_id"), col("lyrics"))).as("catalog"))
-    recordings.crossJoin(broadcast(catalog))
+
+  /** `recordings` with the `(song_id, lyrics)` catalog as one broadcast
+    * column `catalog`. `coalesce(1)`: the catalog's global collect runs
+    * in one task with no exchange under the broadcast.
+    */
+  private[graft] def withCatalog(recordings: DataFrame, songs: DataFrame): DataFrame =
+    recordings.crossJoin(broadcast(songs.coalesce(1)
+      .agg(collect_list(struct(col("song_id"), col("lyrics"))).as("catalog"))))
+
+  /** The one entry to the kernel: each `(recording_id, segs)` row of
+    * `recordings` scored against `catalog`, an `array<struct<song_id,
+    * lyrics>>` column. The `fuzzy_occurrence_q` oracle twin passes the
+    * Levenshtein `scorer`, so the window algebra it hash-checks is THE
+    * flagship's kernel, not a restatement.
+    */
+  private[graft] def kernel(recordings: DataFrame, catalog: Column, threshold: Double,
+      scorer: String = FuzzyScan.Ratio): DataFrame =
+    recordings
       .select(col("recording_id"),
-        inline(fuzzy_scan(col("segs"), col("catalog"), threshold, scorer)))
+        inline(fuzzy_scan(col("segs"), catalog, threshold, scorer)))
       .select(col("song_id"), col("recording_id"), col("page"), col("start"),
         col("score"), col("matched_text"))
-  }
 
   /** Deterministic "transcript-ification" of the `documents` table so
     * the fuzzy pipeline has a testdata-native flagship query: each doc
@@ -141,7 +161,7 @@ object FuzzyOccurrence extends QueryModule {
     }),
 
     // FULL-ORACLE TWIN of the flagship (r19, VERDICT r18 #5): the
-    // SAME kernel — [[fused]] verbatim: per-recording sorted segment
+    // SAME kernel — [[kernel]] verbatim: per-recording sorted segment
     // arrays, window slicing with the whole-page fallback, the
     // first-strictly-best arg-max — with ONLY the scorer swapped:
     // `-levenshtein` (exact integers on both engines, Spark's own
@@ -169,7 +189,8 @@ object FuzzyOccurrence extends QueryModule {
           (col("seg_idx") % 8).cast("int").as("seg_idx"),
           col("start"), col("text"))
       val probes = documentProbes(s, dir)
-      fused(paged, probes, Double.NegativeInfinity, FuzzyScan.Levenshtein)
+      kernel(withCatalog(byRecording(paged), probes), col("catalog"),
+        Double.NegativeInfinity, FuzzyScan.Levenshtein)
         .join(probes.select(col("song_id"), col("lyrics")), "song_id")
         .withColumn("lev", (-col("score")).cast("long"))
         .where(col("lev") * 100 <=

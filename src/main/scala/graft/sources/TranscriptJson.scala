@@ -2,7 +2,6 @@ package graft.sources
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /** Reader for the reference's nested transcript documents (S2).
   *
@@ -13,47 +12,28 @@ import org.apache.spark.sql.types._
   * `src/firefly_vcut/cmdline.py:532-546` and
   * `src/firefly_vcut/modal/occurrence.py:94-97`).
   *
-  * We read whole files (one row per file), parse with an explicit
-  * schema (no inference in production paths), and flatten with two
-  * `posexplode`s into the flat `transcript_segments` relation the
+  * [[readSegments]] reads them through the `transcript` DataSource V2
+  * ([[graft.sources.v2.TranscriptDataSource]], the engine's one
+  * transcript decoder) as the flat `transcript_segments` relation the
   * fuzzy pipeline consumes: `(bvid, page, seg_idx, start, text)` with
   * 0-based `page`/`seg_idx`.
   *
-  * Scale: each input file is one row until the explode, so
-  * parallelism = number of files; downstream ops repartition on
-  * (bvid, page). Empty transcripts (`[]`) produce zero segment rows
-  * (the reference raises instead, `cmdline.py:314-315` — SURVEY §7.4
-  * requires the engine to define the empty case: no rows, no match).
+  * Scale: one task per file, and the scan reports itself key-grouped
+  * on `bvid`, so a per-recording grouping downstream
+  * ([[graft.operators.FuzzyOccurrence]]) plans no exchange and pushed
+  * `bvid` filters open only the files they name. Empty transcripts
+  * (`[]`) produce zero segment rows (the reference raises instead,
+  * `cmdline.py:314-315` — SURVEY §7.4 requires the engine to define
+  * the empty case: no rows, no match), and so do malformed or
+  * truncated documents.
   */
 object TranscriptJson {
 
-  val segmentSchema: StructType = StructType(Seq(
-    StructField("start", DoubleType),
-    StructField("text", StringType)))
-
-  val transcriptSchema: ArrayType =
-    ArrayType(ArrayType(segmentSchema))
-
-  /** Whole-text `<bvid>.json` rows (a `value` column from
-    * `.option("wholetext").text(...)`) → flat segments. Shared by the
-    * batch reader below and the streaming reader
-    * ([[graft.streaming.OccurrenceStream.readSegmentsStream]]), so
-    * their batch/stream parity holds by construction instead of by
-    * keeping two copies in sync.
+  /** `pathGlob` (a file, a directory or a glob) → flat segments.
+    * bvid = file stem.
     */
-  def flattenWholeText(raw: DataFrame): DataFrame =
-    raw
-      .select(
-        regexp_extract(input_file_name(), "([^/]+)\\.json$", 1).as("bvid"),
-        from_json(col("value"), transcriptSchema).as("pages"))
-      .select(col("bvid"), posexplode(col("pages")).as(Seq("page", "segs")))
-      .select(col("bvid"), col("page"), posexplode(col("segs")).as(Seq("seg_idx", "seg")))
-      .select(col("bvid"), col("page"), col("seg_idx"),
-        col("seg.start").as("start"), col("seg.text").as("text"))
-
-  /** `pathGlob` → flat segments. bvid = file stem. */
   def readSegments(spark: SparkSession, pathGlob: String): DataFrame =
-    flattenWholeText(spark.read.option("wholetext", "true").text(pathGlob))
+    spark.read.format("transcript").load(pathGlob)
 
   /** Inverse of [[readSegments]] (K5): reassemble the nested document
     * shape, e.g. before `df.write.json`. Ordering inside pages is

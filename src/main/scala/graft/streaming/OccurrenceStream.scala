@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.api.Vcut
+import graft.sources.v2.TranscriptDecoder
 
 /** The reference's cron stage 4 (`populate_occurrences`,
   * `modal/cron.py:14-21` + `modal/occurrence.py:78-130`) as a real
@@ -13,20 +14,34 @@ import graft.api.Vcut
   * the reference's cron + `lastSongOccurrenceScan` state column with
   * the stream's own source offsets (exactly-once file tracking).
   *
+  * Each landed document is decoded by the engine's one transcript
+  * decoder ([[graft.sources.v2.TranscriptDecoder]], the batch reader's)
+  * into ONE row per recording, already in the fuzzy kernel's sorted
+  * `segs` shape, and scored where it was read: no regroup shuffle sits
+  * between the file scan and the kernel, so a micro-batch of n files
+  * scores in as many tasks as the file scan has.
+  *
   * `Trigger.AvailableNow` gives the cron semantics ("drain whatever
   * arrived, then stop"); a continuous deployment would use a
   * processing-time trigger unchanged.
   */
 object OccurrenceStream {
 
+  /** Stream of `(bvid, segs)`, one row per `<bvid>.json` document
+    * landing in `dir`.
+    */
+  private def recordingsStream(spark: SparkSession, dir: String): DataFrame =
+    spark.readStream.option("wholetext", "true").text(dir)
+      .select(regexp_extract(input_file_name(), "([^/]+)\\.json$", 1).as("bvid"),
+        TranscriptDecoder.segments(col("value")).as("segs"))
+
   /** Stream of flat transcript segments from a drop-folder of
     * `<bvid>.json` documents — the streaming twin of
-    * [[graft.sources.TranscriptJson.readSegments]], sharing its
-    * flatten so the twins cannot drift.
+    * [[graft.sources.TranscriptJson.readSegments]]: the same decoder,
+    * its per-recording rows expanded with `inline`.
     */
   def readSegmentsStream(spark: SparkSession, dir: String): DataFrame =
-    graft.sources.TranscriptJson.flattenWholeText(
-      spark.readStream.option("wholetext", "true").text(dir))
+    recordingsStream(spark, dir).select(col("bvid"), inline(col("segs")))
 
   /** Run the incremental occurrence sync over a transcript drop-folder
     * until all currently-available files are processed, into a table
@@ -58,8 +73,7 @@ object OccurrenceStream {
       StructField("live_recording_archive_id", LongType),
       StructField("start", LongType), StructField("page", IntegerType),
       StructField("bucket", LongType)))
-    val segments = readSegmentsStream(spark, transcriptsDir)
-    val q = segments.writeStream
+    val q = recordingsStream(spark, transcriptsDir).writeStream
       .outputMode(OutputMode.Append())
       .option("checkpointLocation", checkpointDir)
       .foreachBatch { (batch: DataFrame, _: Long) =>
@@ -74,7 +88,8 @@ object OccurrenceStream {
         // table every batch. Known pairs keep their row, as the skip
         // guard's `ON CONFLICT DO UPDATE` never saw them either.
         SnapshotMerge.upsertIgnore(spark, targetDir,
-          Vcut.occurrenceScan(songs, vtuberSongs, archives, batch, threshold)
+          Vcut.occurrenceScanRecordings(songs, vtuberSongs, archives,
+            batch.withColumnRenamed("bvid", "recording_id"), threshold)
             .withColumn("bucket",
               pmod(col("live_recording_archive_id"), lit(buckets.toLong))),
           Seq("vtuber_song_id", "live_recording_archive_id"), Seq("bucket"))

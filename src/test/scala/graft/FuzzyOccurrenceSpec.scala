@@ -3,9 +3,9 @@ package graft
 import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.catalyst.expressions.Inline
-import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
-import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
-import org.apache.spark.sql.execution.exchange.{ReusedExchangeExec, ShuffleExchangeExec}
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
 import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
 import graft.functions.{FuzzUtils, FuzzyScan}
 import graft.operators.FuzzyOccurrence
@@ -222,14 +222,6 @@ class FuzzyOccurrenceSpec extends SparkFunSuite {
     }
   }
 
-  /** Every node of an executed plan, through AQE wrappers and subqueries. */
-  private def planNodes(p: SparkPlan): Seq[SparkPlan] = p match {
-    case a: AdaptiveSparkPlanExec => planNodes(a.executedPlan)
-    case q: QueryStageExec => q +: planNodes(q.plan)
-    case r: ReusedExchangeExec => r +: planNodes(r.child)
-    case other => other +: (other.children ++ other.subqueries).flatMap(planNodes)
-  }
-
   test("scan plans one shuffle, generates only through the kernel, joins by no hash") {
     import spark.implicits._
     val segments = Seq(("BV", 0, 0, 0.0, "夜空中最亮的星"), ("BV", 0, 1, 5.0, "能否听清"),
@@ -237,7 +229,7 @@ class FuzzyOccurrenceSpec extends SparkFunSuite {
     val songs = Seq((1L, "夜空中最亮的星\n能否听清"), (2L, "那仰望的人")).toDF("song_id", "lyrics")
     val df = FuzzyOccurrence.scan(segments, songs, 40.0)
     assert(df.collect().length == 2)
-    val nodes = planNodes(df.queryExecution.executedPlan)
+    val nodes = PlanNodes(df.queryExecution.executedPlan)
     val plan = df.queryExecution.executedPlan.toString
     assert(nodes.count(_.isInstanceOf[ShuffleExchangeExec]) == 1, plan)
     val gens = nodes.collect { case g: GenerateExec => g.generator }
@@ -246,9 +238,24 @@ class FuzzyOccurrenceSpec extends SparkFunSuite {
     assert(!nodes.exists(_.isInstanceOf[BroadcastHashJoinExec]), plan)
   }
 
+  test("scan over readSegments plans no shuffle: the transcript source is key-grouped") {
+    val dir = tempDir("transcripts_kg").toString
+    writeTranscriptJson(dir)
+    val segments = TranscriptJson.readSegments(spark, s"$dir/*.json")
+      .withColumnRenamed("bvid", "recording_id")
+    import spark.implicits._
+    val df = FuzzyOccurrence.scan(segments, songs.toDF("song_id", "lyrics"), 40.0)
+    assert(df.collect().nonEmpty)
+    val nodes = PlanNodes(df.queryExecution.executedPlan)
+    assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeExec]), df.queryExecution.executedPlan)
+    val scans = nodes.collect { case b: BatchScanExec => b }
+    assert(scans.length == 1 && scans.head.keyGroupedPartitioning.isDefined,
+      df.queryExecution.executedPlan)
+  }
+
   test("fuzzy_occurrence_q runs the flagship's kernel with the Levenshtein scorer") {
     val df = SparkEntry.queries("fuzzy_occurrence_q")(spark, sfDir)
-    val kernels = planNodes(df.queryExecution.executedPlan)
+    val kernels = PlanNodes(df.queryExecution.executedPlan)
       .flatMap(_.expressions.flatMap(_.collect { case k: FuzzyScan => k }))
     assert(kernels.nonEmpty && kernels.forall(_.scorer == FuzzyScan.Levenshtein),
       df.queryExecution.executedPlan.toString)

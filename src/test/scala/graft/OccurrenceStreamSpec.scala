@@ -2,7 +2,10 @@ package graft
 
 import java.nio.file.{Files, Paths}
 import org.apache.spark.JobCounter
+import org.apache.spark.sql.execution.GenerateExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.types._
+import graft.functions.FuzzyScan
 import graft.streaming.OccurrenceStream
 
 /** The cron-as-stream test: transcript files dropped into a folder
@@ -98,6 +101,26 @@ class OccurrenceStreamSpec extends SparkFunSuite {
     // own execution is not nested
     val (_, n) = JobCounter.executionsDuring(spark.sparkContext, nestedOnly = true)(run())
     assert(n <= 3, s"one micro-batch ran $n SQL executions inside foreachBatch")
+    assert(graft.sinks.SnapshotMerge.read(spark, target, occSchema)
+      .select("live_recording_archive_id").as[Long].collect().toSet == Set(1L, 2L))
+  }
+
+  test("a micro-batch plans no shuffle between the file scan and the kernel") {
+    val root = tempDir("occ_plan")
+    val drop = root.resolve("transcripts"); Files.createDirectories(drop)
+    val target = root.resolve("occurrences").toString
+    Files.writeString(drop.resolve("BVa.json"), doc)
+    Files.writeString(drop.resolve("BVb.json"), doc)
+    val (_, plans) = JobCounter.plansDuring(spark)(
+      OccurrenceStream.runAvailableSnapshot(spark, drop.toString,
+        root.resolve("ckpt").toString, target, songs, vtuberSongs, archives, buckets = 8))
+    // every node at or below a kernel call: what feeds the kernel
+    val fed = plans.flatMap(PlanNodes(_)).collect {
+      case g: GenerateExec if g.generator.children.exists(_.isInstanceOf[FuzzyScan]) => PlanNodes(g)
+    }
+    assert(fed.nonEmpty, plans.mkString("\n"))
+    fed.foreach(nodes => assert(!nodes.exists(_.isInstanceOf[ShuffleExchangeExec]),
+      nodes.head.treeString))
     assert(graft.sinks.SnapshotMerge.read(spark, target, occSchema)
       .select("live_recording_archive_id").as[Long].collect().toSet == Set(1L, 2L))
   }

@@ -49,6 +49,29 @@ object SourceLint {
     out.toString
   }
 
+  /** Every call `name(…)` in `code` (comments already blanked): the
+    * 1-based line of the call and its argument text up to the matching
+    * parenthesis (string literals may hold unbalanced parentheses).
+    */
+  def calls(code: String, name: String): Seq[(Int, String)] =
+    (s"""\\b${java.util.regex.Pattern.quote(name)}\\s*\\(""").r.findAllMatchIn(code).toSeq.map { m =>
+      var depth = 1
+      var i = m.end
+      while (i < code.length && depth > 0) {
+        code(i) match {
+          case '(' => depth += 1
+          case ')' => depth -= 1
+          case '"' =>
+            i += 1
+            while (i < code.length && code(i) != '"' && code(i) != '\n')
+              i += (if (code(i) == '\\') 2 else 1)
+          case _ =>
+        }
+        i += 1
+      }
+      (lineAt(code, m.start), code.substring(m.end, math.max(m.end, i - 1)))
+    }
+
   /** The 1-based line of character `offset` in `code`. */
   def lineAt(code: String, offset: Int): Int = code.substring(0, offset).count(_ == '\n') + 1
 }

@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.JobCounter
+import org.apache.spark.metrics.source.CodegenMetrics
 import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
+import org.apache.spark.sql.execution.exchange.{BroadcastExchangeExec, ShuffleExchangeExec}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.api.Vcut
@@ -195,6 +199,29 @@ class VcutApiSpec extends SparkFunSuite {
       .collect()(0)
     assert(hit.getString(0) == "BVscan" && hit.getInt(1) == 2 &&
       hit.getDouble(2) == 2.0 && hit.getDouble(3) == 100.0)
+  }
+
+  test("a search over a 3-file glob is one job of one stage over one file; a new probe compiles nothing") {
+    val dir = writeTranscripts()
+    Files.writeString(Paths.get(s"$dir/BVthird.json"),
+      """[[{"start": 0.5, "text": "北风萧萧"}, {"start": 3.0, "text": "雪花飘飘"}]]""")
+    val segments = TranscriptJson.readSegments(spark, s"$dir/*.json")
+    val first = Vcut.search(segments, "BVscan", "夜空中最亮的星\n能否听清")
+    val (rows, jobs) = JobCounter.jobsDuring(spark.sparkContext)(first.collect())
+    assert(rows.map(r => (r.getInt(1), r.getDouble(2), r.getDouble(3))).toSeq ==
+      Seq((2, 2.0, 100.0)))
+    assert(jobs == 1, s"$jobs jobs")
+    val plan = first.queryExecution.executedPlan
+    val nodes = PlanNodes(plan)
+    assert(!nodes.exists(n => n.isInstanceOf[ShuffleExchangeExec] ||
+      n.isInstanceOf[BroadcastExchangeExec]), plan)
+    assert(nodes.collect { case b: BatchScanExec => b.inputPartitions.length } == Seq(1), plan)
+
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    val second = Vcut.search(segments, "BVthird", "雪花飘飘\n北风萧萧").collect()
+    assert(second.map(r => (r.getString(0), r.getInt(1))).toSeq == Seq(("BVthird", 1)))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "a search with a new probe text generated a new class")
   }
 
   test("markScanned advances state; anchors keep empty vtubers") {
