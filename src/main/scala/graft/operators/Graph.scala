@@ -623,14 +623,18 @@ object Graph extends QueryModule {
     * (length, mtime) fingerprint — a regenerated corpus at the same
     * path gets a fresh artifact instead of silently serving stale
     * edges (the staleness failure mode a path-only key would have);
-    * the fingerprint read is two filesystem metadata ops.
+    * the fingerprint read is two filesystem metadata ops. The artifact
+    * outlives the process, so the key also names the snapshot manifest
+    * format: a build that writes another format never adopts a table
+    * its reader refuses.
     */
   private[graft] def edgeArtifactRoot(s: SparkSession,
       dir: String): org.apache.hadoop.fs.Path = {
     import org.apache.hadoop.fs.Path
     val digest = Tables.fingerprintKey(s, s"$dir/lineitem.parquet")
+    val format = graft.sinks.SnapshotStore.Header.replace(' ', '-')
     new Path(new Path(System.getProperty("java.io.tmpdir"),
-      "graft_graph_edges"), s"${new java.io.File(dir).getName}_${digest}_v1")
+      "graft_graph_edges"), s"${new java.io.File(dir).getName}_${digest}_$format")
   }
 
   private val edgeCache =

@@ -410,7 +410,7 @@ object Pipeline extends QueryModule {
     // SnapshotStore.restore rolls it back to v1 AS A NEW FENCED
     // COMMIT — zero data movement (immutable batches re-referenced),
     // pre-restore history still time-travels (TimeTravelSpec pins
-    // that plus sidecar carry and schema re-persistence). The oracle
+    // that plus the restored schema's re-embedding). The oracle
     // is simply the SEED: a correct rollback erases every later
     // mutation from the current view.
     "k2_restore" -> ((s, dir) => {
@@ -645,8 +645,8 @@ object Pipeline extends QueryModule {
     // pk); v2 upserts a batch that carries a NEW o_orderpriority
     // column. The evolve is metadata-only — v1's files are never
     // rewritten (absent parquet columns resolve to NULL under the
-    // widened schema), the effective schema persists per version in a
-    // schemas/ sidecar, and the reader ([[SnapshotMerge.readEvolved]])
+    // widened schema), the effective schema is embedded in each
+    // version's manifest, and the reader ([[SnapshotMerge.readEvolved]])
     // needs no knowledge of the table's history. Output coalesces the
     // evolved column to 'NONE' so the null-representation is
     // comparator-proof; the oracle restates the union-widened merge
@@ -1041,7 +1041,7 @@ object Pipeline extends QueryModule {
     // reference's pic -> cover (`modal/recording.py:47-49`), which a
     // name-based store could only spell add+backfill+drop: seed v1
     // carries `pic`, the rename commit moves ONLY metadata (the
-    // schema sidecar maps logical `cover` to physical `pic`), and a
+    // embedded schema maps logical `cover` to physical `pic`), and a
     // post-rename evolve-upsert writes `cover` values INTO the old
     // physical column. The read projects old files' pic bytes and
     // new files' bytes under one logical name — the oracle restates

@@ -194,7 +194,7 @@ object SnapshotMerge {
     val cur = store.resolveCurrent()
     requireSchemaBase(store, schemaBase, cur.map(_.version))
     val base @ SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
-      curSmors, _, _) = cur.getOrElse(SnapshotStore.Resolved.empty)
+      curSmors, _, _, _) = cur.getOrElse(SnapshotStore.Resolved.empty)
     store.beforeMorCommitHook()
 
     // Positions of the CURRENT copies of incoming keys — across the
@@ -399,7 +399,7 @@ object SnapshotMerge {
 
     val cur = store.resolveCurrent()
     val base @ SnapshotStore.Resolved(curVersion, curEntries, curDvs, curMors,
-      curSmors, _, _) = cur.getOrElse(SnapshotStore.Resolved.empty)
+      curSmors, _, _, _) = cur.getOrElse(SnapshotStore.Resolved.empty)
     store.beforeMorCommitHook()
 
     // Split on LIVE key membership within the touched partitions
@@ -548,6 +548,9 @@ object SnapshotMerge {
   private def physName(f: org.apache.spark.sql.types.StructField): String =
     if (f.metadata.contains(PhysKey)) f.metadata.getString(PhysKey) else f.name
 
+  /** Every physical column name `s` reads its fields from. */
+  private[sinks] def physNames(s: StructType): Set[String] = s.fields.map(physName).toSet
+
   private def physSchema(s: StructType): StructType =
     StructType(s.fields.map(f =>
       org.apache.spark.sql.types.StructField(physName(f), f.dataType, f.nullable)))
@@ -636,7 +639,7 @@ object SnapshotMerge {
   def renameColumn(spark: SparkSession, rootDir: String,
       oldName: String, newName: String): Unit = {
     val store = new SnapshotStore(spark, new Path(rootDir))
-    val SnapshotStore.Resolved(version, sized, dvs, mors, smors, _, _) =
+    val SnapshotStore.Resolved(version, sized, dvs, mors, smors, _, _, _) =
       store.resolveCurrent().getOrElse(
         throw new IllegalStateException(s"no snapshot at $rootDir"))
     val schema = storedSchema(spark, store).getOrElse(
@@ -656,22 +659,19 @@ object SnapshotMerge {
         new org.apache.spark.sql.types.MetadataBuilder()
           .withMetadata(f.metadata).putString(PhysKey, physName(f)).build())
     })
-    // same crash contract as dropColumn: schema written after the
-    // commit it describes; a crash between the two leaves a committed
-    // version whose schema falls back to its predecessor's (the
-    // rename "did not happen") — self-healing, never torn. Sparse
-    // slices carry: their manifest lines name PHYSICAL columns, which
-    // a rename never moves.
+    // the new schema is embedded in the commit itself: a crash leaves
+    // either the old version or the renamed one, never a torn pair.
+    // Sparse slices carry: their manifest lines name PHYSICAL columns,
+    // which a rename never moves.
     store.commitSized(version + 1, sized, Some(version), dvs, mors, smors,
       Some(newSchema.json))
-    store.writeSchemaFile(version + 1, newSchema)
   }
 
-  /** A physical name for newly-added logical field `name` that no
-    * schema in the table's history ever used — re-adding a dropped
-    * name must NOT resolve to the dropped column's bytes still
-    * present in un-rewritten files (the resurrect limit column
-    * mapping exists to remove).
+  /** A physical name for newly-added logical field `name` that the
+    * table never issued (`usedPhys`) — re-adding a dropped name must
+    * NOT resolve to the dropped column's bytes still present in
+    * un-rewritten files (the resurrect limit column mapping exists to
+    * remove).
     */
   private def freshPhysName(name: String, usedPhys: Set[String]): String =
     if (!usedPhys(name)) name
@@ -715,10 +715,9 @@ object SnapshotMerge {
     * parquet under a declared wider schema resolves absent columns to
     * NULL and upcasts narrow physical types natively (Spark 4's
     * vectorized reader), so old partitions keep their bytes and only
-    * the manifest + a schemas/ sidecar move — both evolutions are
-    * metadata operations, exactly like the production table formats.
-    * The effective schema persists per version
-    * ([[SnapshotStore.writeSchemaFile]]); readers use
+    * the manifest moves — both evolutions are metadata operations,
+    * exactly like the production table formats. The effective schema
+    * is embedded in the commit's manifest; readers use
     * [[readEvolved]] without having to know the table's history.
     */
   def upsertEvolve(spark: SparkSession, rootDir: String, incoming: DataFrame,
@@ -736,25 +735,18 @@ object SnapshotMerge {
     val (union, widened, physKeys, physStats, schemaBase) =
       evolvedPlan(spark, store, incoming, keys, partCols, statsCols)
     store.beforeEvolveCommitHook()
-    // The sidecar is written ONLY for the version THIS call committed
-    // ([[merge]] returns it; None = empty incoming, nothing committed,
-    // nothing to describe). Re-reading currentVersion() here instead
-    // would race a concurrent commit (attaching this evolve's schema
-    // to someone else's version) and an empty incoming would
-    // retroactively overwrite the CURRENT version's sidecar, changing
-    // schemaAt(v)/time-travel for an existing commit. Written AFTER
-    // the commit it describes; see the schemas/ note on SnapshotStore
-    // for why the crash window self-heals.
+    // The union schema is embedded in the commit it describes, so a
+    // crash leaves the old version or the evolved one, never a
+    // committed version with its schema still in flight.
     // widened is ALREADY physical — enter below the mapped-name guard
     // (cross-talk names would misfire it; see mergePhys). schemaBase
     // threads the schema-resolution version into the commit fence: a
     // concurrent commit between the schema read and the merge's own
-    // resolution aborts instead of letting this sidecar union drop it
+    // resolution aborts instead of letting this stale union drop it
     // (ADVICE r18).
     mergePhys(store, widened, partCols, retain, physStats,
       Some(schemaBase), Some(union), validated = Some(cbase))(
       (target, inc) => Merge.upsertUpdate(target, inc, physKeys))
-      .foreach(v => store.writeSchemaFile(v, union))
   }
 
   /** [[upsertEvolve]] through the MERGE-ON-READ write path: the same
@@ -784,12 +776,10 @@ object SnapshotMerge {
     store.beforeEvolveCommitHook()
     // widened is ALREADY physical — enter below the translating front
     // (a second translation corrupts on cross-talk names, see
-    // upsertMorPhys). schemaBase: see upsertEvolve — the sidecar race
-    // fix (ADVICE r18).
-    val v = upsertMorPhys(store, widened, physKeys, partCols, retain,
+    // upsertMorPhys). schemaBase: see upsertEvolve — the stale-union
+    // race fix (ADVICE r18).
+    upsertMorPhys(store, widened, physKeys, partCols, retain,
       Some(schemaBase), Some(union), validated = Some(cbase))
-    v.foreach(store.writeSchemaFile(_, union))
-    v
   }
 
   /** The schema-evolution resolution shared by the CoW and MoR evolve
@@ -799,13 +789,13 @@ object SnapshotMerge {
     *
     * Also returns the table VERSION the schema resolution was derived
     * from (None = never committed): the evolve fronts pass it down as
-    * the commit paths' `schemaBase`, closing the schema-sidecar
+    * the commit paths' `schemaBase`, closing the stale-union
     * lost-update race (ADVICE r18) — without it, a concurrent evolve
     * committing between this schema read and the merge's own
     * resolution would be fenced by NEITHER (the merge re-resolves and
-    * happily commits on top), and the sidecar written after the
-    * commit would union against the STALE schema, silently dropping
-    * the concurrent evolve's column.
+    * happily commits on top), and the schema embedded in that commit
+    * would union against the STALE schema, silently dropping the
+    * concurrent evolve's column.
     */
   private def evolvedPlan(spark: SparkSession, store: SnapshotStore,
       incoming: DataFrame, keys: Seq[String], partCols: Seq[String],
@@ -850,12 +840,13 @@ object SnapshotMerge {
           }
         }
         val storedNames = s.fieldNames.toSet
-        // a NEW logical name takes a physical name no schema in the
-        // table's history ever used — re-adding a dropped name must
-        // get fresh NULLs, never the dropped column's leftover bytes
-        // (column mapping, r18)
+        // a NEW logical name takes a physical name the table never
+        // issued — re-adding a dropped name must get fresh NULLs, never
+        // the dropped column's leftover bytes (column mapping). The
+        // union keeps every stored field, so the commit that embeds it
+        // records the names it started from too.
         val usedPhys: Set[String] =
-          (store.schemaHistory() :+ s).flatMap(_.fields.map(physName)).toSet
+          store.resolveCurrent().fold(Set.empty[String])(_.issued) ++ physNames(s)
         val newFields = incoming.schema.fields
           .filterNot(f => storedNames(f.name)).map { f =>
             val p = freshPhysName(f.name, usedPhys)
@@ -886,15 +877,15 @@ object SnapshotMerge {
     *
     * Re-ADDING a dropped name via [[upsertEvolve]] yields FRESH
     * NULLs, never the pre-drop values still physically present in
-    * un-rewritten files: the re-added field is assigned a physical
-    * name no schema in the table's history ever used
-    * ([[freshPhysName]] — the column-mapping indirection, r18; the
-    * r17 name-based resurrect limit is gone). SnapshotMergeSpec pins
-    * the fresh-null behavior.
+    * un-rewritten files: the drop records every physical name of the
+    * schema it started from (footer-inferred or embedded) in the
+    * manifest's issued set, and the re-added field is assigned a
+    * physical name outside it ([[freshPhysName]] — the column-mapping
+    * indirection). SnapshotMergeSpec pins the fresh-null behavior.
     */
   def dropColumn(spark: SparkSession, rootDir: String, colName: String): Unit = {
     val store = new SnapshotStore(spark, new Path(rootDir))
-    val SnapshotStore.Resolved(version, sized, dvs, mors, smors, _, _) =
+    val SnapshotStore.Resolved(version, sized, dvs, mors, smors, _, _, _) =
       store.resolveCurrent().getOrElse(
         throw new IllegalStateException(s"no snapshot at $rootDir"))
     val schema = storedSchema(spark, store).getOrElse(
@@ -917,13 +908,11 @@ object SnapshotMerge {
         "merge-on-read slices — run compactSlices first, then drop")
     val newSchema = StructType(schema.fields.filterNot(_.name == colName))
     require(newSchema.nonEmpty, "cannot drop the last column")
-    // same crash contract as upsertEvolve's sidecar: schema written
-    // after the commit it describes; a crash between the two leaves a
-    // committed version whose schema falls back to its predecessor's
-    // (the drop "did not happen") — self-healing, never torn
+    // the new schema is embedded in the commit itself (never torn);
+    // the names the drop started from join the issued set, so the
+    // dropped one stays taken
     store.commitSized(version + 1, sized, Some(version), dvs, mors, smors,
-      Some(newSchema.json))
-    store.writeSchemaFile(version + 1, newSchema)
+      Some(newSchema.json), issued = physNames(schema))
   }
 
   /** Read the committed snapshot under its PERSISTED (evolved)
@@ -1025,9 +1014,9 @@ object SnapshotMerge {
     * EXISTING table is validated first, like Delta: a constraint the
     * current data already violates is refused, so readers can rely
     * on every committed row having passed. The add is a fenced
-    * metadata commit (same entries under version+1) + a constraints
-    * sidecar keyed to it, so a racing writer aborts rather than
-    * committing unvalidated rows against the half-added constraint.
+    * metadata commit (same entries under version+1, the new set
+    * embedded), so a racing writer aborts rather than committing
+    * unvalidated rows against the half-added constraint.
     *
     * Constraints reference logical names AS OF add time; a later
     * [[renameColumn]] does not rewrite them — the next write fails
@@ -1048,13 +1037,10 @@ object SnapshotMerge {
     require(bad == 0L,
       s"existing rows violate constraint '$name' ($exprSql) — clean the " +
         "data first (CHECK constraints guarantee every committed row passed)")
-    // the new set is EMBEDDED in the fenced commit (atomic — no
-    // commit-vs-sidecar window); the sidecar after it is the
-    // beyond-retention history mirror, so its ordering is harmless
+    // the new set is EMBEDDED in the fenced commit (atomic)
     store.commitSized(cur.version + 1, cur.entries, Some(cur.version),
       cur.dvs, cur.mors, cur.smors, cur.schemaJson,
       constraints = Some(existing + (name -> exprSql)))
-    store.writeConstraintsFile(cur.version + 1, existing + (name -> exprSql))
   }
 
   /** DROP a CHECK constraint — fenced metadata commit, like the add. */
@@ -1066,11 +1052,10 @@ object SnapshotMerge {
     require(existing.contains(name),
       s"constraint '$name' does not exist (have: ${existing.keys.toSeq.sorted.mkString(", ")})")
     // embedded like the add: Some(empty) after the last drop stays
-    // authoritative (never falls back to the sidecar history)
+    // authoritative
     store.commitSized(cur.version + 1, cur.entries, Some(cur.version),
       cur.dvs, cur.mors, cur.smors, cur.schemaJson,
       constraints = Some(existing - name))
-    store.writeConstraintsFile(cur.version + 1, existing - name)
   }
 
   /** Write-front enforcement: refuse `incoming` when any row violates
@@ -1126,7 +1111,7 @@ object SnapshotMerge {
           s"snapshot table ${store.root} advanced past the schema-resolution " +
             s"base (${sb.fold("<empty>")(v => s"v$v")} -> " +
             s"${cur.fold("<empty>")(v => s"v$v")}) — a concurrent commit's " +
-            "schema would be dropped by this evolve's sidecar; re-plan and retry")
+            "schema would be dropped by this evolve's stale union; re-plan and retry")
     }
 
   /** AUDIT for the key-determines-partition contract: live rows whose
@@ -1249,10 +1234,8 @@ object SnapshotMerge {
     * will fail with the below-retention error once it lags.
     *
     * Returns the version THIS call committed (None when `incoming` is
-    * empty and nothing was committed) — callers attaching per-version
-    * metadata (e.g. [[upsertEvolve]]'s schema sidecar) must key it to
-    * this value, never to a re-read of currentVersion(), which a
-    * concurrent commit can have moved.
+    * empty and nothing was committed) — never re-read currentVersion()
+    * for it, which a concurrent commit can have moved.
     */
   def merge(spark: SparkSession, rootDir: String, incoming0: DataFrame,
       partCols: Seq[String], retain: Int = 2,
@@ -1274,9 +1257,9 @@ object SnapshotMerge {
     * `schemaBase` (the evolve fronts): the table version their schema
     * resolution was derived from — when the resolution below observes
     * a DIFFERENT version, a concurrent commit landed in between and
-    * the caller's pending schema sidecar would be stale; abort with
-    * the retryable conflict instead of committing data whose sidecar
-    * silently drops the concurrent evolve's columns (ADVICE r18).
+    * the caller's union schema would be stale; abort with the
+    * retryable conflict instead of committing a schema that silently
+    * drops the concurrent evolve's columns (ADVICE r18).
     */
   private[sinks] def mergePhys(store: SnapshotStore, incoming0: DataFrame,
       partCols: Seq[String], retain: Int, statsCols: Seq[String],

@@ -6,7 +6,7 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, lit, shiftleft, shiftright, when}
 import org.apache.spark.sql.types.{DataType, LongType, StringType, StructField, StructType}
 
-/** A [[SnapshotStore.commit]] found the table advanced past the
+/** A [[SnapshotStore.commitSized]] found the table advanced past the
   * version the merge was derived from: another writer committed in
   * between. Nothing was published and nothing committed was damaged —
   * re-read the table and retry the merge (the snapshot twin of a
@@ -17,15 +17,21 @@ final class SnapshotConcurrentWriteException(msg: String)
   extends java.io.IOException(msg)
 
 object SnapshotStore {
+  /** The first line of every manifest, the one on-disk format a
+    * [[SnapshotStore]] writes and reads. A table kept across builds
+    * keys its location on it ([[graft.operators.Graph]]'s edge table).
+    */
+  private[graft] val Header = "graft-snapshot 6"
+
   /** One live-partition manifest entry: the batch dir holding the
-    * partition's current data, and the partition's bytes on disk.
-    * `bytes < 0` means unknown — an entry carried forward from a v1
-    * manifest that never recorded sizes.
+    * partition's current data, and the partition's bytes on disk
+    * (always recorded — [[SnapshotStore.commitSized]] refuses an entry
+    * without them).
     */
   final case class SnapshotEntry(batch: String, bytes: Long)
 
   /** One COLUMN-SPARSE merge-on-read patch slice (manifest `#smor`
-    * line, format v4): the batch dir holds, for `suffix`, only
+    * line): the batch dir holds, for `suffix`, only
     * `keys ++ cols` (plus partition dirs) — the changed columns of
     * updated rows, NOT full rows. Readers resolve a patched row by
     * joining the slice onto the partition's full rows on `keys` and
@@ -46,32 +52,34 @@ object SnapshotStore {
     * from it: [[SnapshotStore.commitRewrite]]'s carry rule.
     *
     * `schemaJson` — the table schema EMBEDDED in this version's
-    * manifest (`#schema` line), authoritative for exactly this
-    * version. Written atomically WITH the commit, unlike the
-    * post-commit sidecar files, so a racing schema reader can never
-    * observe a committed version whose schema is still in flight
-    * (the r18-ADVICE sidecar-lag window). Every committer carries it
-    * forward like dvs/mors; the evolve/rename/drop paths REPLACE it
-    * with their new schema. Sidecar files are still written for
-    * beyond-retention history ([[SnapshotStore.schemaHistory]]).
+    * manifest (`#schema` line), the only record of it: written
+    * atomically WITH the commit, so a racing schema reader can never
+    * observe a committed version whose schema is still in flight.
+    * Every committer carries it forward like dvs/mors; the
+    * evolve/rename/drop paths REPLACE it with their new schema. None
+    * = the table never evolved (readers infer from footers).
     *
     * `constraints` — the CHECK-constraint set in force from this
     * version on, EMBEDDED in the manifest (`#constraintset` marker +
     * one `#constraint` line per entry) exactly like the schema, so
     * add/drop/restore publish data and the constraint set governing
-    * it in ONE atomic pointer swap (the r19 sidecar ordering had two
-    * non-atomic windows: addConstraint's commit→sidecar lag and
-    * restore's data-first rollback). None = the table never carried
-    * constraints (pre-constraint manifests resolve through the
-    * sidecar fallback in [[SnapshotStore.resolveCurrent]], migrating
-    * to embedded on their next commit); Some(empty) after a drop is
-    * authoritative emptiness, never a fallback trigger.
+    * it in ONE atomic pointer swap. None = the table never carried
+    * constraints; Some(empty) after a drop is authoritative emptiness.
+    *
+    * `issued` — every physical column name the table has ever issued
+    * (`#issued` line), the column-mapping history: a re-added logical
+    * name must never resolve to a dropped column's bytes still sitting
+    * in un-rewritten files, and this set is what says a name was taken.
+    * It only grows, and every commit carries it (see
+    * [[SnapshotStore.commitSized]]), so it holds the table's whole
+    * history at any retention.
     */
   final case class Resolved(version: Long,
       entries: Map[String, SnapshotEntry], dvs: Seq[String],
       mors: Seq[(String, SnapshotEntry)], smors: Seq[SparseSlice],
       schemaJson: Option[String],
-      constraints: Option[Map[String, String]]) {
+      constraints: Option[Map[String, String]],
+      issued: Set[String]) {
     /** Every row-holding (suffix, batch) pair — each partition's base
       * entry plus its merge-on-read append slices — the `slices`
       * argument of [[SnapshotStore.readSlices]].
@@ -97,7 +105,7 @@ object SnapshotStore {
       * entries (a fence still takes the real `Option`, which tells the
       * two apart).
       */
-    val empty: Resolved = Resolved(0L, Map.empty, Nil, Nil, Nil, None, None)
+    val empty: Resolved = Resolved(0L, Map.empty, Nil, Nil, Nil, None, None, Set.empty)
   }
 
   /** Deployment-wide commit-backend wiring: every [[SnapshotStore]]
@@ -182,7 +190,7 @@ object SnapshotStore {
   * the suffix is simply absent from the next manifest.
   *
   * Single-writer by contract (the reference's cron is too), with
-  * OPTIMISTIC FENCING against contract violations: [[commit]] takes
+  * OPTIMISTIC FENCING against contract violations: [[commitSized]] takes
   * the base version the merge read and aborts with
   * [[SnapshotConcurrentWriteException]] if `CURRENT` has advanced past
   * it — a racing second writer loses cleanly and retries on the new
@@ -229,14 +237,13 @@ object SnapshotStore {
   * free from Postgres, for training-data snapshots that must be
   * re-readable bit-for-bit.
   *
-  * FORMAT NOTE: every commit writes the LOWEST manifest header from
-  * `graft-snapshot 2` to `graft-snapshot 5` that can represent its
-  * manifest (2 sized entries, 3 `#mor` slices, 4 `#smor` slices or an
-  * embedded schema, 5 an embedded constraint set — see
-  * [[commitSized]]), and a build older than that header rejects it.
-  * The upgrade is one-way: once a merge lands a header on a table,
-  * rolling the BINARY back past that header's support cannot read the
-  * table (the data files themselves are untouched plain parquet).
+  * FORMAT NOTE: there is one manifest format. Every commit writes
+  * header `graft-snapshot 6` ([[SnapshotStore.Header]]) and the reader
+  * accepts only that header, failing loudly on any other. The manifest
+  * is the only table metadata: sizes, slices, deletion vectors, the
+  * schema, the constraint set and the physical-name history all ride
+  * it (see [[commitSized]]); nothing is written beside it after the
+  * commit.
   */
 final class SnapshotStore(val spark: SparkSession, val root: Path,
     lockWaitMs: Long = 30000L, lockStaleMs: Long = 600000L) {
@@ -278,10 +285,10 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
 
   /** Test seam: runs in the evolve fronts AFTER their schema
     * resolution (`evolvedPlan`) and BEFORE the commit path's own base
-    * resolution — the exact window of the schema-sidecar lost-update
-    * race (ADVICE r18): a concurrent evolve committing here used to
-    * slip past the commit fence and get its column silently dropped
-    * by this writer's stale sidecar union. No-op in production.
+    * resolution — the exact window of the schema lost-update race
+    * (ADVICE r18): a concurrent evolve committing here used to slip
+    * past the commit fence and get its column silently dropped by
+    * this writer's stale union schema. No-op in production.
     */
   private[graft] var beforeEvolveCommitHook: () => Unit = () => ()
 
@@ -332,8 +339,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   private def versionName(v: Long): String = f"v-$v%012d"
 
   /** Version encoded in a manifest file name (or pointer body):
-    * `v-000000000007[-<writer suffix>]` -> 7. Legacy tables wrote
-    * suffix-less names; both forms parse.
+    * `v-000000000007[-<writer suffix>]` -> 7.
     */
   private def parseVersion(name: String): Long =
     name.stripPrefix("v-").split('-').head.toLong
@@ -541,210 +547,111 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     */
   def currentVersion(): Option[Long] = currentManifestName().map(parseVersion)
 
-  // --- persisted table schema (schema evolution, r12) ---------------
+  // --- persisted table schema (schema evolution) ----------------------
   //
-  // One JSON StructType per EVOLVING commit under schemas/ (plain
-  // upserts don't write one — their schema is the caller's contract,
-  // pre-evolution tables stay byte-identical on disk). Lookup is
-  // "latest at or before version": a schema applies until superseded,
-  // and a crash between commit and schema write self-heals — the
-  // previous (narrower) schema still reads every file because an
-  // absent parquet column resolves to NULL under a declared schema.
+  // The table schema is EMBEDDED in the manifest of every evolving
+  // commit and carried by every commit after it (plain upserts on a
+  // never-evolved table embed none — their schema is the caller's
+  // contract). A version's schema is its own manifest's; the physical
+  // names it ever issued ride beside it (`Resolved.issued`).
 
-  private val schemasDir = new Path(root, "schemas")
-
-  /** Persist the table schema effective from `version`. */
-  def writeSchemaFile(version: Long, schema: StructType): Unit =
-    writeFile(new Path(schemasDir, s"schema-${versionName(version)}.json"),
-      schema.json)
-
-  /** Latest persisted schema at or before `version` (None when the
-    * table has never evolved). The schema EMBEDDED in `version`'s own
-    * manifest wins when readable — it was committed atomically with
-    * the version, so it can never lag the commit the way the
-    * post-commit sidecar can (the r18-ADVICE race window); sidecars
-    * remain the beyond-retention history.
+  /** The schema embedded in committed `version`'s manifest (None when
+    * the table had not evolved by then, or the manifest is gone).
     */
-  def schemaAt(version: Long): Option[StructType] =
-    embeddedSchemaAt(version).orElse(sidecarSchemaAt(version))
-
-  private def embeddedSchemaAt(version: Long): Option[StructType] = {
+  def schemaAt(version: Long): Option[StructType] = {
     val name = versionLogEntry(version).orElse(
       currentManifestName().filter(parseVersion(_) == version))
     name.flatMap(n => scala.util.Try(parseManifest(n)).toOption).flatMap(_.schema)
   }
 
-  private def sidecarSchemaAt(version: Long): Option[StructType] = {
-    if (!fs.exists(schemasDir)) return None
-    val eligible = fs.listStatus(schemasDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("schema-v-") && n.endsWith(".json"))
-      .map(n => parseVersion(n.stripPrefix("schema-").stripSuffix(".json")))
-      .filter(_ <= version)
-    if (eligible.isEmpty) None
-    else {
-      val v = eligible.max
-      Some(org.apache.spark.sql.types.DataType.fromJson(
-        readSmallFile(new Path(schemasDir,
-          s"schema-${versionName(v)}.json"))).asInstanceOf[StructType])
-    }
-  }
-
-  /** Schema of the current commit, if persisted — ONE pointer read;
-    * the current manifest's embedded schema wins (see [[schemaAt]]).
-    */
-  def currentSchema(): Option[StructType] =
-    currentManifestName().flatMap { n =>
-      scala.util.Try(parseManifest(n)).toOption.flatMap(_.schema)
-        .orElse(sidecarSchemaAt(parseVersion(n)))
-    }
-
-  /** EVERY persisted schema, ascending by version — the column-mapping
-    * layer scans it for physical names ever used, so a re-added
-    * logical name can never collide with a dropped column's bytes
-    * still sitting in un-rewritten files. Schema sidecars are never
-    * vacuumed (metadata-sized, one per evolving commit), so the scan
-    * is complete for the table's whole life.
-    */
-  def schemaHistory(): Seq[StructType] = {
-    val sidecars: Seq[StructType] =
-      if (!fs.exists(schemasDir)) Nil
-      else fs.listStatus(schemasDir).map(_.getPath.getName)
-        .filter(n => n.startsWith("schema-v-") && n.endsWith(".json"))
-        .map(n => parseVersion(n.stripPrefix("schema-").stripSuffix(".json")))
-        .sorted.toSeq
-        .map(v => org.apache.spark.sql.types.DataType.fromJson(
-          readSmallFile(new Path(schemasDir,
-            s"schema-${versionName(v)}.json"))).asInstanceOf[StructType])
-    // belt and braces: schemas EMBEDDED in retained COMMITTED
-    // manifests too — a crash between an evolve's commit and its
-    // sidecar write must not hide that evolve's physical names from
-    // the resurrect-protection scan (the embedded copy was committed
-    // atomically). Only version-log-proven winners plus the CURRENT
-    // manifest are read: a fenced loser's or crashed writer's orphan
-    // manifest in manifests/ was never committed, and its would-be
-    // schema must not leak into the history (it would spuriously trip
-    // restore's below-first-evolve guard and over-reserve physical
-    // names). Bounded by the retention window; beyond it the sidecars
-    // are the history.
-    val committedNames: Seq[String] =
-      (versions().flatMap(versionLogEntry) ++ currentManifestName().toSeq).distinct
-    val embedded: Seq[StructType] = committedNames
-      .flatMap(n => scala.util.Try(parseManifest(n)).toOption.flatMap(_.schema))
-      .distinct
-    sidecars ++ embedded.filterNot(sidecars.contains)
-  }
-
+  /** Schema of the current commit, if it embeds one — ONE pointer read. */
+  def currentSchema(): Option[StructType] = resolveCurrent().flatMap(_.schema)
 
   /** ONE parse of a manifest file into [[SnapshotStore.Resolved]], the
     * version taken from its name — the only way a manifest is read.
-    * Format v1 (`graft-snapshot 1`, `suffix\tbatch`) reads with unknown
-    * bytes (-1); v2 appends a bytes column so metadata consumers
-    * ([[compactIncremental]]'s ranking) never walk the filesystem for
-    * sizes the writer already knew; v3 adds `#mor` append-slice lines,
-    * v4 `#smor` sparse slices and the `#schema` line, v5 the embedded
-    * constraint set. `#dv` lines reference deletion-vector files and
-    * `#mor` lines reference APPEND SLICES — additional (suffix, batch)
-    * pairs whose rows belong to the partition ON TOP of its base entry
-    * (the merge-on-read write path: updates tombstone old row versions
-    * via a DV and append the new versions as a slice, no partition
-    * rewrite). No marker can collide with a real suffix — partition
-    * dirs are `col=val` forms and can never start with `#`. The
-    * manifest is the sole source of DV/slice applicability — a dir
+    * Below the [[SnapshotStore.Header]] line sits one
+    * `suffix\tbatch\tbytes` line per live partition, then marker lines:
+    * `#mor` APPEND SLICES — (suffix, batch, bytes) whose rows belong to
+    * the partition ON TOP of its base entry (the merge-on-read write
+    * path: updates tombstone old row versions via a DV and append the
+    * new versions as a slice, no partition rewrite); `#smor` sparse
+    * patch slices; `#dv` deletion-vector files; `#schema` the embedded
+    * schema; `#constraintset` + one `#constraint` per entry the
+    * constraint set; `#issued` the physical-name history
+    * ([[encodeNames]]). No marker can collide with a real suffix —
+    * partition dirs are `col=val` forms and can never start with `#`.
+    * The manifest is the sole source of DV/slice applicability — a dir
     * staged by a crashed or fenced writer is never referenced and so
     * never applies, and a later version that materialized them
-    * (compaction, full replace) simply lists none. `constraints` is
-    * the EMBEDDED set only; the pre-embedding sidecar fallback lives in
-    * [[resolveCurrent]].
+    * (compaction, full replace) simply lists none. Any other header,
+    * an unknown marker or a malformed line fails loudly.
     */
   private def parseManifest(name: String): SnapshotStore.Resolved = {
-    val lines = readSmallFile(new Path(manifestsDir, name))
-      .linesIterator.toList
-    val header = lines.headOption.getOrElse("")
-    require(header == "graft-snapshot 1" || header == "graft-snapshot 2" ||
-      header == "graft-snapshot 3" || header == "graft-snapshot 4" ||
-      header == "graft-snapshot 5",
-      s"unrecognized manifest header in $manifestsDir/$name")
+    val where = s"$manifestsDir/$name"
+    val lines = readSmallFile(new Path(manifestsDir, name)).linesIterator.toList
+    require(lines.headOption.contains(SnapshotStore.Header),
+      s"unrecognized manifest header in $where")
     val (markerLines, dataLines) =
       lines.drop(1).filter(_.nonEmpty).partition(_.startsWith("#"))
-    val (dvLines, rest00) = markerLines.partition(_.startsWith("#dv\t"))
-    // the bare `#constraintset` marker distinguishes an authoritative
-    // EMPTY set (post-drop) from a pre-constraint manifest (sidecar
-    // fallback) — see Resolved.constraints
-    val (csetLines, rest01) = rest00.partition(_.startsWith("#constraintset"))
-    val (conLines, rest0) = rest01.partition(_.startsWith("#constraint\t"))
-    require(csetLines.size <= 1,
-      s"multiple #constraintset lines in $manifestsDir/$name")
-    require(csetLines.nonEmpty || conLines.isEmpty,
-      s"#constraint lines without a #constraintset marker in $manifestsDir/$name")
-    val constraints: Option[Map[String, String]] =
-      if (csetLines.isEmpty) None
-      else Some(conLines.map { l =>
-        // bounded split: the SQL body is one field (tabs are refused
-        // at write time, but a malformed line must fail loudly here,
-        // not MatchError)
-        val parts = l.split("\t", 3)
-        require(parts.length == 3,
-          s"malformed #constraint line in $manifestsDir/$name: $l")
-        parts(1) -> parts(2)
-      }.toMap)
-    val (schemaLines, rest) = rest0.partition(_.startsWith("#schema\t"))
-    val (smorLines, morLines) = rest.partition(_.startsWith("#smor\t"))
-    morLines.foreach(l => require(l.startsWith("#mor\t"),
-      s"unrecognized marker line in $manifestsDir/$name: $l"))
-    require(schemaLines.size <= 1,
-      s"multiple #schema lines in $manifestsDir/$name")
+    val byTag = markerLines.groupBy(_.takeWhile(_ != '\t'))
+    byTag.keySet.diff(Set("#mor", "#smor", "#dv", "#schema", "#constraintset",
+      "#constraint", "#issued")).foreach(t =>
+      throw new IllegalArgumentException(s"unrecognized marker line in $where: ${byTag(t).head}"))
+    // the `n` fields after `tag` of each of its lines; the last field
+    // keeps any tab (a constraint's SQL body is one field)
+    def fields(tag: String, n: Int): Seq[Array[String]] = byTag.getOrElse(tag, Nil).map { l =>
+      val parts = l.split("\t", n + 1)
+      require(parts.length == n + 1, s"malformed $tag line in $where: $l")
+      parts.drop(1)
+    }
+    def atMostOne(tag: String): Option[String] = {
+      val ls = fields(tag, 1)
+      require(ls.size <= 1, s"multiple $tag lines in $where")
+      ls.headOption.map(_(0))
+    }
     val entries = dataLines.map { l =>
       l.split('\t') match {
-        case Array(suffix, batch) =>
-          suffix -> SnapshotStore.SnapshotEntry(batch, -1L)
-        case Array(suffix, batch, bytes) =>
-          suffix -> SnapshotStore.SnapshotEntry(batch, bytes.toLong)
-        case _ => throw new IllegalArgumentException(
-          s"malformed manifest line in $manifestsDir/$name: $l")
+        case Array(suffix, batch, bytes) => suffix -> SnapshotStore.SnapshotEntry(batch, bytes.toLong)
+        case _ => throw new IllegalArgumentException(s"malformed manifest line in $where: $l")
       }
     }.toMap
-    val mors = morLines.map { l =>
-      val Array(_, suffix, batch, bytes) = l.split('\t')
-      suffix -> SnapshotStore.SnapshotEntry(batch, bytes.toLong)
-    }
-    val smors = smorLines.map { l =>
-      val Array(_, suffix, batch, bytes, keys, cols) = l.split('\t')
-      SnapshotStore.SparseSlice(suffix, batch, bytes.toLong,
-        keys.split(',').toSeq, cols.split(',').toSeq)
-    }
+    // the bare `#constraintset` marker tells an authoritative EMPTY set
+    // (post-drop) from a table that never carried constraints
+    val cset = atMostOne("#constraintset")
+    val cons = fields("#constraint", 2)
+    require(cset.isDefined || cons.isEmpty,
+      s"#constraint lines without a #constraintset marker in $where")
     SnapshotStore.Resolved(parseVersion(name), entries,
-      dvLines.map(_.split('\t')(1)), mors, smors,
-      schemaLines.headOption.map(_.stripPrefix("#schema\t")), constraints)
+      fields("#dv", 1).map(_(0)),
+      fields("#mor", 3).map { case Array(s, b, sz) => s -> SnapshotStore.SnapshotEntry(b, sz.toLong) },
+      fields("#smor", 5).map { case Array(s, b, sz, keys, cols) =>
+        SnapshotStore.SparseSlice(s, b, sz.toLong, keys.split(',').toSeq, cols.split(',').toSeq) },
+      atMostOne("#schema"),
+      cset.map(_ => cons.map(c => c(0) -> c(1)).toMap),
+      atMostOne("#issued").fold(Set.empty[String])(decodeNames))
   }
+
+  /** A name set as one manifest field: each name URL-encoded (so `,`,
+    * tabs and newlines inside a name survive), comma-joined, sorted.
+    */
+  private def encodeNames(names: Set[String]): String =
+    names.toSeq.sorted.map(encodeCol).mkString(",")
+
+  private def decodeNames(field: String): Set[String] =
+    field.split(',').filter(_.nonEmpty).map(java.net.URLDecoder.decode(_, "UTF-8")).toSet
 
   /** One-pointer-read resolution of the CURRENT commit — what every
     * COMMITTER must build from: its read AND its commit fence come from
     * the same manifest file (two pointer reads can straddle a
     * concurrent commit), and carrying its DVs, full and sparse slices
     * forward is the carry-forward contract of [[SnapshotStore.Resolved]].
-    * A pre-embedding manifest on a table that DID use constraints
-    * resolves its set through the sidecar history (and migrates to
-    * embedded on its next commit); Some(empty) post-drop never falls
-    * back.
     */
   def resolveCurrent(): Option[SnapshotStore.Resolved] =
-    currentManifestName().map { n =>
-      val r = parseManifest(n)
-      if (r.constraints.isDefined || !fs.exists(constraintsDir)) r
-      else r.copy(constraints = Some(constraintsAt(r.version)))
-    }
+    currentManifestName().map(parseManifest)
 
   /** `(version, partition -> batch)` of the committed snapshot, if any. */
   def current(): Option[(Long, Map[String, String])] =
-    currentManifestName().map(parseManifest)
-      .map(r => (r.version, r.entries.view.mapValues(_.batch).toMap))
-
-  /** [[commit]] with the expected base derived from `version` — for
-    * callers constructing the next version directly from the current
-    * one (the merge paths pass the exact base they read instead).
-    */
-  def commit(version: Long, entries: Map[String, String]): Unit =
-    commit(version, entries, if (version <= 1) None else Some(version - 1))
+    resolveCurrent().map(r => (r.version, r.entries.view.mapValues(_.batch).toMap))
 
   /** Write manifest `version` then atomically swap the CURRENT
     * pointer to it. The manifest and every batch it references must
@@ -758,17 +665,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * re-reads and retries, instead of silently overwriting the other
     * writer's commit. The manifest written before the abort has a
     * unique name and is never referenced — vacuum collects it.
-    */
-  def commit(version: Long, entries: Map[String, String],
-      expectedBase: Option[Long]): Unit =
-    commitSized(version,
-      entries.view.mapValues(SnapshotStore.SnapshotEntry(_, -1L)).toMap,
-      expectedBase)
-
-  /** [[commit]] carrying per-partition byte sizes into the manifest
-    * (format v2 and up) — the merge and compaction paths record the sizes
-    * they learned from their own post-write walk, so later compactions
-    * rank batches from the manifest alone.
+    *
+    * `entries` carry each partition's bytes on disk, which the merge
+    * and compaction paths learned from their own post-write walk, so
+    * later compactions rank batches from the manifest alone; an entry
+    * without its size is refused.
     *
     * `dvs` — deletion-vector dir names (under deletes/) whose
     * tombstones apply to this version's reads, written into the
@@ -786,26 +687,29 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * `smors` — COLUMN-SPARSE merge-on-read patch slices, written as
     * `#smor` lines (`suffix, batch, bytes, keys, cols` — key/col
     * lists comma-joined; the sparse writer refuses names carrying
-    * `,`/tab/newline). A manifest carrying any bumps the header to
-    * v4, which a pre-sparse build REJECTS — reading a sparse slice as
-    * a full slice would surface NULL for every unpatched column, so
-    * loud refusal is the only safe downgrade.
+    * `,`/tab/newline).
     *
     * `schemaJson` — the table schema to EMBED in this manifest
     * (`#schema` line), atomic with the commit. Committers on an
     * evolved table must CARRY the resolved base's value (like dvs and
-    * slices — dropping it reopens the sidecar-lag race this field
-    * closes); the evolve/rename/drop paths pass their NEW schema.
-    * None keeps pre-evolution tables byte-identical.
+    * slices — it is the only record of the schema); the
+    * evolve/rename/drop paths pass their NEW schema. None = the table
+    * has not evolved.
     *
     * `constraints` — the CHECK-constraint set to EMBED in this
     * manifest (see [[SnapshotStore.Resolved.constraints]]). None
     * (default) = CARRY the base's effective set forward, resolved
     * here so no committer can forget it (dropping the set would
     * silently stop enforcement); the add/drop/restore metadata paths
-    * pass Some with their new set. On a table that never carried
-    * constraints the carry resolves to None and the manifest stays
-    * byte-identical to the pre-constraint format.
+    * pass Some with their new set.
+    *
+    * `issued` — physical column names this commit issues beyond its
+    * schema's ([[SnapshotMerge.dropColumn]] passes the names of the
+    * schema it started from). The `#issued` line is the base's set
+    * plus these plus every physical name of a schema this commit
+    * changes to, resolved from the same base read as the constraint
+    * carry, so the history never shrinks and no committer can drop it
+    * (a fresh table's first commit — a clone — passes the whole set).
     *
     * `validatedConstraints` — the constraint set this writer
     * VALIDATED its incoming rows against ([[SnapshotMerge]]'s write
@@ -824,7 +728,11 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       smors: Seq[SnapshotStore.SparseSlice] = Nil,
       schemaJson: Option[String] = None,
       constraints: Option[Map[String, String]] = None,
-      validatedConstraints: Option[Map[String, String]] = None): Unit = {
+      validatedConstraints: Option[Map[String, String]] = None,
+      issued: Set[String] = Set.empty): Unit = {
+    require(entries.values.forall(_.bytes >= 0L),
+      s"manifest entries without their size: " +
+        entries.collect { case (s, e) if e.bytes < 0L => s }.mkString(", "))
     require(mors.forall(m => entries.contains(m._1)),
       s"merge-on-read slice without a base entry: " +
         s"${mors.collect { case (s, _) if !entries.contains(s) => s }.mkString(", ")}")
@@ -842,15 +750,20 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // Cheap pre-lock fence: a writer whose view is already stale
     // aborts without ever contending for the lease.
     fence()
+    // What this commit carries from its base, read AFTER the pre-lock
+    // fence passed, so it is the expectedBase manifest (a commit racing
+    // in after this read is caught by the in-lock fence / CAS
+    // body-compare, and the loser re-resolves).
+    val base = if (expectedBase.isEmpty) None else resolveCurrent()
     // The set in force from `version` on: the caller's replacement
-    // set, else the base's effective set carried forward. Resolved
-    // AFTER the pre-lock fence passed, so it reads the expectedBase
-    // manifest (a commit racing in after this read is caught by the
-    // in-lock fence / CAS body-compare, and the loser re-resolves).
+    // set, else the base's effective set carried forward.
     val effectiveConstraints: Option[Map[String, String]] =
-      constraints.orElse(
-        if (expectedBase.isEmpty) None
-        else resolveCurrent().flatMap(_.constraints))
+      constraints.orElse(base.flatMap(_.constraints))
+    // the physical-name history only grows; a carried schema's names
+    // were added by the commit that first embedded it
+    val issuedNames: Set[String] = base.fold(Set.empty[String])(_.issued) ++ issued ++
+      schemaJson.filterNot(j => base.exists(_.schemaJson.contains(j))).toSeq.flatMap(j =>
+        SnapshotMerge.physNames(DataType.fromJson(j).asInstanceOf[StructType]))
     // the constraint-validation fence (ADVICE r19): unvalidated rows
     // must never commit under a set the writer did not check
     validatedConstraints.foreach { v =>
@@ -869,15 +782,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       require(!(n + sql).exists("\t\n\r".contains(_)),
         s"constraint '$n' name/expression cannot be embedded (tab/newline)")
     })
-    // lowest header each reader generation can still parse: v2 until
-    // the first slice, v3 with full slices, v4 with sparse slices or
-    // an embedded schema, v5 with an embedded constraint set
-    val header =
-      if (effectiveConstraints.isDefined) "graft-snapshot 5"
-      else if (smors.nonEmpty || schemaJson.isDefined) "graft-snapshot 4"
-      else if (mors.nonEmpty) "graft-snapshot 3"
-      else "graft-snapshot 2"
-    val body = ((header +:
+    val body = ((SnapshotStore.Header +:
       entries.toSeq.sortBy(_._1).map { case (s, e) =>
         s"$s\t${e.batch}\t${e.bytes}"
       }) ++ mors.sortBy(m => (m._1, m._2.batch)).map { case (s, e) =>
@@ -889,7 +794,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
         ++ effectiveConstraints.toSeq.flatMap(cs =>
           s"#constraintset\t${cs.size}" +:
             cs.toSeq.sortBy(_._1).map { case (n, sql) => s"#constraint\t$n\t$sql" })
-        ++ dvs.sorted.map(d => s"#dv\t$d\t-1")).mkString("\n")
+        ++ Option(issuedNames).filter(_.nonEmpty).map(ns => s"#issued\t${encodeNames(ns)}")
+        ++ dvs.sorted.map(d => s"#dv\t$d")).mkString("\n")
     // Per-writer unique manifest name: two racing writers of the same
     // next version write DIFFERENT files, so the loser can never
     // clobber the winner's committed manifest (a crashed or fenced
@@ -981,8 +887,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
           s"commit lease on $root lost before the pointer swap (holder stalled " +
             s"past ${lockStaleMs}ms and was taken over) — re-read and retry the merge")
       // The commit point: one atomic overwrite-rename of the pointer,
-      // whose body names the manifest FILE (legacy suffix-less bodies
-      // still resolve).
+      // whose body names the manifest FILE.
       val fc = FileContext.getFileContext(root.toUri, spark.sessionState.newHadoopConf())
       fc.rename(pointerTmp, pointer, Options.Rename.OVERWRITE)
       // Record the winner in the version log — still inside the
@@ -1223,56 +1128,21 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     else steps.reduce(_.unionByName(_))
   }
 
-  // --- CHECK constraints (r19; manifest-embedded r20) -----------------
+  // --- CHECK constraints ----------------------------------------------
   //
-  // The AUTHORITATIVE constraint set is EMBEDDED in each manifest
-  // (`#constraintset` + `#constraint` lines, format v5) — atomic with
-  // the data it governs, carried forward by every commit inside
-  // [[commitSized]] and replaced by the add/drop/restore metadata
-  // paths, so there is no commit-vs-sidecar ordering window at all
-  // (ADVICE r19: the old post-commit sidecar left addConstraint's
-  // guarantee unfenced for the whole of a concurrent write, and
-  // restore's rollback non-atomic). The TSV sidecars under
-  // constraints/ (`name<TAB>sql-expr` per line, "latest at or before
-  // version") remain as the BEYOND-RETENTION history mirror and the
-  // resolution path for pre-embedding manifests, exactly like the
-  // schema sidecars vs `#schema`. Enforcement is SQL CHECK semantics
-  // — a row violates only when the expression is explicitly FALSE
-  // (NULL passes) — applied by the write fronts to every incoming
-  // frame ([[SnapshotMerge.addConstraint]] validates the EXISTING
-  // table once at add time), and fenced at commit through
-  // [[commitSized]]'s `validatedConstraints`. Sidecars are never
-  // vacuumed (metadata-sized).
-
-  private val constraintsDir = new Path(root, "constraints")
-
-  /** Persist the FULL constraint set effective from `version`. */
-  def writeConstraintsFile(version: Long, cs: Map[String, String]): Unit = {
-    cs.foreach { case (n, e) =>
-      require(!n.exists("\t\n\r".contains(_)) && !e.exists("\t\n\r".contains(_)),
-        s"constraint '$n' name/expression cannot be TSV-encoded") }
-    writeFile(new Path(constraintsDir, s"constraints-${versionName(version)}.tsv"),
-      cs.toSeq.sortBy(_._1).map { case (n, e) => s"$n\t$e" }.mkString("\n"))
-  }
-
-  /** Constraint set at or before `version` (empty when never added). */
-  def constraintsAt(version: Long): Map[String, String] = {
-    if (!fs.exists(constraintsDir)) return Map.empty
-    val eligible = fs.listStatus(constraintsDir).map(_.getPath.getName)
-      .filter(n => n.startsWith("constraints-v-") && n.endsWith(".tsv"))
-      .map(n => parseVersion(n.stripPrefix("constraints-").stripSuffix(".tsv")))
-      .filter(_ <= version)
-    if (eligible.isEmpty) Map.empty
-    else readSmallFile(new Path(constraintsDir,
-        s"constraints-${versionName(eligible.max)}.tsv"))
-      .linesIterator.filter(_.nonEmpty).map { l =>
-        val i = l.indexOf('\t'); l.substring(0, i) -> l.substring(i + 1)
-      }.toMap
-  }
+  // The constraint set is EMBEDDED in each manifest (`#constraintset` +
+  // `#constraint` lines) — atomic with the data it governs, carried
+  // forward by every commit inside [[commitSized]] and replaced by the
+  // add/drop/restore metadata paths, so there is no commit-vs-metadata
+  // ordering window at all. Enforcement is SQL CHECK semantics — a row
+  // violates only when the expression is explicitly FALSE (NULL
+  // passes) — applied by the write fronts to every incoming frame
+  // ([[SnapshotMerge.addConstraint]] validates the EXISTING table once
+  // at add time), and fenced at commit through [[commitSized]]'s
+  // `validatedConstraints`.
 
   /** Constraints in force for the current commit — the CURRENT
-    * manifest's embedded set (atomic with the data it governs);
-    * pre-embedding manifests resolve through the sidecar history.
+    * manifest's embedded set (atomic with the data it governs).
     */
   def currentConstraints(): Map[String, String] =
     resolveCurrent().flatMap(_.constraints).getOrElse(Map.empty)
@@ -1280,20 +1150,23 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
   /** ROLL BACK to committed `version` AS A NEW COMMIT (the Delta
     * `RESTORE TABLE ... VERSION AS OF` shape): the restored version's
     * manifest — base entries, deletion vectors, full AND sparse
-    * slices, embedded schema — is re-committed as the next version,
-    * fenced like every commit, so a racing writer aborts instead of
-    * interleaving and the rollback itself stays in the history (a
-    * restore of a bad restore is just another restore). Zero data
-    * movement: batches are immutable, so re-referencing them IS the
-    * rollback; vacuum keeps them alive again because the CURRENT
-    * manifest references them.
+    * slices, embedded schema and constraint set — is re-committed as
+    * the next version, fenced like every commit, so a racing writer
+    * aborts instead of interleaving and the rollback itself stays in
+    * the history (a restore of a bad restore is just another restore).
+    * Zero data movement: batches are immutable, so re-referencing them
+    * IS the rollback; vacuum keeps them alive again because the
+    * CURRENT manifest references them.
     *
-    * Schema: the restored version's schema is re-persisted (embedded
-    * + sidecar) so `schemaAt(newVersion)` reads it, not a later
-    * evolve's. Restoring BELOW the table's first persisted schema
-    * while later evolutions exist is refused — the sidecar scan could
-    * not represent "no schema yet" at the new version (compact first,
-    * or restore to an at-or-after-evolve version).
+    * Schema: the restored version's embedded schema, or none when it
+    * predates the first evolve (readers then infer from footers, as
+    * they did at that version). Constraints roll back with the data
+    * they validated, atomically with it: the target's set, or the empty
+    * set when the target predates the first constraint of a table that
+    * has one now — carrying the current set would silently govern
+    * restored rows that never passed it. The physical-name history is
+    * the CURRENT one, carried by [[commitSized]]: names issued after
+    * `version` stay taken, so a later re-add never reuses them.
     *
     * `version` must be inside the vacuum retention window
     * ([[readAt]]'s rule; below it there is no provable winner).
@@ -1305,33 +1178,9 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
       throw new IllegalStateException(s"no snapshot at $root"))
     if (cur.version == version) return cur.version
     val target = resolvedAt(version)
-    val schema = schemaAt(version)
-    require(schema.isDefined || schemaHistory().isEmpty,
-      s"restoring $root below its first schema evolution would leave " +
-        "schemaAt() resolving a LATER schema for the restored state — " +
-        "restore to a version at or after the first evolve, or compact first")
-    // constraints roll back with the data they validated, ATOMICALLY
-    // with it (embedded in the restore's manifest — the post-commit
-    // sidecar alone left a crash window where restored rows predating
-    // an addConstraint were governed by the post-restore set, ADVICE
-    // r19): the target version's embedded set when it has one, else
-    // its sidecar resolution. When the target manifest predates
-    // embedding AND the sidecar history is gone, but the table
-    // currently KNOWS constraints (cur carries a set), the target's
-    // best-knowledge set is empty — carrying the current set forward
-    // would silently keep governing restored rows that never passed
-    // it. None only when the table never had constraints at all.
-    val restoredCons: Option[Map[String, String]] = target.constraints.orElse(
-      if (fs.exists(constraintsDir)) Some(constraintsAt(version))
-      else if (cur.constraints.isDefined) Some(Map.empty)
-      else None)
     commitSized(cur.version + 1, target.entries, Some(cur.version), target.dvs,
-      target.mors, target.smors, target.schemaJson.orElse(schema.map(_.json)),
-      restoredCons)
-    schema.foreach(writeSchemaFile(cur.version + 1, _))
-    // sidecar mirror for beyond-retention history only — the embedded
-    // set above is authoritative, so the ordering no longer matters
-    restoredCons.foreach(writeConstraintsFile(cur.version + 1, _))
+      target.mors, target.smors, target.schemaJson,
+      target.constraints.orElse(cur.constraints.map(_ => Map.empty)))
     cur.version + 1
   }
 
@@ -1364,12 +1213,12 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * them (crash between registry write and clone commit leaves an
     * orphan registry — over-retention, the safe direction).
     *
-    * Schema and constraint SIDECAR histories (metadata-sized) are
-    * copied so evolution history, time-travel schema resolution and
-    * the resurrect-protection scan work on the clone; the constraint
-    * set itself rides the manifest. Time travel BELOW the clone point
-    * is a source-side question (the clone has one manifest) — ask the
-    * source. Refused when `targetRoot` already has a snapshot.
+    * The clone's one manifest carries the source's schema, constraint
+    * set and whole physical-name history, so a column the source
+    * dropped can never be re-added onto its old bytes in the clone.
+    * Time travel BELOW the clone point is a source-side question (the
+    * clone has one manifest) — ask the source. Refused when
+    * `targetRoot` already has a snapshot.
     *
     * Returns the registry id (pass to [[dropCloneRegistry]] on the
     * SOURCE store when the clone is deleted).
@@ -1428,18 +1277,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
           s"(missing: ${gone.take(3).map(leafName).mkString(", ")}…) — " +
           "re-resolve and retry the clone")
     }
-    // metadata-sized sidecar histories travel with the clone
-    Seq("schemas", "constraints").foreach { d =>
-      val src = new Path(root, d)
-      if (fs.exists(src)) fs.listStatus(src).foreach { st =>
-        if (!st.getPath.getName.startsWith("."))
-          org.apache.hadoop.fs.FileUtil.copy(fs, st.getPath,
-            tgt.fs, new Path(new Path(targetRoot, d), st.getPath.getName),
-            false, spark.sessionState.newHadoopConf())
-      }
-    }
     tgt.commitSized(cur.version, entries, None, dvs, mors, smors,
-      cur.schemaJson, cur.constraints)
+      cur.schemaJson, cur.constraints, issued = cur.issued)
     cloneId
   }
 
@@ -1575,7 +1414,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * lists their directories.
     */
   def readPartitions(schema: StructType, suffixes: Set[String]): DataFrame = {
-    val r = currentManifestName().map(parseManifest).getOrElse(SnapshotStore.Resolved.empty)
+    val r = resolveCurrent().getOrElse(SnapshotStore.Resolved.empty)
     readSlices(r.slices, schema, suffixes, r.dvs, r.smors)
   }
 
@@ -1913,9 +1752,7 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     // concurrent indexers, last rename drops the other's lines —
     // ADVICE r18) is gone by construction, not by retry. Same-column
     // writers last-win whole-file (a re-index with new sizing wins,
-    // as before). Readers union the per-column files with a legacy
-    // combined `<batch>.bloom` when one exists (pre-r19 tables);
-    // per-column wins on conflict.
+    // as before).
     fs.mkdirs(statsDir)
     val tmp = new Path(statsDir, s".tmp-$batch.bloom.${encodeCol(bloomCol)}")
     writeFile(tmp, sb.toString)
@@ -1972,21 +1809,17 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     val unprunable = r.smors.filter(_.cols.contains(bloomCol)).map(_.suffix).toSet
     val sketchCache = scala.collection.mutable.Map.empty[
       String, Map[String, org.apache.spark.util.sketch.BloomFilter]]
-    def parse(p: Path): Map[String, org.apache.spark.util.sketch.BloomFilter] =
-      if (!fs.exists(p)) Map.empty
-      else readSmallFile(p).split('\n').toSeq.filter(_.nonEmpty).flatMap { l =>
-        val Array(suffix, c, b64) = l.split('\t')
-        if (c != bloomCol) None
-        else Some(suffix -> org.apache.spark.util.sketch.BloomFilter.readFrom(
-          new java.io.ByteArrayInputStream(
-            java.util.Base64.getDecoder.decode(b64))))
-      }.toMap
-    // legacy combined sidecar under the per-column file (r19): the
-    // per-column write wins on conflict
+    // the batch's per-column sidecar (`<batch>.bloom.<col>`), if any
     def sketches(batch: String): Map[String, org.apache.spark.util.sketch.BloomFilter] =
-      sketchCache.getOrElseUpdate(batch,
-        parse(statsPath(batch, ".bloom")) ++
-          parse(statsPath(batch, s".bloom.${encodeCol(bloomCol)}")))
+      sketchCache.getOrElseUpdate(batch, {
+        val p = statsPath(batch, s".bloom.${encodeCol(bloomCol)}")
+        if (!fs.exists(p)) Map.empty
+        else readSmallFile(p).split('\n').toSeq.filter(_.nonEmpty).map { l =>
+          val Array(suffix, _, b64) = l.split('\t')
+          suffix -> org.apache.spark.util.sketch.BloomFilter.readFrom(
+            new java.io.ByteArrayInputStream(java.util.Base64.getDecoder.decode(b64)))
+        }.toMap
+      })
     // pruning is PER SLICE: a partition's base slice can skip while a
     // later MoR slice (holding a fresher copy of the key) is read
     val keep = r.slices.filter { case (suffix, batch) =>
@@ -2375,34 +2208,20 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * the same crash contract — the fold is invisible until the fenced
     * pointer swap, untouched batches carry forward by reference, and
     * the fold's pruned read never lists a kept batch's directories.
-    * Sizes come from the manifest (v2 records what each merge's own
-    * post-write walk measured) — ZERO per-partition FS metadata calls
-    * in the steady state; only entries inherited from a pre-size v1
-    * manifest fall back to one `getContentSummary` each, and the fold
-    * they then join re-records them, so the fallback pays out once per
-    * legacy partition ever. No-op when already within bounds.
+    * Sizes come from the manifest (every entry records what its
+    * merge's own post-write walk measured) — ZERO per-partition FS
+    * metadata calls. No-op when already within bounds.
     */
   def compactIncremental(schema: StructType, partCols: Seq[String],
       maxBatches: Int, statsCols: Seq[String] = Nil): Unit = {
     require(maxBatches >= 2,
       "maxBatches must leave room for kept batches plus the fold target")
-    val cur = resolveCurrent().getOrElse(return)
-    if (cur.batches.size <= maxBatches) return
+    val base = resolveCurrent().getOrElse(return)
+    if (base.batches.size <= maxBatches) return
     // live bytes per batch: sum the batch's LIVE partition entries, not
     // the whole dir — a batch can also hold stale copies of partitions
-    // later merges superseded, which must not inflate its rank. Sizes
-    // resolved for legacy v1 entries (bytes=-1) are RE-RECORDED in the
-    // committed manifest below (the rewrite's base carries them), so
-    // each legacy partition's getContentSummary walk happens at most
-    // once ever — kept or folded.
-    val base = cur.copy(entries = cur.entries.map {
-      case (s, e) if e.bytes >= 0L => s -> e
-      case (s, e) => s -> SnapshotStore.SnapshotEntry(e.batch,
-        fs.getContentSummary(new Path(dataPath(e.batch), s)).getLength)
-    })
-    // MoR slices — full and sparse — count toward their batch's live
-    // bytes (slice writers always record sizes, no legacy fallback
-    // needed)
+    // later merges superseded, which must not inflate its rank. MoR
+    // slices — full and sparse — count toward their batch's live bytes.
     val bySize: Map[String, Long] =
       (base.entries.toSeq.map(kv => (kv._2.batch, kv._2.bytes)) ++
         base.mors.map(m => (m._2.batch, m._2.bytes)) ++
@@ -2436,9 +2255,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     * `maxSliceBytesFrac` — the BYTES trigger for skewed batch sizes:
     * a partition is also hot when its slices' recorded bytes reach
     * that fraction of its base entry's (one fat slice can hurt reads
-    * as much as many thin ones). Defaults to never firing; a base
-    * entry with unknown bytes (legacy -1) never fires it either —
-    * count is the universal trigger, bytes the opt-in refinement.
+    * as much as many thin ones). Defaults to never firing — count is
+    * the universal trigger, bytes the opt-in refinement.
     */
   def compactSlices(schema: StructType, partCols: Seq[String],
       maxSlices: Int,
@@ -2450,10 +2268,8 @@ final class SnapshotStore(val spark: SparkSession, val root: Path,
     val bySuffix = (base.mors.map(m => (m._1, m._2.bytes)) ++
       base.smors.map(m => (m.suffix, m.bytes))).groupBy(_._1)
     val hot = bySuffix.collect { case (suffix, slices)
-        if slices.size >= maxSlices || {
-          val bytes = base.entries.get(suffix).map(_.bytes).getOrElse(-1L)
-          bytes >= 0L && slices.map(_._2).sum >= maxSliceBytesFrac * bytes
-        } => suffix
+        if slices.size >= maxSlices ||
+          slices.map(_._2).sum >= maxSliceBytesFrac * base.entries(suffix).bytes => suffix
       }.toSet
     if (hot.isEmpty) return
     commitRewrite(Some(base), readSlices(base.slices, schema, hot, base.dvs, base.smors),

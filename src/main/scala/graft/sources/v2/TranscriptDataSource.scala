@@ -87,7 +87,18 @@ object TranscriptDataSource {
     */
   val segsType: ArrayType = ArrayType(StructType(schema.fields.drop(1)), containsNull = false)
 
-  private def bvidOf(file: Path): String = file.getName.stripSuffix(".json")
+  /** A recording's bvid: its file's name without a `.json` suffix —
+    * the one naming rule of this source and of the occurrence stream.
+    */
+  private[graft] def bvidOf(file: Path): String = file.getName.stripSuffix(".json")
+
+  /** [[bvidOf]] over a column of file URIs (the occurrence stream's
+    * `input_file_name()`, percent-encoded like every Spark file URI,
+    * so a name with a space decodes as the listing sees it).
+    */
+  private[graft] def bvidOf(fileUri: Column): Column =
+    org.apache.spark.sql.functions.udf((u: String) => bvidOf(new Path(java.net.URI.create(u))))
+      .apply(fileUri)
 
   private def hidden(p: Path): Boolean = {
     val n = p.getName
@@ -197,7 +208,8 @@ class TranscriptPartitionReader(file: TranscriptFile, required: StructType, conf
     extends PartitionReader[InternalRow] {
 
   private val segs: Array[InternalRow] = {
-    val p = new Path(file.file)
+    // `file` is a URI string: a name with a space arrives as `%20`
+    val p = new Path(java.net.URI.create(file.file))
     val in = p.getFileSystem(conf).open(p)
     try TranscriptDecoder.decode(in.readAllBytes()) finally in.close()
   }

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import graft.api.Vcut
-import graft.sources.v2.TranscriptDecoder
+import graft.sources.v2.{TranscriptDataSource, TranscriptDecoder}
 
 /** The reference's cron stage 4 (`populate_occurrences`,
   * `modal/cron.py:14-21` + `modal/occurrence.py:78-130`) as a real
@@ -28,11 +28,12 @@ import graft.sources.v2.TranscriptDecoder
 object OccurrenceStream {
 
   /** Stream of `(bvid, segs)`, one row per `<bvid>.json` document
-    * landing in `dir`.
+    * landing in `dir`, named by the batch source's rule
+    * ([[TranscriptDataSource.bvidOf]]).
     */
   private def recordingsStream(spark: SparkSession, dir: String): DataFrame =
     spark.readStream.option("wholetext", "true").text(dir)
-      .select(regexp_extract(input_file_name(), "([^/]+)\\.json$", 1).as("bvid"),
+      .select(TranscriptDataSource.bvidOf(input_file_name()).as("bvid"),
         TranscriptDecoder.segments(col("value")).as("segs"))
 
   /** Stream of flat transcript segments from a drop-folder of

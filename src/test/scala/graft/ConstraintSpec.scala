@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions.col
 import graft.sinks.{SnapshotMerge, SnapshotStore}
 
 /** CHECK-constraint pins (r19): versioned constraint metadata
-  * (fenced add/drop commits + latest-at-or-before sidecars) with SQL
+  * (fenced add/drop commits embedding the set in the manifest) with SQL
   * CHECK enforcement — a row violates only when the expression is
   * explicitly FALSE (NULL passes) — applied by every write front to
   * the incoming frame, and validated against the EXISTING table at
@@ -125,15 +125,14 @@ class ConstraintSpec extends SparkFunSuite {
     slurp(new Path(new Path(dir), "manifests/" + slurp(new Path(dir, "CURRENT"))))
   }
 
-  test("the constraint set is EMBEDDED in the manifest (v5), atomic with the commit; sidecar loss changes nothing") {
+  test("the constraint set is EMBEDDED in the manifest, atomic with the commit; no sidecar is written") {
     val dir = seed()
     SnapshotMerge.addConstraint(spark, dir, "x_pos", "x > 0")
     val m = currentManifestText(dir)
-    assert(m.startsWith("graft-snapshot 5"), m.linesIterator.next())
+    assert(m.startsWith("graft-snapshot 6"), m.linesIterator.next())
     assert(m.contains("#constraintset\t1") && m.contains("#constraint\tx_pos\tx > 0"), m)
-    // the sidecar history is a MIRROR, not the authority: wipe it
-    val fs = graft.sinks.AtomicDir.fileSystem(spark, new Path(dir))
-    fs.delete(new Path(dir, "constraints"), true)
+    // the manifest is the only record of the set
+    assert(!new java.io.File(dir, "constraints").exists, "a constraint sidecar was written")
     val store = new SnapshotStore(spark, new Path(dir))
     assert(store.currentConstraints() == Map("x_pos" -> "x > 0"))
     intercept[IllegalArgumentException] {
@@ -144,8 +143,7 @@ class ConstraintSpec extends SparkFunSuite {
     SnapshotMerge.upsertUpdate(spark, dir,
       Seq((201L, 1.0, 0L)).toDF("id", "x", "pk"), Seq("id"), Seq("pk"), retain = 8)
     assert(currentManifestText(dir).contains("#constraint\tx_pos\tx > 0"))
-    // drop embeds authoritative EMPTINESS (never falls back to stale
-    // sidecar history — there is none left to fall back to anyway)
+    // drop embeds authoritative EMPTINESS
     SnapshotMerge.dropConstraint(spark, dir, "x_pos")
     assert(currentManifestText(dir).contains("#constraintset\t0"))
     assert(store.currentConstraints().isEmpty)
@@ -203,34 +201,12 @@ class ConstraintSpec extends SparkFunSuite {
     val store = new SnapshotStore(spark, new Path(dir))
     val v1 = store.currentVersion().get
     SnapshotMerge.addConstraint(spark, dir, "x_pos", "x > 0")
-    val fs = graft.sinks.AtomicDir.fileSystem(spark, new Path(dir))
-    fs.delete(new Path(dir, "constraints"), true)
+    assert(!new java.io.File(dir, "constraints").exists, "a constraint sidecar was written")
     store.restore(v1)
     assert(store.currentConstraints().isEmpty,
       "restore below the add must publish the rolled-back (empty) set " +
-        "in its own manifest, not depend on a post-commit sidecar")
+        "in its own manifest")
     assert(currentManifestText(dir).contains("#constraintset\t0"))
-  }
-
-  test("pre-embedding tables resolve through the sidecar history and migrate to embedded on their next commit") {
-    val dir = seed()
-    val store = new SnapshotStore(spark, new Path(dir))
-    // simulate an r19-format table: constraint exists ONLY as a sidecar
-    store.writeConstraintsFile(store.currentVersion().get, Map("x_pos" -> "x > 0"))
-    assert(!currentManifestText(dir).contains("#constraintset"))
-    assert(store.currentConstraints() == Map("x_pos" -> "x > 0"))
-    intercept[IllegalArgumentException] {
-      SnapshotMerge.upsertUpdate(spark, dir,
-        Seq((200L, -1.0, 0L)).toDF("id", "x", "pk"), Seq("id"), Seq("pk"))
-    }
-    // first write migrates the set into the manifest…
-    SnapshotMerge.upsertUpdate(spark, dir,
-      Seq((201L, 1.0, 0L)).toDF("id", "x", "pk"), Seq("id"), Seq("pk"), retain = 8)
-    assert(currentManifestText(dir).contains("#constraint\tx_pos\tx > 0"))
-    // …after which the sidecars are pure history
-    val fs = graft.sinks.AtomicDir.fileSystem(spark, new Path(dir))
-    fs.delete(new Path(dir, "constraints"), true)
-    assert(store.currentConstraints() == Map("x_pos" -> "x > 0"))
   }
 
   test("a renamed column referenced by a constraint fails writes LOUDLY, never silently skips") {

@@ -92,7 +92,7 @@ class DeletionVectorSpec extends SparkFunSuite {
     assert(vals(0L) == "U0")
     // and the rewritten partition materialized its delete: reading
     // pk=0 with NO deletion vectors applied still lacks id=2
-    val SnapshotStore.Resolved(_, entries, dvs, _, _, _, _) =
+    val SnapshotStore.Resolved(_, entries, dvs, _, _, _, _, _) =
       store.resolveCurrent().get
     assert(dvs.nonEmpty, "untouched partition's DV must carry forward")
     val raw = store.readSlices(entries.toSeq.map(kv => kv._1 -> kv._2.batch),
@@ -105,7 +105,7 @@ class DeletionVectorSpec extends SparkFunSuite {
     store.deleteWhere(rows.schema, col("id") >= 6L)
     assert(new java.io.File(dir, "deletes").listFiles().nonEmpty)
     store.compactClustered(rows.schema, Seq("pk"), Seq("id"), maxRecordsPerFile = 100L)
-    val SnapshotStore.Resolved(_, _, dvs, _, _, _, _) =
+    val SnapshotStore.Resolved(_, _, dvs, _, _, _, _, _) =
       store.resolveCurrent().get
     assert(dvs.isEmpty, "a full rewrite must drop the DV list")
     assert(ids(dir) == Set(0L, 1L, 2L, 3L, 4L, 5L))
@@ -133,7 +133,7 @@ class DeletionVectorSpec extends SparkFunSuite {
     // 'must preserve the partition set' forever, leaving no way to
     // ever materialize)
     store.compactClustered(rows.schema, Seq("pk"), Seq("id"), maxRecordsPerFile = 100L)
-    val SnapshotStore.Resolved(_, entries, dvs, _, _, _, _) =
+    val SnapshotStore.Resolved(_, entries, dvs, _, _, _, _, _) =
       store.resolveCurrent().get
     assert(entries.keySet == Set("pk=1"))
     assert(dvs.isEmpty)
@@ -146,7 +146,7 @@ class DeletionVectorSpec extends SparkFunSuite {
     // pre-fix the <=1-batch guard returned early and the DV could
     // never materialize through compact()
     store.compact(rows.schema, Seq("pk"))
-    val SnapshotStore.Resolved(_, _, dvs, _, _, _, _) =
+    val SnapshotStore.Resolved(_, _, dvs, _, _, _, _, _) =
       store.resolveCurrent().get
     assert(dvs.isEmpty)
     assert(ids(dir) == (0L until 10L).toSet - 4L)

@@ -42,11 +42,11 @@ class MorUpdateSpec extends SparkFunSuite {
   test("MoR rewrites NOTHING: base entries byte-identical, slices appended, DV committed") {
     val dir = seed()
     val store = new SnapshotStore(spark, new Path(dir))
-    val SnapshotStore.Resolved(_, before, dvsBefore, morsBefore, _, _, _) =
+    val SnapshotStore.Resolved(_, before, dvsBefore, morsBefore, _, _, _, _) =
       store.resolveCurrent().get
     assert(dvsBefore.isEmpty && morsBefore.isEmpty)
     SnapshotMerge.upsertMor(spark, dir, incomingRows, Seq("id"), Seq("pk"))
-    val SnapshotStore.Resolved(_, after, dvs, mors, _, _, _) =
+    val SnapshotStore.Resolved(_, after, dvs, mors, _, _, _, _) =
       store.resolveCurrent().get
     // every base entry — INCLUDING the touched partitions' — is the
     // exact same (batch, bytes) record: zero data rewritten
@@ -63,7 +63,7 @@ class MorUpdateSpec extends SparkFunSuite {
     SnapshotMerge.upsertMor(spark, dir,
       Seq((20L, "N20", 0L), (21L, "N21", 1L)).toDF("id", "v", "pk"),
       Seq("id"), Seq("pk"))
-    val SnapshotStore.Resolved(_, _, dvs, mors, _, _, _) =
+    val SnapshotStore.Resolved(_, _, dvs, mors, _, _, _, _) =
       store.resolveCurrent().get
     assert(dvs.isEmpty, "nothing matched — no tombstones, no DV file")
     assert(mors.size == 2)
@@ -76,7 +76,7 @@ class MorUpdateSpec extends SparkFunSuite {
     SnapshotMerge.upsertMor(spark, dir,
       Seq((0L, "U0", 0L), (90L, "N90", 9L)).toDF("id", "v", "pk"),
       Seq("id"), Seq("pk"))
-    val SnapshotStore.Resolved(_, entries, _, mors, _, _, _) =
+    val SnapshotStore.Resolved(_, entries, _, mors, _, _, _, _) =
       store.resolveCurrent().get
     assert(entries.contains("pk=9"), "new partition must be a base entry")
     assert(mors.map(_._1) == Seq("pk=0"), "existing partition appends a slice")
@@ -93,7 +93,7 @@ class MorUpdateSpec extends SparkFunSuite {
     assert(vals(0L) == "U0b")
     assert(vals.size == 10, "no duplicate key copies may surface")
     val store = new SnapshotStore(spark, new Path(dir))
-    val SnapshotStore.Resolved(_, _, dvs, mors, _, _, _) =
+    val SnapshotStore.Resolved(_, _, dvs, mors, _, _, _, _) =
       store.resolveCurrent().get
     assert(mors.count(_._1 == "pk=0") == 2 && dvs.size == 2)
   }
@@ -143,7 +143,7 @@ class MorUpdateSpec extends SparkFunSuite {
     val before = readVals(dir)
     val store = new SnapshotStore(spark, new Path(dir))
     store.compact(targetRows.schema, Seq("pk"))
-    val SnapshotStore.Resolved(_, entries, dvs, mors, _, _, _) =
+    val SnapshotStore.Resolved(_, entries, dvs, mors, _, _, _, _) =
       store.resolveCurrent().get
     assert(dvs.isEmpty && mors.isEmpty, "full rewrite materializes both")
     assert(entries.values.map(_.batch).toSet.size == 1)
@@ -157,7 +157,7 @@ class MorUpdateSpec extends SparkFunSuite {
     SnapshotMerge.upsertUpdate(spark, dir,
       Seq((0L, "R0", 0L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
     val store = new SnapshotStore(spark, new Path(dir))
-    val SnapshotStore.Resolved(_, _, _, mors, _, _, _) =
+    val SnapshotStore.Resolved(_, _, _, mors, _, _, _, _) =
       store.resolveCurrent().get
     assert(mors.map(_._1) == Seq("pk=1"),
       "pk=0's slice materialized by the rewrite; pk=1's must survive")
@@ -243,36 +243,39 @@ class MorUpdateSpec extends SparkFunSuite {
     assert(vals(0L) == "U0b" && vals(7L) == "U7" && vals.size == 10)
   }
 
-  test("manifest format: v2 until the first slice, v3 after, unknown markers rejected") {
+  test("manifest format: one header with or without slices; unknown markers and headers rejected") {
     val dir = seed()
     val store = new SnapshotStore(spark, new Path(dir))
-    def manifestBody(): String = {
-      val name = java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$dir/CURRENT")).trim
-      java.nio.file.Files.readString(
-        java.nio.file.Paths.get(s"$dir/manifests/$name"))
-    }
-    // a table that never MoR-updates keeps writing v2 — a pre-slice
-    // build can still read it
-    assert(manifestBody().startsWith("graft-snapshot 2\n"))
+    val name = () => java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$dir/CURRENT")).trim
+    def manifestBody(): String = java.nio.file.Files.readString(
+      java.nio.file.Paths.get(s"$dir/manifests/${name()}"))
+    // every commit writes the one header, slices or not
+    assert(manifestBody().startsWith("graft-snapshot 6\n"))
     SnapshotMerge.upsertMor(spark, dir,
       Seq((0L, "U0", 0L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
     val body = manifestBody()
-    assert(body.startsWith("graft-snapshot 3\n"))
+    assert(body.startsWith("graft-snapshot 6\n"))
     assert(body.linesIterator.count(_.startsWith("#mor\t")) == 1)
-    // materializing the slice returns the table to v2
     store.compact(targetRows.schema, Seq("pk"))
-    assert(manifestBody().startsWith("graft-snapshot 2\n"))
+    assert(manifestBody().startsWith("graft-snapshot 6\n"))
+    assert(!manifestBody().contains("#mor\t"))
+    // an out-of-band edit of the current manifest; it invalidates
+    // ChecksumFs's .crc sidecar, so drop that and let the read reach
+    // the parser instead of crc-failing
+    def edit(f: String => String): Unit = {
+      val p = java.nio.file.Paths.get(s"$dir/manifests/${name()}")
+      java.nio.file.Files.writeString(p, f(java.nio.file.Files.readString(p)))
+      java.nio.file.Files.deleteIfExists(
+        java.nio.file.Paths.get(s"$dir/manifests/.${name()}.crc"))
+    }
+    // any other header must fail loudly — there is no older reader
+    edit(_.replace("graft-snapshot 6", "graft-snapshot 5"))
+    assert(intercept[IllegalArgumentException] {
+      store.resolveCurrent()
+    }.getMessage.contains("unrecognized manifest header"))
     // an unknown marker line must fail loudly, never parse as data
-    val name = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/CURRENT")).trim
-    val p = java.nio.file.Paths.get(s"$dir/manifests/$name")
-    java.nio.file.Files.writeString(p,
-      java.nio.file.Files.readString(p) + "\n#xyz\tjunk\tb-1\t0")
-    // the out-of-band edit invalidates ChecksumFs's .crc sidecar —
-    // drop it so the read reaches the parser instead of crc-failing
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dir/manifests/.$name.crc"))
+    edit(_.replace("graft-snapshot 5", "graft-snapshot 6") + "\n#xyz\tjunk\tb-1\t0")
     assert(intercept[IllegalArgumentException] {
       store.resolveCurrent()
     }.getMessage.contains("unrecognized marker"))

@@ -5,20 +5,20 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.functions.col
 import graft.sinks.{SnapshotConcurrentWriteException, SnapshotMerge, SnapshotStore}
 
-/** Schema-sidecar lost-update race pins (r19, ADVICE r18 medium).
+/** Schema lost-update race pins (r19, ADVICE r18 medium).
   *
   * Window 1 — schema-read → commit: writer A resolves the schema,
   * writer B's evolve commits, A's merge re-resolves (fence passes —
-  * it never saw A's earlier read) and A's post-commit sidecar unions
+  * it never saw A's earlier read) and A's commit embeds a union
   * against the STALE schema, silently dropping B's column. Closed by
   * `schemaBase`: the commit paths abort with the retryable conflict
   * when the table moved past the version the schema was resolved at.
   *
-  * Window 2 — commit → sidecar write: the sidecar lags its commit, so
-  * a reader (or another evolve) between the two sees the PREVIOUS
-  * schema for a committed version. Closed by embedding the schema
-  * JSON in the manifest itself (`#schema` line, atomic with the
-  * pointer swap); sidecars remain for beyond-retention history.
+  * Window 2 — commit → schema write: a schema written after its
+  * commit lags it, so a reader (or another evolve) between the two
+  * sees the PREVIOUS schema for a committed version. Closed by
+  * keeping the schema JSON in the manifest itself (`#schema` line,
+  * atomic with the pointer swap) and nowhere else.
   */
 class SchemaRaceSpec extends SparkFunSuite {
   import spark.implicits._
@@ -47,7 +47,7 @@ class SchemaRaceSpec extends SparkFunSuite {
       }
     }
     // A must abort (the old behavior committed fine and silently
-    // dropped w from the sidecar union), then succeed on a re-plan
+    // dropped w from its stale union), then succeed on a re-plan
     intercept[SnapshotConcurrentWriteException] {
       SnapshotMerge.upsertEvolve(store, incZ, Seq("id"), Seq("pk"), 4, Nil)
     }
@@ -138,14 +138,12 @@ class SchemaRaceSpec extends SparkFunSuite {
     SnapshotMerge.upsertEvolve(spark, dir,
       Seq((0L, "v0", 0L, 9)).toDF("id", "v", "pk", "z"), Seq("id"), Seq("pk"))
     val store = new SnapshotStore(spark, new Path(dir))
-    assert(store.currentSchema().get.fieldNames.contains("z"))
-    // simulate the sidecar-lag window (or a sidecar-write crash): the
-    // schemas/ dir vanishes entirely — the embedded copy must carry
-    val schemasDir = java.nio.file.Paths.get(s"$dir/schemas")
-    java.nio.file.Files.walk(schemasDir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.delete(p))
+    // nothing is written beside the manifest, so there is no sidecar
+    // to lag or lose: the embedded copy is the whole record
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/schemas")),
+      "a schema sidecar was written")
     assert(store.currentSchema().get.fieldNames.contains("z"),
-      "a committed version's schema must never depend on the lagging sidecar")
+      "a committed version's schema must be its manifest's")
     val out = SnapshotMerge.readEvolved(spark, dir)
     assert(out.where(col("id") === 0L).collect().head.getAs[Int]("z") == 9)
   }
@@ -158,7 +156,7 @@ class SchemaRaceSpec extends SparkFunSuite {
     SnapshotMerge.upsertEvolve(spark, dir,
       Seq((0L, "V0!", 0L)).toDF("id", "val", "pk"), Seq("id"), Seq("pk"),
       retain = 5)
-    // embedded schema at each version, independent of sidecars
+    // embedded schema at each version
     assert(store.schemaAt(v1).get.fieldNames.toSeq == Seq("id", "v", "pk"))
     assert(store.schemaAt(v1 + 1).get.fieldNames.toSeq == Seq("id", "val", "pk"))
     val below = SnapshotMerge.readEvolvedAt(spark, dir, v1)
@@ -172,12 +170,10 @@ class SchemaRaceSpec extends SparkFunSuite {
     SnapshotMerge.upsertEvolve(spark, dir,
       Seq((0L, "v0", 0L, 77)).toDF("id", "v", "pk", "z"),
       Seq("id"), Seq("pk"), retain = 8)
-    // every sidecar lost (the commit→sidecar crash, repeatedly): the
-    // physical-name history must still know `z` was used, via the
-    // schemas embedded in retained manifests
-    val schemasDir = java.nio.file.Paths.get(s"$dir/schemas")
-    java.nio.file.Files.walk(schemasDir).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => java.nio.file.Files.delete(p))
+    // no sidecar holds the history: the physical-name history must
+    // know `z` was used from the manifest's issued set alone
+    assert(!java.nio.file.Files.exists(java.nio.file.Paths.get(s"$dir/schemas")))
+    assert(new SnapshotStore(spark, new Path(dir)).resolveCurrent().get.issued.contains("z"))
     SnapshotMerge.dropColumn(spark, dir, "z")
     SnapshotMerge.upsertEvolve(spark, dir,
       Seq((1L, "v1", 1L, 88)).toDF("id", "v", "pk", "z"),
@@ -188,7 +184,7 @@ class SchemaRaceSpec extends SparkFunSuite {
     assert(out(1L).contains(88))
     assert(out(0L).isEmpty,
       "the re-added column must read fresh NULLs — resolving to the dropped " +
-        "column's physical bytes means the history scan missed the embedded schema")
+        "column's physical bytes means the issued set missed `z`")
   }
 
   test("orphan manifests never pollute the schema history (fenced loser's embedded schema ignored)") {
@@ -201,41 +197,21 @@ class SchemaRaceSpec extends SparkFunSuite {
     SnapshotMerge.upsertUpdate(spark, dir,
       Seq((0L, "U0", 0L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"), retain = 8)
     // plant a FENCED LOSER's orphan: a manifest file carrying an
-    // embedded schema that never committed (no version-log entry, not
-    // the pointer) — exactly what a crashed/fenced evolve leaves
-    // until vacuum
+    // embedded schema and issued name that never committed (no
+    // version-log entry, not the pointer) — exactly what a
+    // crashed/fenced evolve leaves until vacuum
     val fakeSchema = org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("ghost",
         org.apache.spark.sql.types.IntegerType)))
     java.nio.file.Files.writeString(
       java.nio.file.Paths.get(s"$dir/manifests/v-000000000099-deadbeef"),
-      s"graft-snapshot 4\npk=0\tb-bogus\t-1\n#schema\t${fakeSchema.json}")
-    assert(store.schemaHistory().isEmpty,
-      "an uncommitted manifest's schema leaked into the history")
-    // the guard the leak used to trip: restore below the (nonexistent)
-    // first evolve must succeed on a never-evolved table
+      s"graft-snapshot 6\npk=0\tb-bogus\t0\n#schema\t${fakeSchema.json}\n#issued\tghost")
     store.restore(v1)
+    val cur = store.resolveCurrent().get
+    assert(cur.schemaJson.isEmpty && cur.issued.isEmpty,
+      "an uncommitted manifest's schema or names leaked into the table")
     assert(SnapshotMerge.read(spark, dir, rows.schema).collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap ==
       Map(0L -> "v0", 1L -> "v1", 2L -> "v2", 3L -> "v3"))
-  }
-
-  test("pre-embed tables (sidecars only) keep reading: compat fallback") {
-    val dir = seed()
-    val store = new SnapshotStore(spark, new Path(dir))
-    // strip the #schema lines from the current manifest, emulating a
-    // table last written by the sidecar-only build
-    val name = java.nio.file.Files.readString(
-      java.nio.file.Paths.get(s"$dir/CURRENT")).trim
-    val p = java.nio.file.Paths.get(s"$dir/manifests/$name")
-    val stripped = java.nio.file.Files.readString(p).linesIterator
-      .filterNot(_.startsWith("#schema\t")).mkString("\n")
-      .replace("graft-snapshot 4", "graft-snapshot 2")
-    java.nio.file.Files.writeString(p, stripped)
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dir/manifests/.$name.crc"))
-    assert(store.currentSchema().get.fieldNames.toSeq == Seq("id", "v", "pk"),
-      "sidecar fallback must still resolve")
-    assert(SnapshotMerge.readEvolved(spark, dir).count() == 8L)
   }
 }

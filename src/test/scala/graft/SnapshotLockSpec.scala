@@ -13,12 +13,19 @@ import graft.sinks.{SnapshotConcurrentWriteException, SnapshotStore}
   */
 class SnapshotLockSpec extends SparkFunSuite {
 
-  /** Seed a v1 table whose manifest the hammer threads then grow. The
-    * batch dirs never need data files — commit() is pure metadata.
+  /** Commit `entries` (partition -> batch) as `version` — pure
+    * metadata: the batch dirs never need data files, so every entry
+    * records 0 bytes.
     */
+  private def commit(store: SnapshotStore, version: Long,
+      entries: Map[String, String], base: Option[Long]): Unit =
+    store.commitSized(version,
+      entries.map { case (s, b) => s -> SnapshotStore.SnapshotEntry(b, 0L) }, base)
+
+  /** Seed a v1 table whose manifest the hammer threads then grow. */
   private def seedStore(dir: String): SnapshotStore = {
     val store = new SnapshotStore(spark, new Path(dir))
-    store.commit(1L, Map("pk=seed" -> "b-000000000001-seed"), None)
+    commit(store, 1L, Map("pk=seed" -> "b-000000000001-seed"), None)
     store
   }
 
@@ -44,7 +51,7 @@ class SnapshotLockSpec extends SparkFunSuite {
               while (!done) {
                 val (v, entries) = st.current().get
                 try {
-                  st.commit(v + 1,
+                  commit(st, v + 1,
                     entries + (s"pk=w$w-$i" -> s"b-${"%012d".format(v + 1)}-w$w"),
                     Some(v))
                   done = true
@@ -284,7 +291,7 @@ class SnapshotLockSpec extends SparkFunSuite {
     val dir = tmp("slockstale")
     val store = new SnapshotStore(spark, new Path(dir),
       lockWaitMs = 10000L, lockStaleMs = 500L)
-    store.commit(1L, Map("pk=seed" -> "b-000000000001-seed"), None)
+    commit(store, 1L, Map("pk=seed" -> "b-000000000001-seed"), None)
     // fake the crash: a LOCK left behind, older than lockStaleMs
     val lock = new Path(dir, "LOCK")
     val out = store.fs.create(lock, false)
@@ -292,7 +299,7 @@ class SnapshotLockSpec extends SparkFunSuite {
     store.fs.setTimes(lock, System.currentTimeMillis() - 60000L, -1L)
     // next commit must take the lock over, not wait 10s or abort
     val t0 = System.currentTimeMillis()
-    store.commit(2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
+    commit(store, 2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
     assert(System.currentTimeMillis() - t0 < 5000L, "takeover should be fast")
     assert(store.currentVersion().contains(2L))
     assert(!store.fs.exists(lock), "taken-over lock must be released after commit")
@@ -311,7 +318,7 @@ class SnapshotLockSpec extends SparkFunSuite {
       out.write("usurper".getBytes("UTF-8")); out.close()
     }
     intercept[SnapshotConcurrentWriteException] {
-      store.commit(2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
+      commit(store, 2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
     }
     store.beforeSwapHook = () => ()
     assert(store.currentVersion().contains(1L),
@@ -323,7 +330,7 @@ class SnapshotLockSpec extends SparkFunSuite {
     assert(body == "usurper", "foreign lease must survive the loser's release")
     store.fs.delete(lock, false)
     // table is healthy: the same commit succeeds once the lease is free
-    store.commit(2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
+    commit(store, 2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
     assert(store.currentVersion().contains(2L))
   }
 
@@ -331,19 +338,19 @@ class SnapshotLockSpec extends SparkFunSuite {
     val dir = tmp("slockheld")
     val store = new SnapshotStore(spark, new Path(dir),
       lockWaitMs = 300L, lockStaleMs = 3600_000L)
-    store.commit(1L, Map("pk=seed" -> "b-000000000001-seed"), None)
+    commit(store, 1L, Map("pk=seed" -> "b-000000000001-seed"), None)
     val lock = new Path(dir, "LOCK")
     val out = store.fs.create(lock, false)
     out.write("live-writer".getBytes("UTF-8")); out.close()
     intercept[SnapshotConcurrentWriteException] {
-      store.commit(2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
+      commit(store, 2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
     }
     // the foreign holder's lease must survive the contender's abort
     assert(store.fs.exists(lock))
     assert(store.currentVersion().contains(1L), "aborted commit must not publish")
     store.fs.delete(lock, false)
     // with the lock gone the same commit goes through
-    store.commit(2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
+    commit(store, 2L, Map("pk=seed" -> "b-000000000002-new"), Some(1L))
     assert(store.currentVersion().contains(2L))
   }
 }

@@ -125,9 +125,10 @@ class SnapshotMergeSpec extends SparkFunSuite {
     assert(readVals(dir) == v1, "uncommitted batch must be invisible")
     // now the commit point: one pointer swap publishes every touched
     // partition at once
-    val entries = store.current().get._2 -- Set("pk=0", "pk=1") ++
-      Map("pk=0" -> batch, "pk=1" -> batch)
-    store.commit(2L, entries)
+    val entries = store.resolveCurrent().get.entries -- Set("pk=0", "pk=1") ++
+      SnapshotStore.partitionSizes(store.fs, store.dataPath(batch))
+        .map { case (s, sz) => s -> SnapshotStore.SnapshotEntry(batch, sz) }
+    store.commitSized(2L, entries, Some(1L))
     val want = Merge.upsertUpdate(targetRows, incomingRows, Seq("id"))
       .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
     assert(readVals(dir) == want, "committed snapshot must be all-new")
@@ -296,9 +297,11 @@ class SnapshotMergeSpec extends SparkFunSuite {
   test("upsertEvolve widens int->bigint metadata-only; lossy pairs still fail fast") {
     val dir = tmp("swiden")
     // v1: cents is INT, two partitions
+    // retain = 4 keeps v1's manifest, its schema's only record, for the
+    // time-travel check below
     SnapshotMerge.upsertEvolve(spark, dir,
       Seq((0L, 100, 0L), (1L, 200, 1L), (2L, 300, 0L))
-        .toDF("id", "cents", "pk"), Seq("id"), Seq("pk"))
+        .toDF("id", "cents", "pk"), Seq("id"), Seq("pk"), retain = 4)
     val store = new SnapshotStore(spark, new Path(dir))
     assert(store.currentSchema().get("cents").dataType ==
       org.apache.spark.sql.types.IntegerType)
@@ -307,7 +310,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
     // v2: cents arrives as BIGINT beyond int range, touching pk=1 only
     SnapshotMerge.upsertEvolve(spark, dir,
       Seq((1L, 3000000200L, 1L)).toDF("id", "cents", "pk"),
-      Seq("id"), Seq("pk"))
+      Seq("id"), Seq("pk"), retain = 4)
     assert(store.currentSchema().get("cents").dataType ==
       org.apache.spark.sql.types.LongType)
     // metadata-only: the untouched pk=0 partition keeps its v1 batch
@@ -323,7 +326,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
     assert(got == Map(0L -> 100L, 1L -> 3000000200L, 2L -> 300L))
     // a NARROWER later batch casts up on write: schema stays bigint
     SnapshotMerge.upsertEvolve(spark, dir,
-      Seq((2L, 400, 0L)).toDF("id", "cents", "pk"), Seq("id"), Seq("pk"))
+      Seq((2L, 400, 0L)).toDF("id", "cents", "pk"), Seq("id"), Seq("pk"), retain = 4)
     assert(store.currentSchema().get("cents").dataType ==
       org.apache.spark.sql.types.LongType)
     assert(SnapshotMerge.readEvolved(spark, dir).collect()
@@ -473,11 +476,11 @@ class SnapshotMergeSpec extends SparkFunSuite {
     val schema = (0L until 1L).map(i => (i, "x", i)).toDF("id", "v", "pk").schema
     val before = SnapshotMerge.read(spark, dir, schema).collect()
       .map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
-    val SnapshotStore.Resolved(_, entriesB, _, morsB, _, _, _) =
+    val SnapshotStore.Resolved(_, entriesB, _, morsB, _, _, _, _) =
       store.resolveCurrent().get
     assert(morsB.count(_._1 == "pk=0") == 3 && morsB.count(_._1 == "pk=1") == 1)
     store.compactSlices(schema, Seq("pk"), maxSlices = 3)
-    val SnapshotStore.Resolved(_, entriesA, dvsA, morsA, _, _, _) =
+    val SnapshotStore.Resolved(_, entriesA, dvsA, morsA, _, _, _, _) =
       store.resolveCurrent().get
     assert(morsA.map(_._1) == Seq("pk=1"),
       "only the slice-hot partition's slices materialize")
@@ -496,7 +499,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
     // (1) is far below maxSlices; content unchanged
     store.compactSlices(schema, Seq("pk"), maxSlices = 99,
       maxSliceBytesFrac = 0.1)
-    val SnapshotStore.Resolved(_, _, _, morsC, _, _, _) =
+    val SnapshotStore.Resolved(_, _, _, morsC, _, _, _, _) =
       store.resolveCurrent().get
     assert(morsC.isEmpty, s"bytes trigger must fold the fat-slice partition: $morsC")
     assert(SnapshotMerge.read(spark, dir, schema).collect()
@@ -577,7 +580,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
     // physical layout sanity: the latest slice carries `pic` (cover's
     // physical) AND `pic__r1` (the re-added column's), never a
     // doubled name
-    val SnapshotStore.Resolved(_, _, _, mors, _, _, _) =
+    val SnapshotStore.Resolved(_, _, _, mors, _, _, _, _) =
       store.resolveCurrent().get
     val sliceCols = spark.read.parquet(
       store.dataPath(mors.last._2.batch).toString).schema.fieldNames.toSet
@@ -598,7 +601,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
       Seq((0L, 9999999999L, "n0", 0L), (2L, 3L, "n2", 1L))
         .toDF("id", "score", "note", "pk"),
       Seq("id"), Seq("pk"), retain = 4)
-    val SnapshotStore.Resolved(_, after, dvs, mors, _, _, _) =
+    val SnapshotStore.Resolved(_, after, dvs, mors, _, _, _, _) =
       store.resolveCurrent().get
     assert(after == before, "MoR evolve must not move a single base entry")
     assert(mors.map(_._1).toSet == Set("pk=0", "pk=1"),
@@ -746,7 +749,8 @@ class SnapshotMergeSpec extends SparkFunSuite {
     val dir = seed()
     val store = new SnapshotStore(spark, new Path(dir))
     // writers A and B both read base version 1
-    val (baseV, baseEntries) = store.current().get
+    val base = store.resolveCurrent().get
+    val (baseV, baseEntries) = (base.version, base.entries)
     // A stages its replacement for pk=1 against that base (invisible:
     // nothing references the batch yet)
     val batchA = "b-000000000002-writera"
@@ -760,9 +764,10 @@ class SnapshotMergeSpec extends SparkFunSuite {
     val afterB = readVals(dir)
     assert(afterB(20L) == "B20")
     // A's publish of the stale merge must fail, not last-write-win
-    val entriesA = baseEntries - "pk=1" + ("pk=1" -> batchA)
+    val entriesA = baseEntries - "pk=1" + ("pk=1" -> SnapshotStore.SnapshotEntry(batchA,
+      SnapshotStore.partitionSizes(store.fs, store.dataPath(batchA))("pk=1")))
     intercept[graft.sinks.SnapshotConcurrentWriteException] {
-      store.commit(baseV + 1, entriesA, Some(baseV))
+      store.commitSized(baseV + 1, entriesA, Some(baseV))
     }
     // B's commit is undamaged: same version, same data, manifest readable
     assert(store.currentVersion().contains(baseV + 1))
@@ -770,32 +775,6 @@ class SnapshotMergeSpec extends SparkFunSuite {
     // A retries on the fresh snapshot — both writers' rows land
     SnapshotMerge.upsertUpdate(spark, dir, rowsA, Seq("id"), Seq("pk"))
     assert(readVals(dir) == afterB + (21L -> "A21"))
-  }
-
-  test("legacy suffix-less manifest layout still resolves, and the next merge fences on it") {
-    val dir = tmp("slegacy")
-    val store = new SnapshotStore(spark, new Path(dir))
-    // hand-write a v1 table in the pre-fencing format: manifest file
-    // and pointer body both the bare version name
-    val batch = "b-000000000001-legacy"
-    targetRows.write.partitionBy("pk").parquet(store.dataPath(batch).toString)
-    val entries = store.listPartitionDirs(store.dataPath(batch)).map(_ -> batch).toMap
-    val body = ("graft-snapshot 1" +:
-      entries.toSeq.sortBy(_._1).map { case (s, b) => s"$s\t$b" }).mkString("\n")
-    store.fs.mkdirs(new Path(dir, "manifests"))
-    val m = store.fs.create(new Path(dir, "manifests/v-000000000001"), true)
-    m.write(body.getBytes("UTF-8")); m.close()
-    val p = store.fs.create(new Path(dir, "CURRENT"), true)
-    p.write("v-000000000001".getBytes("UTF-8")); p.close()
-
-    assert(store.currentVersion().contains(1L))
-    assert(readVals(dir) == targetRows.collect()
-      .map(r => r.getLong(0) -> r.getString(1)).toMap)
-    SnapshotMerge.upsertUpdate(spark, dir, incomingRows, Seq("id"), Seq("pk"))
-    assert(store.currentVersion().contains(2L))
-    val want = Merge.upsertUpdate(targetRows, incomingRows, Seq("id"))
-      .collect().map(r => r.getAs[Long]("id") -> r.getAs[String]("v")).toMap
-    assert(readVals(dir) == want)
   }
 
   test("timestamp partition columns are rejected up front (suffix contract)") {
@@ -891,7 +870,7 @@ class SnapshotMergeSpec extends SparkFunSuite {
       Seq((100L, "H0", 0L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
     SnapshotMerge.upsertUpdate(spark, dir,
       Seq((101L, "H1", 1L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
-    val SnapshotStore.Resolved(v, entries, _, _, _, _, _) =
+    val SnapshotStore.Resolved(v, entries, _, _, _, _, _, _) =
       store.resolveCurrent().get
     val churn0 = entries("pk=0").batch
     val seedBatch = entries("pk=2").batch
@@ -917,29 +896,6 @@ class SnapshotMergeSpec extends SparkFunSuite {
       after("pk=1").batch != seedBatch,
       "the manifest-ranked small batches must fold into a fresh one")
     assert(readVals(dir) == before, "folding must not change the data")
-  }
-
-  test("incremental compaction re-records legacy sizes for KEPT batches too") {
-    val dir = seed()
-    val store = new SnapshotStore(spark, new Path(dir))
-    SnapshotMerge.upsertUpdate(spark, dir,
-      Seq((100L, "H0", 0L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
-    SnapshotMerge.upsertUpdate(spark, dir,
-      Seq((101L, "H1", 1L)).toDF("id", "v", "pk"), Seq("id"), Seq("pk"))
-    // Downgrade the whole manifest to v1 semantics (bytes unknown), as
-    // a table inherited from a pre-size build would be.
-    val SnapshotStore.Resolved(v, entries, _, _, _, _, _) =
-      store.resolveCurrent().get
-    store.commit(v + 1, entries.view.mapValues(_.batch).toMap, Some(v))
-    assert(store.resolveCurrent().get.entries.values.forall(_.bytes < 0L))
-    val before = readVals(dir)
-    store.compactIncremental(targetRows.schema, Seq("pk"), maxBatches = 2)
-    val after = store.resolveCurrent().get.entries
-    // every entry — folded AND carried-forward — now records real bytes,
-    // so the one-time getContentSummary fallback never repeats
-    assert(after.values.forall(_.bytes > 0L),
-      s"kept legacy entries must be re-recorded with sizes: $after")
-    assert(readVals(dir) == before)
   }
 
   test("merge with empty incoming is a no-op commit-wise") {

@@ -375,24 +375,4 @@ class SnapshotStatsSpec extends SparkFunSuite {
       }
     } finally pool.shutdownNow()
   }
-
-  test("legacy combined .bloom sidecar still prunes; per-column file wins on conflict") {
-    val dir = tmp("stats_bloom_legacy_")
-    val t = (0L until 300L).map(i => (i, i % 3L)).toDF("id", "pk")
-    SnapshotMerge.upsertUpdate(spark, dir, t, Seq("id"), Seq("pk"))
-    val st = store(dir)
-    val batch = st.current().get._2.values.head
-    // write the per-column sidecar, then move it to the LEGACY
-    // combined name — exactly what a pre-r19 build left on disk
-    st.writeBatchBloom(batch, t.schema, Seq("pk"), "id")
-    val src = java.nio.file.Paths.get(s"$dir/stats/$batch.bloom.id")
-    java.nio.file.Files.move(src,
-      java.nio.file.Paths.get(s"$dir/stats/$batch.bloom"))
-    java.nio.file.Files.deleteIfExists(
-      java.nio.file.Paths.get(s"$dir/stats/.$batch.bloom.id.crc"))
-    val hit = st.readKeyLookup(t.schema, "id", Seq(42L))
-    assert(hit.inputFiles.map(_.replaceAll("/[^/]*$", "")).distinct.length < 3,
-      "the legacy combined sidecar must keep pruning")
-    assert(hit.collect().map(_.getLong(0)).toSeq == Seq(42L))
-  }
 }

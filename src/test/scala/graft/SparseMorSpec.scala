@@ -201,7 +201,7 @@ class SparseMorSpec extends SparkFunSuite {
     assert(readAll(dir).size == 19)
   }
 
-  test("manifest format: v4 with sparse slices, back to v2 after compact; depth counts both slice kinds") {
+  test("manifest format: one header with sparse slices and after compact; depth counts both slice kinds") {
     val dir = seed()
     def header(): String = {
       val name = java.nio.file.Files.readString(
@@ -213,7 +213,7 @@ class SparseMorSpec extends SparkFunSuite {
       Seq((0L, 0L, "X", "B!", "X", "X", "X", "X", "X", "X"))
         .toDF("id", "pk", "a", "b", "c", "d", "e", "f", "g", "h"),
       Seq("id"), Seq("pk"), Seq("b"))
-    assert(header() == "graft-snapshot 4")
+    assert(header() == "graft-snapshot 6")
     val before = readAll(dir)
     val store = new SnapshotStore(spark, new Path(dir))
     // one full slice + one sparse slice on pk=0 → depth 2 triggers
@@ -229,7 +229,7 @@ class SparseMorSpec extends SparkFunSuite {
     val after = readAll(dir)
     assert(after == before + (4L -> Seq("a4new", "B4mor", "c4", "d4", "e4", "f4",
       "g4", "h4")), "compaction must not change content")
-    assert(header() == "graft-snapshot 2")
+    assert(header() == "graft-snapshot 6")
   }
 
   test("every read front returns the same rows over a base entry, a #mor slice, a #smor patch and a DV") {

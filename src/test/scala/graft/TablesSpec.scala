@@ -30,8 +30,9 @@ class TablesSpec extends SparkFunSuite {
       assert(key.matches("[0-9a-f]{32}"), key)
     }
     val name = new java.io.File(sfDir).getName
+    // the edge table is a snapshot table: its dir also names the format
     assert(operators.Graph.edgeArtifactRoot(spark, sfDir).getName ==
-      s"${name}_${inlineDigest(sfDir, "lineitem")}_v1")
+      s"${name}_${inlineDigest(sfDir, "lineitem")}_${sinks.SnapshotStore.Header.replace(' ', '-')}")
     assert(operators.Similarity.pqArtifactRoot(spark, sfDir).getName ==
       s"${name}_${inlineDigest(sfDir, "embeddings")}_v2")
   }

@@ -58,7 +58,7 @@ class TimeTravelSpec extends SparkFunSuite {
     // on disk. readAt must resolve version 3 through the version log,
     // never by globbing manifests/.
     val loser = new Path(new Path(store.root, "manifests"), "v-000000000003-loser000")
-    val body = "graft-snapshot 2\npk=0\tb-000000000001-bogus\t-1"
+    val body = "graft-snapshot 6\npk=0\tb-000000000001-bogus\t0"
     val out = store.fs.create(loser, true)
     try out.write(body.getBytes("UTF-8")) finally out.close()
     assert(vals(store.readAt(3L, v1Rows.schema)) == want(2),
@@ -77,8 +77,8 @@ class TimeTravelSpec extends SparkFunSuite {
     assert(vals(store.readAt(3L, v1Rows.schema)) == want(2))
     // the next committer backfills version 3's entry from the pointer
     // it read under its own lease
-    val (v, entries) = store.current().get
-    store.commit(v + 1, entries, Some(v))
+    val cur = store.resolveCurrent().get
+    store.commitSized(cur.version + 1, cur.entries, Some(cur.version))
     assert(store.fs.exists(logEntry), "next commit must backfill the missing log entry")
     assert(vals(store.readAt(3L, v1Rows.schema)) == want(2))
   }
@@ -287,9 +287,9 @@ class TimeTravelSpec extends SparkFunSuite {
     assert(view == vals(store.read(v1Rows.schema)))
 
     // commit 4: manifest-level PARTITION DELETE of pk=4 (ids 4, 9)
-    val (v3, entries) = store.current().get
-    assert(entries.contains("pk=4"))
-    store.commit(v3 + 1, entries - "pk=4")
+    val cur3 = store.resolveCurrent().get
+    assert(cur3.entries.contains("pk=4"))
+    store.commitSized(cur3.version + 1, cur3.entries - "pk=4", Some(cur3.version))
 
     // RESTART: fresh store handle + fresh follower resuming from the
     // PERSISTED anchor — the crash-recovery path of the contract
@@ -366,10 +366,13 @@ class TimeTravelSpec extends SparkFunSuite {
     SnapshotMerge.upsertEvolve(spark, dir,
       Seq((0L, "U0", 0L, 7)).toDF("id", "v", "pk", "z"),
       Seq("id"), Seq("pk"), retain = 8)
-    store.restore(v1)
+    val restored = store.restore(v1)
     assert(store.currentSchema().get.fieldNames.toSeq == Seq("id", "v", "pk"),
       "the restored version's schema wins over the later evolve's")
+    assert(store.schemaAt(restored) == store.schemaAt(v1),
+      "the restore's own manifest embeds the restored schema")
     assert(!SnapshotMerge.readEvolved(spark, dir).columns.contains("z"))
+    assert(!new java.io.File(dir, "schemas").exists, "the manifest is the only schema record")
     // below-retention restore fails the readAt way
     val tight = tmp("ttrtight")
     val st2 = new SnapshotStore(spark, new Path(tight))

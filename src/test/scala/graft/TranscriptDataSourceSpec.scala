@@ -6,9 +6,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import graft.sources.TranscriptJson
 
-/** The DataSource V2 transcript source must agree with the
-  * whole-file JSON reader, prune columns into the reader, and feed
-  * the fuzzy pipeline unchanged.
+/** The DataSource V2 transcript source must prune columns into the
+  * reader, name recordings as the occurrence stream does, decode as
+  * the pinned contract says, and feed the fuzzy pipeline unchanged.
   */
 class TranscriptDataSourceSpec extends SparkFunSuite with BeforeAndAfterAll {
 
@@ -27,15 +27,6 @@ class TranscriptDataSourceSpec extends SparkFunSuite with BeforeAndAfterAll {
       """[[{"start": 2.0, "text": "只有一段"}]]""")
     Files.writeString(Paths.get(s"$d/BVempty.json"), "[]")
     d
-  }
-
-  test("dsv2 source matches the whole-file JSON reader") {
-    val v2 = spark.read.format("transcript").load(s"$dir/*.json")
-    val v1 = TranscriptJson.readSegments(spark, s"$dir/*.json")
-    val key = (r: org.apache.spark.sql.Row) =>
-      (r.getString(0), r.getInt(1), r.getInt(2), r.getDouble(3), r.getString(4))
-    assert(v2.collect().map(key).toSet == v1.collect().map(key).toSet)
-    assert(v2.count() == 4)
   }
 
   test("column pruning reaches the reader") {
@@ -75,6 +66,26 @@ class TranscriptDataSourceSpec extends SparkFunSuite with BeforeAndAfterAll {
     val e = intercept[org.apache.spark.sql.AnalysisException](
       TranscriptJson.readSegments(spark, s"$d/nothing/*.json"))
     assert(e.getCondition == "PATH_NOT_FOUND", e.getMessage)
+  }
+
+  test("batch and stream name a recording by one rule, whatever the file is called") {
+    import spark.implicits._
+    val d = tempDir("names")
+    val docs = Files.createDirectories(d.resolve("docs"))
+    Seq("BVplain.json", "BV spaced.json", "notes.txt", "BVtwice.json.json").foreach(n =>
+      Files.writeString(docs.resolve(n), s"""[[{"start": 1.0, "text": "$n"}]]"""))
+    val batch = TranscriptJson.readSegments(spark, docs.toString)
+      .select("bvid").as[String].collect().sorted.toSeq
+    val stream = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    graft.streaming.OccurrenceStream.readSegmentsStream(spark, docs.toString).writeStream
+      .option("checkpointLocation", d.resolve("ckpt").toString)
+      .foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.select("bvid").as[String].collect().foreach(stream.add); ()
+      }
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
+    assert(batch == Seq("BV spaced", "BVplain", "BVtwice.json", "notes.txt"))
+    assert(stream.toArray(Array.empty[String]).sorted.toSeq == batch)
   }
 
   test("a filesystem set only in the session conf reaches the listing and the reader") {
